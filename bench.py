@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Bench harness (driver contract): runs headline queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on ``local[N]``
+(N = ``$SPARK_GRAFT_CPUS``, else the host's CPU count) and prints ONE
+JSON line::
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -25,7 +26,6 @@ sys.path.insert(0, REPO)
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
 
     from pyspark.sql import functions as F
@@ -33,7 +33,9 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from kgforge.fixtures import TAG_SIZES, ensure_fixtures
     from kgforge.pipeline import Pipeline
-    from kgforge.session import get_spark
+    from kgforge.session import get_spark, local_cpus
+
+    cpus = local_cpus()
 
     tag = sf_tag if sf_tag in TAG_SIZES else "sf0.1"
     fdir = ensure_fixtures(tag)

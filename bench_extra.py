@@ -43,14 +43,16 @@ def main() -> int:
     ap.add_argument("--plans", default=None, help="dir to dump explain() output")
     ap.add_argument("--suffix", default="before", help="plan filename suffix")
     ap.add_argument("--e2e", action="store_true", help="also time the pipeline e2e")
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", help="local core count (default: $SPARK_GRAFT_CPUS, else host CPUs)")
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
-    from kgforge.session import get_spark
+    from kgforge.session import get_spark, local_cpus
 
-    spark = get_spark(master=f"local[{args.cpus}]", app_name="kgforge-bench-extra",
-                      shuffle_partitions=int(args.cpus),
+    cpus = args.cpus or local_cpus()
+
+    spark = get_spark(master=f"local[{cpus}]", app_name="kgforge-bench-extra",
+                      shuffle_partitions=int(cpus),
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     qs = entrymod.queries()
     names = args.queries.split(",") if args.queries else BENCH_QUERIES
@@ -90,7 +92,7 @@ def main() -> int:
                 work_dir=work,
                 gazetteer_path=os.path.join(fdir, "gazetteer.parquet"),
                 patterns_path=os.path.join(fdir, "patterns.parquet"),
-                out_partitions=int(args.cpus),
+                out_partitions=int(cpus),
                 dense_ids_impl="two_phase",
             )
             t0 = time.time()

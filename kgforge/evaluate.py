@@ -14,10 +14,11 @@ test_link_prediction``, recalled — SURVEY.md §0):
 
 Spark execution: test triples flow through one Arrow-batched
 ``mapInPandas``; the full entity/relation embedding matrices are
-broadcast once (``sc.broadcast`` NumPy, not a join) and each batch
-scores ``[batch × |E|]`` candidates as a single vectorized NumPy op.
-The known-triple filter ships as two hash maps keyed ``(r, t) → {h}`` /
-``(r, h) → {t}`` built from the (dictionary-scale) triple splits.
+broadcast once (``sc.broadcast`` NumPy, not a join). Inside a batch a
+Python loop walks the test triples; per triple and direction, one
+vectorized kernel call scores all |E| candidates. The known-triple
+filter ships as two hash maps keyed ``(r, t) → {h}`` / ``(r, h) → {t}``
+built from the (dictionary-scale) triple splits.
 
 Scale note: embeddings are model-parameter-sized (|E|·d floats), the
 same thing the reference holds on every worker via its parameter-server
@@ -38,16 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import kernels
+from .session import pin_broadcast
 
-#: session-lifetime pins for sc.broadcast handles: releasing them mid-job
-#: triggers a Spark-4 ContextCleaner race ("Block broadcast_N does not
-#: exist") in task-completion listeners. Bounded by #eval invocations.
-_PINNED: list = []
-
-RANKS_SCHEMA = (
-    "h long, t long, r long, "
-    "rank_head_raw long, rank_head_filt long, rank_tail_raw long, rank_tail_filt long"
-)
+RANK_COLS = ("rank_head_raw", "rank_head_filt", "rank_tail_raw", "rank_tail_filt")
+RANKS_SCHEMA = "h long, t long, r long, " + ", ".join(f"{c} long" for c in RANK_COLS)
 
 
 def _known_maps(known: pd.DataFrame | None) -> tuple[dict, dict]:
@@ -75,15 +70,11 @@ def link_prediction_ranks(
     known: pd.DataFrame | None,
     model: str = "transe",
     norm: int = 1,
-    constraints: tuple[dict[int, np.ndarray], dict[int, np.ndarray]] | None = None,
+    constraints: tuple[dict | None, dict | None] | None = None,
     score_decimals: int | None = None,
 ) -> DataFrame:
-    """Per-test-triple raw+filtered head/tail ranks (RANKS_SCHEMA).
-
-    ``constraints``: optional ``(domains, ranges)`` maps ``r → entity
-    ids`` (``type_constrain.txt`` semantics): candidates outside the
-    relation's domain/range are skipped entirely — the reference's
-    type-constrained protocol (``base/Test.h``, recalled — SURVEY.md §0).
+    """Per-test-triple raw+filtered head/tail ranks (RANKS_SCHEMA) for one
+    kernel: :func:`link_prediction_ranks_multi` with a single model.
 
     ``score_decimals``: round scores before the strict-< comparison.
     Needed for cross-engine L2 parity: L1 scores of float32 embeddings
@@ -92,73 +83,28 @@ def link_prediction_ranks(
     sum's last ulp depends on accumulation order and unrounded rank
     comparisons flip between engines on mathematical ties.
     """
-    n_ent = emb["ent"].shape[0]
-    b_emb = spark.sparkContext.broadcast({k: v for k, v in emb.items()})
-    b_known = spark.sparkContext.broadcast(_known_maps(known))
-    b_constr = spark.sparkContext.broadcast(constraints)
-    _PINNED.extend([b_emb, b_known, b_constr])
+    return link_prediction_ranks_multi(
+        spark, test, emb, known, [(model, score_decimals)], norm, constraints
+    ).drop("model")
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        E = b_emb.value
-        heads_of, tails_of = b_known.value
-        constr = b_constr.value
-        domains = constr[0] if constr else None
-        ranges = constr[1] if constr else None
-        all_ents = np.arange(n_ent, dtype=np.int64)
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = {
-                "rank_head_raw": np.empty(len(pdf), dtype=np.int64),
-                "rank_head_filt": np.empty(len(pdf), dtype=np.int64),
-                "rank_tail_raw": np.empty(len(pdf), dtype=np.int64),
-                "rank_tail_filt": np.empty(len(pdf), dtype=np.int64),
-            }
-            h_arr = pdf["h"].to_numpy(np.int64)
-            t_arr = pdf["t"].to_numpy(np.int64)
-            r_arr = pdf["r"].to_numpy(np.int64)
-            for i in range(len(pdf)):  # per test triple; inner op is |E|-vectorized
-                h, t, r = int(h_arr[i]), int(t_arr[i]), int(r_arr[i])
-                r_ids = np.full(n_ent, r, dtype=np.int64)
-                # head pass: score (e, r, t) over the candidate set
-                cand_h = all_ents if domains is None else domains.get(r, all_ents)
-                s_head = kernels.score_batch(
-                    model, E, all_ents, r_ids, np.full(n_ent, t, dtype=np.int64), norm
-                )
-                if score_decimals is not None:
-                    s_head = np.round(s_head, score_decimals)
-                true_s = s_head[h]
-                s_cand = s_head if cand_h is all_ents else s_head[cand_h]
-                out["rank_head_raw"][i] = 1 + int((s_cand < true_s).sum())
-                kh = heads_of.get((r, t))
-                filt = int((s_cand < true_s).sum())
-                if kh is not None:
-                    kh_eff = kh if cand_h is all_ents else np.intersect1d(kh, cand_h)
-                    filt -= int((s_head[kh_eff[kh_eff != h]] < true_s).sum())
-                out["rank_head_filt"][i] = 1 + filt
-                # tail pass: score (h, r, e) over the candidate set
-                cand_t = all_ents if ranges is None else ranges.get(r, all_ents)
-                s_tail = kernels.score_batch(
-                    model, E, np.full(n_ent, h, dtype=np.int64), r_ids, all_ents, norm
-                )
-                if score_decimals is not None:
-                    s_tail = np.round(s_tail, score_decimals)
-                true_s = s_tail[t]
-                s_cand = s_tail if cand_t is all_ents else s_tail[cand_t]
-                out["rank_tail_raw"][i] = 1 + int((s_cand < true_s).sum())
-                kt = tails_of.get((r, h))
-                filt = int((s_cand < true_s).sum())
-                if kt is not None:
-                    kt_eff = kt if cand_t is all_ents else np.intersect1d(kt, cand_t)
-                    filt -= int((s_tail[kt_eff[kt_eff != t]] < true_s).sum())
-                out["rank_tail_filt"][i] = 1 + filt
-            res = pdf[["h", "t", "r"]].copy()
-            for k, v in out.items():
-                res[k] = v
-            yield res
+def _rank(s: np.ndarray, true_e: int, cand, known) -> tuple[int, int]:
+    """(raw, filtered) strict-< rank of entity ``true_e`` under the
+    candidate scores ``s`` (indexed by entity id).
 
-    return test.select("h", "t", "r").mapInPandas(fn, RANKS_SCHEMA)
+    ``cand``: the relation's allowed candidate ids, or None for all
+    entities. ``known``: sorted ids forming a known-true triple in this
+    slot, or None; the filtered rank skips those inside ``cand`` except
+    ``true_e`` itself.
+    """
+    true_s = s[true_e]
+    below = int(((s if cand is None else s[cand]) < true_s).sum())
+    filt = below
+    if known is not None:
+        if cand is not None:
+            known = np.intersect1d(known, cand)
+        filt -= int((s[known[known != true_e]] < true_s).sum())
+    return 1 + below, 1 + filt
 
 
 def link_prediction_ranks_multi(
@@ -168,25 +114,38 @@ def link_prediction_ranks_multi(
     known: pd.DataFrame | None,
     models: list[tuple[str, int | None]],
     norm: int = 1,
+    constraints: tuple[dict | None, dict | None] | None = None,
 ) -> DataFrame:
-    """Model-tagged ranks for SEVERAL kernels in ONE pass — the
-    leaderboard shape. Per (model, test triple) the ranks are computed
-    by exactly the :func:`link_prediction_ranks` recipe (same scoring,
-    same rounding, same filtered-rank arithmetic), but the test table
-    crosses the Arrow boundary once and one broadcast set serves every
-    kernel instead of one mapInPandas branch + 3 broadcasts per kernel
-    (the unioned 7-branch plan cost ~2.7 s of scheduling for ~0.4 s of
-    NumPy at fixture scale). Output: ``model`` + RANKS_SCHEMA.
+    """Model-tagged ranks for one or more ``(model, score_decimals)``
+    kernels in ONE pass: the test table crosses the Arrow boundary once
+    and one broadcast set serves every kernel (a unioned per-kernel plan
+    cost ~2.7 s of scheduling for ~0.4 s of NumPy at fixture scale).
+    Output: ``model`` + RANKS_SCHEMA.
+
+    Per test triple and direction, one ``kernels.score_batch`` call
+    scores all |E| candidates, rounded with ``np.round`` to the model's
+    ``score_decimals`` when given, and :func:`_rank` counts them.
+
+    ``constraints``: optional ``(domains, ranges)`` maps ``r → entity
+    ids`` (``type_constrain.txt`` semantics; either side may be None):
+    head candidates outside the relation's domain and tail candidates
+    outside its range are skipped entirely; relations absent from a map
+    stay unconstrained — the reference's type-constrained protocol
+    (``base/Test.h``, recalled — SURVEY.md §0).
     """
     n_ent = emb["ent"].shape[0]
-    b_emb = spark.sparkContext.broadcast({k: v for k, v in emb.items()})
-    b_known = spark.sparkContext.broadcast(_known_maps(known))
-    _PINNED.extend([b_emb, b_known])
+    b_emb = pin_broadcast(spark, dict(emb))
+    domains, ranges = constraints or (None, None)
+    b_filter = pin_broadcast(spark, (*_known_maps(known), domains or {}, ranges or {}))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         E = b_emb.value
-        heads_of, tails_of = b_known.value
+        heads_of, tails_of, domains, ranges = b_filter.value
         all_ents = np.arange(n_ent, dtype=np.int64)
+
+        def scores(model, dec, heads, r_ids, tails):
+            s = kernels.score_batch(model, E, heads, r_ids, tails, norm)
+            return s if dec is None else np.round(s, dec)
 
         for pdf in batches:
             if pdf.empty:
@@ -195,57 +154,31 @@ def link_prediction_ranks_multi(
             t_arr = pdf["t"].to_numpy(np.int64)
             r_arr = pdf["r"].to_numpy(np.int64)
             outs = []
-            for model, score_decimals in models:
-                out = {
-                    "rank_head_raw": np.empty(len(pdf), dtype=np.int64),
-                    "rank_head_filt": np.empty(len(pdf), dtype=np.int64),
-                    "rank_tail_raw": np.empty(len(pdf), dtype=np.int64),
-                    "rank_tail_filt": np.empty(len(pdf), dtype=np.int64),
-                }
+            for model, dec in models:
+                ranks = np.empty((len(pdf), 4), dtype=np.int64)
                 for i in range(len(pdf)):  # per test triple; |E|-vectorized inner
                     h, t, r = int(h_arr[i]), int(t_arr[i]), int(r_arr[i])
                     r_ids = np.full(n_ent, r, dtype=np.int64)
-                    s_head = kernels.score_batch(
-                        model, E, all_ents, r_ids, np.full(n_ent, t, dtype=np.int64), norm
-                    )
-                    if score_decimals is not None:
-                        s_head = np.round(s_head, score_decimals)
-                    true_s = s_head[h]
-                    out["rank_head_raw"][i] = 1 + int((s_head < true_s).sum())
-                    kh = heads_of.get((r, t))
-                    filt = int((s_head < true_s).sum())
-                    if kh is not None:
-                        filt -= int((s_head[kh[kh != h]] < true_s).sum())
-                    out["rank_head_filt"][i] = 1 + filt
-                    s_tail = kernels.score_batch(
-                        model, E, np.full(n_ent, h, dtype=np.int64), r_ids, all_ents, norm
-                    )
-                    if score_decimals is not None:
-                        s_tail = np.round(s_tail, score_decimals)
-                    true_s = s_tail[t]
-                    out["rank_tail_raw"][i] = 1 + int((s_tail < true_s).sum())
-                    kt = tails_of.get((r, h))
-                    filt = int((s_tail < true_s).sum())
-                    if kt is not None:
-                        filt -= int((s_tail[kt[kt != t]] < true_s).sum())
-                    out["rank_tail_filt"][i] = 1 + filt
+                    s_head = scores(model, dec, all_ents, r_ids, np.full(n_ent, t, dtype=np.int64))
+                    s_tail = scores(model, dec, np.full(n_ent, h, dtype=np.int64), r_ids, all_ents)
+                    ranks[i, :2] = _rank(s_head, h, domains.get(r), heads_of.get((r, t)))
+                    ranks[i, 2:] = _rank(s_tail, t, ranges.get(r), tails_of.get((r, h)))
                 res = pdf[["h", "t", "r"]].copy()
                 res.insert(0, "model", model)
-                for k, v in out.items():
-                    res[k] = v
+                for j, col in enumerate(RANK_COLS):
+                    res[col] = ranks[:, j]
                 outs.append(res)
             yield pd.concat(outs, ignore_index=True)
 
     return test.select("h", "t", "r").mapInPandas(fn, "model string, " + RANKS_SCHEMA)
 
 
-def link_prediction_metrics_by_model(ranks: DataFrame) -> DataFrame:
-    """A17 leaderboard aggregation: :func:`link_prediction_metrics`'s
-    exact metric expressions, grouped by the ``model`` tag of
-    :func:`link_prediction_ranks_multi` — one aggregation instead of one
-    per kernel."""
-    def _m(col: str, tag: str):
-        c = F.col(col).cast("double")
+def _rank_metrics(ranks: DataFrame, *keys: str, extra=()) -> DataFrame:
+    """A17 metrics: MR / MRR / Hits@10/3/1, raw + filtered, head and tail
+    ranks pooled, grouped by ``keys``. ``extra`` aggregates (over the
+    pooled rows, two per test triple) come right after the keys."""
+    def _m(tag: str):
+        c = F.col(tag).cast("double")
         return [
             F.avg(c).alias(f"mr_{tag}"),
             F.avg(1.0 / c).alias(f"mrr_{tag}"),
@@ -255,15 +188,21 @@ def link_prediction_metrics_by_model(ranks: DataFrame) -> DataFrame:
         ]
 
     both = ranks.select(
-        "model",
+        *keys,
         F.explode(
             F.array(
                 F.struct(F.col("rank_head_raw").alias("raw"), F.col("rank_head_filt").alias("filt")),
                 F.struct(F.col("rank_tail_raw").alias("raw"), F.col("rank_tail_filt").alias("filt")),
             )
         ).alias("x"),
-    ).select("model", "x.raw", "x.filt")
-    return both.groupBy("model").agg(*_m("raw", "raw"), *_m("filt", "filt"))
+    ).select(*keys, "x.raw", "x.filt")
+    return both.groupBy(*keys).agg(*extra, *_m("raw"), *_m("filt"))
+
+
+def link_prediction_metrics_by_model(ranks: DataFrame) -> DataFrame:
+    """A17 leaderboard: :func:`link_prediction_metrics` per ``model`` tag
+    of :func:`link_prediction_ranks_multi`, in one aggregation."""
+    return _rank_metrics(ranks, "model")
 
 
 def _mat_to_vec_df(spark: SparkSession, mat: np.ndarray, col: str = "vec") -> DataFrame:
@@ -458,6 +397,14 @@ def _constraint_df(spark: SparkSession, c) -> DataFrame | None:
     return tiny_df(spark, rows, "r long, cand long")
 
 
+def _known_df(spark: SparkSession, known) -> DataFrame:
+    """Distinct ``(h, t, r)`` known triples as a DataFrame, from a
+    DataFrame (scale path) or pandas (tests/fixtures convenience)."""
+    if isinstance(known, pd.DataFrame):
+        return spark.createDataFrame(known[["h", "t", "r"]].drop_duplicates())
+    return known.select("h", "t", "r").dropDuplicates()
+
+
 def _flag_constraint(cand: DataFrame, cdf: DataFrame | None, flag: str) -> DataFrame:
     """Mark candidate rows allowed by the relation's constraint list;
     relations ABSENT from the list stay unconstrained (the reference's
@@ -608,10 +555,7 @@ def link_prediction_ranks_blocked(
         "s_tail_true", F.col("s_head_true")
     )
 
-    if isinstance(known, pd.DataFrame):
-        known_df = spark.createDataFrame(known[["h", "t", "r"]].drop_duplicates())
-    else:
-        known_df = known.select("h", "t", "r").dropDuplicates()
+    known_df = _known_df(spark, known)
     kn_heads = known_df.select(F.col("h").alias("cand"), F.col("t"), F.col("r")).withColumn("_kh", F.lit(1))
     kn_tails = known_df.select(F.col("h"), F.col("t").alias("cand"), F.col("r")).withColumn("_kt", F.lit(1))
 
@@ -633,11 +577,9 @@ def link_prediction_ranks_blocked(
     # test row itself, so it ranks against the constrained set exactly as
     # the broadcast kernel does; the known-filter correction joins run on
     # the already-constrained rows (== np.intersect1d(known, cand) there).
-    if constraints is not None:
-        cand = _flag_constraint(cand, _constraint_df(spark, constraints[0]), "in_dom")
-        cand = _flag_constraint(cand, _constraint_df(spark, constraints[1]), "in_rng")
-    else:
-        cand = cand.withColumn("in_dom", F.lit(True)).withColumn("in_rng", F.lit(True))
+    domains, ranges = constraints or (None, None)
+    cand = _flag_constraint(cand, _constraint_df(spark, domains), "in_dom")
+    cand = _flag_constraint(cand, _constraint_df(spark, ranges), "in_rng")
 
     # ONE pass over the candidate product: both direction scores per row,
     # both known-filter markers, a single groupBy with four conditional
@@ -805,10 +747,7 @@ def relation_prediction_ranks(
     )
     cand = _with_score(cand, "transe", norm, score_decimals, "hvec", "tvec", "s_cand")
 
-    if isinstance(known, pd.DataFrame):
-        known_df = spark.createDataFrame(known[["h", "t", "r"]].drop_duplicates())
-    else:
-        known_df = known.select("h", "t", "r").dropDuplicates()
+    known_df = _known_df(spark, known)
     kn = known_df.select("h", "t", F.col("r").alias("cand")).withColumn(
         "_k", F.lit(1)
     )
@@ -830,25 +769,7 @@ def link_prediction_metrics(ranks: DataFrame) -> DataFrame:
     One hash aggregation over the ranks table; column names are the
     stable contract for the oracle comparison.
     """
-    def _m(col: str, tag: str):
-        c = F.col(col).cast("double")
-        return [
-            F.avg(c).alias(f"mr_{tag}"),
-            F.avg(1.0 / c).alias(f"mrr_{tag}"),
-            F.avg((c <= 10).cast("double")).alias(f"hits10_{tag}"),
-            F.avg((c <= 3).cast("double")).alias(f"hits3_{tag}"),
-            F.avg((c <= 1).cast("double")).alias(f"hits1_{tag}"),
-        ]
-
-    both = ranks.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("rank_head_raw").alias("raw"), F.col("rank_head_filt").alias("filt")),
-                F.struct(F.col("rank_tail_raw").alias("raw"), F.col("rank_tail_filt").alias("filt")),
-            )
-        ).alias("x")
-    ).select("x.raw", "x.filt")
-    return both.agg(*_m("raw", "raw"), *_m("filt", "filt"))
+    return _rank_metrics(ranks)
 
 
 def relation_categories(triples: DataFrame) -> DataFrame:
@@ -873,31 +794,13 @@ def relation_categories(triples: DataFrame) -> DataFrame:
 def link_prediction_metrics_by_category(ranks: DataFrame, categories: DataFrame) -> DataFrame:
     """A17 optional breakdown: metrics per relation category.
 
-    Output: one row per category with the same metric columns as
-    :func:`link_prediction_metrics` plus ``category, n_triples``.
+    Output: one row per category — ``category, n_triples`` and MR / MRR /
+    Hits@10, raw + filtered.
     """
     joined = ranks.join(F.broadcast(categories.select("r", "category")), "r")
-    both = joined.select(
-        "category",
-        F.explode(
-            F.array(
-                F.struct(F.col("rank_head_raw").alias("raw"), F.col("rank_head_filt").alias("filt")),
-                F.struct(F.col("rank_tail_raw").alias("raw"), F.col("rank_tail_filt").alias("filt")),
-            )
-        ).alias("x"),
-    ).select("category", "x.raw", "x.filt")
-
-    def _m(col: str, tag: str):
-        c = F.col(col).cast("double")
-        return [
-            F.avg(c).alias(f"mr_{tag}"),
-            F.avg(1.0 / c).alias(f"mrr_{tag}"),
-            F.avg((c <= 10).cast("double")).alias(f"hits10_{tag}"),
-        ]
-
-    return both.groupBy("category").agg(
-        (F.count("*") / 2).cast("long").alias("n_triples"), *_m("raw", "raw"), *_m("filt", "filt")
-    )
+    return _rank_metrics(
+        joined, "category", extra=[(F.count("*") / 2).cast("long").alias("n_triples")]
+    ).drop("hits3_raw", "hits1_raw", "hits3_filt", "hits1_filt")
 
 
 def top_k_completions(
@@ -923,9 +826,8 @@ def top_k_completions(
     at serving time this is the fast path, not just a filter.
     """
     n_ent = emb["ent"].shape[0]
-    b_emb = spark.sparkContext.broadcast(emb)
-    b_constr = spark.sparkContext.broadcast(constraints)
-    _PINNED.extend([b_emb, b_constr])
+    b_emb = pin_broadcast(spark, emb)
+    b_constr = pin_broadcast(spark, constraints)
     in_cols = ["h", "r"] if mode == "tail" else ["t", "r"]
     out_schema = f"{in_cols[0]} long, r long, candidate long, score double, rk long"
 
@@ -989,8 +891,7 @@ def score_triples(
     one consistent rounding (Spark's ``F.round`` is HALF_UP and would
     disagree on exact .5 boundaries).
     """
-    b_emb = spark.sparkContext.broadcast(emb)
-    _PINNED.append(b_emb)
+    b_emb = pin_broadcast(spark, emb)
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in triples.schema.fields
     ) + ", score double"

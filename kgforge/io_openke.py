@@ -261,11 +261,3 @@ def read_triples_spark(spark: SparkSession, path: str) -> DataFrame:
         )
     )
 
-
-def read_dict_spark(spark: SparkSession, path: str) -> DataFrame:
-    raw = spark.read.text(path)
-    parts = F.split(F.col("value"), "\t")
-    return (
-        raw.where(F.size(parts) == 2)
-        .select(parts[0].alias("name"), parts[1].cast("long").alias("id"))
-    )

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import pin_broadcast
+
 _NEG_SCHEMA = "h long, t long, r long, y int"
 
 
@@ -59,11 +61,6 @@ def bern_stats(triples: DataFrame) -> DataFrame:
 
 _CAND_SCHEMA = "sh long, st long, sr long, k long, attempt long, h long, t long, r long"
 _CAND_SIDE_SCHEMA = _CAND_SCHEMA + ", corrupt_head boolean"
-
-# sc.broadcast handles pinned for session lifetime — Spark 4's
-# ContextCleaner can reclaim an out-of-scope broadcast while a lazy plan
-# still references it (same pattern as link.py/evaluate.py)
-_PINNED: list = []
 
 
 def _mix_base(H, T, R, K, ATT, seed: int, salt: int) -> np.ndarray:
@@ -213,8 +210,7 @@ def _exact_negatives(
     spark = triples.sparkSession
     constraints_bc = None
     if constraints is not None:
-        constraints_bc = spark.sparkContext.broadcast(constraints)
-        _PINNED.append(constraints_bc)
+        constraints_bc = pin_broadcast(spark, constraints)
     slots = (
         triples.groupBy("h", "t", "r")
         .agg(F.count("*").alias("_m"))

@@ -13,6 +13,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: sc.broadcast handles pinned for the session's lifetime: releasing one
+#: while a lazy plan still references it triggers a Spark-4 ContextCleaner
+#: race ("Block broadcast_N does not exist") in task-completion listeners.
+_PINNED: list = []
+
+
+def pin_broadcast(spark: SparkSession, value):
+    """``sc.broadcast(value)``, kept alive for the rest of the session."""
+    b = spark.sparkContext.broadcast(value)
+    _PINNED.append(b)
+    return b
+
+
+def local_cpus() -> str:
+    """Core count for a ``local[N]`` master: ``$SPARK_GRAFT_CPUS``, else
+    the host's CPU count."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
 
 def get_spark(
     master: str | None = None,
@@ -22,13 +40,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with kgforge defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    in the sandbox; on a cluster pass None and let spark-submit decide.
+    ``master`` defaults to ``local[N]`` with N from :func:`local_cpus`;
+    on a cluster set ``SPARK_MASTER_SET`` and let spark-submit decide.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and not os.environ.get("SPARK_MASTER_SET"):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{local_cpus()}]"
     if master:
         builder = builder.master(master)
 

@@ -11,8 +11,10 @@ Design:
 * The gazetteer and pattern grammar are *small* dictionaries — compiled
   into regexes once per executor (module-level cache keyed by a
   fingerprint), shipped via broadcast-sized closure, never joined row-wise.
-* All matching is pandas ``str`` vectorized ops (``extractall`` /
-  ``findall``) over Arrow record batches — no per-row Python UDFs.
+* Matching runs inside each Arrow record batch: a Python loop applies
+  the compiled regex's ``finditer`` to every text (the triple pass first
+  skips texts lacking the pattern's literal middle), collects the hits
+  into column lists and emits one frame per batch — no per-row UDFs.
 * "Dependency-style" = passive/inverse templates map captured argument
   order back to canonical (subj, pred, obj) — e.g. "B was acquired by A"
   emits (A, acquired, B).

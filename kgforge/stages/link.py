@@ -23,12 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import kernels
+from ..session import pin_broadcast
 from .extract import normalize_surface
-
-#: session-lifetime pins for sc.broadcast handles: releasing them mid-job
-#: triggers a Spark-4 ContextCleaner race ("Block broadcast_N does not
-#: exist") in task-completion listeners. Bounded by #stage invocations.
-_PINNED: list = []
 
 
 def candidate_links(surfaced: DataFrame, gazetteer: DataFrame, col: str, out: str) -> DataFrame:
@@ -118,8 +114,7 @@ def link_triples(
     ) + ", link_score double"
 
     if emb is not None and local_select:
-        b_emb = spark.sparkContext.broadcast(emb)
-        _PINNED.append(b_emb)
+        b_emb = pin_broadcast(spark, emb)
 
         def score_select(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             E = b_emb.value
@@ -133,8 +128,7 @@ def link_triples(
         return withids.mapInPandas(score_select, scored_schema)
 
     if emb is not None:
-        b_emb = spark.sparkContext.broadcast(emb)
-        _PINNED.append(b_emb)
+        b_emb = pin_broadcast(spark, emb)
 
         def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             E = b_emb.value

@@ -13,6 +13,7 @@ from kgforge import kernels
 from kgforge.evaluate import (
     link_prediction_metrics,
     link_prediction_ranks,
+    link_prediction_ranks_multi,
     top_k_completions,
     triple_classification,
 )
@@ -24,8 +25,28 @@ EMB = gen_embeddings(n_ent=N_ENT, n_rel=N_REL, dim=8)
 KNOWN = pd.concat([SPLIT["train2id"], SPLIT["valid2id"], SPLIT["test2id"]])
 
 
-def _oracle_ranks(test: pd.DataFrame, model="transe", norm=1) -> pd.DataFrame:
+# type constraints from the train split for relations 0..2 only: 3..4
+# stay unconstrained, and some test entities fall outside their lists
+DOMAINS = {
+    int(r): np.unique(g["h"].to_numpy())
+    for r, g in SPLIT["train2id"].groupby("r") if int(r) < 3
+}
+RANGES = {
+    int(r): np.unique(g["t"].to_numpy())
+    for r, g in SPLIT["train2id"].groupby("r") if int(r) < 3
+}
+
+
+def _oracle_ranks(test: pd.DataFrame, model="transe", norm=1, constraints=None) -> pd.DataFrame:
+    """``constraints``: optional ``(domains, ranges)``, either side None;
+    a head (tail) candidate outside the relation's listed domain (range)
+    is skipped."""
     known_set = set(map(tuple, KNOWN[["h", "t", "r"]].itertuples(index=False)))
+    domains, ranges = constraints or (None, None)
+
+    def allowed(cmap, r, e):
+        return cmap is None or r not in cmap or e in set(cmap[r].tolist())
+
     rows = []
     for h, t, r in test[["h", "t", "r"]].itertuples(index=False):
         def sc(hh, tt):
@@ -38,14 +59,14 @@ def _oracle_ranks(test: pd.DataFrame, model="transe", norm=1) -> pd.DataFrame:
         true_head = sc(h, t)
         rh_raw = rh_filt = 1
         for e in range(N_ENT):
-            if sc(e, t) < true_head:
+            if allowed(domains, r, e) and sc(e, t) < true_head:
                 rh_raw += 1
                 if e == h or (e, t, r) not in known_set:
                     rh_filt += 1
         true_tail = sc(h, t)
         rt_raw = rt_filt = 1
         for e in range(N_ENT):
-            if sc(h, e) < true_tail:
+            if allowed(ranges, r, e) and sc(h, e) < true_tail:
                 rt_raw += 1
                 if e == t or (h, e, r) not in known_set:
                     rt_filt += 1
@@ -105,19 +126,44 @@ def test_relation_ranks_match_oracle(spark):
 
 
 @pytest.mark.parametrize(
-    "model",
-    ["transe", "transd", "distmult", "complex", "rotate", "simple", "rescal", "analogy", "hole"],
+    "models,sides",
+    [
+        *[
+            pytest.param((m,), None, id=m)
+            for m in [
+                "transe", "transd", "distmult", "complex", "rotate",
+                "simple", "rescal", "analogy", "hole",
+            ]
+        ],
+        pytest.param(("transe",), "both", id="transe-constrained"),
+        pytest.param(("transe",), "domain", id="transe-domain-only"),
+        pytest.param(("transe", "distmult"), "both", id="multi-constrained"),
+    ],
 )
-def test_ranks_match_oracle(spark, model):
+def test_ranks_match_oracle(spark, models, sides):
     test = SPLIT["test2id"].head(15)
-    got = (
-        link_prediction_ranks(spark, spark.createDataFrame(test), EMB, KNOWN, model=model, norm=1)
-        .toPandas()
-        .sort_values(["h", "t", "r"])
-        .reset_index(drop=True)
-    )
-    want = _oracle_ranks(test, model=model).sort_values(["h", "t", "r"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    tdf = spark.createDataFrame(test)
+    constraints = None if sides is None else (DOMAINS, RANGES if sides == "both" else None)
+    if len(models) == 1:
+        got = {
+            models[0]: link_prediction_ranks(
+                spark, tdf, EMB, KNOWN, model=models[0], norm=1, constraints=constraints
+            ).toPandas()
+        }
+    else:
+        multi = link_prediction_ranks_multi(
+            spark, tdf, EMB, KNOWN, [(m, None) for m in models], constraints=constraints
+        ).toPandas()
+        assert sorted(multi["model"].unique()) == sorted(models)
+        got = {m: g.drop(columns="model") for m, g in multi.groupby("model")}
+    key = ["h", "t", "r"]
+    for m in models:
+        want = _oracle_ranks(test, model=m, constraints=constraints)
+        pd.testing.assert_frame_equal(
+            got[m].sort_values(key).reset_index(drop=True),
+            want.sort_values(key).reset_index(drop=True),
+            check_dtype=False,
+        )
 
 
 def test_metrics_match_manual(spark):

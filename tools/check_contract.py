@@ -45,9 +45,10 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
-    from kgforge.session import get_spark
+    from kgforge.session import get_spark, local_cpus
 
-    spark = get_spark(master=os.environ.get("KGFORGE_MASTER", "local[8]"), app_name="check-contract")
+    master = os.environ.get("KGFORGE_MASTER", f"local[{local_cpus()}]")
+    spark = get_spark(master=master, app_name="check-contract")
     if os.environ.get("KGFORGE_ARROW_OFF"):
         # driver-faithful mode: the driver's harness runs Spark defaults,
         # where Arrow conversion is OFF and createDataFrame uses the
