@@ -14,11 +14,13 @@ test_link_prediction``, recalled — SURVEY.md §0):
 
 Spark execution: test triples flow through one Arrow-batched
 ``mapInPandas``; the full entity/relation embedding matrices are
-broadcast once (``sc.broadcast`` NumPy, not a join). Inside a batch a
-Python loop walks the test triples; per triple and direction, one
-vectorized kernel call scores all |E| candidates. The known-triple
-filter ships as two hash maps keyed ``(r, t) → {h}`` / ``(r, h) → {t}``
-built from the (dictionary-scale) triple splits.
+broadcast once (``sc.broadcast`` NumPy, not a join). Inside a batch the
+test triples are taken in chunks; per chunk and direction, one kernel
+call scores every triple of the chunk against all |E| candidates as a
+``[chunk, |E|]`` block (chunk sized so its temporaries stay ≤16 MB).
+The known-triple filter ships as two sorted-array indexes keyed
+``(r, t) → h`` / ``(r, h) → t``, built from the (dictionary-scale)
+triple splits and probed with ``np.searchsorted``.
 
 Scale note: embeddings are model-parameter-sized (|E|·d floats), the
 same thing the reference holds on every worker via its parameter-server
@@ -45,22 +47,46 @@ RANK_COLS = ("rank_head_raw", "rank_head_filt", "rank_tail_raw", "rank_tail_filt
 RANKS_SCHEMA = "h long, t long, r long, " + ", ".join(f"{c} long" for c in RANK_COLS)
 
 
-def _known_maps(known: pd.DataFrame | None) -> tuple[dict, dict]:
-    """(r, t) -> sorted np.array of known heads; (r, h) -> known tails.
+#: byte budget of one scoring temporary: glibc hands buffers above ~32 MB
+#: back to the OS on free, so larger ones page-fault on every reuse
+_CHUNK_BYTES = 16 << 20
 
-    ``known=None`` → empty maps (raw-only ranking; the filtered columns
-    then equal the raw ones — used by :func:`link_prediction_ranks_relfilter`,
-    which applies the known-filter relationally instead).
+
+def _known_index(known: pd.DataFrame | None) -> tuple[tuple, tuple]:
+    """Known-triple filter as one sorted index per side, ``(keys,
+    starts, vals)``: ``keys`` are the unique ``(r << 32) | e`` keys (``e``
+    = t on the head side, h on the tail side) and
+    ``vals[starts[i]:starts[i + 1]]`` the sorted unique ids known under
+    ``keys[i]``.
+
+    ``known=None`` → empty indexes (raw-only ranking; the filtered
+    columns then equal the raw ones — used by
+    :func:`link_prediction_ranks_relfilter`, which applies the
+    known-filter relationally instead).
     """
-    if known is None or not len(known):
-        return {}, {}
-    heads: dict[tuple[int, int], np.ndarray] = {
-        k: np.unique(g["h"].to_numpy()) for k, g in known.groupby(["r", "t"])
-    }
-    tails: dict[tuple[int, int], np.ndarray] = {
-        k: np.unique(g["t"].to_numpy()) for k, g in known.groupby(["r", "h"])
-    }
-    return heads, tails
+    h, t, r = (
+        (np.empty(0, np.int64),) * 3 if known is None
+        else (known[c].to_numpy(np.int64) for c in ("h", "t", "r"))
+    )
+
+    def index(fixed: np.ndarray, var: np.ndarray) -> tuple:
+        # unique (key, id) columns, sorted by key, then id
+        key, var = np.unique(np.stack([(r << 32) | fixed, var]), axis=1)
+        keys, starts = np.unique(key, return_index=True)
+        return keys, np.append(starts, len(key)), var
+
+    return index(t, h), index(h, t)
+
+
+def _known_ids(index: tuple, r: np.ndarray, e: np.ndarray) -> list[np.ndarray]:
+    """Per row, the sorted ids known under key ``(r, e)``: the left and
+    right ``searchsorted`` slots of a key in ``keys`` differ by one on a
+    hit and coincide on a miss, which yields an empty slice."""
+    keys, starts, vals = index
+    key = (r << 32) | e
+    lo = starts[np.searchsorted(keys, key)]
+    hi = starts[np.searchsorted(keys, key, side="right")]
+    return [vals[a:b] for a, b in zip(lo, hi)]
 
 
 def link_prediction_ranks(
@@ -94,16 +120,14 @@ def _rank(s: np.ndarray, true_e: int, cand, known) -> tuple[int, int]:
 
     ``cand``: the relation's allowed candidate ids, or None for all
     entities. ``known``: sorted ids forming a known-true triple in this
-    slot, or None; the filtered rank skips those inside ``cand`` except
+    slot; the filtered rank skips those inside ``cand`` except
     ``true_e`` itself.
     """
     true_s = s[true_e]
     below = int(((s if cand is None else s[cand]) < true_s).sum())
-    filt = below
-    if known is not None:
-        if cand is not None:
-            known = np.intersect1d(known, cand)
-        filt -= int((s[known[known != true_e]] < true_s).sum())
+    if cand is not None:
+        known = np.intersect1d(known, cand)
+    filt = below - int((s[known[known != true_e]] < true_s).sum())
     return 1 + below, 1 + filt
 
 
@@ -122,9 +146,13 @@ def link_prediction_ranks_multi(
     cost ~2.7 s of scheduling for ~0.4 s of NumPy at fixture scale).
     Output: ``model`` + RANKS_SCHEMA.
 
-    Per test triple and direction, one ``kernels.score_batch`` call
-    scores all |E| candidates, rounded with ``np.round`` to the model's
-    ``score_decimals`` when given, and :func:`_rank` counts them.
+    Per chunk of test triples and direction, one ``kernels.score_batch``
+    call scores ``[chunk, 1]`` fixed-slot and relation ids against
+    ``[1, |E|]`` candidate ids into a ``[chunk, |E|]`` block (bit-identical
+    to flat per-row calls), rounded with ``np.round`` to the model's
+    ``score_decimals`` when given; :func:`_rank` counts each row. A chunk
+    keeps one ``[chunk, |E|, d]`` float64 temporary within
+    ``_CHUNK_BYTES`` (HolE's gathered operand is ``d``× wider).
 
     ``constraints``: optional ``(domains, ranges)`` maps ``r → entity
     ids`` (``type_constrain.txt`` semantics; either side may be None):
@@ -133,15 +161,19 @@ def link_prediction_ranks_multi(
     stay unconstrained — the reference's type-constrained protocol
     (``base/Test.h``, recalled — SURVEY.md §0).
     """
-    n_ent = emb["ent"].shape[0]
+    n_ent, dim = emb["ent"].shape
+    chunk = {
+        model: max(1, _CHUNK_BYTES // (n_ent * dim * (dim if model == "hole" else 1) * 8))
+        for model, _ in models
+    }
     b_emb = pin_broadcast(spark, dict(emb))
     domains, ranges = constraints or (None, None)
-    b_filter = pin_broadcast(spark, (*_known_maps(known), domains or {}, ranges or {}))
+    b_filter = pin_broadcast(spark, (*_known_index(known), domains or {}, ranges or {}))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         E = b_emb.value
         heads_of, tails_of, domains, ranges = b_filter.value
-        all_ents = np.arange(n_ent, dtype=np.int64)
+        all_ents = np.arange(n_ent, dtype=np.int64)[None, :]
 
         def scores(model, dec, heads, r_ids, tails):
             s = kernels.score_batch(model, E, heads, r_ids, tails, norm)
@@ -153,16 +185,20 @@ def link_prediction_ranks_multi(
             h_arr = pdf["h"].to_numpy(np.int64)
             t_arr = pdf["t"].to_numpy(np.int64)
             r_arr = pdf["r"].to_numpy(np.int64)
+            known_h = _known_ids(heads_of, r_arr, t_arr)
+            known_t = _known_ids(tails_of, r_arr, h_arr)
             outs = []
             for model, dec in models:
                 ranks = np.empty((len(pdf), 4), dtype=np.int64)
-                for i in range(len(pdf)):  # per test triple; |E|-vectorized inner
-                    h, t, r = int(h_arr[i]), int(t_arr[i]), int(r_arr[i])
-                    r_ids = np.full(n_ent, r, dtype=np.int64)
-                    s_head = scores(model, dec, all_ents, r_ids, np.full(n_ent, t, dtype=np.int64))
-                    s_tail = scores(model, dec, np.full(n_ent, h, dtype=np.int64), r_ids, all_ents)
-                    ranks[i, :2] = _rank(s_head, h, domains.get(r), heads_of.get((r, t)))
-                    ranks[i, 2:] = _rank(s_tail, t, ranges.get(r), tails_of.get((r, h)))
+                for lo in range(0, len(pdf), chunk[model]):
+                    rows = slice(lo, lo + chunk[model])
+                    h, t, r = h_arr[rows, None], t_arr[rows, None], r_arr[rows, None]
+                    s_head = scores(model, dec, all_ents, r, t)
+                    s_tail = scores(model, dec, h, r, all_ents)
+                    for j, i in enumerate(range(lo, lo + len(h))):
+                        ri = int(r_arr[i])
+                        ranks[i, :2] = _rank(s_head[j], h_arr[i], domains.get(ri), known_h[i])
+                        ranks[i, 2:] = _rank(s_tail[j], t_arr[i], ranges.get(ri), known_t[i])
                 res = pdf[["h", "t", "r"]].copy()
                 res.insert(0, "model", model)
                 for j, col in enumerate(RANK_COLS):

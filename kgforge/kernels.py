@@ -14,9 +14,13 @@ SURVEY.md §0):
 * TransD (Ji 2015): dynamic rank-1 map, ``e⊥ = e + (e_pᵀe) r_p``
   (the ``M = r_p e_pᵀ + I`` trick — never materializes the matrix).
 
-All functions take ``[B, d]`` batches and return ``[B]`` float32 scores.
-These run inside Arrow-batched pandas UDFs with embedding matrices
-broadcast once per executor — never a per-row Python loop.
+All functions take ``[..., d]`` arrays whose leading dimensions
+broadcast against each other and return the broadcast ``[...]`` scores:
+flat ``[B, d]`` rows give ``[B]``, and ``[B, 1, d]`` against
+``[1, N, d]`` gives a ``[B, N]`` block that is bit-identical to the
+flat call on the repeated rows. These run inside Arrow-batched pandas
+UDFs with embedding matrices broadcast once per executor — never a
+per-row Python loop.
 """
 
 from __future__ import annotations
@@ -42,14 +46,14 @@ def _hyperplane(e: np.ndarray, w: np.ndarray) -> np.ndarray:
 
 
 def transh(h: np.ndarray, r: np.ndarray, t: np.ndarray, w: np.ndarray, norm: int = 1) -> np.ndarray:
-    """``w``: [B, d] per-row relation normal vectors (unit norm)."""
+    """``w``: [..., d] per-row relation normal vectors (unit norm)."""
     return _dist(_hyperplane(h, w) + r - _hyperplane(t, w), norm)
 
 
 def transr(h: np.ndarray, r: np.ndarray, t: np.ndarray, m: np.ndarray, norm: int = 1) -> np.ndarray:
-    """``m``: [B, d_r, d_e] per-row transfer matrices."""
-    h_r = np.einsum("bij,bj->bi", m, h)
-    t_r = np.einsum("bij,bj->bi", m, t)
+    """``m``: [..., d_r, d_e] per-row transfer matrices."""
+    h_r = np.einsum("...ij,...j->...i", m, h)
+    t_r = np.einsum("...ij,...j->...i", m, t)
     return _dist(h_r + r - t_r, norm)
 
 
@@ -58,7 +62,7 @@ def transd(
     h_p: np.ndarray, t_p: np.ndarray, r_p: np.ndarray,
     norm: int = 1,
 ) -> np.ndarray:
-    """Rank-1 dynamic projection; ``*_p`` are [B, d] projection vectors."""
+    """Rank-1 dynamic projection; ``*_p`` are [..., d] projection vectors."""
     h_proj = h + (h_p * h).sum(axis=-1, keepdims=True) * r_p
     t_proj = t + (t_p * t).sum(axis=-1, keepdims=True) * r_p
     return _dist(h_proj + r - t_proj, norm)
@@ -114,7 +118,7 @@ def rescal(h: np.ndarray, m: np.ndarray, t: np.ndarray) -> np.ndarray:
     special case. Reuses the per-relation matrix tensor the TransR
     kernel already carries. Negated for the shared lower-is-better
     ranking convention."""
-    return -np.einsum("bi,bij,bj->b", h, m, t)
+    return -np.einsum("...i,...ij,...j->...", h, m, t)
 
 
 def simple_score(
@@ -172,8 +176,11 @@ def hole(h: np.ndarray, r: np.ndarray, t: np.ndarray) -> np.ndarray:
     checkpoints and the reference family treat it as one."""
     d = h.shape[-1]
     idx = (np.arange(d)[:, None] + np.arange(d)[None, :]) % d  # idx[i, k]
-    tg = t[..., idx]  # [B, d(i), d(k)]
-    return -np.einsum("bi,bik,bk->b", h, tg, r)
+    tg = t[..., idx]  # [..., d(i), d(k)]
+    # order="C": the gather's result is not C-laid-out, and under the
+    # default order="K" einsum would then sum a broadcast block in a
+    # different order than the flat rows (last-ulp differences)
+    return -np.einsum("...i,...ik,...k->...", h, tg, r, order="C")
 
 
 def score_batch(

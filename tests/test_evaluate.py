@@ -11,6 +11,7 @@ import pytest
 
 from kgforge import kernels
 from kgforge.evaluate import (
+    RANK_COLS,
     link_prediction_metrics,
     link_prediction_ranks,
     link_prediction_ranks_multi,
@@ -131,8 +132,8 @@ def test_relation_ranks_match_oracle(spark):
         *[
             pytest.param((m,), None, id=m)
             for m in [
-                "transe", "transd", "distmult", "complex", "rotate",
-                "simple", "rescal", "analogy", "hole",
+                "transe", "transh", "transr", "transd", "distmult", "complex",
+                "rotate", "simple", "rescal", "analogy", "hole",
             ]
         ],
         pytest.param(("transe",), "both", id="transe-constrained"),
@@ -164,6 +165,72 @@ def test_ranks_match_oracle(spark, models, sides):
             want.sort_values(key).reset_index(drop=True),
             check_dtype=False,
         )
+
+
+def _numpy_filtered_ranks(ent, rel, test, known_set):
+    """Per-triple TransE-L1 raw + filtered ranks in plain NumPy:
+    1 + candidates scoring strictly lower, known-true ones skipped for
+    the filtered rank."""
+    def rank(scores, true_e, is_known):
+        better = np.flatnonzero(scores < scores[true_e])
+        return 1 + len(better), 1 + sum(1 for e in better if not is_known(int(e)))
+
+    rows = []
+    for h, t, r in test[["h", "t", "r"]].itertuples(index=False, name=None):
+        head = np.abs(ent + rel[r] - ent[t]).sum(axis=1)
+        tail = np.abs(ent[h] + rel[r] - ent).sum(axis=1)
+        rows.append((
+            h, t, r,
+            *rank(head, h, lambda e: (e, t, r) in known_set),
+            *rank(tail, t, lambda e: (h, e, r) in known_set),
+        ))
+    return pd.DataFrame(rows, columns=["h", "t", "r", *RANK_COLS])
+
+
+@pytest.mark.parametrize("with_known", [True, False], ids=["known", "known-none"])
+def test_ranks_across_chunk_boundaries(spark, with_known):
+    """|E| = 60k at d = 8 holds the scoring chunk to 4 test triples, so
+    the 15 triples of one Arrow batch score as chunks of 4, 4, 4 and 3.
+    Ranks must equal a per-triple NumPy recomputation. The known set
+    hits the filter index for the first 8 triples (each with 40 other
+    known heads and tails, about half scoring below the true entity)
+    and misses for the rest; ``known=None`` is the empty index that the
+    relational-filter path ranks with (filtered == raw)."""
+    n_ent, n_rel = 60_000, 5
+    emb = gen_embeddings(n_ent=n_ent, n_rel=n_rel, dim=8)
+    rng = np.random.default_rng(11)
+    test = pd.DataFrame({
+        "h": rng.integers(0, n_ent, 15),
+        "t": rng.integers(0, n_ent, 15),
+        "r": rng.integers(0, n_rel, 15),
+    })
+    known = None
+    if with_known:
+        parts = []
+        for h, t, r in test.head(8).itertuples(index=False, name=None):
+            others = rng.integers(0, n_ent, 40)
+            parts += [
+                pd.DataFrame({"h": [h], "t": [t], "r": [r]}),
+                pd.DataFrame({"h": others, "t": t, "r": r}),
+                pd.DataFrame({"h": h, "t": others, "r": r}),
+            ]
+        known = pd.concat(parts, ignore_index=True)
+    known_set = set() if known is None else set(known.itertuples(index=False, name=None))
+
+    got = link_prediction_ranks(
+        spark, spark.createDataFrame(test).coalesce(1), emb, known
+    ).toPandas()
+    want = _numpy_filtered_ranks(
+        emb["ent"].astype(np.float64), emb["rel"].astype(np.float64), test, known_set
+    )
+    key = ["h", "t", "r"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
+        check_dtype=False,
+    )
+    moved = (got["rank_head_filt"] < got["rank_head_raw"]) | (got["rank_tail_filt"] < got["rank_tail_raw"])
+    assert moved.any() == with_known
 
 
 def test_metrics_match_manual(spark):

@@ -209,3 +209,31 @@ def test_hole_matches_paper_loop_and_fft_form():
     # circular correlation is NOT commutative: swapping h and t moves scores
     rev = kernels.score_batch("hole", EMB, T, R, H)
     assert np.abs(got - rev).max() > 1e-3
+
+
+@pytest.mark.parametrize(
+    "model,norm",
+    [(m, n) for m in ("transe", "transh", "transr", "transd") for n in (1, 2)]
+    + [(m, 1) for m in ("distmult", "complex", "rotate", "simple", "rescal", "analogy", "hole")],
+)
+def test_broadcast_block_is_bitwise_flat(model, norm):
+    """A ``[B, 1]`` × ``[1, N]`` id block scores EXACTLY (array_equal,
+    not allclose) like the flat per-row call on repeated/tiled ids, on
+    both the head side and the tail side — the rank kernel scores a
+    chunk of test triples as such a block and its ranks must not move."""
+    n = EMB["ent"].shape[0]
+    ents = np.arange(n)
+    h, r, t = H[:7], R[:7], T[:7]
+    b = len(h)
+    head = kernels.score_batch(model, EMB, ents[None, :], r[:, None], t[:, None], norm)
+    head_flat = kernels.score_batch(
+        model, EMB, np.tile(ents, b), np.repeat(r, n), np.repeat(t, n), norm
+    )
+    assert head.shape == (b, n)
+    assert np.array_equal(head, head_flat.reshape(b, n))
+    tail = kernels.score_batch(model, EMB, h[:, None], r[:, None], ents[None, :], norm)
+    tail_flat = kernels.score_batch(
+        model, EMB, np.repeat(h, n), np.repeat(r, n), np.tile(ents, b), norm
+    )
+    assert tail.shape == (b, n)
+    assert np.array_equal(tail, tail_flat.reshape(b, n))
