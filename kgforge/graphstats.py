@@ -10,7 +10,9 @@ partials). No driver materialization, no Python row work.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -387,15 +389,139 @@ def k_hop_neighbors(triples: DataFrame, seeds: DataFrame, k: int = 2) -> DataFra
     )
 
 
-def subject_out_degrees(triples: DataFrame, subj: str = "s") -> DataFrame:
-    """``(s, out_degree)`` over a ``(s, p, o)`` fact table — the
-    bucket-aware degree consumer: reading a table written with
-    ``joins.write_bucketed(key="s")`` (the pipeline's ``bucket_table``
-    output) runs this aggregation with ZERO Exchange — the bucketing
-    already satisfies the groupBy distribution (pinned by
-    ``test_bucketed_fact_table_zero_exchange``)."""
-    return triples.groupBy(subj).agg(
-        F.count(F.lit(1)).cast("long").alias("out_degree")
+def _directed_edges(triples: DataFrame) -> DataFrame:
+    """Distinct directed entity edges ``(src, dst)`` = ``h -> t``,
+    self-loops dropped — the graph the importance operators rank."""
+    return (
+        triples.select(F.col("h").alias("src"), F.col("t").alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .dropDuplicates(["src", "dst"])
+    )
+
+
+def _endpoints(edges: DataFrame) -> DataFrame:
+    """``(e)``: each distinct endpoint of a ``(src, dst)`` edge table."""
+    return (
+        edges.select(F.col("src").alias("e"))
+        .unionByName(edges.select(F.col("dst").alias("e")))
+        .distinct()
+    )
+
+
+def _flag_dangling(edges: DataFrame, out: DataFrame) -> DataFrame:
+    """``(e, _dang)`` over the endpoints of ``edges``; ``_dang`` marks
+    nodes absent from the per-``src`` out-strength table ``out``."""
+    return (
+        _endpoints(edges)
+        .join(out.select(F.col("src").alias("e"), F.lit(1).alias("_o")), "e", "left")
+        .select("e", F.col("_o").isNull().alias("_dang"))
+    )
+
+
+def _power_iterate(
+    edges: DataFrame,
+    contrib: Column,
+    nodes: DataFrame,
+    rank0: Column,
+    step: Callable[[Column, Column], Column],
+    n_iter: int,
+    round_decimals: int,
+) -> DataFrame:
+    """The damped power method behind :func:`pagerank`,
+    :func:`personalized_pagerank` and :func:`pagerank_weighted`:
+    ``(e, rank)`` after ``n_iter`` rounds. The variant supplies the
+    checkpointed ``(src, dst, …)`` ``edges`` with the static out-strength
+    folded in and the per-edge ``contrib`` over ``edges ⋈ ranks``; the
+    checkpointed ``(e, _dang, …)`` ``nodes`` (with whatever ``step``
+    reads, e.g. PPR's base ``b``); ``rank0`` over ``nodes``; and
+    ``step(c, dang)``, the unrounded update from the summed in-edge
+    contribution and the previous round's dangling mass. The step is an
+    expression, not one shared formula: the DuckDB oracles replay each
+    variant's exact expression tree.
+
+    Fixed iteration count (no convergence test — N is part of the query
+    contract so any engine replays it exactly). Per round: one
+    ``edges ⋈ ranks`` join on ``src`` plus one ``groupBy(dst)``
+    aggregation (map-side partial), then ``nodes ⟕ contrib``. The
+    dangling mass rides the round's ``localCheckpoint`` as an
+    Observation: the driver reads one scalar and no job runs for it.
+
+    Every round's ranks are rounded to ``round_decimals`` — floating
+    sums are accumulation-order-dependent at the ulp, so without the
+    per-round round two engines (or two partitionings) could drift
+    apart across rounds; rounding at 1e-9 re-synchronizes each round
+    (per-round error is ~1e-15, far inside the rounding step). This is
+    what makes the DuckDB unrolled-CTE oracles hash-exact, and makes the
+    result partitioning-independent — same determinism rule as the
+    pipeline's content-hash salting.
+
+    Scale shape: the per-round state is the node-cardinality rank
+    table; edges are only ever JOINED (never collected). Each round is
+    one join shuffle + one agg shuffle — the irreducible PageRank
+    communication; on a cluster, pre-bucketing edges by ``src`` (see
+    ``joins.write_bucketed``) removes the join-side Exchange. Rank
+    tables are ``localCheckpoint``-ed per round: lineage would otherwise
+    grow linearly with rounds (same trap as B8's CC loop,
+    canonicalize.py). 5 Spark jobs per round at test scale, pinned by
+    ``test_iterative_graph_ops_job_budget``.
+    """
+    dang_sum = F.coalesce(
+        F.sum(F.when(F.col("_dang"), F.col("rank"))), F.lit(0.0)
+    ).alias("dang")
+    obs = Observation()
+    ranks = (
+        nodes.select("e", "_dang", rank0.alias("rank"))
+        .observe(obs, dang_sum)
+        .localCheckpoint()
+    )
+    for _ in range(n_iter):
+        dang = F.lit(float(obs.get["dang"]))
+        summed = (
+            edges.join(ranks.select(F.col("e").alias("src"), "rank"), "src")
+            .groupBy("dst")
+            .agg(F.sum(contrib).alias("contrib"))
+            .withColumnRenamed("dst", "e")
+        )
+        obs = Observation()
+        ranks = (
+            nodes.join(summed, "e", "left")
+            .select(
+                "e",
+                "_dang",
+                F.round(
+                    step(F.coalesce("contrib", F.lit(0.0)), dang), round_decimals
+                ).alias("rank"),
+            )
+            .observe(obs, dang_sum)
+            .localCheckpoint()
+        )
+    return ranks.select("e", "rank")
+
+
+def _uniform_pagerank(
+    edges: DataFrame,
+    out: DataFrame,
+    contrib: Column,
+    n_iter: int,
+    damping: float,
+    round_decimals: int,
+) -> DataFrame:
+    """:func:`_power_iterate` with teleport and dangling mass spread
+    uniformly over all N nodes: ``r0 = 1/N``,
+    ``rank' = (1-d)/N + d * (contrib + dangling/N)``. ``out`` is the
+    per-``src`` out-strength table that ``contrib`` divides by."""
+    # out-strength is static: folded into the edge table ONCE, so the
+    # loop never joins (or worse, broadcasts) the |V|-sized out table
+    edges_out = edges.join(out, "src").localCheckpoint(eager=False)
+    nodes = _flag_dangling(edges, out).localCheckpoint()
+    # max(1): an empty graph has no rank rows at all, so the value is
+    # never observed — the guard only avoids Python's 0-division
+    n_val = float(nodes.count()) or 1.0
+    d, n = F.lit(damping), F.lit(n_val)
+    return _power_iterate(
+        edges_out, contrib, nodes, F.round(F.lit(1.0 / n_val), round_decimals),
+        lambda c, dang: (F.lit(1.0) - d) / n + d * (c + dang / n),
+        n_iter, round_decimals,
     )
 
 
@@ -407,110 +533,16 @@ def pagerank(
 ) -> DataFrame:
     """Entity importance by damped PageRank over the directed entity
     graph (distinct ``h -> t`` edges, self-loops dropped): ``(e, rank)``.
-
-    Fixed-iteration power method (no convergence test — N is part of
-    the query contract so any engine replays it exactly). Per iteration:
-
-    * contribution: ``sum(rank/out_degree)`` over in-edges — one join of
-      the edge table with the rank table on ``src`` plus one ``groupBy
-      (dst)`` aggregation (map-side partial);
-    * dangling mass: ranks of out-degree-0 nodes, redistributed
-      uniformly (the standard stochastic-matrix fix) — a one-row
-      aggregate that rides broadcast;
-    * ``rank' = (1-d)/N + d * (contrib + dangling/N)``.
-
-    Every iteration's ranks are rounded to ``round_decimals`` — floating
-    sums are accumulation-order-dependent at the ulp, so without the
-    per-iteration round two engines (or two partitionings) could drift
-    apart across iterations; rounding at 1e-9 re-synchronizes each round
-    (per-round error is ~1e-15, far inside the rounding step). This is
-    what makes the DuckDB unrolled-CTE oracle hash-exact, and makes the
-    result partitioning-independent — same determinism rule as the
-    pipeline's content-hash salting.
-
-    Scale shape: the per-iteration state is the node-cardinality rank
-    table; edges are only ever JOINED (never collected). Each round is
-    one join shuffle + one agg shuffle — the irreducible PageRank
-    communication; on a cluster, pre-bucketing edges by ``src`` (see
-    ``joins.write_bucketed``) removes the join-side Exchange. Rank
-    tables are ``localCheckpoint``-ed per round: each is referenced
-    twice the next round (contribution + dangling), and lineage would
-    otherwise grow linearly with iterations (same trap as B8's CC loop,
-    canonicalize.py).
-    """
-    from pyspark.sql import Observation
-
-    edges = (
-        triples.select(F.col("h").alias("src"), F.col("t").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)
-    )
+    A node's rank splits evenly over its out-edges (``rank/od``);
+    teleport and dangling mass are uniform (:func:`_uniform_pagerank`).
+    Rounding contract and plan shape: :func:`_power_iterate`."""
+    edges = _directed_edges(triples).localCheckpoint(eager=False)
     outdeg = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("double").alias("od")
     ).localCheckpoint(eager=False)
-    # out-degree is static: folded into the edge table ONCE, so the loop
-    # never joins (or worse, broadcasts) the |V|-sized outdeg table —
-    # per-iteration work is exactly edges⋈ranks + groupBy(dst)
-    edges_od = edges.join(outdeg, "src").localCheckpoint(eager=False)
-    # the dangling (out-degree-0) flag is static: folded into the node
-    # table once, so each round's dangling MASS is collected by an
-    # Observation riding the round's own checkpoint materialization —
-    # the old per-round semi-join + one-row agg + broadcast cost two
-    # extra jobs per iteration
-    nodes_d = (
-        edges.select(F.col("src").alias("e"))
-        .unionByName(edges.select(F.col("dst").alias("e")))
-        .distinct()
-        .join(outdeg.withColumnRenamed("src", "e"), "e", "left")
-        .select("e", F.col("od").isNull().alias("_dang"))
-        .localCheckpoint()
+    return _uniform_pagerank(
+        edges, outdeg, F.col("rank") / F.col("od"), n_iter, damping, round_decimals
     )
-    # max(1): an empty graph has no rank rows at all, so the value is
-    # never observed — the guard only avoids Python's 0-division
-    n_val = float(nodes_d.count()) or 1.0
-    _dang_sum = F.coalesce(
-        F.sum(F.when(F.col("_dang"), F.col("rank"))), F.lit(0.0)
-    ).alias("dang")
-    obs = Observation("pr_init")
-    ranks = (
-        nodes_d.select(
-            "e", "_dang", F.round(F.lit(1.0 / n_val), round_decimals).alias("rank")
-        )
-        .observe(obs, _dang_sum)
-        .localCheckpoint()
-    )
-    d = F.lit(damping)
-    for it in range(n_iter):
-        dang_val = float(obs.get["dang"])
-        contrib = (
-            edges_od.join(
-                ranks.select(F.col("e").alias("src"), "rank"), "src"
-            )
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("od")).alias("contrib"))
-            .withColumnRenamed("dst", "e")
-        )
-        obs = Observation(f"pr_round_{it}")
-        ranks = (
-            nodes_d.join(contrib, "e", "left")
-            .select(
-                "e",
-                "_dang",
-                F.round(
-                    (F.lit(1.0) - d) / F.lit(n_val)
-                    + d
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.lit(dang_val) / F.lit(n_val)
-                    ),
-                    round_decimals,
-                ).alias("rank"),
-            )
-            .observe(obs, _dang_sum)
-            .localCheckpoint()
-        )
-    return ranks.select("e", "rank")
 
 
 def label_propagation(triples: DataFrame, n_iter: int = 5) -> DataFrame:
@@ -803,95 +835,48 @@ def personalized_pagerank(
     neighborhoods. The standard query behind "entities related to X"
     recommendation / KG-completion candidate generation.
 
-    Same fixed-iteration, per-round ``round(…, round_decimals)`` power
-    method as :func:`pagerank` (see its docstring for the determinism
-    and scale argument); differences: the base vector ``b`` is
-    ``1/|S|`` on seeds (seeds outside the graph are ignored) and ``0``
-    elsewhere, ``r0 = b``, the update is
+    Same graph and ``rank/od`` edge weight as :func:`pagerank`; the
+    base vector ``b`` is ``1/|S|`` on seeds (seeds outside the graph
+    are ignored) and ``0`` elsewhere, ``r0 = b``, and the update is
     ``r' = (1-d)·b + d·(contrib + dang·b)`` — dangling mass
-    redistributes along the TELEPORT distribution, not uniformly. The
-    loop-invariant tables (edge+outdeg fold, dangling set, base vector)
-    are built once and checkpointed, exactly as in :func:`pagerank`.
+    redistributes along the TELEPORT distribution, not uniformly.
+    Rounding contract and plan shape: :func:`_power_iterate`.
     """
-    from pyspark.sql import Observation
-
-    edges = (
-        triples.select(F.col("h").alias("src"), F.col("t").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("e"))
-        .unionByName(edges.select(F.col("dst").alias("e")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges = _directed_edges(triples).localCheckpoint(eager=False)
     outdeg = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("double").alias("od")
     ).localCheckpoint(eager=False)
-    edges_od = edges.join(outdeg, "src").localCheckpoint(eager=False)
+    nodes = _flag_dangling(edges, outdeg).localCheckpoint(eager=False)
     s = (
         seeds.select(F.col("seed").alias("e"))
         .dropDuplicates()
         .join(nodes, "e", "left_semi")
     )
     ns = s.agg(F.count(F.lit(1)).cast("double").alias("ns"))
-    # the dangling flag and teleport base are both static: folded into
-    # one node table, so each round's dangling mass rides the round's
-    # checkpoint as an Observation instead of a semi-join + one-row agg
-    # + broadcast (two extra jobs per iteration — same shape as pagerank)
+    # the teleport base is static too: folded into the node table next
+    # to the dangling flag
     base = (
         nodes.join(s.withColumn("_s", F.lit(1)), "e", "left")
-        .join(outdeg.withColumnRenamed("src", "e").withColumn("_o", F.lit(1)).select("e", "_o"), "e", "left")
         .crossJoin(F.broadcast(ns))
         .select(
             "e",
+            "_dang",
             F.round(
                 F.when(F.col("_s").isNotNull(), F.lit(1.0) / F.col("ns")).otherwise(
                     F.lit(0.0)
                 ),
                 round_decimals,
             ).alias("b"),
-            F.col("_o").isNull().alias("_dang"),
         )
         .localCheckpoint()
     )
-    _dang_sum = F.coalesce(
-        F.sum(F.when(F.col("_dang"), F.col("rank"))), F.lit(0.0)
-    ).alias("dang")
-    obs = Observation("ppr_init")
-    ranks = (
-        base.select("e", "_dang", F.col("b").alias("rank"))
-        .observe(obs, _dang_sum)
-        .localCheckpoint()
+    d, b = F.lit(damping), F.col("b")
+    return _power_iterate(
+        edges.join(outdeg, "src").localCheckpoint(eager=False),
+        F.col("rank") / F.col("od"), base, b,
+        lambda c, dang: (F.lit(1.0) - d) * b + d * (c + dang * b),
+        n_iter, round_decimals,
     )
-    d = F.lit(damping)
-    for it in range(n_iter):
-        dang_val = float(obs.get["dang"])
-        contrib = (
-            edges_od.join(ranks.select(F.col("e").alias("src"), "rank"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("od")).alias("contrib"))
-            .withColumnRenamed("dst", "e")
-        )
-        obs = Observation(f"ppr_round_{it}")
-        ranks = (
-            base.join(contrib, "e", "left")
-            .select(
-                "e",
-                "_dang",
-                F.round(
-                    (F.lit(1.0) - d) * F.col("b")
-                    + d
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.lit(dang_val) * F.col("b")),
-                    round_decimals,
-                ).alias("rank"),
-            )
-            .observe(obs, _dang_sum)
-            .localCheckpoint()
-        )
-    return ranks.select("e", "rank")
 
 
 def top_hubs(triples: DataFrame, k: int = 10) -> DataFrame:
@@ -927,7 +912,7 @@ def hits(
     of the reported scores differs (they sum to 1, which is also the
     more interpretable contract).
 
-    Same determinism contract as :func:`pagerank`: both half-step score
+    Same determinism contract as :func:`_power_iterate`: both half-step score
     tables are rounded to ``round_decimals`` AFTER normalization, so the
     accumulation-order ulp noise of the float sums (~1e-16 relative)
     cannot drift across iterations and the DuckDB unrolled-CTE oracle
@@ -940,18 +925,8 @@ def hits(
     Sink-only nodes keep hub 0, source-only nodes auth 0 — they stay in
     the output via the left join against the node table.
     """
-    edges = (
-        triples.select(F.col("h").alias("src"), F.col("t").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("e"))
-        .unionByName(edges.select(F.col("dst").alias("e")))
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = _directed_edges(triples).localCheckpoint()
+    nodes = _endpoints(edges).localCheckpoint()
     nn = nodes.agg(F.count(F.lit(1)).cast("double").alias("n")).localCheckpoint()
     hub = (
         nodes.crossJoin(F.broadcast(nn))
@@ -1273,13 +1248,8 @@ def pagerank_weighted(
     ships five times the endorsement of a single-relation pair, which
     plain :func:`pagerank` (distinct-edge, weight-blind) erases.
 
-    Same fixed-iteration, per-round ``round(…, round_decimals)``
-    contract and localCheckpoint discipline as :func:`pagerank` (see
-    its docstring for the determinism and scale arguments); the only
-    structural change is the weighted edge table folding its
-    out-strength once, loop-invariant."""
-    from pyspark.sql import Observation
-
+    Teleport and dangling mass are uniform, as in :func:`pagerank`.
+    Rounding contract and plan shape: :func:`_power_iterate`."""
     edges = (
         triples.where(F.col("h") != F.col("t"))
         .groupBy(F.col("h").alias("src"), F.col("t").alias("dst"))
@@ -1287,62 +1257,10 @@ def pagerank_weighted(
         .localCheckpoint(eager=False)
     )
     outs = edges.groupBy("src").agg(F.sum("w").alias("sw"))
-    edges_w = edges.join(outs, "src").localCheckpoint(eager=False)
-    # dangling flag folded into the node table; per-round dangling mass
-    # rides each round's checkpoint as an Observation (see pagerank)
-    nodes_d = (
-        edges.select(F.col("src").alias("e"))
-        .unionByName(edges.select(F.col("dst").alias("e")))
-        .distinct()
-        .join(
-            edges.select(F.col("src").alias("e")).distinct().withColumn("_o", F.lit(1)),
-            "e",
-            "left",
-        )
-        .select("e", F.col("_o").isNull().alias("_dang"))
-        .localCheckpoint()
+    return _uniform_pagerank(
+        edges, outs, F.col("rank") * F.col("w") / F.col("sw"),
+        n_iter, damping, round_decimals,
     )
-    n_val = float(nodes_d.count()) or 1.0
-    _dang_sum = F.coalesce(
-        F.sum(F.when(F.col("_dang"), F.col("rank"))), F.lit(0.0)
-    ).alias("dang")
-    obs = Observation("wpr_init")
-    ranks = (
-        nodes_d.select(
-            "e", "_dang", F.round(F.lit(1.0 / n_val), round_decimals).alias("rank")
-        )
-        .observe(obs, _dang_sum)
-        .localCheckpoint()
-    )
-    d = F.lit(damping)
-    for it in range(n_iter):
-        dang_val = float(obs.get["dang"])
-        contrib = (
-            edges_w.join(ranks.select(F.col("e").alias("src"), "rank"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w") / F.col("sw")).alias("contrib"))
-            .withColumnRenamed("dst", "e")
-        )
-        obs = Observation(f"wpr_round_{it}")
-        ranks = (
-            nodes_d.join(contrib, "e", "left")
-            .select(
-                "e",
-                "_dang",
-                F.round(
-                    (F.lit(1.0) - d) / F.lit(n_val)
-                    + d
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.lit(dang_val) / F.lit(n_val)
-                    ),
-                    round_decimals,
-                ).alias("rank"),
-            )
-            .observe(obs, _dang_sum)
-            .localCheckpoint()
-        )
-    return ranks.select("e", "rank")
 
 
 def shortest_paths(

@@ -203,7 +203,10 @@ def test_bucketed_fact_table_zero_exchange(spark, run_dir):
     parquet fact table, and the subject-degree consumer's physical plan
     contains NO Exchange (the write-time bucketing replaces the per-query
     shuffle) while the same query over plain parquet does shuffle."""
-    from kgforge.graphstats import subject_out_degrees
+    from pyspark.sql import functions as F
+
+    def out_degrees(triples):
+        return triples.groupBy("s").agg(F.count(F.lit(1)).alias("out_degree"))
 
     work, _fdir, _pipe = run_dir
     tbl = spark.table("kg_triples_e2e")
@@ -211,13 +214,11 @@ def test_bucketed_fact_table_zero_exchange(spark, run_dir):
         "s", "p", "o"
     )
     assert sorted(map(tuple, tbl.collect())) == sorted(map(tuple, parq.collect()))
-    plan = subject_out_degrees(tbl)._jdf.queryExecution().executedPlan().toString()
+    plan = out_degrees(tbl)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-    plan2 = subject_out_degrees(parq)._jdf.queryExecution().executedPlan().toString()
+    plan2 = out_degrees(parq)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in plan2
-    assert (
-        subject_out_degrees(tbl).count() == subject_out_degrees(parq).count()
-    )
+    assert out_degrees(tbl).count() == out_degrees(parq).count()
 
 
 def test_canonicalize_recovers_unseen_aliases(spark, run_dir):

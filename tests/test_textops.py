@@ -417,19 +417,78 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-6  # probability mass conserved
 
 
-def test_pagerank_partitioning_independent(spark):
+@pytest.mark.parametrize(
+    "op", ["pagerank", "personalized_pagerank", "pagerank_weighted"]
+)
+def test_pagerank_partitioning_independent(spark, op):
     import numpy as np
 
-    from kgforge.graphstats import pagerank
+    from kgforge import graphstats
 
     rng = np.random.default_rng(43)
     tri = pd.DataFrame(
-        {"h": rng.integers(0, 20, 80), "t": rng.integers(0, 20, 80), "r": 0}
+        {
+            "h": rng.integers(0, 20, 80),
+            "t": rng.integers(0, 20, 80),
+            "r": rng.integers(0, 3, 80),  # unequal weights for pagerank_weighted
+        }
     )
     df = spark.createDataFrame(tri)
-    a = pagerank(df, n_iter=6).toPandas().set_index("e")["rank"].to_dict()
-    b = pagerank(df.repartition(13), n_iter=6).toPandas().set_index("e")["rank"].to_dict()
-    assert a == b
+    seeds = spark.createDataFrame([(0,), (1,), (99,)], "seed long")
+
+    def ranks(triples):
+        extra = (seeds,) if op == "personalized_pagerank" else ()
+        out = getattr(graphstats, op)(triples, *extra, n_iter=6)
+        return out.toPandas().set_index("e")["rank"].to_dict()
+
+    assert ranks(df) == ranks(df.repartition(13))
+
+
+def test_iterative_graph_ops_job_budget(spark):
+    """Spark jobs per round of each power-iteration loop are pinned
+    exactly, and the one-off set-up jobs (total minus rounds x per-round)
+    may only go down. A refactor that keeps every NumPy oracle green can
+    still add a job to every round; this is the test that catches it."""
+    import numpy as np
+
+    from kgforge.graphstats import hits, pagerank, pagerank_weighted, personalized_pagerank
+
+    rng = np.random.default_rng(41)
+    tri = pd.DataFrame(
+        {
+            "h": rng.integers(0, 30, 150),
+            "t": rng.integers(0, 30, 150),
+            "r": rng.integers(0, 3, 150),
+        }
+    )
+    df = spark.createDataFrame(tri)
+    seeds = spark.createDataFrame([(0,), (1,), (99,)], "seed long")
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    # operator: (run(n_iter), jobs per round, max set-up jobs)
+    budget = {
+        "pagerank": (lambda n: pagerank(df, n_iter=n), 5, 10),
+        "personalized_pagerank": (
+            lambda n: personalized_pagerank(df, seeds, n_iter=n), 5, 14
+        ),
+        "pagerank_weighted": (lambda n: pagerank_weighted(df, n_iter=n), 5, 12),
+        "hits": (lambda n: hits(df, n_iter=n), 18, 12),
+    }
+
+    def n_jobs(run, n_iter, group):
+        sc.setJobGroup(group, group)
+        try:
+            run(n_iter).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        bus.waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for name, (run, per_round, max_setup) in budget.items():
+        run(1).collect()  # warm-up: first-use planning and codegen
+        j2, j3 = (n_jobs(run, n, f"job_budget_{name}_{n}") for n in (2, 3))
+        assert j3 - j2 == per_round, (name, j2, j3)
+        assert j2 - 2 * per_round <= max_setup, (name, j2, j3)
 
 
 def test_round4_ops_handle_empty_inputs(spark):
@@ -470,14 +529,12 @@ def test_round4_ops_handle_empty_inputs(spark):
 def test_round5_ops_handle_empty_inputs(spark):
     """Same battery for the round-5 operators: no loops, raises, or
     null rows on empty inputs."""
-    from kgforge.graphstats import pagerank, subject_out_degrees
+    from kgforge.graphstats import pagerank
     from kgforge.incremental import dictionary_link_triples
     from kgforge.textops import stratified_sample
 
     empty_tri = spark.createDataFrame([], "h long, t long, r long")
     assert pagerank(empty_tri, n_iter=3).count() == 0
-    empty_spo = spark.createDataFrame([], "s long, p long, o long")
-    assert subject_out_degrees(empty_spo).count() == 0
 
     empty_ext = spark.createDataFrame([], "subj string, pred string, obj string")
     gaz = spark.createDataFrame([("a", "A")], "surface string, canonical string")
@@ -653,6 +710,7 @@ def test_personalized_pagerank_matches_numpy(spark):
 def test_round5_graph_ops_handle_empty_inputs(spark):
     from kgforge.graphstats import (
         label_propagation,
+        pagerank_weighted,
         personalized_pagerank,
         random_walks,
     )
@@ -662,6 +720,7 @@ def test_round5_graph_ops_handle_empty_inputs(spark):
     assert label_propagation(empty_tri, n_iter=3).count() == 0
     assert random_walks(empty_tri, num_walks=2, walk_length=3).count() == 0
     assert personalized_pagerank(empty_tri, seeds, n_iter=3).count() == 0
+    assert pagerank_weighted(empty_tri, n_iter=3).count() == 0
 
 def test_adamic_adar_matches_bruteforce(spark):
     """Spark Adamic-Adar top-k == exhaustive Python over all
