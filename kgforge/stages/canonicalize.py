@@ -35,31 +35,34 @@ from pyspark.sql import functions as F
 from ..sampling import splitmix64
 
 
+def normalize_names(s: pd.Series) -> pd.Series:
+    """Shingling normalization: lowercase, then strip ``[^\\w]``; nulls
+    become ``""``."""
+    return s.astype("string").fillna("").str.lower().str.replace(r"[^\w]", "", regex=True)
+
+
 def char_shingles(s: pd.Series, k: int = 3) -> pd.Series:
-    """Set of k-char shingles per normalized string (vectorized-ish)."""
-    s = s.str.lower().str.replace(r"[^\w]", "", regex=True)
-    return s.map(lambda x: {x[i:i + k] for i in range(max(1, len(x) - k + 1))})
+    """Set of k-char shingles per normalized string (the string-set
+    recipe the hashed paths below are equal to)."""
+    return normalize_names(s).map(lambda x: {x[i:i + k] for i in range(max(1, len(x) - k + 1))})
 
 
-def minhash_matrix(
-    strings: list[str], n_perm: int, k: int, seed: int, return_shingles: bool = False
-) -> np.ndarray:
-    """MinHash signatures for normalized strings → ``[n, n_perm]`` int64.
+def shingle_hashes(
+    strings: list[str], k: int, seed: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """FNV-1a hashes of every string's char k-shingles, grouped by string.
 
-    Bit-identical to the scalar recipe (FNV-1a per shingle via
-    :func:`hash_shingle`, then ``min(splitmix64(base ^ perm_const))``)
-    but hashed in NumPy passes: ASCII strings of length >= k go through
+    Returns ``(rows, base, counts)``: group ``j`` holds the ``counts[j]``
+    uint64 hashes ``base[sum(counts[:j]):][:counts[j]]`` of string
+    ``rows[j]``; every string gets exactly one non-empty group. The
+    values equal :func:`hash_shingle` over the string's shingle set but
+    are computed in NumPy passes: ASCII strings of length >= k go through
     :func:`kgforge.hashing.fnv1a_windows` (byte windows == char windows
-    for ASCII); short strings hash as one whole-string shingle via
-    ``fnv1a_tokens``; non-ASCII rows fall back to the scalar loop.
-    MinHash minimizes over the shingle *multiset*, which equals the min
-    over the set — so no per-window dedup is needed.
+    for ASCII, duplicates kept); shorter ASCII strings hash as one
+    whole-string shingle via ``fnv1a_tokens``; non-ASCII strings fall
+    back to the scalar loop over the shingle set.
     """
     from ..hashing import fnv1a_tokens, fnv1a_windows, flat_windows, pack_strings, pad_tokens
-
-    n = len(strings)
-    pc = splitmix64(np.arange(n_perm, dtype=np.uint64) + np.uint64(seed))
-    out = np.empty((n, n_perm), dtype=np.int64)
 
     long_i, short_i, fb_i = [], [], []
     for i, s in enumerate(strings):
@@ -69,63 +72,86 @@ def minhash_matrix(
             long_i.append(i)
         else:
             short_i.append(i)
-
-    def _sig_from_grouped(base: np.ndarray, counts: np.ndarray) -> np.ndarray:
-        """Per-group min over n_perm remixes.
-
-        Chunked on BOTH axes so every temporary stays ≤ ~16 MB: glibc
-        hands buffers above its mmap threshold (≤ 32 MB cap) straight
-        back to the OS, so big temporaries page-fault on every reuse —
-        measured 12 s vs 0.3 s for the identical arithmetic.
-        """
-        n_rows = len(counts)
-        bounds = np.concatenate(([0], np.cumsum(counts)))
-        sig = np.empty((n_rows, n_perm), dtype=np.uint64)
-        W_MAX = 262144
-        row_lo = 0
-        while row_lo < n_rows:
-            row_hi = row_lo + 1
-            while row_hi < n_rows and bounds[row_hi + 1] - bounds[row_lo] <= W_MAX:
-                row_hi += 1
-            b = base[bounds[row_lo]:bounds[row_hi]]
-            idx = (bounds[row_lo:row_hi] - bounds[row_lo]).astype(np.int64)
-            for p in range(0, n_perm, 8):
-                m = splitmix64(b[:, None] ^ pc[None, p:p + 8])
-                sig[row_lo:row_hi, p:p + 8] = np.minimum.reduceat(m, idx, axis=0)
-            row_lo = row_hi
-        return (sig >> np.uint64(1)).astype(np.int64)
-
-    sh_out: list | None = [None] * n if return_shingles else None
-
-    if long_i:
-        buf, offsets, lens = pack_strings([strings[i].encode() for i in long_i])
-        starts, counts = flat_windows(lens, offsets, k)
-        base = fnv1a_windows(buf, starts, k, seed)
-        out[long_i] = _sig_from_grouped(base, counts)
-        if return_shingles:
-            bounds = np.concatenate(([0], np.cumsum(counts)))
-            b64 = base.astype(np.int64)
-            for j, i in enumerate(long_i):
-                sh_out[i] = np.unique(b64[bounds[j]:bounds[j + 1]])
-    if short_i:
-        padded, lens = pad_tokens([strings[i].encode() for i in short_i])
-        base = fnv1a_tokens(padded, lens, seed)
-        out[short_i] = _sig_from_grouped(base, np.ones(len(short_i), dtype=np.int64))
-        if return_shingles:
-            b64 = base.astype(np.int64)
-            for j, i in enumerate(short_i):
-                sh_out[i] = b64[j:j + 1]
+    buf, offsets, lens = pack_strings([strings[i].encode() for i in long_i])
+    starts, long_counts = flat_windows(lens, offsets, k)
+    padded, short_lens = pad_tokens([strings[i].encode() for i in short_i])
+    fb_hashes, fb_counts = [], []
     for i in fb_i:
         x = strings[i]
         sh = {x[j:j + k] for j in range(max(1, len(x) - k + 1))}
-        base = np.array([hash_shingle(y, seed) for y in sh], dtype=np.uint64)
-        m = splitmix64(base[:, None] ^ pc[None, :])
-        out[i] = (m.min(axis=0) >> np.uint64(1)).astype(np.int64)
-        if return_shingles:
-            sh_out[i] = np.unique(base.astype(np.int64))
-    if return_shingles:
-        return out, sh_out
+        fb_hashes.extend(hash_shingle(y, seed) for y in sh)
+        fb_counts.append(len(sh))
+    base = np.concatenate((
+        fnv1a_windows(buf, starts, k, seed),
+        fnv1a_tokens(padded, short_lens, seed),
+        np.array(fb_hashes, dtype=np.uint64),
+    ))
+    counts = np.concatenate((
+        long_counts, np.ones(len(short_i), dtype=np.int64), np.array(fb_counts, dtype=np.int64)
+    ))
+    return np.array(long_i + short_i + fb_i, dtype=np.int64), base, counts
+
+
+def row_chunks(bounds: np.ndarray, cap: int) -> Iterator[tuple[int, int]]:
+    """``(lo, hi)`` row ranges over grouped items (row ``r`` owns items
+    ``bounds[r]:bounds[r + 1]``) that each span at most ``cap`` items; a
+    row larger than ``cap`` is a chunk of its own.
+
+    Callers size ``cap`` so every per-chunk temporary stays <= ~16 MB:
+    glibc hands buffers above its mmap threshold (<= 32 MB cap) straight
+    back to the OS, so big temporaries page-fault on every reuse —
+    measured 12 s vs 0.3 s for the identical arithmetic.
+    """
+    n_rows = len(bounds) - 1
+    lo = 0
+    while lo < n_rows:
+        hi = lo + 1
+        while hi < n_rows and bounds[hi + 1] - bounds[lo] <= cap:
+            hi += 1
+        yield lo, hi
+        lo = hi
+
+
+def minhash_from_hashes(
+    grouped: tuple[np.ndarray, np.ndarray, np.ndarray], n: int, n_perm: int, seed: int
+) -> np.ndarray:
+    """MinHash signatures ``[n, n_perm]`` int64 from :func:`shingle_hashes`
+    output: per group ``min(splitmix64(base ^ perm_const)) >> 1``, written
+    to its string's row. The min over the shingle *multiset* equals the
+    min over the set, so no per-window dedup is needed. Chunked on both
+    axes (:func:`row_chunks`, 8 permutations at a time).
+    """
+    rows, base, counts = grouped
+    pc = splitmix64(np.arange(n_perm, dtype=np.uint64) + np.uint64(seed))
+    bounds = np.concatenate(([0], np.cumsum(counts)))
+    sig = np.empty((n, n_perm), dtype=np.uint64)
+    for lo, hi in row_chunks(bounds, 262144):
+        b = base[bounds[lo]:bounds[hi]]
+        idx = (bounds[lo:hi] - bounds[lo]).astype(np.int64)
+        for p in range(0, n_perm, 8):
+            m = splitmix64(b[:, None] ^ pc[None, p:p + 8])
+            sig[rows[lo:hi], p:p + 8] = np.minimum.reduceat(m, idx, axis=0)
+    return (sig >> np.uint64(1)).astype(np.int64)
+
+
+def shingle_sets(grouped: tuple[np.ndarray, np.ndarray, np.ndarray], n: int) -> list:
+    """Sorted distinct int64 shingle hashes per string (``n`` rows) from
+    :func:`shingle_hashes` output — the arrays the Jaccard verify
+    intersects."""
+    rows, base, counts = grouped
+    b64 = base.view(np.int64)
+    bounds = np.concatenate(([0], np.cumsum(counts)))
+    out: list = [None] * n
+    for j, i in enumerate(rows):
+        out[i] = np.unique(b64[bounds[j]:bounds[j + 1]])
     return out
+
+
+def minhash_matrix(strings: list[str], n_perm: int, k: int, seed: int) -> np.ndarray:
+    """MinHash signatures for normalized strings → ``[n, n_perm]`` int64,
+    bit-identical to the scalar recipe ``min(splitmix64(hash_shingle(s)
+    ^ perm_const)) >> 1`` over each string's shingle set."""
+    return minhash_from_hashes(shingle_hashes(strings, k, seed), len(strings), n_perm, seed)
 
 
 def minhash_signatures(
@@ -152,11 +178,7 @@ def minhash_signatures(
         for pdf in batches:
             if pdf.empty:
                 continue
-            norm = (
-                pdf[name_col].astype("string").fillna("")
-                .str.lower().str.replace(r"[^\w]", "", regex=True)
-            )
-            sigs = minhash_matrix(norm.tolist(), n_perm, k, seed)
+            sigs = minhash_matrix(normalize_names(pdf[name_col]).tolist(), n_perm, k, seed)
             yield pd.DataFrame({key: pdf[key], "sig": list(sigs)})
 
     return sel.mapInPandas(fn, schema)
@@ -232,20 +254,37 @@ def lsh_candidate_pairs(
     )
 
 
+def verify_jaccard(joined: DataFrame, threshold: float) -> DataFrame:
+    """Exact-Jaccard verify of candidate rows ``(a, b, _sa, _sb)`` whose
+    ``_sa``/``_sb`` are sorted distinct hashed shingle arrays
+    (:func:`shingle_sets`) → ``(a, b, jaccard)`` with jaccard >= threshold.
+
+    The exact size prefilter ``min >= t*max`` (jaccard <= min/max) is
+    O(1) per row and gates the per-pair JVM ``array_intersect``. Jaccard
+    over the hashed arrays equals Jaccard over the string sets, FNV
+    collisions aside (none observed; values are 64-bit).
+    """
+    na, nb = F.size("_sa"), F.size("_sb")
+    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
+    return (
+        joined.where((na >= threshold * nb) & (nb >= threshold * na))
+        .withColumn("jaccard", inter / (na + nb - inter))
+        .where(F.col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
+    )
+
+
 def exact_jaccard_filter(
     pairs: DataFrame, threshold: float = 0.5, k: int = 3, seed: int = 42
 ) -> DataFrame:
-    """B7 step 4: verify candidates with exact shingle Jaccard.
+    """B7 step 4: verify candidate name pairs ``(a, b)`` with exact
+    shingle Jaccard.
 
-    Each *distinct name* is shingled exactly once (hashed char-k-shingle
-    arrays via :func:`kgforge.textops.char_shingle_table` — same FNV
-    values as :func:`hash_shingle`); candidate pairs then verify with a
-    JVM ``array_intersect`` join. This replaces the per-pair Python set
-    recomputation (each name used to be re-shingled once per pair it
-    appeared in) with the same per-doc-once + codegen-verify shape the
-    document dedup path uses (textops.exact_char_jaccard_pairs).
-    Jaccard over the hashed arrays equals Jaccard over the string sets,
-    FNV collisions aside (none observed; values are 64-bit).
+    Each *distinct name* is shingled exactly once
+    (:func:`kgforge.textops.char_shingle_table`, keyed by the name
+    string); both sides join that table and :func:`verify_jaccard`
+    checks the pairs — the same per-doc-once shingling and verify the
+    document dedup paths use.
     """
     from ..textops import char_shingle_table
 
@@ -264,17 +303,7 @@ def exact_jaccard_filter(
     sh = char_shingle_table(names, k=k, seed=seed, id_col="name", text_col="_text").localCheckpoint(eager=False)
     a = sh.select(F.col("name").alias("a"), F.col("shingles").alias("_sa"))
     b = sh.select(F.col("name").alias("b"), F.col("shingles").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    return (
-        pairs.select("a", "b")
-        .join(a, "a")
-        .join(b, "b")
-        .withColumn(
-            "jaccard", inter / (F.size("_sa") + F.size("_sb") - inter).cast("double")
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    return verify_jaccard(pairs.join(a, "a").join(b, "b"), threshold)
 
 
 def alias_pairs(
@@ -326,21 +355,22 @@ def _alias_pairs_driver(
     seed: int = 42,
 ) -> DataFrame:
     """Driver-side replica of the distributed B7 chain (see
-    :func:`alias_pairs` ``driver_threshold``). Bucket identity uses the
-    raw band-slice bytes (the JVM path hashes the slice with xxhash64 —
-    same row partition, hash collisions aside); the verify uses raw
-    string shingle sets (equal to the hashed-array Jaccard the JVM path
-    computes, FNV collisions aside)."""
-    import re as _re
-
+    :func:`alias_pairs` ``driver_threshold``). Signatures and the
+    verify's shingle sets come from one :func:`shingle_hashes` pass —
+    the same hashed sets the JVM path intersects, here with
+    ``np.intersect1d`` — so only bucket identity differs: the raw
+    band-slice bytes here, the slice's xxhash64 on the JVM path (same
+    row partition, hash collisions aside)."""
     from collections import defaultdict
 
     out_schema = "a string, b string, jaccard double"
     names_sorted = [s for s in name_list if s is not None]
     if not names_sorted:
         return spark.createDataFrame([], out_schema)
-    norm = [_re.sub(r"[^\w]", "", s.lower()) for s in names_sorted]
-    sigs = minhash_matrix(norm, n_perm, k, seed)
+    norm = normalize_names(pd.Series(names_sorted)).tolist()
+    grouped = shingle_hashes(norm, k, seed)
+    sigs = minhash_from_hashes(grouped, len(norm), n_perm, seed)
+    shingles = dict(zip(names_sorted, shingle_sets(grouped, len(norm))))
     rpb = n_perm // n_bands
     cand: set = set()
     for b in range(n_bands):
@@ -356,19 +386,11 @@ def _alias_pairs_driver(
                     p, q = names_sorted[grp[x]], names_sorted[grp[y]]
                     if p != q:
                         cand.add((p, q) if p < q else (q, p))
-    shingles: dict = {}
-
-    def _sh(s: str) -> set:
-        if s not in shingles:
-            ns = _re.sub(r"[^\w]", "", s.lower())
-            shingles[s] = {ns[j:j + k] for j in range(max(1, len(ns) - k + 1))}
-        return shingles[s]
-
     rows = []
     for a, b in sorted(cand):
-        sa, sb = _sh(a), _sh(b)
-        inter = len(sa & sb)
-        j = float(inter) / float(len(sa) + len(sb) - inter)
+        sa, sb = shingles[a], shingles[b]
+        inter = len(np.intersect1d(sa, sb, assume_unique=True))
+        j = inter / (len(sa) + len(sb) - inter)
         if j >= threshold:
             rows.append((a, b, j))
     from ..session import tiny_df
@@ -586,14 +608,3 @@ def connected_components_star(
         .withColumn("component", F.least(F.coalesce("component", "node"), F.col("node")))
     )
 
-
-def canonical_groups(names: DataFrame, name_col: str = "name", **lsh_kw) -> DataFrame:
-    """B7+B8: names → ``(name, component)`` alias groups. Singletons keep
-    themselves as component."""
-    pairs = alias_pairs(names, name_col, **lsh_kw)
-    cc = connected_components(pairs.select("a", "b"))
-    return (
-        names.select(F.col(name_col).alias("name")).distinct()
-        .join(cc.withColumnRenamed("node", "name"), "name", "left")
-        .withColumn("component", F.coalesce("component", "name"))
-    )

@@ -371,7 +371,7 @@ def simhash_docs(docs: DataFrame, bits: int = 64) -> DataFrame:
 
     from .hashing import fnv1a_tokens, pad_tokens
     from .session import ensure_min_partitions
-    from .stages.canonicalize import hash_shingle
+    from .stages.canonicalize import hash_shingle, row_chunks
 
     docs = ensure_min_partitions(docs)
 
@@ -381,17 +381,11 @@ def simhash_docs(docs: DataFrame, bits: int = 64) -> DataFrame:
         """Token hashes (grouped by doc) → packed majority-bit simhash.
 
         Doc-chunked so the [tokens, bits] temporary stays small enough
-        for glibc heap reuse (see canonicalize._sig_from_grouped).
+        for glibc heap reuse (see canonicalize.row_chunks).
         """
-        n_docs = len(counts)
         bounds = np.concatenate(([0], np.cumsum(counts)))
-        out = np.empty(n_docs, dtype=np.int64)
-        T_MAX = 16384
-        lo = 0
-        while lo < n_docs:
-            hi = lo + 1
-            while hi < n_docs and bounds[hi + 1] - bounds[lo] <= T_MAX:
-                hi += 1
+        out = np.empty(len(counts), dtype=np.int64)
+        for lo, hi in row_chunks(bounds, 16384):
             h = hs[bounds[lo]:bounds[hi]]
             idx = (bounds[lo:hi] - bounds[lo]).astype(np.int64)
             bitmat = ((h[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
@@ -399,7 +393,6 @@ def simhash_docs(docs: DataFrame, bits: int = 64) -> DataFrame:
             maj = (sums * 2 > counts[lo:hi, None]).astype(np.uint64)
             packed = (maj << shifts).sum(axis=1, dtype=np.uint64)
             out[lo:hi] = (packed >> np.uint64(1)).astype(np.int64)  # sign-safe
-            lo = hi
         return out
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -469,19 +462,20 @@ def char_shingle_table(
     id_col: str = "doc_id", text_col: str = "text",
 ) -> DataFrame:
     """``(<id_col>, shingles array<long>)`` — sorted distinct hashed char
-    k-shingles per normalized doc (same normalization + FNV values as
-    :func:`kgforge.stages.canonicalize.char_shingles` + ``hash_shingle``,
-    so Jaccard over these arrays equals Jaccard over the string sets,
-    collisions aside).
+    k-shingles per doc: :func:`~kgforge.stages.canonicalize.
+    normalize_names`, then :func:`~kgforge.stages.canonicalize.
+    shingle_hashes` + ``shingle_sets`` per Arrow batch (same values as
+    ``hash_shingle`` over the ``char_shingles`` string set, so Jaccard
+    over these arrays equals Jaccard over the string sets, collisions
+    aside).
 
     Computing shingles ONCE per doc and verifying pairs with JVM
     ``array_intersect`` replaces per-pair Python set shingling — the
     pair side only ever joins against this table. ``id_col`` may be any
     type (the alias canonicalizer keys by the name string itself).
     """
-    from .hashing import fnv1a_tokens, fnv1a_windows, flat_windows, pack_strings, pad_tokens
     from .session import ensure_min_partitions
-    from .stages.canonicalize import hash_shingle
+    from .stages.canonicalize import normalize_names, shingle_hashes, shingle_sets
 
     docs = ensure_min_partitions(docs)
     schema = f"{id_col} {dict(docs.dtypes)[id_col]}, shingles array<long>"
@@ -490,35 +484,8 @@ def char_shingle_table(
         for pdf in batches:
             if pdf.empty:
                 continue
-            norm = (
-                pdf[text_col].astype("string").fillna("")
-                .str.lower().str.replace(r"[^\w]", "", regex=True)
-            )
-            out: list = [None] * len(pdf)
-            long_i, short_i = [], []
-            for i, s in enumerate(norm):
-                if not s.isascii():
-                    sh = {s[j:j + k] for j in range(max(1, len(s) - k + 1))}
-                    out[i] = np.unique(
-                        np.array([hash_shingle(x, seed) for x in sh], dtype=np.uint64)
-                        .astype(np.int64)
-                    )
-                elif len(s) >= k:
-                    long_i.append(i)
-                else:
-                    short_i.append(i)
-            if long_i:
-                buf, offsets, lens = pack_strings([norm.iloc[i].encode() for i in long_i])
-                starts, counts = flat_windows(lens, offsets, k)
-                base = fnv1a_windows(buf, starts, k, seed).astype(np.int64)
-                bounds = np.concatenate(([0], np.cumsum(counts)))
-                for j, i in enumerate(long_i):
-                    out[i] = np.unique(base[bounds[j]:bounds[j + 1]])
-            if short_i:
-                padded, lens = pad_tokens([norm.iloc[i].encode() for i in short_i])
-                base = fnv1a_tokens(padded, lens, seed).astype(np.int64)
-                for j, i in enumerate(short_i):
-                    out[i] = base[j:j + 1]
+            norm = normalize_names(pdf[text_col]).tolist()
+            out = shingle_sets(shingle_hashes(norm, k, seed), len(norm))
             yield pd.DataFrame({id_col: pdf[id_col], "shingles": out})
 
     return docs.select(id_col, text_col).mapInPandas(fn, schema)
@@ -529,33 +496,16 @@ def exact_char_jaccard_pairs(
 ) -> DataFrame:
     """Exact char-k-shingle Jaccard pairs (a < b) >= threshold — the
     brute-force truth the LSH dedup paths are containment-checked
-    against. Shingle arrays computed once per doc; the all-pairs join
-    carries only (id, array) and verifies with JVM ``array_intersect``
-    after the exact ``min >= t*max`` size prefilter. O(N^2) by design
-    (it IS the oracle baseline)."""
+    against. Shingle arrays computed once per doc; the all-pairs
+    ``crossJoin`` carries only (id, array) and verifies with
+    :func:`~kgforge.stages.canonicalize.verify_jaccard`. O(N^2) by
+    design (it IS the oracle baseline)."""
+    from .stages.canonicalize import verify_jaccard
+
     sh = char_shingle_table(docs, k, seed).localCheckpoint()
-    a = sh.select(
-        F.col("doc_id").alias("a"),
-        F.col("shingles").alias("_sa"),
-        F.size("shingles").alias("_na"),
-    )
-    b = sh.select(
-        F.col("doc_id").alias("b"),
-        F.col("shingles").alias("_sb"),
-        F.size("shingles").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    return (
-        a.crossJoin(b)
-        .where(
-            (F.col("a") < F.col("b"))
-            & (F.col("_na") >= threshold * F.col("_nb"))
-            & (F.col("_nb") >= threshold * F.col("_na"))
-        )
-        .withColumn("jaccard", inter / (F.col("_na") + F.col("_nb") - inter))
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    a = sh.select(F.col("doc_id").alias("a"), F.col("shingles").alias("_sa"))
+    b = sh.select(F.col("doc_id").alias("b"), F.col("shingles").alias("_sb"))
+    return verify_jaccard(a.crossJoin(b).where(F.col("a") < F.col("b")), threshold)
 
 
 def minhash_neardup_docs(
@@ -565,21 +515,26 @@ def minhash_neardup_docs(
     """MinHash-LSH near-duplicate document pairs (scale path for dedup).
 
     shingle→minhash→band→bucket-join→exact-Jaccard-verify, reusing the
-    B7 machinery keyed by doc_id (text joined back only for the verify).
+    B7 machinery keyed by doc_id.
     Output: ``a, b, jaccard`` (doc_id pairs).
     """
     from .session import ensure_min_partitions
-    from .stages.canonicalize import lsh_candidate_pairs, minhash_matrix
+    from .stages.canonicalize import (
+        lsh_candidate_pairs,
+        minhash_from_hashes,
+        normalize_names,
+        shingle_hashes,
+        shingle_sets,
+        verify_jaccard,
+    )
 
     docs = ensure_min_partitions(docs)
-    # ONE fused pass computes signatures AND the verify shingle arrays:
-    # both derive from the same per-doc FNV window hashes, so the old
-    # separate minhash_signatures + char_shingle_table passes normalized
-    # and hashed every document twice (and the shingle table, feeding
-    # both verify sides unpinned, executed twice more in the plan —
-    # three corpus text scans where one suffices). Shingle SETS are
-    # identical to char_shingle_table's (same normalization, same FNV,
-    # same seed), so jaccard doubles are unchanged.
+    # ONE fused pass computes signatures AND the verify shingle arrays
+    # from one shingle_hashes result per batch: every document is
+    # normalized and hashed once, and the checkpointed table feeds both
+    # the banding and both verify sides. Shingle SETS are identical to
+    # char_shingle_table's (same normalization, same FNV, same seed), so
+    # jaccard doubles are unchanged.
     id_type = dict(docs.dtypes)["doc_id"]
     seed = 42
 
@@ -587,16 +542,13 @@ def minhash_neardup_docs(
         for pdf in batches:
             if pdf.empty:
                 continue
-            norm = (
-                pdf["text"].astype("string").fillna("")
-                .str.lower().str.replace(r"[^\w]", "", regex=True)
-            )
-            sigs_m, shs = minhash_matrix(
-                norm.tolist(), n_perm, shingle_k, seed, return_shingles=True
-            )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "sig": list(sigs_m), "shingles": shs}
-            )
+            norm = normalize_names(pdf["text"]).tolist()
+            grouped = shingle_hashes(norm, shingle_k, seed)
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"],
+                "sig": list(minhash_from_hashes(grouped, len(norm), n_perm, seed)),
+                "shingles": shingle_sets(grouped, len(norm)),
+            })
 
     combo = (
         docs.select("doc_id", "text")
@@ -606,21 +558,7 @@ def minhash_neardup_docs(
     cands = lsh_candidate_pairs(combo.select("doc_id", "sig"), "doc_id", n_bands, max_bucket)
     sa = combo.select(F.col("doc_id").alias("a"), F.col("shingles").alias("_sa"))
     sb = combo.select(F.col("doc_id").alias("b"), F.col("shingles").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    union = (F.size("_sa") + F.size("_sb")).cast("double") - inter
-    return (
-        cands.join(sa, "a")
-        .join(sb, "b")
-        # exact size prefilter (jaccard <= min/max) gates the per-pair
-        # array_intersect — sizes are O(1) on the already-joined arrays
-        .where(
-            (F.size("_sa") >= threshold * F.size("_sb"))
-            & (F.size("_sb") >= threshold * F.size("_sa"))
-        )
-        .withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    return verify_jaccard(cands.join(sa, "a").join(sb, "b"), threshold)
 
 
 def tfidf_top_terms(

@@ -5,16 +5,25 @@ LSH gate: alias groups from the fixture gazetteer must be recovered
 (recall on true alias pairs; precision via the exact-Jaccard verify).
 """
 
+import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from kgforge.fixtures import gazetteer
+from kgforge.sampling import splitmix64
 from kgforge.stages.canonicalize import (
     alias_pairs,
-    canonical_groups,
+    char_shingles,
     connected_components,
     exact_jaccard_filter,
+    hash_shingle,
+    minhash_matrix,
     minhash_signatures,
+    shingle_hashes,
+    shingle_sets,
 )
 
 
@@ -117,9 +126,15 @@ def test_minhash_recovers_alias_groups(spark):
 def test_canonical_groups_merge_aliases(spark):
     gaz = gazetteer()
     names = spark.createDataFrame(gaz[["surface"]].rename(columns={"surface": "name"}))
-    groups = canonical_groups(names, threshold=0.5).toPandas()
+    # B7 + B8: verified alias pairs → components; singletons keep themselves
+    cc = connected_components(alias_pairs(names, threshold=0.5).select("a", "b"))
+    groups = (
+        names.select("name").distinct()
+        .join(cc.withColumnRenamed("node", "name"), "name", "left")
+        .withColumn("component", F.coalesce("component", "name"))
+        .toPandas()
+    )
     by_comp = groups.groupby("component")["name"].apply(set)
-    surf2canon = dict(zip(gaz["surface"], gaz["canonical"]))
     # each fixture alias group should land in one component
     merged = 0
     total = 0
@@ -130,6 +145,57 @@ def test_canonical_groups_merge_aliases(spark):
             merged += 1
     assert merged / total >= 0.95, f"only {merged}/{total} alias groups merged"
     assert len(by_comp) > 1
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(st.text(alphabet="abcAB09_ -.éß中Ж", max_size=12), max_size=25),
+    st.sampled_from([3, 5]),
+)
+# windows past the 262144-window row-chunk cap: the two long strings land
+# in separate chunks and must scatter back to their own rows
+@example(["abcdefghij" * 14_000, "ab", "qrstuvwxyz" * 15_000, "xyz12", "zé"], 3)
+def test_minhash_and_shingle_sets_match_scalar_recipe(strings, k):
+    """The NumPy hashing split (ASCII windows, short whole-string
+    shingles, non-ASCII scalar fallback) is bit-identical to FNV-1a
+    ``hash_shingle`` over each string's shingle set: signatures equal
+    ``min(splitmix64(h ^ perm_const)) >> 1`` and the verify sets equal
+    ``np.unique`` of the hashes — including empty, shorter-than-k and
+    non-ASCII strings."""
+    n_perm, seed = 16, 42
+    pc = splitmix64(np.arange(n_perm, dtype=np.uint64) + np.uint64(seed))
+    sigs = minhash_matrix(strings, n_perm, k, seed)
+    sets = shingle_sets(shingle_hashes(strings, k, seed), len(strings))
+    assert sigs.shape == (len(strings), n_perm) and len(sets) == len(strings)
+    for s, sig, got in zip(strings, sigs, sets):
+        sh = {s[j:j + k] for j in range(max(1, len(s) - k + 1))}
+        base = np.array([hash_shingle(x, seed) for x in sh], dtype=np.uint64)
+        want = (splitmix64(base[:, None] ^ pc[None, :]).min(axis=0) >> np.uint64(1)).astype(np.int64)
+        assert np.array_equal(sig, want), s
+        assert got.dtype == np.int64 and np.array_equal(got, np.unique(base.astype(np.int64))), s
+
+
+def test_exact_jaccard_filter_equals_string_set_jaccard(spark):
+    """The name verify (size prefilter + hashed array_intersect) keeps
+    exactly the gazetteer surface pairs whose string-set char-3 Jaccard
+    is >= 0.3, with the same doubles."""
+    surf = sorted(set(gazetteer()["surface"]))
+    sh = dict(zip(surf, char_shingles(pd.Series(surf), 3)))
+    want = {}
+    for i, a in enumerate(surf):
+        for b in surf[i + 1:]:
+            j = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+            if j >= 0.3:
+                want[(a, b)] = j
+    names = spark.createDataFrame(pd.DataFrame({"n": surf}))
+    pairs = (
+        names.select(F.col("n").alias("a"))
+        .crossJoin(names.select(F.col("n").alias("b")))
+        .where(F.col("a") < F.col("b"))
+    )
+    got = {(a, b): j for a, b, j in exact_jaccard_filter(pairs, threshold=0.3).collect()}
+    assert want and got.keys() == want.keys()
+    assert all(abs(got[p] - want[p]) < 1e-12 for p in want)
 
 
 def test_signatures_deterministic_across_partitioning(spark):
