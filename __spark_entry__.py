@@ -525,8 +525,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def a15_ranks_blocked(spark, sf):
-        # the |E|-beyond-broadcast escape hatch, live: relational
-        # block-nested-loop ranks — same oracle as the broadcast path
+        # the |E|-beyond-broadcast escape hatch, live: entity blocks
+        # scored in mapInPandas, counts summed — same oracle as the
+        # broadcast path
         split, emb, known = _openke_emb()
         return ev.link_prediction_ranks_blocked(
             spark, spark.createDataFrame(split["test2id"]), emb, known
@@ -543,7 +544,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def a15_ranks_blocked_transh(spark, sf):
-        # blocked path with hyperplane projection as codegen array folds
+        # blocked path under TransH (hyperplane projection in the kernel)
         split, emb, known = _openke_emb()
         return ev.link_prediction_ranks_blocked(
             spark, spark.createDataFrame(split["test2id"]), emb, known,
@@ -551,8 +552,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def a15_ranks_blocked_transd(spark, sf):
-        # blocked path with rank-1 dynamic projection (per-entity dot
-        # table is itself relational — one |E|-sized pass, no driver)
+        # blocked path under TransD (rank-1 dynamic projection; ent_p
+        # rides on the entity rows beside ent)
         split, emb, known = _openke_emb()
         return ev.link_prediction_ranks_blocked(
             spark, spark.createDataFrame(split["test2id"]), emb, known,
@@ -561,9 +562,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def a15_ranks_blocked_distmult(spark, sf):
         """Blocked (beyond-broadcast) rank path under the DistMult
-        kernel: the bilinear-diagonal score as nested zip_with products
-        + one codegen fold — the bilinear family no longer needs the
-        broadcast escape hatch at |E| beyond executor memory. Same
+        kernel: each entity block is scored by the same score_batch
+        call as the broadcast path, so the bilinear family needs no
+        broadcast entity matrix at |E| beyond executor memory. Same
         protocol text as the broadcast a15_ranks_distmult; equality
         pinned by test_blocked_ranks_equal_broadcast[distmult-1-6]."""
         split, emb, known = _openke_emb()
@@ -573,11 +574,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def a15_ranks_blocked_complex(spark, sf):
-        """Blocked rank path under ComplEx: the expanded real-arithmetic
-        form as four nested product arrays + two folds, imaginary
-        halves joined along exactly the real halves' paths (broadcast
-        per-relation, one |E|-sized candidate join). Equality with the
-        broadcast path pinned by
+        """Blocked rank path under ComplEx: the imaginary halves ride
+        exactly like the real ones (ent_im on the entity rows, rel_im
+        broadcast with rel). Equality with the broadcast path pinned by
         test_blocked_ranks_equal_broadcast[complex-1-6]."""
         split, emb, known = _openke_emb()
         return ev.link_prediction_ranks_blocked(
@@ -586,11 +585,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def a15_ranks_blocked_transr(spark, sf):
-        # blocked path with the per-relation matmul done relationally:
-        # entities pre-projected per test relation (transform over
-        # broadcast matrix rows — _transr_proj), then TransE on the
-        # projections. Same oracle as the relfilter TransR query (the
-        # DuckDB proj CTE is the same matmul).
+        # blocked path under TransR: the |R|-sized matrices ride
+        # broadcast and each block applies the kernel's per-relation
+        # matmul. Same oracle as the relfilter TransR query (the DuckDB
+        # proj CTE is the same matmul).
         split, emb, known = _openke_emb()
         return ev.link_prediction_ranks_blocked(
             spark, spark.createDataFrame(split["test2id"]), emb, known,
@@ -633,11 +631,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def a15_ranks_relfilter_transr(spark, sf):
-        # TransR through the relational-filter path: the one kernel the
-        # blocked array folds can't express (per-relation matmul) still
-        # gets full rank-protocol oracle coverage — the DuckDB side does
-        # the matmul relationally (proj CTE). score_decimals=6: matmul
-        # product sums round accumulation-order-dependently.
+        # TransR through the relational-filter path: full rank-protocol
+        # oracle coverage of the per-relation matmul kernel — the DuckDB
+        # side does the matmul relationally (proj CTE). score_decimals=6:
+        # matmul product sums round accumulation-order-dependently.
         split, emb, known = _openke_emb()
         known_df = (
             _openke(spark, "train2id")
@@ -768,7 +765,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def a17_category_blocked(spark, sf):
         # per-category (1-1/1-N/N-1/N-N) breakdown in the BEYOND-broadcast
-        # regime: the relational blocked ranks compose with
+        # regime: the blocked ranks compose with
         # relation_categories exactly like the broadcast path — the oracle
         # is identical because the rank protocols agree (pinned by
         # test_blocked_category_metrics_equal_broadcast)
@@ -952,8 +949,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def a15_constrained_ranks_blocked(spark, sf):
         """Type-constrained eval on the BLOCKED (beyond-broadcast) path:
-        domain/range applied as broadcast semi-joins on the relational
-        candidate table — same protocol, same oracle as the broadcast
+        domain/range lists ride broadcast and each entity block tests
+        its own ids — same protocol, same oracle as the broadcast
         constrained query."""
         split, emb, known = _openke_emb()
         domains = {
@@ -3522,9 +3519,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def a15_relation_ranks(spark, sf):
         """Relation prediction — rank the true r among ALL relations per
         test (h, t): the third eval direction beside head/tail ranks.
-        Candidate side is the |R|-sized relation table (broadcast nested
-        loop, no candidate shuffle); raw + filtered protocol identical
-        to the entity ranks. Oracle replays the same |test| x |R| scoring
+        Candidate side is the |R|-sized relation matrix (broadcast to
+        the scoring mapInPandas, no candidate shuffle); raw + filtered
+        protocol identical to the entity ranks. Oracle replays the same |test| x |R| scoring
         relationally over the long embedding tables."""
         split, emb, known = _openke_emb()
         return ev.relation_prediction_ranks(
@@ -5714,8 +5711,7 @@ _RANK_CTES_TRANSH = f"""
 # TransR rank protocol: relational matmul — projected vectors per
 # (relation, entity) pair come from one proj CTE (mat_long join ent_long,
 # grouped by output dim), then TransE on the projections. Rounded to 6
-# (product sums). Exercised via the relfilter path (TransR is the one
-# kernel the blocked array folds can't express).
+# (product sums). Exercised via the relfilter and blocked TransR queries.
 _RANK_CTES_TRANSR = f"""
   test AS (SELECT * FROM read_parquet('{OKE}/test2id.parquet')),
   known AS ({_KNOWN}),

@@ -26,14 +26,17 @@ Scale note: embeddings are model-parameter-sized (|E|·d floats), the
 same thing the reference holds on every worker via its parameter-server
 checkpoint — broadcasting them is the intended design, not a shortcut.
 For |E| beyond broadcast reach, :func:`link_prediction_ranks_blocked`
-computes the same ranks relationally (test-batch × entity-block JVM
-join, array-fold scoring in codegen, one aggregation) — built and
-equality-tested, contract-checked against the same oracle.
+keeps the entity table in Spark: one ``mapInPandas`` scores each entity
+block against the broadcast test triples with the same kernel call, and
+one aggregation sums the per-block counts — equality-tested and
+contract-checked against the same oracle. Every rank path scores
+through ``kernels.score_batch`` and rounds with ``np.round``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -50,6 +53,21 @@ RANKS_SCHEMA = "h long, t long, r long, " + ", ".join(f"{c} long" for c in RANK_
 #: byte budget of one scoring temporary: glibc hands buffers above ~32 MB
 #: back to the OS on free, so larger ones page-fault on every reuse
 _CHUNK_BYTES = 16 << 20
+
+
+def _chunk_rows(n_cand: int, dim: int, model: str) -> int:
+    """Test rows per scoring chunk against ``n_cand`` candidates: one
+    ``[chunk, n_cand, d]`` float64 temporary stays within ``_CHUNK_BYTES``
+    (HolE's gathered operand is ``d``× wider)."""
+    return max(1, _CHUNK_BYTES // (n_cand * dim * (dim if model == "hole" else 1) * 8))
+
+
+def _scores(model: str, emb: dict, h, r, t, norm: int, dec: int | None) -> np.ndarray:
+    """``kernels.score_batch``, rounded with ``np.round`` (half-even) to
+    ``dec`` decimals when given — the one rounding rule of every rank
+    path."""
+    s = kernels.score_batch(model, emb, h, r, t, norm)
+    return s if dec is None else np.round(s, dec)
 
 
 def _known_index(known: pd.DataFrame | None) -> tuple[tuple, tuple]:
@@ -162,10 +180,7 @@ def link_prediction_ranks_multi(
     (``base/Test.h``, recalled — SURVEY.md §0).
     """
     n_ent, dim = emb["ent"].shape
-    chunk = {
-        model: max(1, _CHUNK_BYTES // (n_ent * dim * (dim if model == "hole" else 1) * 8))
-        for model, _ in models
-    }
+    chunk = {model: _chunk_rows(n_ent, dim, model) for model, _ in models}
     b_emb = pin_broadcast(spark, dict(emb))
     domains, ranges = constraints or (None, None)
     b_filter = pin_broadcast(spark, (*_known_index(known), domains or {}, ranges or {}))
@@ -174,10 +189,6 @@ def link_prediction_ranks_multi(
         E = b_emb.value
         heads_of, tails_of, domains, ranges = b_filter.value
         all_ents = np.arange(n_ent, dtype=np.int64)[None, :]
-
-        def scores(model, dec, heads, r_ids, tails):
-            s = kernels.score_batch(model, E, heads, r_ids, tails, norm)
-            return s if dec is None else np.round(s, dec)
 
         for pdf in batches:
             if pdf.empty:
@@ -193,8 +204,8 @@ def link_prediction_ranks_multi(
                 for lo in range(0, len(pdf), chunk[model]):
                     rows = slice(lo, lo + chunk[model])
                     h, t, r = h_arr[rows, None], t_arr[rows, None], r_arr[rows, None]
-                    s_head = scores(model, dec, all_ents, r, t)
-                    s_tail = scores(model, dec, h, r, all_ents)
+                    s_head = _scores(model, E, all_ents, r, t, norm, dec)
+                    s_tail = _scores(model, E, h, r, all_ents, norm, dec)
                     for j, i in enumerate(range(lo, lo + len(h))):
                         ri = int(r_arr[i])
                         ranks[i, :2] = _rank(s_head[j], h_arr[i], domains.get(ri), known_h[i])
@@ -241,230 +252,95 @@ def link_prediction_metrics_by_model(ranks: DataFrame) -> DataFrame:
     return _rank_metrics(ranks, "model")
 
 
-def _mat_to_vec_df(spark: SparkSession, mat: np.ndarray, col: str = "vec") -> DataFrame:
-    """``[n, d]`` NumPy → ``(id, vec array<double>)`` DataFrame.
+def _vecs_df(spark: SparkSession, mats: dict[str, np.ndarray]) -> DataFrame:
+    """``[n, d]`` NumPy components → one ``(id, <key> array<double>, …)``
+    DataFrame whose row ``i`` carries every component's row ``i``, in ONE
+    partition: ``createDataFrame`` alone splits even a tiny frame over
+    every core, and each partition a ``mapInPandas`` reads costs a Python
+    task (~0.2 s of fixed start-up on a 4-core host).
 
     Test/fixture convenience only — the scale path reads ``(id, vec)``
     straight from a Parquet checkpoint (:func:`kgforge.io_openke.
     read_embedding_df`), never through the driver."""
-    mat = np.asarray(mat, dtype="float64")
+    mats = {k: np.asarray(m, dtype="float64") for k, m in mats.items()}
+    n = len(next(iter(mats.values())))
     # ndarray.tolist() (NOT list(map(list, ...))) — native Python floats,
     # plus an explicit schema: non-Arrow createDataFrame (Spark defaults;
     # the driver's harness) rejects np.float64 scalars and cannot infer
     # array<double> from object cells. The repo's own session enables
     # Arrow, which masked this — see tests/test_arrow_off.py.
     pdf = pd.DataFrame(
-        {"id": np.arange(mat.shape[0], dtype="int64").tolist(), col: mat.tolist()}
+        {"id": np.arange(n, dtype="int64").tolist(), **{k: m.tolist() for k, m in mats.items()}}
     )
-    return spark.createDataFrame(pdf, schema=f"id long, {col} array<double>")
+    schema = ", ".join(["id long", *(f"{k} array<double>" for k in mats)])
+    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
-def _emb_dfs(spark: SparkSession, emb) -> dict[str, DataFrame]:
-    """Normalize an embeddings argument to ``(id, vec array<double>)``
-    DataFrames per component. Accepts a NumPy dict (fixtures/tests) or a
-    dict of DataFrames (Parquet-backed — the beyond-broadcast path);
-    float vecs are upcast to double so array folds accumulate in f64
-    (L1 of f32 inputs is then exact — rank parity with the f64 oracles).
+def _emb_sides(spark: SparkSession, emb) -> tuple[DataFrame, dict[str, np.ndarray]]:
+    """Split an embeddings argument — NumPy arrays and/or ``(id, vec)``
+    DataFrames (Parquet-backed, :func:`kgforge.io_openke.
+    read_embedding_df`) per component — into the two sides of the blocked
+    paths:
+
+    * the entity components (keys starting ``ent``) as ONE ``(id, ent,
+      ent_p, …)`` DataFrame of ``array<double>`` columns — the |E|-sized
+      side, which never leaves Spark;
+    * the relation-indexed components (``rel``, ``norm``, ``mat``, …) as
+      NumPy indexed by relation id — |R|-sized, so DataFrame ones are
+      collected, all in one job. A checkpoint's ``mat`` rows arrive flat
+      (``[|R|, d_r·d_e]``; io_openke flattens trailing dims).
     """
-    out: dict[str, DataFrame] = {}
-    for key, v in emb.items():
-        if isinstance(v, DataFrame):
-            out[key] = v.select(
-                F.col("id").cast("long").alias("id"),
-                F.transform("vec", lambda x: x.cast("double")).alias("vec"),
-            )
-        elif key == "mat":
-            # TransR matrices [|R|, d_r, d_e] ride as flat (id, vec)
-            # rows — exactly the A20 checkpoint layout (io_openke
-            # flattens trailing dims); re-sliced to 2-D lazily where
-            # the relational matmul needs rows (_transr_proj).
-            m = np.asarray(v)
-            out[key] = _mat_to_vec_df(spark, m.reshape(m.shape[0], -1))
-        else:
-            out[key] = _mat_to_vec_df(spark, v)
-    return out
+    def side(ent: bool, frames: bool) -> dict:
+        return {
+            k: v for k, v in emb.items()
+            if k.startswith("ent") == ent and isinstance(v, DataFrame) == frames
+        }
 
-
-def _fold_dist(d, norm: int, score_decimals: int | None):
-    """Distance of a difference array as a codegen fold (L1 or L2)."""
-    if norm == 1:
-        s = F.aggregate(d, F.lit(0.0), lambda acc, x: acc + F.abs(x))
-    else:
-        s = F.sqrt(F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x * x))
-    return F.round(s, score_decimals) if score_decimals is not None else s
-
-
-def _vdot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _with_score(
-    df: DataFrame, model: str, norm: int, score_decimals: int | None,
-    a: str, b: str, out: str,
-) -> DataFrame:
-    """Add ``out`` = model score of (``a`` + r − ``b``) computed as
-    array folds in whole-stage codegen. ``df`` must carry ``rvec`` and
-    the model's projection dots as JOINED columns (``{a,b}_wdot`` for
-    TransH, ``{a,b}_pdot`` for TransD — see the wdot/edot tables in the
-    caller). The dots MUST be join-produced attributes, not expressions:
-    Catalyst collapses a withColumn dot into the zip_with lambda, where
-    the O(d) fold would re-evaluate per array element (O(d²)/row —
-    verified in the captured plan, docs/PLANS.md §6)."""
-    if model == "distmult":
-        # bilinear diagonal: −Σ a_k r_k b_k as two nested element-wise
-        # products + ONE fold (each zip_with lambda is O(1) per element,
-        # so no O(d²) re-evaluation — the docs/PLANS.md §6 trap needs an
-        # O(d) fold inside the lambda)
-        prod = F.zip_with(
-            F.zip_with(F.col(a), F.col("rvec"), lambda x, y: x * y),
-            F.col(b),
-            lambda x, y: x * y,
-        )
-        s = -F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
-        return df.withColumn(
-            out, F.round(s, score_decimals) if score_decimals is not None else s
-        )
-    if model == "complex":
-        # Re(<a, r, conj(b)>) expanded: −Σ (a_re r_re − a_im r_im) b_re
-        # + (a_re r_im + a_im r_re) b_im — four nested element-wise
-        # product arrays, two folds; imaginary parts ride as the
-        # ``{a}_im`` join attributes (same convention as the wdot/pdot
-        # dots)
-        def _p3(x_, y_, z_):
-            return F.zip_with(F.zip_with(x_, y_, lambda p, q: p * q), z_, lambda p, q: p * q)
-
-        t1 = F.zip_with(
-            _p3(F.col(a), F.col("rvec"), F.col(b)),
-            _p3(F.col(f"{a}_im"), F.col("rvec_im"), F.col(b)),
-            lambda p, q: p - q,
-        )
-        t2 = F.zip_with(
-            _p3(F.col(a), F.col("rvec_im"), F.col(f"{b}_im")),
-            _p3(F.col(f"{a}_im"), F.col("rvec"), F.col(f"{b}_im")),
-            lambda p, q: p + q,
-        )
-        s = -(
-            F.aggregate(t1, F.lit(0.0), lambda acc, x: acc + x)
-            + F.aggregate(t2, F.lit(0.0), lambda acc, x: acc + x)
-        )
-        return df.withColumn(
-            out, F.round(s, score_decimals) if score_decimals is not None else s
-        )
-    if model == "transe":
-        pa, pb = F.col(a), F.col(b)
-    elif model == "transh":
-        pa = F.zip_with(F.col(a), F.col("wvec"), lambda x, y: x - F.col(f"{a}_wdot") * y)
-        pb = F.zip_with(F.col(b), F.col("wvec"), lambda x, y: x - F.col(f"{b}_wdot") * y)
-    elif model == "transd":
-        pa = F.zip_with(F.col(a), F.col("rpvec"), lambda x, y: x + F.col(f"{a}_pdot") * y)
-        pb = F.zip_with(F.col(b), F.col("rpvec"), lambda x, y: x + F.col(f"{b}_pdot") * y)
-    else:
-        raise NotImplementedError(
-            f"blocked eval supports transe/transh/transd/transr/distmult/complex; "
-            f"{model!r} needs the broadcast path or link_prediction_ranks_relfilter"
-        )
-    s = F.zip_with(pa, F.col("rvec"), lambda x, y: x + y)
-    d = F.zip_with(s, pb, lambda x, y: x - y)
-    return df.withColumn(out, _fold_dist(d, norm, score_decimals))
-
-
-def _transr_proj(test: DataFrame, dfs: dict[str, DataFrame]) -> DataFrame:
-    """TransR projections as a relational table: ``(id, r, pvec)`` for
-    every entity × distinct test relation.
-
-    The per-relation matmul is one ``transform`` over the matrix rows
-    whose lambda folds d_e elements — genuinely O(d_r·d_e) work per
-    entity (a matmul's intrinsic cost), *not* the inlined-fold bug of
-    docs/PLANS.md §6; downstream the projected vector reaches the
-    scoring folds as a JOIN attribute. localCheckpointed because three
-    joins (h-side, t-side, candidate-side) reference it — interpreted
-    higher-order exprs re-evaluate per downstream reference otherwise.
-    Matrices are model-parameter-sized (|R|·d²) → broadcast; the
-    |E|-scaling side never leaves the JVM.
-    """
-    ent = dfs["ent"]
-    mat = dfs["mat"]
-    # O(1)-row probes for the literal slice bounds — not data-sized pulls
-    d_e = len(ent.select("vec").first()[0])
-    d_r = len(mat.select("vec").first()[0]) // d_e
-    rels_test = test.select("r").dropDuplicates()
-    mat2d = (
-        mat.withColumnRenamed("id", "r")
-        .join(rels_test, "r")
-        .select(
-            "r",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(d_r - 1)),
-                lambda i: F.slice("vec", i * d_e + 1, d_e),
-            ).alias("mat2d"),
-        )
-    )
-    return (
-        ent.crossJoin(F.broadcast(mat2d))
-        .select(
-            "id",
-            "r",
-            F.transform("mat2d", lambda row: _vdot(row, F.col("vec"))).alias("pvec"),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-
-def _constraint_df(spark: SparkSession, c) -> DataFrame | None:
-    """One constraint side → ``(r, cand)`` DataFrame. Accepts a DataFrame
-    (scale path — any two columns named r/cand) or an ``r → entity ids``
-    dict (the broadcast path's ``type_constrain`` shape)."""
-    if c is None:
-        return None
-    # dedupe BOTH paths: a duplicate (r, cand) pair would multiply
-    # candidate rows through _flag_constraint's left join and silently
-    # inflate rank counts
-    if isinstance(c, DataFrame):
-        return c.select(
-            F.col("r").cast("long"), F.col("cand").cast("long")
-        ).dropDuplicates(["r", "cand"])
-    rows = sorted(
-        {(int(r), int(e)) for r, ents in c.items() for e in np.asarray(ents).tolist()}
-    )
-    if not rows:
-        return None
-    from .session import tiny_df
-
-    return tiny_df(spark, rows, "r long, cand long")
+    ents = [_vecs_df(spark, side(True, False))] if side(True, False) else []
+    ents += [
+        v.select(F.col("id").cast("long"), F.col("vec").cast("array<double>").alias(k))
+        for k, v in side(True, True).items()
+    ]
+    rel = {k: np.asarray(v) for k, v in side(False, False).items()}
+    rel_dfs = [
+        v.select(F.lit(k).alias("key"), F.col("id").cast("long"), F.col("vec").cast("array<double>"))
+        for k, v in side(False, True).items()
+    ]
+    if rel_dfs:
+        for k, g in reduce(DataFrame.unionByName, rel_dfs).toPandas().groupby("key"):
+            g = g.sort_values("id")
+            if not (g["id"].to_numpy() == np.arange(len(g))).all():
+                raise ValueError(f"non-dense relation ids in {k!r}")
+            rel[k] = np.stack(g["vec"].to_numpy())
+    return reduce(lambda a, b: a.join(b, "id"), ents), rel
 
 
 def _known_df(spark: SparkSession, known) -> DataFrame:
-    """Distinct ``(h, t, r)`` known triples as a DataFrame, from a
-    DataFrame (scale path) or pandas (tests/fixtures convenience)."""
+    """``(h, t, r)`` known triples as a DataFrame, from a DataFrame (scale
+    path) or pandas (tests/fixtures convenience). Duplicates may remain:
+    both consumers collect into sets."""
     if isinstance(known, pd.DataFrame):
         return spark.createDataFrame(known[["h", "t", "r"]].drop_duplicates())
-    return known.select("h", "t", "r").dropDuplicates()
+    return known.select("h", "t", "r")
 
 
-def _flag_constraint(cand: DataFrame, cdf: DataFrame | None, flag: str) -> DataFrame:
-    """Mark candidate rows allowed by the relation's constraint list;
-    relations ABSENT from the list stay unconstrained (the reference's
-    ``type_constrain`` rule — recalled, SURVEY.md §0). Constraint tables
-    are dictionary-sized (per-relation entity lists), so both joins ride
-    broadcast — no extra shuffle on the corpus-sized candidate table. A
-    boolean flag (not a filter) lets ONE candidate scan serve both the
-    domain-gated head counts and the range-gated tail counts."""
-    if cdf is None:
-        return cand.withColumn(flag, F.lit(True))
-    marked = cdf.withColumn("_in", F.lit(1))
-    rels = cdf.select("r").dropDuplicates().withColumn("_has", F.lit(1))
-    return (
-        cand.join(F.broadcast(marked), ["r", "cand"], "left")
-        .join(F.broadcast(rels), "r", "left")
-        # coalesce: a disallowed candidate's flag must be a real False,
-        # not NULL (downstream sum() happens to drop NULLs, but any other
-        # consumer of the flag would mis-handle three-valued logic)
-        .withColumn(
-            flag,
-            F.coalesce(F.col("_has").isNull() | (F.col("_in") == 1), F.lit(False)),
-        )
-        .drop("_in", "_has")
-    )
+def _skip_pairs(lists: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """One block's skip-list cells (null, or arrays of test-row indexes)
+    → flat ``(tid, block row)`` pairs, sorted by tid."""
+    cells = [np.empty(0, np.int64) if v is None else np.asarray(v, np.int64) for v in lists]
+    tid = np.concatenate([np.empty(0, np.int64), *cells])
+    row = np.repeat(np.arange(len(cells)), [len(c) for c in cells])
+    order = np.argsort(tid, kind="stable")
+    return tid[order], row[order]
+
+
+def _skipped(below: np.ndarray, pairs: tuple, lo: int) -> np.ndarray:
+    """Per row of a ``[chunk, block]`` hit mask whose first row is test
+    row ``lo``: how many of its skip pairs are hits."""
+    tid, row = pairs
+    a, b = np.searchsorted(tid, [lo, lo + len(below)])
+    i = tid[a:b] - lo
+    return np.bincount(i, weights=below[i, row[a:b]], minlength=len(below)).astype(np.int64)
 
 
 def link_prediction_ranks_blocked(
@@ -474,175 +350,128 @@ def link_prediction_ranks_blocked(
     known,
     norm: int = 1,
     model: str = "transe",
-    constraints: tuple | None = None,
+    constraints: tuple[dict | None, dict | None] | None = None,
     score_decimals: int | None = None,
 ) -> DataFrame:
-    """A15/A16 scale path: block-nested-loop ranks, fully relational.
+    """A15/A16 scale path: the broadcast path's ranks, with the entity
+    side kept in Spark.
 
-    The broadcast-NumPy path (:func:`link_prediction_ranks`) holds the
-    whole |E|·d entity matrix on every Python worker — the right plan at
-    model-parameter scale, but an escape hatch is needed when |E| grows
-    beyond broadcast reach. Here the entity embeddings are a DataFrame
-    and candidates stream through a JVM join (test-batch × entity-block;
-    AQE partitions the product), scores are array folds inside codegen,
-    and ranks are one aggregation — nothing |E|-sized ever enters Python
-    or the driver.
+    :func:`link_prediction_ranks` holds the whole |E|·d entity matrix on
+    every Python worker — the right plan at model-parameter scale. When
+    |E| grows beyond broadcast reach, ranks decompose over entity blocks,
 
-    ``emb``: dict of ``(id, vec)`` DataFrames (Parquet-backed — the
-    intended ingestion at beyond-broadcast |E|; see ``io_openke.
-    read_embedding_df``) or a NumPy dict (tests/fixtures convenience).
-    ``known``: triples DataFrame (scale path) or pandas (convenience).
-    Models: the four translational (TransE/TransH/TransD/TransR, L1 +
-    L2) and the diagonal bilinear pair (DistMult / ComplEx — pass
-    ``score_decimals=6``, product sums round order-dependently).
-    TransR's per-relation matmul is relational too: entities are
-    pre-projected per distinct test relation (:func:`_transr_proj` —
-    the matrix rides broadcast, the |E|-sized projection table is a
-    localCheckpointed JVM pass) and scoring is then TransE over the
-    projections; ComplEx's imaginary halves join on exactly the real
-    halves' paths.
+        rank = 1 + Σ_block |{e ∈ block : s(e) < s(true)}|
 
-    Same protocol (strict <, raw + filtered); output is identical to the
-    broadcast path (tested). L1 TransE scores of float32 embeddings are
-    exact in float64 so fold order cannot disagree; L2 and the projected
-    models carry products (order-dependent last ulp) — pass
-    ``score_decimals`` (6) to rank on rounded scores, mirroring
-    ``a15_ranks_l2`` semantics.
+    so one ``mapInPandas`` over the entity table takes each Arrow batch
+    as one block (no worker holds more, nothing is carried across
+    batches), emits partial counts for every test triple, and one
+    ``groupBy(h, t, r)`` sums them. Broadcast: the |R|-sized relation
+    components and the distinct test triples with their h/t entity-side
+    vectors (test-sized, one collect). Nothing |E|-sized reaches the
+    driver.
+
+    Per chunk of test rows (``_chunk_rows`` with the block in place of
+    |E|) and direction, one ``kernels.score_batch`` call scores
+    ``[chunk, block]`` on a local embedding dict — test vectors first,
+    then the block's rows — rounded like :func:`link_prediction_ranks_multi`;
+    the true score is a flat call on the same dict, bitwise equal to its
+    block element. Every kernel ``score_batch`` serves is supported.
+
+    ``constraints``: ``(domains, ranges)`` maps, broadcast, with
+    :func:`link_prediction_ranks_multi`'s semantics (relations absent
+    from a map stay unconstrained). ``known`` (triples DataFrame, or
+    pandas) filters relationally: ``known ⋈ test`` on the fixed slot,
+    minus the true entity, grouped per candidate into head and tail
+    skip lists of test-row indexes and left-joined onto the entity rows;
+    a block subtracts its skipped in-constraint candidates that score
+    below the true score.
+
+    ``emb``: NumPy dict and/or ``(id, vec)`` DataFrames per component
+    (:func:`_emb_sides`). Output: RANKS_SCHEMA, one row per distinct test
+    triple whose h and t have embeddings.
     """
-    dfs = _emb_dfs(spark, emb)
-    ent = dfs["ent"].select("id", F.col("vec").alias("evec"))
-    rel = dfs["rel"].select("id", F.col("vec").alias("rvec"))
+    ents, rel = _emb_sides(spark, emb)
+    ent_keys = [c for c in ents.columns if c != "id"]
 
-    # model extras: per-relation vectors are broadcast-joined onto the
-    # test side; TransD per-entity projection dots are one |E|-sized
-    # relational pass (edot), reused by both directions. TransR entities
-    # are pre-projected per test relation (_transr_proj) and the score
-    # is then TransE on the projections.
-    t = test.select("h", "t", "r").join(F.broadcast(rel.withColumnRenamed("id", "r")), "r")
-    if model == "transr":
-        proj = _transr_proj(test, dfs)
-        t = (
-            t.join(proj.select(F.col("id").alias("h"), "r", F.col("pvec").alias("hvec")), ["h", "r"])
-            .join(proj.select(F.col("id").alias("t"), "r", F.col("pvec").alias("tvec")), ["t", "r"])
-        )
-        score_model = "transe"
-    else:
-        t = (
-            t.join(F.broadcast(ent.select(F.col("id").alias("h"), F.col("evec").alias("hvec"))), "h")
-            .join(F.broadcast(ent.select(F.col("id").alias("t"), F.col("evec").alias("tvec"))), "t")
-        )
-        score_model = model
-    cand_ent = ent.select(F.col("id").alias("cand"), F.col("evec").alias("cvec"))
-    cand_extra_join = None
-    if model == "transh":
-        w = dfs["norm"].select(F.col("id").alias("r"), F.col("vec").alias("wvec"))
-        t = t.join(F.broadcast(w), "r")
-        # (entity, test-relation) projection dots as a relational table —
-        # the dot must reach the scoring lambda as a join attribute, not
-        # an inline expression (see _with_score). |E| × |distinct test
-        # relations| rows; exactly the SQL oracle's wdot CTE.
-        rels = test.select("r").dropDuplicates()
-        wdot = (
-            dfs["ent"]
-            .crossJoin(F.broadcast(w.join(rels, "r")))
-            .select("id", "r", _vdot(F.col("wvec"), F.col("vec")).alias("wdot"))
-        )
-        t = (
-            t.join(wdot.select(F.col("id").alias("h"), "r", F.col("wdot").alias("hvec_wdot")), ["h", "r"])
-            .join(wdot.select(F.col("id").alias("t"), "r", F.col("wdot").alias("tvec_wdot")), ["t", "r"])
-        )
-        cand_extra_join = wdot.select(
-            F.col("id").alias("cand"), "r", F.col("wdot").alias("cvec_wdot")
-        )
-    elif model == "complex":
-        # imaginary halves ride exactly like the real ones: per-relation
-        # vector broadcast onto the test side, per-entity vectors joined
-        # on h/t (the broadcast side is the full |E|-sized ent_im vector
-        # table — same shape and cost as the pre-existing ent joins
-        # above; a semi-join down to the test batch's h/t ids would
-        # shrink both) and onto the candidate table (one |E|-sized JVM
-        # join, same shape as TransD's edot)
-        ri = dfs["rel_im"].select(F.col("id").alias("r"), F.col("vec").alias("rvec_im"))
-        ei = dfs["ent_im"]
-        t = (
-            t.join(F.broadcast(ri), "r")
-            .join(F.broadcast(ei.select(F.col("id").alias("h"), F.col("vec").alias("hvec_im"))), "h")
-            .join(F.broadcast(ei.select(F.col("id").alias("t"), F.col("vec").alias("tvec_im"))), "t")
-        )
-        cand_ent = cand_ent.join(
-            ei.select(F.col("id").alias("cand"), F.col("vec").alias("cvec_im")), "cand"
-        )
-    elif model == "transd":
-        rp = dfs["rel_p"].select(F.col("id").alias("r"), F.col("vec").alias("rpvec"))
-        edot = (
-            dfs["ent"]
-            .join(dfs["ent_p"].select("id", F.col("vec").alias("pvec")), "id")
-            .select("id", _vdot(F.col("pvec"), F.col("vec")).alias("pdot"))
-        )
-        t = (
-            t.join(F.broadcast(rp), "r")
-            .join(F.broadcast(edot.select(F.col("id").alias("h"), F.col("pdot").alias("hvec_pdot"))), "h")
-            .join(F.broadcast(edot.select(F.col("id").alias("t"), F.col("pdot").alias("tvec_pdot"))), "t")
-        )
-        cand_ent = cand_ent.join(
-            edot.select(F.col("id").alias("cand"), F.col("pdot").alias("cvec_pdot")), "cand"
-        )
-    t = _with_score(t, score_model, norm, score_decimals, "hvec", "tvec", "s_head_true").withColumn(
-        "s_tail_true", F.col("s_head_true")
+    # one pass over the entity table: the test triples, broadcast, once
+    # per slot (id = h, id = t); ids without embeddings drop their rows
+    got = ents.join(
+        F.broadcast(test.selectExpr("h", "t", "r", "explode(array(h, t)) AS id")), "id"
+    ).toPandas()
+    vecs = got.drop_duplicates("id").set_index("id")
+    tests = got[["h", "t", "r"]].drop_duplicates(ignore_index=True)
+    tests = tests[tests["h"].isin(vecs.index) & tests["t"].isin(vecs.index)]
+    n = len(tests)
+    if n == 0:
+        return spark.createDataFrame([], RANKS_SCHEMA)
+    h_arr, t_arr, r_arr = (tests[c].to_numpy(np.int64) for c in ("h", "t", "r"))
+    # entity-side vectors of the test rows: heads at local ids [0, n),
+    # tails at [n, 2n); a block's rows follow from 2n
+    slots = np.concatenate([h_arr, t_arr])
+    test_vecs = {k: np.stack(vecs[k].loc[slots].to_numpy()) for k in ent_keys}
+    dim = test_vecs["ent"].shape[1]
+    if "mat" in rel:
+        rel["mat"] = rel["mat"].reshape(len(rel["mat"]), -1, dim)
+    test_rels = set(r_arr.tolist())
+    domains, ranges = (
+        {int(r): np.asarray(c) for r, c in (m or {}).items() if int(r) in test_rels}
+        for m in (constraints or (None, None))
+    )
+    b_test = pin_broadcast(spark, (test_vecs, h_arr, t_arr, r_arr, rel, domains, ranges))
+
+    tid = spark.createDataFrame(
+        pd.DataFrame({"tid": np.arange(n), "h": h_arr, "t": t_arr, "r": r_arr}),
+        "tid long, h long, t long, r long",
+    )
+    # known ⋈ test on the fixed slot, both directions in one broadcast
+    # join: each triple once per direction as (head?, fixed slot, varied
+    # slot). A candidate's skip lists are bounded by the test rows sharing
+    # its fixed slots, so they ride broadcast onto the entity rows.
+    slots = "stack(2, true, t, h, false, h, t) AS (head, fix, {})"
+    pairs = _known_df(spark, known).selectExpr("r", slots.format("cand")).join(
+        F.broadcast(tid.selectExpr("tid", "r", slots.format("true_e"))), ["head", "fix", "r"]
+    ).where("cand != true_e")
+    skips = pairs.groupBy(F.col("cand").alias("id")).agg(
+        F.collect_set(F.when(F.col("head"), F.col("tid"))).alias("skip_h"),
+        F.collect_set(F.when(~F.col("head"), F.col("tid"))).alias("skip_t"),
     )
 
-    known_df = _known_df(spark, known)
-    kn_heads = known_df.select(F.col("h").alias("cand"), F.col("t"), F.col("r")).withColumn("_kh", F.lit(1))
-    kn_tails = known_df.select(F.col("h"), F.col("t").alias("cand"), F.col("r")).withColumn("_kt", F.lit(1))
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        test_vecs, h_arr, t_arr, r_arr, rel, domains, ranges = b_test.value
+        loc = np.arange(n, dtype=np.int64)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf["id"].to_numpy(np.int64)
+            E = dict(rel)
+            for k in ent_keys:
+                E[k] = np.concatenate([test_vecs[k], np.stack(pdf[k].to_numpy())])
+            cand = (2 * n + np.arange(len(ids), dtype=np.int64))[None, :]
+            # per direction (head, tail): the block's membership in each
+            # constrained relation's list, and its skip pairs
+            everyone = np.ones(len(ids), dtype=bool)
+            members = [{r: np.isin(ids, c) for r, c in m.items()} for m in (domains, ranges)]
+            skip_pairs = [_skip_pairs(pdf[c]) for c in ("skip_h", "skip_t")]
+            counts = np.empty((n, 4), dtype=np.int64)
+            chunk = _chunk_rows(len(ids), dim, model)
+            for lo in range(0, n, chunk):
+                rows = slice(lo, lo + chunk)
+                h, t, r = loc[rows, None], n + loc[rows, None], r_arr[rows, None]
+                true = _scores(model, E, h[:, 0], r[:, 0], t[:, 0], norm, score_decimals)[:, None]
+                for j, (heads, tails) in enumerate(((cand, t), (h, cand))):
+                    allowed = np.stack([members[j].get(x, everyone) for x in r_arr[rows].tolist()])
+                    below = (_scores(model, E, heads, r, tails, norm, score_decimals) < true) & allowed
+                    counts[rows, 2 * j] = below.sum(axis=1)
+                    counts[rows, 2 * j + 1] = counts[rows, 2 * j] - _skipped(below, skip_pairs[j], lo)
+            out = pd.DataFrame({"h": h_arr, "t": t_arr, "r": r_arr})
+            out[list(RANK_COLS)] = counts
+            yield out
 
-    if model == "transr":
-        # every (entity, test-relation) projection IS a candidate row —
-        # joining proj on r alone enumerates the full candidate set
-        # without a separate cross join
-        cand = t.join(
-            proj.select(F.col("id").alias("cand"), "r", F.col("pvec").alias("cvec")), "r"
-        )
-    else:
-        cand = t.crossJoin(cand_ent)
-        if cand_extra_join is not None:
-            cand = cand.join(cand_extra_join, ["cand", "r"])
-    # type-constrained protocol (`type_constrain.txt` semantics, mirroring
-    # the broadcast path's `constraints`): head candidates restricted to
-    # the relation's domain, tail candidates to its range, via broadcast
-    # semi-joins on the candidate table. The true score is computed on the
-    # test row itself, so it ranks against the constrained set exactly as
-    # the broadcast kernel does; the known-filter correction joins run on
-    # the already-constrained rows (== np.intersect1d(known, cand) there).
-    domains, ranges = constraints or (None, None)
-    cand = _flag_constraint(cand, _constraint_df(spark, domains), "in_dom")
-    cand = _flag_constraint(cand, _constraint_df(spark, ranges), "in_rng")
-
-    # ONE pass over the candidate product: both direction scores per row,
-    # both known-filter markers, a single groupBy with four conditional
-    # aggregates. The candidate table is the job's dominant cost (|test|
-    # × |E| rows) and a DataFrame referenced twice executes twice (no
-    # ReusedExchange for this shape — docs/PLANS.md round-3 audit), so
-    # the earlier two-branch formulation built and scored it twice and
-    # paid a third shuffle re-joining head ranks to tail ranks.
-    scored = _with_score(cand, score_model, norm, score_decimals, "cvec", "tvec", "s_head_cand")
-    scored = _with_score(scored, score_model, norm, score_decimals, "hvec", "cvec", "s_tail_cand")
-    scored = (
-        scored.join(kn_heads, ["cand", "t", "r"], "left")
-        .join(kn_tails, ["cand", "h", "r"], "left")
-        .withColumn("skip_h", (F.col("_kh") == 1) & (F.col("cand") != F.col("h")))
-        .withColumn("skip_t", (F.col("_kt") == 1) & (F.col("cand") != F.col("t")))
-    )
-    lt_head = F.col("in_dom") & (F.col("s_head_cand") < F.col("s_head_true"))
-    lt_tail = F.col("in_rng") & (F.col("s_tail_cand") < F.col("s_tail_true"))
-    return scored.groupBy("h", "t", "r").agg(
-        (1 + F.sum(lt_head.cast("long"))).alias("rank_head_raw"),
-        (1 + F.sum(
-            (lt_head & ~F.coalesce("skip_h", F.lit(False))).cast("long")
-        )).alias("rank_head_filt"),
-        (1 + F.sum(lt_tail.cast("long"))).alias("rank_tail_raw"),
-        (1 + F.sum(
-            (lt_tail & ~F.coalesce("skip_t", F.lit(False))).cast("long")
-        )).alias("rank_tail_filt"),
+    return (
+        ents.join(F.broadcast(skips), "id", "left")
+        .mapInPandas(fn, RANKS_SCHEMA)
+        .groupBy("h", "t", "r")
+        .agg(*((1 + F.sum(c)).alias(c) for c in RANK_COLS))
     )
 
 
@@ -678,10 +507,9 @@ def link_prediction_ranks_relfilter(
     ).select("h", "t", "r", "rank_head_raw", "rank_tail_raw")
 
     # true scores once (|test| rows — checkpoint so the two downstream
-    # references don't re-run the scoring UDF)
-    # rounding happens INSIDE score_triples with np.round — the identical
-    # half-even rule the raw-rank kernel uses; F.round here (HALF_UP)
-    # would break the decomposition identity on exact .5 boundaries
+    # references don't re-run the scoring UDF); score_triples rounds with
+    # the raw-rank kernel's np.round (_scores), so the decomposition is
+    # exact on .5 boundaries too
     s_true = score_triples(
         spark, test.select("h", "t", "r").dropDuplicates(), emb,
         model=model, norm=norm, decimals=score_decimals,
@@ -745,58 +573,67 @@ def relation_prediction_ranks(
     """Relation prediction: rank the TRUE relation among ALL relations
     for each test pair — "what links h to t?", the third axis of the
     link-prediction protocol beside the head/tail ranks (A15/A16).
-    Output ``(h, t, r, rank_rel_raw, rank_rel_filt)``; strict-< and the
-    known-triple filtered correction follow the entity-rank protocol
-    exactly (a known ``(h, cand, t)`` with ``cand != r`` never counts
-    against the filtered rank).
+    Output ``(h, t, r, rank_rel_raw, rank_rel_filt)``, one row per
+    distinct test triple; strict-< and the known-triple filtered
+    correction follow the entity-rank protocol exactly (a known
+    ``(h, cand, t)`` with ``cand != r`` never counts against the
+    filtered rank).
 
-    Fully relational like :func:`link_prediction_ranks_blocked`, but
-    the candidate side is the RELATION table — model-parameter-sized
-    (|R| rows), so the candidate product is a broadcast nested loop:
-    |test| x |R| rows with no shuffle of the test side beyond its
-    embedding joins, then ONE rank aggregation. At any corpus scale
-    |R| stays dictionary-sized, which makes relation prediction the
-    cheapest eval direction (the entity ranks pay |test| x |E|).
+    Test rows are joined relationally to their h/t vectors and to the
+    ``collect_set(r)`` of known triples per ``(h, t)``. The candidate
+    side is the relation matrix — model-parameter-sized (|R| rows), so
+    it is broadcast: per Arrow batch, one ``kernels.score_batch`` call
+    per chunk scores ``[rows, |R|]`` and :func:`_rank` ranks each row.
+    At any corpus scale |R| stays dictionary-sized, which makes relation
+    prediction the cheapest eval direction (the entity ranks pay
+    |test| x |E|).
 
     TransE, L1 or L2; pass ``score_decimals`` (6) with ``norm=2`` —
     the same cross-engine float-ordering story as the entity ranks.
-    Other kernels compose the same way (swap the scoring fold); the
-    flagship kernel is what the contract pins.
+    ``emb``/``known`` take the same shapes as
+    :func:`link_prediction_ranks_blocked`.
     """
-    dfs = _emb_dfs(spark, emb)
-    ent = dfs["ent"]
-    rel = dfs["rel"]
-    t = (
-        test.select("h", "t", "r")
-        .join(ent.select(F.col("id").alias("h"), F.col("vec").alias("hvec")), "h")
-        .join(ent.select(F.col("id").alias("t"), F.col("vec").alias("tvec")), "t")
-        .join(
-            F.broadcast(rel.select(F.col("id").alias("r"), F.col("vec").alias("rvec"))),
-            "r",
-        )
-    )
-    t = _with_score(t, "transe", norm, score_decimals, "hvec", "tvec", "s_true").drop(
-        "rvec"
-    )
-    cand = t.crossJoin(
-        F.broadcast(rel.select(F.col("id").alias("cand"), F.col("vec").alias("rvec")))
-    )
-    cand = _with_score(cand, "transe", norm, score_decimals, "hvec", "tvec", "s_cand")
+    ents, rel = _emb_sides(spark, {k: emb[k] for k in ("ent", "rel")})
+    b_rel = pin_broadcast(spark, rel["rel"])
 
-    known_df = _known_df(spark, known)
-    kn = known_df.select("h", "t", F.col("r").alias("cand")).withColumn(
-        "_k", F.lit(1)
+    def vec(slot: str) -> DataFrame:
+        return ents.select(F.col("id").alias(slot), F.col("ent").alias(f"{slot}_vec"))
+
+    known_r = _known_df(spark, known).groupBy("h", "t").agg(F.collect_set("r").alias("known_r"))
+    rows = (
+        test.select("h", "t", "r").dropDuplicates()
+        .join(vec("h"), "h").join(vec("t"), "t")
+        .join(known_r, ["h", "t"], "left")
     )
-    scored = cand.join(kn, ["h", "t", "cand"], "left").withColumn(
-        "skip", (F.col("_k") == 1) & (F.col("cand") != F.col("r"))
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        R = b_rel.value
+        cands = np.arange(len(R), dtype=np.int64)[None, :]
+        chunk = _chunk_rows(len(R), R.shape[1], "transe")
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            n = len(pdf)
+            # heads at local ids [0, n), tails at [n, 2n)
+            ent = np.concatenate([np.stack(pdf[c].to_numpy()) for c in ("h_vec", "t_vec")])
+            E = {"ent": ent, "rel": R}
+            r = pdf["r"].to_numpy(np.int64)
+            ranks = np.empty((n, 2), dtype=np.int64)
+            for lo in range(0, n, chunk):
+                loc = np.arange(lo, min(lo + chunk, n), dtype=np.int64)[:, None]
+                s = _scores("transe", E, loc, cands, loc + n, norm, score_decimals)
+                for j, i in enumerate(loc[:, 0]):
+                    kr = pdf["known_r"].iat[i]
+                    kr = np.asarray([] if kr is None else kr, np.int64)
+                    ranks[i] = _rank(s[j], r[i], None, kr)
+            out = pdf[["h", "t", "r"]].copy()
+            out["rank_rel_raw"], out["rank_rel_filt"] = ranks[:, 0], ranks[:, 1]
+            yield out
+
+    return rows.mapInPandas(
+        fn, "h long, t long, r long, rank_rel_raw long, rank_rel_filt long"
     )
-    lt = F.col("s_cand") < F.col("s_true")
-    return scored.groupBy("h", "t", "r").agg(
-        (1 + F.sum(lt.cast("long"))).alias("rank_rel_raw"),
-        (1 + F.sum((lt & ~F.coalesce("skip", F.lit(False))).cast("long"))).alias(
-            "rank_rel_filt"
-        ),
-    )
+
 
 
 def link_prediction_metrics(ranks: DataFrame) -> DataFrame:
@@ -921,11 +758,9 @@ def score_triples(
 
     Broadcast embeddings + vectorized NumPy per Arrow batch — the
     shared scoring primitive for classification/calibration paths.
-    ``decimals`` rounds inside the NumPy kernel with ``np.round``
-    (half-even) — the SAME rule ``link_prediction_ranks`` applies to its
-    candidate scores, so rank decompositions built on these scores use
-    one consistent rounding (Spark's ``F.round`` is HALF_UP and would
-    disagree on exact .5 boundaries).
+    ``decimals`` rounds with :func:`_scores` — the rule every rank path
+    applies to its candidate scores, so rank decompositions built on
+    these scores use one consistent rounding.
     """
     b_emb = pin_broadcast(spark, emb)
     schema = ", ".join(
@@ -937,14 +772,13 @@ def score_triples(
         for pdf in batches:
             if len(pdf):
                 pdf = pdf.copy()
-                s = kernels.score_batch(
+                pdf["score"] = _scores(
                     model, E,
                     pdf["h"].to_numpy(np.int64),
                     pdf["r"].to_numpy(np.int64),
                     pdf["t"].to_numpy(np.int64),
-                    norm,
+                    norm, decimals,
                 ).astype("float64")
-                pdf["score"] = np.round(s, decimals) if decimals is not None else s
                 yield pdf
 
     return triples.mapInPandas(fn, schema)

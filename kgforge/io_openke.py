@@ -175,8 +175,9 @@ def write_embeddings_parquet(spark: SparkSession, emb: dict, out_dir: str) -> No
 
 def read_embedding_df(spark: SparkSession, in_dir: str, component: str) -> DataFrame:
     """A20 scale-path import: one checkpoint component as an ``(id, vec)``
-    DataFrame — feed this straight to ``link_prediction_ranks_blocked``;
-    the embeddings never pass through the driver."""
+    DataFrame — feed this straight to ``link_prediction_ranks_blocked``:
+    entity components (``ent*``) stay in Spark and never pass through
+    the driver; relation components are |R|-sized and get collected."""
     return spark.read.parquet(
         os.path.join(in_dir, "components", f"component={component}")
     ).select("id", "vec")

@@ -259,8 +259,3 @@ def score_batch(
         )
     raise ValueError(f"unknown model {model!r}")
 
-
-#: margin ranking loss (A11) — not on the parity-critical path; used by the
-#: optional NumPy training loop to produce fixture embeddings.
-def margin_loss(pos_scores: np.ndarray, neg_scores: np.ndarray, margin: float) -> float:
-    return float(np.maximum(0.0, margin + pos_scores - neg_scores).sum())

@@ -5,7 +5,8 @@ driver's harness runs Spark defaults — Arrow conversion OFF — where
 ``createDataFrame`` uses the strict non-Arrow type verifier that rejects
 numpy scalars (``np.float32``/``np.float64``) inside list cells and cannot
 infer ``array<double>`` from object columns. Round 3 shipped exactly that
-bug in ``evaluate._mat_to_vec_df`` and ``io_openke.write_embeddings_parquet``
+bug in evaluate's NumPy → ``(id, vec)`` helper (now ``evaluate._vecs_df``) and
+``io_openke.write_embeddings_parquet``
 and 8 driver queries errored while all builder-side checks stayed green.
 
 These tests flip the Arrow conf off on the shared session (it is a runtime
@@ -37,7 +38,7 @@ def test_mat_to_vec_df_arrow_off(arrow_off):
     from kgforge import evaluate as ev
 
     mat = np.arange(12, dtype="float32").reshape(4, 3) / 7.0
-    df = ev._mat_to_vec_df(arrow_off, mat)
+    df = ev._vecs_df(arrow_off, {"vec": mat})
     assert [f.dataType.simpleString() for f in df.schema.fields] == [
         "bigint",
         "array<double>",
@@ -66,7 +67,7 @@ def test_embedding_checkpoint_roundtrip_arrow_off(arrow_off, tmp_path):
 
 def test_blocked_ranks_arrow_off(arrow_off):
     """One blocked-rank call end-to-end with Arrow off — the exact driver
-    shape that errored in round 3 (numpy emb dict → _emb_dfs →
+    shape that errored in round 3 (numpy emb dict → _emb_sides →
     createDataFrame)."""
     from kgforge import evaluate as ev
 

@@ -105,18 +105,19 @@ def _oracle_relation_ranks(test: pd.DataFrame, norm=1) -> pd.DataFrame:
     )
 
 
-def test_relation_ranks_match_oracle(spark):
+@pytest.mark.parametrize("norm", [1, 2])
+def test_relation_ranks_match_oracle(spark, norm):
     from kgforge.evaluate import relation_prediction_ranks
 
     test = SPLIT["test2id"]
     got = (
-        relation_prediction_ranks(spark, spark.createDataFrame(test), EMB, KNOWN)
+        relation_prediction_ranks(spark, spark.createDataFrame(test), EMB, KNOWN, norm=norm)
         .toPandas()
         .sort_values(["h", "t", "r"])
         .reset_index(drop=True)
     )
     want = (
-        _oracle_relation_ranks(test)
+        _oracle_relation_ranks(test, norm=norm)
         .drop_duplicates(["h", "t", "r"])
         .sort_values(["h", "t", "r"])
         .reset_index(drop=True)
@@ -187,15 +188,23 @@ def _numpy_filtered_ranks(ent, rel, test, known_set):
     return pd.DataFrame(rows, columns=["h", "t", "r", *RANK_COLS])
 
 
-@pytest.mark.parametrize("with_known", [True, False], ids=["known", "known-none"])
-def test_ranks_across_chunk_boundaries(spark, with_known):
-    """|E| = 60k at d = 8 holds the scoring chunk to 4 test triples, so
-    the 15 triples of one Arrow batch score as chunks of 4, 4, 4 and 3.
-    Ranks must equal a per-triple NumPy recomputation. The known set
-    hits the filter index for the first 8 triples (each with 40 other
+@pytest.mark.parametrize(
+    "blocked,with_known",
+    [(False, True), (False, False), (True, True)],
+    ids=["known", "known-none", "known-blocked"],
+)
+def test_ranks_across_chunk_boundaries(spark, blocked, with_known):
+    """|E| = 60k at d = 8 holds the broadcast path's scoring chunk to 4
+    test triples, so the 15 triples of one Arrow batch score as chunks
+    of 4, 4, 4 and 3; on the blocked path the 60k entities span at least
+    4 Arrow-batch blocks (≤16384 rows each), so every rank is a sum over
+    blocks. Ranks must equal a per-triple NumPy recomputation. The known
+    set hits the filter for the first 8 triples (each with 40 other
     known heads and tails, about half scoring below the true entity)
     and misses for the rest; ``known=None`` is the empty index that the
     relational-filter path ranks with (filtered == raw)."""
+    from kgforge.evaluate import link_prediction_ranks_blocked
+
     n_ent, n_rel = 60_000, 5
     emb = gen_embeddings(n_ent=n_ent, n_rel=n_rel, dim=8)
     rng = np.random.default_rng(11)
@@ -217,9 +226,8 @@ def test_ranks_across_chunk_boundaries(spark, with_known):
         known = pd.concat(parts, ignore_index=True)
     known_set = set() if known is None else set(known.itertuples(index=False, name=None))
 
-    got = link_prediction_ranks(
-        spark, spark.createDataFrame(test).coalesce(1), emb, known
-    ).toPandas()
+    rank = link_prediction_ranks_blocked if blocked else link_prediction_ranks
+    got = rank(spark, spark.createDataFrame(test).coalesce(1), emb, known).toPandas()
     want = _numpy_filtered_ranks(
         emb["ent"].astype(np.float64), emb["rel"].astype(np.float64), test, known_set
     )
@@ -271,14 +279,18 @@ BLOCKED_CASES = [
     ("transr", 2, 6),
     ("distmult", 1, 6),
     ("complex", 1, 6),
+    ("rescal", 1, 6),
+    ("hole", 1, 6),
+    ("rotate", 1, 6),
+    ("simple", 1, 6),
+    ("analogy", 1, 6),
 ]
 
 
 @pytest.mark.parametrize("model,norm,dec", BLOCKED_CASES)
 def test_blocked_ranks_equal_broadcast(spark, model, norm, dec):
-    """The relational block-nested-loop path must reproduce the broadcast
-    protocol for every supported model × norm (score_decimals rounds
-    both engines identically where float sums are order-dependent)."""
+    """The blocked path must reproduce the broadcast protocol for every
+    kernel × norm (score_decimals as the contract queries pass it)."""
     from kgforge.evaluate import link_prediction_ranks_blocked
 
     test = spark.createDataFrame(SPLIT["test2id"].head(12))
@@ -315,15 +327,6 @@ def test_blocked_category_metrics_equal_broadcast(spark):
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
-def test_with_score_unknown_model_raises(spark):
-    from kgforge.evaluate import link_prediction_ranks_blocked
-
-    with pytest.raises(NotImplementedError):
-        link_prediction_ranks_blocked(
-            spark, spark.createDataFrame(SPLIT["test2id"].head(2)), EMB, KNOWN, model="rescal"
-        ).collect()
-
-
 def test_blocked_ranks_from_parquet_checkpoint(spark, tmp_path):
     """A20 + blocked eval end to end: embeddings and the known set enter
     as Parquet-backed DataFrames — zero data-sized driver pulls."""
@@ -347,8 +350,8 @@ def test_blocked_ranks_from_parquet_checkpoint(spark, tmp_path):
     )
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
-    # TransR too: the checkpoint's flat (id, vec) mat component feeds the
-    # relational matmul directly — all four kernels DataFrame-native
+    # TransR too: the checkpoint's flat (id, vec) mat rows are reshaped
+    # to [|R|, d_r, d_e] once collected
     emb_r = {k: read_embedding_df(spark, d, k) for k in ("ent", "rel", "mat")}
     ar = (
         link_prediction_ranks(spark, test, EMB, KNOWN, model="transr", score_decimals=6)
@@ -362,11 +365,49 @@ def test_blocked_ranks_from_parquet_checkpoint(spark, tmp_path):
     pd.testing.assert_frame_equal(ar, br, check_dtype=False)
 
 
+def test_blocked_ranks_partition_independent(spark, tmp_path):
+    """Blocks are Arrow batches of whatever partitions the entity table
+    has; the summed ranks must not depend on them. Parquet-backed
+    embeddings with the entity table at one partition (one block), at
+    seven, and at one partition cut into 8-row Arrow batches (eight
+    blocks through one Python worker)."""
+    from kgforge.evaluate import link_prediction_ranks_blocked
+    from kgforge.io_openke import read_embedding_df, write_embeddings_parquet
+
+    d = str(tmp_path / "ckpt")
+    write_embeddings_parquet(spark, EMB, d)
+    test = spark.createDataFrame(SPLIT["test2id"].head(15))
+    known_df = spark.createDataFrame(KNOWN[["h", "t", "r"]])
+    key = ["h", "t", "r"]
+
+    def ranks(n_parts):
+        emb = {
+            "ent": read_embedding_df(spark, d, "ent").repartition(n_parts),
+            "rel": read_embedding_df(spark, d, "rel"),
+        }
+        return (
+            link_prediction_ranks_blocked(spark, test, emb, known_df)
+            .toPandas().sort_values(key).reset_index(drop=True)
+        )
+
+    one, seven = ranks(1), ranks(7)
+    pd.testing.assert_frame_equal(one, seven)
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(batch_conf)
+    spark.conf.set(batch_conf, "8")
+    try:
+        pd.testing.assert_frame_equal(one, ranks(1))
+    finally:
+        spark.conf.set(batch_conf, old)
+    want = link_prediction_ranks(spark, test, EMB, KNOWN).toPandas().sort_values(key)
+    pd.testing.assert_frame_equal(one, want.reset_index(drop=True), check_dtype=False)
+
+
 @pytest.mark.parametrize("model,norm", [("transe", 1), ("transh", 1), ("transr", 1), ("transd", 2)])
 def test_relfilter_ranks_equal_broadcast(spark, model, norm):
     """The relational known-filter decomposition (raw broadcast ranks −
     join-scored correction) must equal the broadcast filter for every
-    model, including TransR (which the blocked path can't express)."""
+    model."""
     from kgforge.evaluate import link_prediction_ranks_relfilter
 
     dec = 6 if (norm == 2 or model != "transe") else None
@@ -431,10 +472,12 @@ def test_triple_classification_reasonable(spark):
 
 
 def test_blocked_constrained_equals_broadcast_constrained(spark):
-    """Type-constrained protocol on the blocked path: domain/range
-    semi-joins on the candidate table must reproduce the broadcast
-    kernel's constrained ranks exactly (incl. relations ABSENT from the
-    constraint maps staying unconstrained)."""
+    """Type-constrained protocol on the blocked path: per-block domain/
+    range membership must reproduce the broadcast kernel's constrained
+    ranks exactly (incl. relations ABSENT from the constraint maps
+    staying unconstrained). Lists from the known set contain every known
+    candidate; the train-only DOMAINS/RANGES leave some known
+    candidates outside, which the filtered rank must not subtract."""
     from kgforge.evaluate import link_prediction_ranks_blocked
 
     # constraints for relations 0..2 only; 3..4 unconstrained on purpose
@@ -448,17 +491,18 @@ def test_blocked_constrained_equals_broadcast_constrained(spark):
     }
     test = spark.createDataFrame(SPLIT["test2id"].head(15))
     key = ["h", "t", "r"]
-    a = (
-        link_prediction_ranks(
-            spark, test, EMB, KNOWN, constraints=(domains, ranges)
-        ).toPandas().sort_values(key).reset_index(drop=True)
-    )
-    b = (
-        link_prediction_ranks_blocked(
-            spark, test, EMB, KNOWN, constraints=(domains, ranges)
-        ).toPandas().sort_values(key).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    for constraints in ((domains, ranges), (DOMAINS, RANGES)):
+        a = (
+            link_prediction_ranks(
+                spark, test, EMB, KNOWN, constraints=constraints
+            ).toPandas().sort_values(key).reset_index(drop=True)
+        )
+        b = (
+            link_prediction_ranks_blocked(
+                spark, test, EMB, KNOWN, constraints=constraints
+            ).toPandas().sort_values(key).reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_kernel_leaderboard_consistent_with_individual_metrics(spark):

@@ -44,13 +44,6 @@ def test_kernel_matches_oracle(model, norm):
     np.testing.assert_allclose(got, want, rtol=1e-5)
 
 
-def test_margin_loss():
-    pos = np.array([1.0, 2.0])
-    neg = np.array([3.0, 1.0])
-    # max(0, 1 + 1 - 3) + max(0, 1 + 2 - 1) = 0 + 2
-    assert kernels.margin_loss(pos, neg, margin=1.0) == 2.0
-
-
 def test_distmult_matches_paper_loop_and_is_symmetric():
     got = kernels.score_batch("distmult", EMB, H, R, T)
     want = np.array(
