@@ -5,12 +5,13 @@ walks → skip-gram pairs → embeddings pipeline (graphstats.random_walks
 is unsupervised structural entity embeddings over the constructed KG —
 the non-triple-supervised counterpart to the A7-A12 kernel family.
 
-Distribution model is A13's (training.train_distributed): per round,
-broadcast the parameter matrices, shards run local vectorized-NumPy
-epochs inside ``applyInPandas``, the driver averages shard results
-weighted by shard size. Pair rows (center, context, n_pairs) carry
-their co-occurrence count as a loss weight, so the aggregated pair
-table trains identically to streaming the raw corpus.
+Distribution runs through A13's round, ``training.param_average`` (the
+one ``training.train_distributed`` uses): per round, broadcast the
+parameter matrices, shards run local vectorized-NumPy epochs inside
+``applyInPandas``, the driver averages shard results weighted by shard
+size. Pair rows (center, context, n_pairs) carry their co-occurrence
+count as a loss weight, so the aggregated pair table trains identically
+to streaming the raw corpus.
 """
 
 from __future__ import annotations
@@ -41,9 +42,11 @@ def sgns_epochs(
     weight: maximize ``log σ(u_c·v_x)`` for observed pairs and
     ``log σ(−u_c·v_n)`` for ``neg`` uniformly drawn negatives per pair.
     Vectorized per batch (gather → sigmoid → scatter via ``np.*.at``,
-    duplicate rows accumulate); negatives are drawn from a counter-
-    seeded generator, so a (shard, round) seed makes every shard's work
-    deterministic — the same replayability contract as ``sgd_epochs``.
+    duplicate rows accumulate). Negatives continue the stream of the
+    epoch's ``default_rng(seed * 7919 + ep)`` permutation generator, so
+    a (shard, round) seed makes every shard's work deterministic; that
+    shared stream is why this loop is its own and not
+    ``training._batches``, whose corruptions are counter-keyed.
     """
     u_in, v_out = u_in.copy(), v_out.copy()
     c_all = pairs["center"].to_numpy(np.int64)
@@ -86,14 +89,14 @@ def train_deepwalk(
     seed: int = 42,
 ) -> dict[str, np.ndarray]:
     """Parameter-averaged distributed SGNS over a skip-gram pair table
-    (A13's synchronous scheme; see module docstring). Returns
+    (``training.param_average``; see module docstring). Returns
     ``{"in": U, "out": V}`` float32 — ``in`` is the embedding consumers
     use. Shard assignment hashes the pair, local work is counter-seeded
     per (shard, round): deterministic for a fixed shard count, and the
     pair table (not the walk corpus) is what ships to executors."""
     from pyspark.sql import functions as F
 
-    from .training import _xavier
+    from .training import _xavier, param_average
 
     rng = np.random.default_rng(seed)
     u_in = _xavier(rng, n_nodes, dim).astype("float64")
@@ -101,46 +104,13 @@ def train_deepwalk(
     sharded = pairs_df.withColumn(
         "shard", F.pmod(F.hash("center", "context"), F.lit(n_shards))
     )
-    out_schema = "shard int, kind string, flat array<double>, n long"
 
-    for rnd in range(rounds):
-        b = spark.sparkContext.broadcast((u_in, v_out))
-
-        def make_fit(rnd_):
-            def fit(key, pdf):
-                u0, v0 = b.value
-                shard = int(key[0])
-                u1, v1 = sgns_epochs(
-                    pdf, u0, v0, epochs_per_round, lr, neg,
-                    seed=seed * 31 + shard + 1_000_003 * rnd_,
-                )
-                return pd.DataFrame(
-                    {
-                        "shard": [shard, shard],
-                        "kind": ["in", "out"],
-                        "flat": [u1.ravel().tolist(), v1.ravel().tolist()],
-                        "n": [len(pdf), len(pdf)],
-                    }
-                )
-
-            return fit
-
-        res = (
-            sharded.groupBy("shard")
-            .applyInPandas(make_fit(rnd), out_schema)
-            .toPandas()
+    def local_fit(rnd, shard, pdf, params):
+        return sgns_epochs(
+            pdf, *params, epochs_per_round, lr, neg, seed=seed * 31 + shard + 1_000_003 * rnd
         )
-        tot = res[res["kind"] == "in"]["n"].sum()
-        u_new = np.zeros_like(u_in)
-        v_new = np.zeros_like(v_out)
-        for _, row in res.iterrows():
-            w = row["n"] / tot
-            mat = np.asarray(row["flat"], dtype="float64")
-            if row["kind"] == "in":
-                u_new += w * mat.reshape(u_in.shape)
-            else:
-                v_new += w * mat.reshape(v_out.shape)
-        u_in, v_out = u_new, v_new
+
+    u_in, v_out = param_average(spark, sharded, (u_in, v_out), rounds, local_fit)
     return {"in": u_in.astype("float32"), "out": v_out.astype("float32")}
 
 

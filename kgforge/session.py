@@ -87,14 +87,17 @@ def tiny_df(spark, rows, schema: str):
     ``defaultParallelism`` pickled slices — measured ~4 s per call for a
     32-row frame at local[32] vs ~0.15 s through pandas. Values are kept
     as Python objects (object dtype), so the non-Arrow fallback never
-    sees numpy scalars (the round-3 incident class)."""
+    sees numpy scalars (the round-3 incident class). Column names come
+    from Spark's DDL parser, so types with commas (``decimal(10,2)``,
+    ``struct<…>``) are handled."""
     import pandas as pd
+    from pyspark.sql.types import StructType
 
+    struct = StructType.fromDDL(schema)
     if not rows:
-        return spark.createDataFrame([], schema)
-    cols = [f.split()[0] for f in schema.split(",")]
-    pdf = pd.DataFrame(list(rows), columns=cols, dtype=object)
-    return spark.createDataFrame(pdf, schema)
+        return spark.createDataFrame([], struct)
+    pdf = pd.DataFrame(list(rows), columns=struct.names, dtype=object)
+    return spark.createDataFrame(pdf, struct)
 
 
 def ensure_min_partitions(df, n: int | None = None):

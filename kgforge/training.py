@@ -13,18 +13,24 @@ fixture embeddings can be *produced*, not just synthesized:
   upstream OpenKE recipe).
 * :func:`train_distributed` — data-parallel epochs: each partition runs
   the same NumPy SGD on its shard inside ``applyInPandas`` starting from
-  the broadcast global parameters, then the driver averages shard deltas
+  the broadcast global parameters, then the driver averages shard results
   (synchronous parameter averaging — the Spark-native stand-in for the
   reference's async ps updates; same fixpoint family, deterministic).
 * :func:`train_incremental` — A21: numbered snapshot dirs ``0/,1/,...``;
   warm-start from the previous increment's embeddings, Xavier-init rows
   for unseen entities/relations, re-evaluate per increment.
+
+One training core serves every trainer: :func:`_batches` (the negative-
+sampling schedule), :class:`_OptState` (the sparse optimizer step),
+:func:`_margin_epochs` (the hinge loop TransE, DistMult, ComplEx and
+RotatE plug a ``score_grads`` into) and :func:`param_average` (the
+round behind :func:`train_distributed` and ``graphembed.train_deepwalk``).
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -94,18 +100,43 @@ def _corrupt(h, t, r, n_ent, seed, epoch, bern_p=None, known_keys=None, n_rel=0)
     return nh, nt
 
 
-def _sparse_sgd(param: np.ndarray, rows: np.ndarray, grads: np.ndarray, lr: float) -> None:
-    """Plain SGD scatter step; ``np.subtract.at`` accumulates duplicate
-    row indices, so colliding batch rows sum their gradients."""
-    np.subtract.at(param, rows, lr * grads)
+def _batches(triples, n_ent, seed, epochs, epoch_offset, batch_size, bern_p=None, n_neg=1):
+    """Yields one ``batches`` iterator per epoch (also for zero triples);
+    ``batches`` yields ``(h, t, r, negs)`` over a seeded permutation, with
+    ``n_neg`` ``_corrupt`` draws ``(nh, nt)`` at epoch keys
+    ``ep * n_neg + k`` that avoid known triples while the packed key
+    space fits below 2^63."""
+    h_all = triples["h"].to_numpy(np.int64)
+    t_all = triples["t"].to_numpy(np.int64)
+    r_all = triples["r"].to_numpy(np.int64)
+    n = len(h_all)
+    n_rel_pack = int(r_all.max()) + 1 if n else 1
+    known_keys = None
+    if n and float(n_ent) * n_ent * n_rel_pack < 2**63:
+        known_keys = np.sort(_pack_keys(h_all, t_all, r_all, n_ent, n_rel_pack))
+
+    def epoch(ep):
+        order = np.random.default_rng(seed * 7919 + ep).permutation(n)
+        for lo in range(0, n, batch_size):
+            idx = order[lo:lo + batch_size]
+            h, t, r = h_all[idx], t_all[idx], r_all[idx]
+            yield h, t, r, [
+                _corrupt(h, t, r, n_ent, seed, ep * n_neg + k, bern_p, known_keys, n_rel_pack)
+                for k in range(n_neg)
+            ]
+
+    for ep in range(epoch_offset, epoch_offset + epochs):
+        yield epoch(ep)
 
 
 class _OptState:
-    """A12 optimizer state (Adagrad / Adam / Adadelta), sparse-applied:
-    per batch, duplicate row gradients are pre-summed, then only touched
-    rows update (TF's sparse apply — the reference trains its OpenKE
-    models with ``Config.set_opt_method`` choosing among SGD/Adagrad/
-    Adadelta/Adam, recalled — SURVEY.md §0)."""
+    """A12 optimizer step, sparse-applied (the reference trains its
+    OpenKE models with ``Config.set_opt_method`` choosing among SGD/
+    Adagrad/Adadelta/Adam, recalled — SURVEY.md §0). ``sgd`` scatters
+    ``lr * grads`` with ``np.subtract.at``, so colliding batch rows sum
+    their gradients. Adagrad / Adam / Adadelta pre-sum duplicate row
+    gradients, then update only the touched rows and their state (TF's
+    sparse apply)."""
 
     def __init__(self, shape: tuple[int, int], method: str):
         self.method = method
@@ -121,7 +152,10 @@ class _OptState:
             raise ValueError(f"unknown opt_method {method!r}")
 
     def apply(self, param: np.ndarray, rows: np.ndarray, grads: np.ndarray,
-              lr: float, t_step: int) -> None:
+              lr: float, t_step: int = 1) -> None:
+        if self.method == "sgd":
+            np.subtract.at(param, rows, lr * grads)
+            return
         uniq, inv = np.unique(rows, return_inverse=True)
         g = np.zeros((len(uniq), param.shape[1]))
         np.add.at(g, inv, grads)
@@ -144,6 +178,88 @@ class _OptState:
             param[uniq] += dx
 
 
+def _margin_epochs(triples, params, n_ent_params, score_grads, epochs, lr, margin, seed,
+                   bern_p=None, batch_size=1024, epoch_offset=0, opt_method="sgd",
+                   normalize=False) -> tuple[np.ndarray, ...]:
+    """Hinge ``max(0, margin + s(pos) − s(neg))`` epochs on copies of
+    ``params`` (``n_ent_params`` entity matrices, then relation ones).
+    ``score_grads(P, h, t, r) -> (s, dh, dt, dr)`` gives the score (lower
+    is better) and one partial per entity (``dh``, ``dt``) or relation
+    (``dr``) matrix; active rows step ``[h, t, nh, nt]`` along
+    ``[dh, dt, −dnh, −dnt]`` and ``r`` along ``dr − dnr``. ``normalize``
+    L2-normalizes ``params[0]``'s rows every epoch (OpenKE's TransE)."""
+    P = [p.copy() for p in params]
+    opts = [_OptState(p.shape, opt_method) for p in P]
+    t_step = 0
+    for batches in _batches(triples, P[0].shape[0], seed, epochs, epoch_offset,
+                            batch_size, bern_p):
+        if normalize:
+            P[0] = _normalize_rows(P[0])
+        for h, t, r, [(nh, nt)] in batches:
+            sp, dh, dt, dr = score_grads(P, h, t, r)
+            sn, dnh, dnt, dnr = score_grads(P, nh, nt, r)
+            a = (margin + sp - sn) > 0
+            if not a.any():
+                continue
+            t_step += 1
+            rows = np.concatenate([h[a], t[a], nh[a], nt[a]])
+            for i, (gh, gt, gnh, gnt) in enumerate(zip(dh, dt, dnh, dnt)):
+                grads = np.concatenate([gh[a], gt[a], -gnh[a], -gnt[a]])
+                opts[i].apply(P[i], rows, grads, lr, t_step)
+            for i, (gp, gn) in enumerate(zip(dr, dnr), n_ent_params):
+                opts[i].apply(P[i], r[a], gp[a] - gn[a], lr, t_step)
+    return tuple(P)
+
+
+def _transe_score_grads(P, h, t, r, norm=1):
+    """TransE ``‖h + r − t‖_norm``: ``g = ∂s/∂h = ∂s/∂r = −∂s/∂t``."""
+    ent, rel = P
+    d = ent[h] + rel[r] - ent[t]
+    s = kernels._dist(d, norm)
+    g = np.sign(d) if norm == 1 else d / np.maximum(s, 1e-12)[:, None]
+    return s, (g,), (-g,), (g,)
+
+
+def _distmult_score_grads(P, h, t, r):
+    """DistMult ``s = −Σ h∘r∘t`` (negated per ``kernels.distmult``)."""
+    ent, rel = P
+    H, R, T = ent[h], rel[r], ent[t]
+    return -(H * R * T).sum(1), (-(R * T),), (-(H * R),), (-(H * T),)
+
+
+def _complex_score_grads(P, h, t, r):
+    """ComplEx ``s = −Re⟨h, r, conj(t)⟩`` (negated per
+    ``kernels.complex_score``), partials expanded into real arithmetic."""
+    ent_re, ent_im, rel_re, rel_im = P
+    hre, him, tre, tim = ent_re[h], ent_im[h], ent_re[t], ent_im[t]
+    rre, rim = rel_re[r], rel_im[r]
+    s = -((hre * rre - him * rim) * tre + (hre * rim + him * rre) * tim).sum(1)
+    return (
+        s,
+        (-(rre * tre + rim * tim), -(rre * tim - rim * tre)),
+        (-(hre * rre - him * rim), -(hre * rim + him * rre)),
+        (-(hre * tre + him * tim), -(hre * tim - him * tre)),
+    )
+
+
+def _rotate_residual(hre, him, c, s, tre, tim):
+    """RotatE residual ``z = h·e^{iθ} − t`` as ``(re, im)``; ``c, s = cos θ, sin θ``."""
+    return hre * c - him * s - tre, hre * s + him * c - tim
+
+
+def _rotate_score_grads(P, h, t, r):
+    """RotatE ``Σ_k |z_k|`` and its complex-modulus chain rule, with a
+    ``max(|z|, ε)`` guard at the non-differentiable origin."""
+    ent_re, ent_im, theta = P
+    C, S = np.cos(theta[r]), np.sin(theta[r])
+    hre, him = ent_re[h], ent_im[h]
+    z_re, z_im = _rotate_residual(hre, him, C, S, ent_re[t], ent_im[t])
+    m = np.maximum(np.sqrt(z_re * z_re + z_im * z_im), 1e-12)
+    ur, ui = z_re / m, z_im / m
+    g_th = ur * (-hre * S - him * C) + ui * (hre * C - him * S)
+    return m.sum(1), (ur * C + ui * S, -ur * S + ui * C), (-ur, -ui), (g_th,)
+
+
 def sgd_epochs(
     triples: pd.DataFrame,
     ent: np.ndarray,
@@ -159,96 +275,26 @@ def sgd_epochs(
     opt_method: str = "sgd",
     model: str = "transe",
 ) -> tuple[np.ndarray, np.ndarray]:
-    """In-place-free margin-ranking epochs; returns updated (ent, rel).
+    """In-place-free margin-ranking epochs (:func:`_margin_epochs`);
+    returns updated (ent, rel).
 
     ``opt_method``: ``sgd`` (default, the upstream recipe) or
     ``adagrad`` / ``adam`` / ``adadelta`` (A12 — reference
     ``Config.set_opt_method``). Non-SGD state is local to this call
     (resets across early-stop chunks, like restarting the optimizer).
 
-    ``model``: ``transe`` (the reference recipe, byte-identical update
-    path to previous rounds) or ``distmult`` — the bilinear-diagonal
-    kernel under the same margin loss and negative sampler; its
-    gradients are the obvious products (``∂s/∂h = −r∘t`` etc., score
-    negated per kernels.distmult). The per-epoch entity row
+    ``model``: ``transe`` (the reference recipe, L1 or L2 by ``norm``)
+    or ``distmult`` — the bilinear-diagonal kernel under the same
+    margin loss and negative sampler. The per-epoch entity row
     normalization is kept for both (OpenKE's TransE recipe; for
     DistMult it doubles as the usual norm regularizer).
     """
-    ent = ent.copy()
-    rel = rel.copy()
-    h_all = triples["h"].to_numpy(np.int64)
-    t_all = triples["t"].to_numpy(np.int64)
-    r_all = triples["r"].to_numpy(np.int64)
-    n = len(h_all)
-    n_ent = ent.shape[0]
-    n_rel_pack = int(r_all.max()) + 1 if n else 1
-    known_keys = None
-    if n and float(n_ent) * n_ent * n_rel_pack < 2**63:
-        known_keys = np.sort(_pack_keys(h_all, t_all, r_all, n_ent, n_rel_pack))
-    opt_e = _OptState(ent.shape, opt_method) if opt_method != "sgd" else None
-    opt_r = _OptState(rel.shape, opt_method) if opt_method != "sgd" else None
-    t_step = 0
-    for ep in range(epoch_offset, epoch_offset + epochs):
-        ent = _normalize_rows(ent)  # upstream OpenKE normalizes entities per epoch
-        order = np.random.default_rng(seed * 7919 + ep).permutation(n)
-        for lo in range(0, n, batch_size):
-            idx = order[lo:lo + batch_size]
-            h, t, r = h_all[idx], t_all[idx], r_all[idx]
-            nh, nt = _corrupt(h, t, r, n_ent, seed, ep, bern_p, known_keys, n_rel_pack)
-            H, T, R = ent[h], ent[t], rel[r]
-            NH, NT = ent[nh], ent[nt]
-            if model == "distmult":
-                # separate branch so the transe float-accumulation
-                # order below stays byte-identical to prior rounds
-                sp = -(H * R * T).sum(1)
-                sn = -(NH * R * NT).sum(1)
-                active = (margin + sp - sn) > 0
-                if not active.any():
-                    continue
-                t_step += 1
-                a = active
-                gph, gpt, gpr = -(R * T)[a], -(H * R)[a], -(H * T)[a]
-                gnh, gnt, gnr = -(R * NT)[a], -(NH * R)[a], -(NH * NT)[a]
-                ent_rows = np.concatenate([h[a], t[a], nh[a], nt[a]])
-                ent_grads = np.concatenate([gph, gpt, -gnh, -gnt])
-                if opt_e is None:
-                    _sparse_sgd(ent, ent_rows, ent_grads, lr)
-                    _sparse_sgd(rel, r[a], gpr - gnr, lr)
-                else:
-                    opt_e.apply(ent, ent_rows, ent_grads, lr, t_step)
-                    opt_r.apply(rel, r[a], gpr - gnr, lr, t_step)
-                continue
-            dp = H + R - T
-            dn = NH + R - NT
-            if norm == 1:
-                sp = np.abs(dp).sum(1)
-                sn = np.abs(dn).sum(1)
-                gp = np.sign(dp)
-                gn = np.sign(dn)
-            else:
-                sp = np.sqrt((dp * dp).sum(1))
-                sn = np.sqrt((dn * dn).sum(1))
-                gp = dp / np.maximum(sp, 1e-12)[:, None]
-                gn = dn / np.maximum(sn, 1e-12)[:, None]
-            active = (margin + sp - sn) > 0
-            if not active.any():
-                continue
-            t_step += 1
-            if opt_e is None:
-                gp = gp[active] * lr
-                gn = gn[active] * lr
-                np.subtract.at(ent, h[active], gp)      # d loss / d h = +gp
-                np.add.at(ent, t[active], gp)           # d loss / d t = -gp
-                np.subtract.at(rel, r[active], gp - gn)
-                np.add.at(ent, nh[active], gn)
-                np.subtract.at(ent, nt[active], gn)
-            else:
-                gp_a, gn_a = gp[active], gn[active]
-                ent_rows = np.concatenate([h[active], t[active], nh[active], nt[active]])
-                ent_grads = np.concatenate([gp_a, -gp_a, -gn_a, gn_a])
-                opt_e.apply(ent, ent_rows, ent_grads, lr, t_step)
-                opt_r.apply(rel, r[active], gp_a - gn_a, lr, t_step)
-    return ent, rel
+    score_grads = (_distmult_score_grads if model == "distmult"
+                   else partial(_transe_score_grads, norm=norm))
+    return _margin_epochs(
+        triples, (ent, rel), 1, score_grads, epochs, lr, margin, seed, bern_p,
+        batch_size, epoch_offset, opt_method, normalize=True,
+    )
 
 
 def valid_mrr(ent: np.ndarray, rel: np.ndarray, valid: pd.DataFrame, norm: int = 1) -> float:
@@ -256,9 +302,7 @@ def valid_mrr(ent: np.ndarray, rel: np.ndarray, valid: pd.DataFrame, norm: int =
     h = ent[valid["h"].to_numpy(np.int64)]
     r = rel[valid["r"].to_numpy(np.int64)]
     t_idx = valid["t"].to_numpy(np.int64)
-    pred = h + r  # [B, d]
-    diff = pred[:, None, :] - ent[None, :, :]  # [B, |E|, d]
-    scores = np.abs(diff).sum(-1) if norm == 1 else np.sqrt((diff * diff).sum(-1))
+    scores = kernels.transe(h[:, None], r[:, None], ent[None], norm)  # [B, |E|]
     true_s = scores[np.arange(len(valid)), t_idx]
     ranks = 1 + (scores < true_s[:, None]).sum(1)
     return float((1.0 / ranks).mean())
@@ -325,6 +369,35 @@ def train(
     return {"ent": _normalize_rows(ent).astype("float32"), "rel": rel.astype("float32")}
 
 
+def param_average(spark, sharded, params, rounds: int, local_fit) -> tuple[np.ndarray, ...]:
+    """A13's synchronous round, ``rounds`` times: broadcast ``params``,
+    run ``local_fit(rnd, shard, pdf, params)`` per ``shard`` group in
+    ``applyInPandas``, and average the returned arrays weighted by shard
+    size. Returns the averaged tuple."""
+    params = tuple(params)
+    for rnd in range(rounds):
+        b = spark.sparkContext.broadcast(params)
+
+        # applyInPandas hands the group key only to a function of (key, pdf)
+        def fit(key, pdf):
+            out = local_fit(rnd, int(key[0]), pdf, b.value)
+            return pd.DataFrame(
+                {"kind": range(len(out)), "flat": [p.ravel().tolist() for p in out], "n": len(pdf)}
+            )
+
+        res = (
+            sharded.groupBy("shard")
+            .applyInPandas(fit, "kind int, flat array<double>, n long")
+            .toPandas()
+        )
+        tot = res.loc[res["kind"] == 0, "n"].sum()
+        acc = [np.zeros_like(p) for p in params]
+        for kind, flat, n in res.itertuples(index=False):
+            acc[kind] += n / tot * np.asarray(flat, dtype="float64").reshape(acc[kind].shape)
+        params = tuple(acc)
+    return params
+
+
 def train_distributed(
     spark,
     train_df,
@@ -343,20 +416,24 @@ def train_distributed(
 ):
     """A13 replacement: synchronous parameter-averaged data-parallel SGD.
 
-    Per round: broadcast (ent, rel) → each shard runs ``epochs_per_round``
-    local epochs in ``applyInPandas`` → driver averages shard results
-    (weighted by shard size). Deterministic: shard assignment is a hash
-    of the triple, local SGD is counter-seeded per (shard, round).
+    Per round (:func:`param_average`): broadcast (ent, rel) → each shard
+    runs ``epochs_per_round`` local epochs in ``applyInPandas`` → driver
+    averages shard results (weighted by shard size). Deterministic:
+    shard assignment is a hash of the triple, local SGD is
+    counter-seeded per (shard, round).
 
-    ``loss``: ``margin`` (TransE recipe, byte-identical path) or
+    ``loss``: ``margin`` (:func:`sgd_epochs`, the TransE recipe) or
     ``softplus`` — the bilinear DistMult recipe
-    (:func:`sgd_epochs_softplus`); parameter averaging is loss-agnostic.
+    (:func:`sgd_epochs_softplus`, plain SGD only: any other
+    ``opt_method`` raises); parameter averaging is loss-agnostic.
     Under softplus the final entity rows are NOT re-normalized: the
     logistic loss learns score magnitudes, and the L2 weight decay is
     the norm control.
     """
     if loss not in ("margin", "softplus"):
         raise ValueError(loss)
+    if loss == "softplus" and opt_method != "sgd":
+        raise ValueError(f"loss='softplus' trains with plain SGD, not opt_method={opt_method!r}")
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(seed)
@@ -365,51 +442,16 @@ def train_distributed(
     sharded = train_df.withColumn(
         "shard", F.pmod(F.hash("h", "t", "r"), F.lit(n_shards))
     )
-    out_schema = "shard int, kind string, flat array<double>, n long"
 
-    for rnd in range(rounds):
-        b = spark.sparkContext.broadcast((ent, rel))
+    def local_fit(rnd, shard, pdf, params):
+        kw = {"seed": seed * 31 + shard, "epoch_offset": rnd * epochs_per_round}
+        if loss == "softplus":
+            return sgd_epochs_softplus(pdf, *params, epochs_per_round, lr, **kw)
+        return sgd_epochs(
+            pdf, *params, epochs_per_round, lr, margin, norm=norm, opt_method=opt_method, **kw
+        )
 
-        def make_fit(rnd_):
-            def fit(key, pdf):
-                e0, r0 = b.value
-                shard = int(key[0])
-                if loss == "softplus":
-                    e1, r1 = sgd_epochs_softplus(
-                        pdf, e0, r0, epochs_per_round, lr,
-                        seed=seed * 31 + shard,
-                        epoch_offset=rnd_ * epochs_per_round,
-                    )
-                else:
-                    e1, r1 = sgd_epochs(
-                        pdf, e0, r0, epochs_per_round, lr, margin,
-                        seed=seed * 31 + shard, norm=norm,
-                        epoch_offset=rnd_ * epochs_per_round, opt_method=opt_method,
-                    )
-                return pd.DataFrame(
-                    {
-                        "shard": [shard, shard],
-                        "kind": ["ent", "rel"],
-                        "flat": [e1.ravel().tolist(), r1.ravel().tolist()],
-                        "n": [len(pdf), len(pdf)],
-                    }
-                )
-
-            return fit
-
-        fit = make_fit(rnd)
-
-        res = sharded.groupBy("shard").applyInPandas(fit, out_schema).toPandas()
-        tot = res[res["kind"] == "ent"]["n"].sum()
-        ent = np.zeros_like(ent)
-        rel = np.zeros_like(rel)
-        for _, row in res.iterrows():
-            w = row["n"] / tot
-            mat = np.asarray(row["flat"], dtype="float64")
-            if row["kind"] == "ent":
-                ent += w * mat.reshape(ent.shape)
-            else:
-                rel += w * mat.reshape(rel.shape)
+    ent, rel = param_average(spark, sharded, (ent, rel), rounds, local_fit)
     if loss == "softplus":
         return {"ent": ent.astype("float32"), "rel": rel.astype("float32")}
     return {"ent": _normalize_rows(ent).astype("float32"), "rel": rel.astype("float32")}
@@ -471,68 +513,15 @@ def sgd_epochs_complex(
     batch_size: int = 1024,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """ComplEx margin-ranking epochs (SGD): the four-matrix state
-    (entity/relation real+imaginary parts) trains under the SAME
-    margin loss and deterministic corruption as :func:`sgd_epochs`;
-    gradients are the expansion of ``∂/∂h Re(<h, r, conj(t)>)`` etc.
-    into real arithmetic (score negated per ``kernels.complex_score``,
-    so lower is better throughout). Kept a separate function: the
-    (ent, rel) pair signature of ``sgd_epochs`` is contract-frozen,
-    and ComplEx's state is simply a different shape."""
-    ent_re, ent_im = ent_re.copy(), ent_im.copy()
-    rel_re, rel_im = rel_re.copy(), rel_im.copy()
-    h_all = triples["h"].to_numpy(np.int64)
-    t_all = triples["t"].to_numpy(np.int64)
-    r_all = triples["r"].to_numpy(np.int64)
-    n = len(h_all)
-    n_ent = ent_re.shape[0]
-    n_rel_pack = int(r_all.max()) + 1 if n else 1
-    known_keys = None
-    if n and float(n_ent) * n_ent * n_rel_pack < 2**63:
-        known_keys = np.sort(_pack_keys(h_all, t_all, r_all, n_ent, n_rel_pack))
-
-    def score(hre, him, rre, rim, tre, tim):
-        return -(
-            (hre * rre - him * rim) * tre + (hre * rim + him * rre) * tim
-        ).sum(1)
-
-    for ep in range(epochs):
-        order = np.random.default_rng(seed * 7919 + ep).permutation(n)
-        for lo in range(0, n, batch_size):
-            idx = order[lo:lo + batch_size]
-            h, t, r = h_all[idx], t_all[idx], r_all[idx]
-            nh, nt = _corrupt(h, t, r, n_ent, seed, ep, None, known_keys, n_rel_pack)
-            HRE, HIM = ent_re[h], ent_im[h]
-            TRE, TIM = ent_re[t], ent_im[t]
-            RRE, RIM = rel_re[r], rel_im[r]
-            NHRE, NHIM = ent_re[nh], ent_im[nh]
-            NTRE, NTIM = ent_re[nt], ent_im[nt]
-            sp = score(HRE, HIM, RRE, RIM, TRE, TIM)
-            sn = score(NHRE, NHIM, RRE, RIM, NTRE, NTIM)
-            a = (margin + sp - sn) > 0
-            if not a.any():
-                continue
-
-            def grads(hre, him, rre, rim, tre, tim):
-                # ∂s/∂(·) for s = -Σ Re(h r conj(t)), masked to active
-                return (
-                    -(rre * tre + rim * tim)[a],        # d/d h_re
-                    -(rre * tim - rim * tre)[a],        # d/d h_im
-                    -(hre * rre - him * rim)[a],        # d/d t_re
-                    -(hre * rim + him * rre)[a],        # d/d t_im
-                    -(hre * tre + him * tim)[a],        # d/d r_re
-                    -(hre * tim - him * tre)[a],        # d/d r_im
-                )
-
-            ghr, ghi, gtr, gti, grr, gri = grads(HRE, HIM, RRE, RIM, TRE, TIM)
-            nhr, nhi, ntr, nti, nrr, nri = grads(NHRE, NHIM, RRE, RIM, NTRE, NTIM)
-            # loss = margin + sp - sn: positive grads subtract, negative add
-            _sparse_sgd(ent_re, np.concatenate([h[a], t[a], nh[a], nt[a]]),
-                        np.concatenate([ghr, gtr, -nhr, -ntr]), lr)
-            _sparse_sgd(ent_im, np.concatenate([h[a], t[a], nh[a], nt[a]]),
-                        np.concatenate([ghi, gti, -nhi, -nti]), lr)
-            _sparse_sgd(rel_re, r[a], grr - nrr, lr)
-            _sparse_sgd(rel_im, r[a], gri - nri, lr)
-    return ent_re, ent_im, rel_re, rel_im
+    (entity/relation real+imaginary parts) trains in the same
+    :func:`_margin_epochs` loop as :func:`sgd_epochs`; gradients are
+    the expansion of ``∂/∂h Re(<h, r, conj(t)>)`` etc. into real
+    arithmetic (score negated per ``kernels.complex_score``, so lower
+    is better throughout)."""
+    return _margin_epochs(
+        triples, (ent_re, ent_im, rel_re, rel_im), 2, _complex_score_grads,
+        epochs, lr, margin, seed, batch_size=batch_size,
+    )
 
 
 def sgd_epochs_rotate(
@@ -546,66 +535,17 @@ def sgd_epochs_rotate(
     seed: int,
     batch_size: int = 1024,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """RotatE margin-ranking epochs (SGD): complex entity embeddings
-    plus per-relation rotation ANGLES ``theta`` (the trainable
-    parametrization — ``kernels.rotate`` consumes the derived
-    ``(cos θ, sin θ)`` pair, which stays unit-modulus by construction
-    no matter what SGD does to θ; training cos/sin directly would
-    drift off the unit circle). Score = Σ_k |h_k·e^{iθ_k} − t_k|;
-    gradients are the complex-modulus chain rule with the usual
-    ``max(|z|, ε)`` guard at the non-differentiable origin."""
-    ent_re, ent_im = ent_re.copy(), ent_im.copy()
-    theta = theta.copy()
-    h_all = triples["h"].to_numpy(np.int64)
-    t_all = triples["t"].to_numpy(np.int64)
-    r_all = triples["r"].to_numpy(np.int64)
-    n = len(h_all)
-    n_ent = ent_re.shape[0]
-    n_rel_pack = int(r_all.max()) + 1 if n else 1
-    known_keys = None
-    if n and float(n_ent) * n_ent * n_rel_pack < 2**63:
-        known_keys = np.sort(_pack_keys(h_all, t_all, r_all, n_ent, n_rel_pack))
-    eps = 1e-12
-
-    def parts(hre, him, c, s, tre, tim):
-        z_re = hre * c - him * s - tre
-        z_im = hre * s + him * c - tim
-        m = np.sqrt(z_re * z_re + z_im * z_im)
-        return z_re, z_im, np.maximum(m, eps)
-
-    for ep in range(epochs):
-        order = np.random.default_rng(seed * 7919 + ep).permutation(n)
-        for lo in range(0, n, batch_size):
-            idx = order[lo:lo + batch_size]
-            h, t, r = h_all[idx], t_all[idx], r_all[idx]
-            nh, nt = _corrupt(h, t, r, n_ent, seed, ep, None, known_keys, n_rel_pack)
-            C, S = np.cos(theta[r]), np.sin(theta[r])
-            pz_re, pz_im, pm = parts(ent_re[h], ent_im[h], C, S, ent_re[t], ent_im[t])
-            nz_re, nz_im, nm = parts(
-                ent_re[nh], ent_im[nh], C, S, ent_re[nt], ent_im[nt]
-            )
-            sp, sn = pm.sum(1), nm.sum(1)
-            a = (margin + sp - sn) > 0
-            if not a.any():
-                continue
-
-            def grads(z_re, z_im, m, hre, him):
-                # chain rule for d Σ|z| / d(h_re, h_im, t_re, t_im, θ)
-                ur, ui = z_re / m, z_im / m
-                g_hre = ur * C + ui * S
-                g_him = -ur * S + ui * C
-                g_tre = -ur
-                g_tim = -ui
-                g_th = ur * (-hre * S - him * C) + ui * (hre * C - him * S)
-                return g_hre[a], g_him[a], g_tre[a], g_tim[a], g_th[a]
-
-            phr, phi, ptr, pti, pth = grads(pz_re, pz_im, pm, ent_re[h], ent_im[h])
-            nhr, nhi, ntr, nti, nth = grads(nz_re, nz_im, nm, ent_re[nh], ent_im[nh])
-            rows = np.concatenate([h[a], t[a], nh[a], nt[a]])
-            _sparse_sgd(ent_re, rows, np.concatenate([phr, ptr, -nhr, -ntr]), lr)
-            _sparse_sgd(ent_im, rows, np.concatenate([phi, pti, -nhi, -nti]), lr)
-            _sparse_sgd(theta, r[a], pth - nth, lr)
-    return ent_re, ent_im, theta
+    """RotatE margin-ranking epochs (SGD, :func:`_margin_epochs`):
+    complex entity embeddings plus per-relation rotation ANGLES
+    ``theta`` (the trainable parametrization — ``kernels.rotate``
+    consumes the derived ``(cos θ, sin θ)`` pair, which stays
+    unit-modulus by construction no matter what SGD does to θ; training
+    cos/sin directly would drift off the unit circle). Score =
+    Σ_k |h_k·e^{iθ_k} − t_k|; gradients from :func:`_rotate_score_grads`."""
+    return _margin_epochs(
+        triples, (ent_re, ent_im, theta), 2, _rotate_score_grads,
+        epochs, lr, margin, seed, batch_size=batch_size,
+    )
 
 
 def _sigmoid(x: np.ndarray) -> np.ndarray:
@@ -654,44 +594,35 @@ def sgd_epochs_softplus(
     logistic loss ``softplus(-y·f)`` with per-occurrence L2 weight decay
     is what keeps DistMult/ComplEx from margin-chasing blowup.
 
-    Same deterministic counter-based corruption and in-place-free
-    sparse-SGD contract as :func:`sgd_epochs`; gradients are
-    ``-σ(-f_pos)`` / ``σ(f_neg)`` times the bilinear partials plus
+    Same :func:`_batches` schedule and in-place-free sparse-SGD step
+    (:class:`_OptState`) as :func:`sgd_epochs`; gradients are
+    ``-σ(-f_pos)`` / ``σ(f_neg)`` times the bilinear partials
+    (:func:`_distmult_score_grads`) plus
     ``2·reg·param`` on every touched row. Returns updated ``(ent, rel)``.
     """
-    ent, rel = ent.copy(), rel.copy()
-    h_all = triples["h"].to_numpy(np.int64)
-    t_all = triples["t"].to_numpy(np.int64)
-    r_all = triples["r"].to_numpy(np.int64)
-    n = len(h_all)
-    n_ent = ent.shape[0]
-    n_rel_pack = int(r_all.max()) + 1 if n else 1
-    known_keys = None
-    if n and float(n_ent) * n_ent * n_rel_pack < 2**63:
-        known_keys = np.sort(_pack_keys(h_all, t_all, r_all, n_ent, n_rel_pack))
-    for ep in range(epoch_offset, epoch_offset + epochs):
-        order = np.random.default_rng(seed * 7919 + ep).permutation(n)
-        for lo in range(0, n, batch_size):
-            idx = order[lo:lo + batch_size]
-            h, t, r = h_all[idx], t_all[idx], r_all[idx]
-            nh, nt = _corrupt(h, t, r, n_ent, seed, ep, None, known_keys, n_rel_pack)
-            H, R, T = ent[h], rel[r], ent[t]
-            NH, NT = ent[nh], ent[nt]
-            gpos = -_sigmoid(-(H * R * T).sum(1))[:, None]  # dL/df, y=+1
-            gneg = _sigmoid((NH * R * NT).sum(1))[:, None]  # dL/df, y=-1
-            gh = gpos * (R * T) + 2 * reg * H
-            gt = gpos * (H * R) + 2 * reg * T
-            gnh = gneg * (R * NT) + 2 * reg * NH
-            gnt = gneg * (NH * R) + 2 * reg * NT
-            gr = gpos * (H * T) + gneg * (NH * NT) + 2 * reg * R
-            _sparse_sgd(
-                ent,
-                np.concatenate([h, t, nh, nt]),
-                np.concatenate([gh, gt, gnh, gnt]),
-                lr,
-            )
-            _sparse_sgd(rel, r, gr, lr)
-    return ent, rel
+    P = (ent.copy(), rel.copy())
+    sgd = _OptState(ent.shape, "sgd")
+    for batches in _batches(triples, ent.shape[0], seed, epochs, epoch_offset, batch_size):
+        for h, t, r, [(nh, nt)] in batches:
+            # DistMult partials of s = −f; dL/ds is σ(s) for y=+1, −σ(−s) for y=−1
+            sp, dh, dt, dr = _distmult_score_grads(P, h, t, r)
+            sn, dnh, dnt, dnr = _distmult_score_grads(P, nh, nt, r)
+            cp, cn = _sigmoid(sp)[:, None], -_sigmoid(-sn)[:, None]
+            rows = np.concatenate([h, t, nh, nt])
+            g_ent = np.concatenate([cp * dh[0], cp * dt[0], cn * dnh[0], cn * dnt[0]])
+            g_rel = cp * dr[0] + cn * dnr[0] + 2 * reg * P[1][r]
+            sgd.apply(P[0], rows, g_ent + 2 * reg * P[0][rows], lr)
+            sgd.apply(P[1], r, g_rel, lr)
+    return P
+
+
+def _selfadv_weights(d_neg: np.ndarray, gamma: float, alpha: float) -> np.ndarray:
+    """Self-adversarial weights ``p = softmax_k(α · (γ − d_neg))`` over ``[n, K]``."""
+    logits = alpha * (gamma - d_neg)
+    logits -= logits.max(axis=1, keepdims=True)
+    p = np.exp(logits)
+    return p / p.sum(axis=1, keepdims=True)
+
 
 def selfadv_loss_rotate(
     ent_re: np.ndarray,
@@ -713,16 +644,14 @@ def selfadv_loss_rotate(
     corruption mostly draws trivially-false triples whose gradient
     vanishes once training starts."""
     C, S = np.cos(theta[r]), np.sin(theta[r])
+
     def dist(hh, tt, c, s):
-        z_re = ent_re[hh] * c - ent_im[hh] * s - ent_re[tt]
-        z_im = ent_re[hh] * s + ent_im[hh] * c - ent_im[tt]
+        z_re, z_im = _rotate_residual(ent_re[hh], ent_im[hh], c, s, ent_re[tt], ent_im[tt])
         return np.sqrt(z_re * z_re + z_im * z_im).sum(-1)
+
     d_pos = dist(h, t, C, S)
     d_neg = dist(nh, nt, C[:, None], S[:, None])  # [n, K]
-    logits = alpha * (gamma - d_neg)
-    logits -= logits.max(axis=1, keepdims=True)
-    p = np.exp(logits)
-    p /= p.sum(axis=1, keepdims=True)
+    p = _selfadv_weights(d_neg, gamma, alpha)
     # -log σ(x) = softplus(-x) = logaddexp(0, -x)
     pos_term = np.logaddexp(0.0, -(gamma - d_pos))
     neg_term = (p * np.logaddexp(0.0, -(d_neg - gamma))).sum(axis=1)
@@ -748,86 +677,32 @@ def sgd_epochs_selfadv(
     refinement the margin trainer (:func:`sgd_epochs_rotate`) lacks,
     and the recipe the RotatE paper actually ships.
 
-    Determinism contract shared with every other trainer here: the
-    k-th corruption of epoch ``ep`` comes from the counter-based
-    ``_corrupt`` at epoch key ``ep * n_neg + k`` (no RNG state, replay
-    = identity), batches iterate a seeded permutation, updates are
-    accumulated sparse-SGD (`np.add.at` — duplicate rows in a batch
-    sum, never race). Gradient coefficients: ``σ(d_pos − γ)`` on the
-    positive distance, ``−p_k · σ(γ − d_neg_k)`` on each negative
-    (p treated as a constant, per the paper). The rotation stays
-    parametrized by θ so unit modulus holds by construction.
+    Batches and the K corruptions per batch come from :func:`_batches`
+    with ``n_neg = K`` (the k-th at counter key ``ep * K + k``); the
+    distances and their chain rule from :func:`_rotate_score_grads`;
+    updates are one sparse-SGD step (:class:`_OptState`) per matrix.
+    Gradient coefficients: ``σ(d_pos − γ)`` on the positive distance,
+    ``−p_k · σ(γ − d_neg_k)`` on each negative (p treated as a
+    constant, per the paper). The rotation stays parametrized by θ so
+    unit modulus holds by construction.
     """
-    ent_re, ent_im = ent_re.copy(), ent_im.copy()
-    theta = theta.copy()
-    h_all = triples["h"].to_numpy(np.int64)
-    t_all = triples["t"].to_numpy(np.int64)
-    r_all = triples["r"].to_numpy(np.int64)
-    n = len(h_all)
-    n_ent = ent_re.shape[0]
-    n_rel_pack = int(r_all.max()) + 1 if n else 1
-    known_keys = None
-    if n and float(n_ent) * n_ent * n_rel_pack < 2**63:
-        known_keys = np.sort(_pack_keys(h_all, t_all, r_all, n_ent, n_rel_pack))
-    eps = 1e-12
-
-    def parts(hre, him, c, s, tre, tim):
-        z_re = hre * c - him * s - tre
-        z_im = hre * s + him * c - tim
-        m = np.sqrt(z_re * z_re + z_im * z_im)
-        return z_re, z_im, np.maximum(m, eps)
-
-    for ep in range(epochs):
-        order = np.random.default_rng(seed * 7919 + ep).permutation(n)
-        for lo in range(0, n, batch_size):
-            idx = order[lo:lo + batch_size]
-            h, t, r = h_all[idx], t_all[idx], r_all[idx]
-            C, S = np.cos(theta[r]), np.sin(theta[r])
-            H_re, H_im = ent_re[h], ent_im[h]
-            # K corruption draws, distinct counter key per k
-            negs = [
-                _corrupt(h, t, r, n_ent, seed, ep * n_neg + k, None,
-                         known_keys, n_rel_pack)
-                for k in range(n_neg)
-            ]
-            pz_re, pz_im, pm = parts(H_re, H_im, C, S, ent_re[t], ent_im[t])
-            d_pos = pm.sum(1)
-            nparts = []
-            d_neg = np.empty((len(h), n_neg))
-            for k, (nh, nt) in enumerate(negs):
-                zr, zi, m = parts(ent_re[nh], ent_im[nh], C, S,
-                                  ent_re[nt], ent_im[nt])
-                nparts.append((nh, nt, zr, zi, m))
-                d_neg[:, k] = m.sum(1)
-            logits = alpha * (gamma - d_neg)
-            logits -= logits.max(axis=1, keepdims=True)
-            p = np.exp(logits)
-            p /= p.sum(axis=1, keepdims=True)
-            gp = _sigmoid(d_pos - gamma)          # dL/dd_pos
-            gn = p * _sigmoid(gamma - d_neg)      # -dL/dd_neg_k, [B, K]
-
-            def grads(z_re, z_im, m, hre, him):
-                ur, ui = z_re / m, z_im / m
-                g_hre = ur * C + ui * S
-                g_him = -ur * S + ui * C
-                g_th = ur * (-hre * S - him * C) + ui * (hre * C - him * S)
-                return g_hre, g_him, -ur, -ui, g_th
-
-            phr, phi, ptr, pti, pth = grads(pz_re, pz_im, pm, H_re, H_im)
-            w = gp[:, None]
-            rows = [h, t]
-            g_re = [w * phr, w * ptr]
-            g_im = [w * phi, w * pti]
-            g_th_acc = (w * pth).copy()
-            for k, (nh, nt, zr, zi, m) in enumerate(nparts):
-                nhr, nhi, ntr, nti, nth = grads(zr, zi, m, ent_re[nh], ent_im[nh])
-                wk = gn[:, k][:, None]
-                rows += [nh, nt]
-                g_re += [-wk * nhr, -wk * ntr]
-                g_im += [-wk * nhi, -wk * nti]
-                g_th_acc -= wk * nth
-            rows_cat = np.concatenate(rows)
-            _sparse_sgd(ent_re, rows_cat, np.concatenate(g_re), lr)
-            _sparse_sgd(ent_im, rows_cat, np.concatenate(g_im), lr)
-            _sparse_sgd(theta, r, g_th_acc, lr)
-    return ent_re, ent_im, theta
+    P = (ent_re.copy(), ent_im.copy(), theta.copy())
+    sgd = _OptState(ent_re.shape, "sgd")
+    for batches in _batches(triples, ent_re.shape[0], seed, epochs, 0, batch_size, n_neg=n_neg):
+        for h, t, r, negs in batches:
+            pos = _rotate_score_grads(P, h, t, r)
+            neg = [_rotate_score_grads(P, nh, nt, r) for nh, nt in negs]
+            d_neg = np.stack([g[0] for g in neg], axis=1)
+            gn = _selfadv_weights(d_neg, gamma, alpha) * _sigmoid(gamma - d_neg)
+            # dL/dd per term: σ(d_pos − γ) for the positive, −gn[:, k] for negative k
+            coefs = [_sigmoid(pos[0] - gamma)[:, None]] + [-gn[:, [k]] for k in range(n_neg)]
+            terms = list(zip(coefs, [pos, *neg]))
+            rows = np.concatenate([h, t, *(x for pair in negs for x in pair)])
+            for i in (0, 1):
+                g = [c * d[i] for c, (_, dh, dt, _) in terms for d in (dh, dt)]
+                sgd.apply(P[i], rows, np.concatenate(g), lr)
+            g_th = coefs[0] * pos[3][0]
+            for c, (*_, dth) in terms[1:]:
+                g_th += c * dth[0]
+            sgd.apply(P[2], r, g_th, lr)
+    return P

@@ -1,6 +1,8 @@
 """A11/A12/A13/A21: training reduces loss / improves eval vs random init."""
 
+import hashlib
 import os
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -123,11 +125,11 @@ def test_early_stop_returns_best_snapshot():
 
 
 def test_distmult_training_learns_the_split():
-    """DistMult branch of sgd_epochs: margin loss falls and filtered
+    """sgd_epochs(model="distmult"): margin loss falls and filtered
     Hits@10 on the train triples beats the random baseline by a wide
     margin — evaluated with the SAME kernels.score_batch the eval paths
-    use. The transe branch is untouched by construction (separate code
-    path), which the unchanged a12/a13 trajectories pin elsewhere."""
+    use. DistMult and TransE share the margin loop (_margin_epochs);
+    test_trainers_match_recorded_digests pins both models' values."""
     import numpy as np
 
     from kgforge import kernels
@@ -426,3 +428,182 @@ def test_selfadv_rotate_trainer():
             em_ = er0.copy(); em_[i, k] -= eps
             num = (frozen_loss(ep_) - frozen_loss(em_)) / (2 * eps)
             assert abs(num - analytic[i, k]) < 1e-7, (i, k, num, analytic[i, k])
+
+
+def test_softplus_distributed_rejects_optimizer(spark):
+    """sgd_epochs_softplus trains with plain SGD only, so asking
+    train_distributed for softplus under another optimizer must fail
+    loudly instead of silently dropping opt_method."""
+    df = spark.createDataFrame(SPLIT["train2id"])
+    with pytest.raises(ValueError, match="opt_method"):
+        training.train_distributed(
+            spark, df, N_ENT, N_REL, rounds=1, loss="softplus", opt_method="adam"
+        )
+
+
+# --- recorded digests -------------------------------------------------------
+# sha256 (first 16 hex) of every trainer's float64 outputs on a fixed
+# fixture, recorded before the trainers shared one core (_batches,
+# _OptState, _margin_epochs, param_average). Each must stay bitwise
+# equal. The one recorded exception is TransE at norm=2 under plain SGD:
+# its relation step computes lr·(gp − gn) where it used to compute
+# lr·gp − lr·gn (the form every other trainer and TransE's optimizer
+# path already used); at norm=1 both forms are exact because gp and gn
+# lie in {−1, 0, 1}. Those two cells hold the new values. The digests
+# pin the floating-point results of this NumPy build; a NumPy whose
+# exp/sin/cos kernels round differently would need them re-recorded.
+
+TRAINER_DIGESTS = {
+    "sgd_epochs-transe_l1-sgd-unif": "27880fc5b8185a08",
+    "sgd_epochs-transe_l1-sgd-bern": "9ff3d9b84ffc0be1",
+    "sgd_epochs-transe_l1-adagrad-unif": "cddc614e8d22cf2d",
+    "sgd_epochs-transe_l1-adagrad-bern": "a0b7bbbdefd513f6",
+    "sgd_epochs-transe_l1-adam-unif": "d267a57c502f8366",
+    "sgd_epochs-transe_l1-adam-bern": "b7cd536d44c275aa",
+    "sgd_epochs-transe_l1-adadelta-unif": "85b2d718651897b5",
+    "sgd_epochs-transe_l1-adadelta-bern": "c9d253b8db385938",
+    "sgd_epochs-transe_l2-sgd-unif": "3cf216c307ce8e91",
+    "sgd_epochs-transe_l2-sgd-bern": "f58cec55f65264ba",
+    "sgd_epochs-transe_l2-adagrad-unif": "9292309f71cc51b1",
+    "sgd_epochs-transe_l2-adagrad-bern": "148ffe94b4b4217a",
+    "sgd_epochs-transe_l2-adam-unif": "ef5de23ba90ce248",
+    "sgd_epochs-transe_l2-adam-bern": "277f115c59fb2fa0",
+    "sgd_epochs-transe_l2-adadelta-unif": "3a30d3269a41d2b8",
+    "sgd_epochs-transe_l2-adadelta-bern": "565eafc15dd0072c",
+    "sgd_epochs-distmult-sgd-unif": "97edf3e91ece2b31",
+    "sgd_epochs-distmult-sgd-bern": "e9ec05b37d6857b6",
+    "sgd_epochs-distmult-adagrad-unif": "f11413db8e3cd5ab",
+    "sgd_epochs-distmult-adagrad-bern": "c382ba359afbd4e1",
+    "sgd_epochs-distmult-adam-unif": "c09535f7b2ecd61a",
+    "sgd_epochs-distmult-adam-bern": "12e0f5cdb087b12c",
+    "sgd_epochs-distmult-adadelta-unif": "45140fd8b1b78c2f",
+    "sgd_epochs-distmult-adadelta-bern": "22c8c410f0c7e5f9",
+    "complex": "69680edee6cc3512",
+    "rotate": "377db57b0fed293f",
+    "softplus": "a243dd0f0426d5c9",
+    "selfadv": "b2741aa190d3aac9",
+    "softplus_loss": "9c1886df12382c4a",
+    "selfadv_loss": "ce0c69437f4ce571",
+    "train_early_stop": "22c17b015c0e0c5f",
+    "train_bern": "f6f20058dea99327",
+    "train_distributed-margin": "2e10882b897d7a15",
+    "train_distributed-adagrad": "3856f1a25e2fd255",
+    "train_distributed-softplus": "6b32bbd7103b604d",
+    "train_deepwalk": "554cca4b2e02f34f",
+}
+
+_TRAIN = SPLIT["train2id"]
+
+
+def _digest(*arrays) -> str:
+    h = hashlib.sha256()
+    for a in arrays:
+        h.update(np.ascontiguousarray(a, dtype=np.float64).tobytes())
+    return h.hexdigest()[:16]
+
+
+def _init(n_ent_mats, n_rel_mats, dim=8):
+    """Xavier entity matrices, then relation matrices, from one seed."""
+    rng = np.random.default_rng(5)
+    return [training._xavier(rng, n, dim) for n in [N_ENT] * n_ent_mats + [N_REL] * n_rel_mats]
+
+
+def _rotate_init():
+    return *_init(2, 0), np.random.default_rng(6).uniform(-np.pi, np.pi, size=(N_REL, 8))
+
+
+def _fixed_negatives(k):
+    h, t, r = (_TRAIN[c].to_numpy(np.int64) for c in ("h", "t", "r"))
+    nh = np.stack([(h + i + 1) % N_ENT for i in range(k)], axis=1)
+    return h, t, r, nh, np.repeat(t[:, None], k, axis=1)
+
+
+def _sgd_epochs_case(model, norm, opt, bern):
+    ent, rel = _init(1, 1)
+    return training.sgd_epochs(
+        _TRAIN, ent, rel, epochs=4, lr=0.05, margin=1.0, seed=3, norm=norm,
+        bern_p=np.array([0.2, 0.5, 0.7, 0.9]) if bern else None,
+        batch_size=64, epoch_offset=3, opt_method=opt, model=model,
+    )
+
+
+def _softplus_loss_case():
+    ent, rel = _init(1, 1)
+    h, t, r, nh, nt = _fixed_negatives(1)
+    return (training.softplus_loss_distmult(ent, rel, h, t, r, nh[:, 0], nt[:, 0]),)
+
+
+def _train_case(**kw):
+    emb = training.train(_TRAIN, N_ENT, N_REL, dim=8, **kw)
+    return emb["ent"], emb["rel"]
+
+
+TRAINER_CASES = {
+    **{
+        f"sgd_epochs-{name}-{opt}-{'bern' if bern else 'unif'}": partial(
+            _sgd_epochs_case, model, norm, opt, bern
+        )
+        for name, model, norm in (
+            ("transe_l1", "transe", 1), ("transe_l2", "transe", 2), ("distmult", "distmult", 1)
+        )
+        for opt in ("sgd", "adagrad", "adam", "adadelta")
+        for bern in (False, True)
+    },
+    "complex": lambda: training.sgd_epochs_complex(
+        _TRAIN, *_init(2, 2), epochs=4, lr=0.02, margin=1.0, seed=3,
+        batch_size=64,
+    ),
+    "rotate": lambda: training.sgd_epochs_rotate(
+        _TRAIN, *_rotate_init(), epochs=4, lr=0.05, margin=2.0, seed=3, batch_size=64
+    ),
+    "softplus": lambda: training.sgd_epochs_softplus(
+        _TRAIN, *_init(1, 1), epochs=4, lr=0.05, seed=3,
+        batch_size=64, epoch_offset=3,
+    ),
+    "selfadv": lambda: training.sgd_epochs_selfadv(
+        _TRAIN, *_rotate_init(), epochs=4, lr=0.05, seed=3, n_neg=3, batch_size=64
+    ),
+    "softplus_loss": _softplus_loss_case,
+    "selfadv_loss": lambda: (
+        training.selfadv_loss_rotate(*_rotate_init(), *_fixed_negatives(3)),
+    ),
+    "train_early_stop": partial(
+        _train_case, epochs=8, lr=0.1, valid_triples=SPLIT["valid2id"],
+        eval_every=2, patience=2,
+    ),
+    "train_bern": partial(_train_case, epochs=5, bern=True),
+}
+
+
+def _distributed_digests(spark) -> dict[str, str]:
+    """train_distributed in its three modes and train_deepwalk, each fed
+    from one input partition so shard row order is fixed."""
+    from kgforge import graphembed, graphstats
+
+    df = spark.createDataFrame(_TRAIN).coalesce(1)
+    out = {}
+    for mode, kw in (
+        ("margin", {}),
+        ("adagrad", {"opt_method": "adagrad", "lr": 0.3}),
+        ("softplus", {"loss": "softplus"}),
+    ):
+        emb = training.train_distributed(
+            spark, df, N_ENT, N_REL, dim=8, rounds=2, epochs_per_round=2, n_shards=3, **kw
+        )
+        out[f"train_distributed-{mode}"] = _digest(emb["ent"], emb["rel"])
+    walks = graphstats.random_walks(df, num_walks=2, walk_length=4)
+    pairs = graphstats.walk_skipgram_pairs(walks, window=2).coalesce(1)
+    emb = graphembed.train_deepwalk(
+        spark, pairs, n_nodes=N_ENT, dim=8, rounds=2, epochs_per_round=2, n_shards=3, seed=9
+    )
+    out["train_deepwalk"] = _digest(emb["in"], emb["out"])
+    return out
+
+
+@pytest.mark.parametrize("case", [*TRAINER_CASES, "spark_rounds"])
+def test_trainers_match_recorded_digests(case, request):
+    if case == "spark_rounds":
+        got = _distributed_digests(request.getfixturevalue("spark"))
+        assert got == {k: TRAINER_DIGESTS[k] for k in got}
+    else:
+        assert _digest(*TRAINER_CASES[case]()) == TRAINER_DIGESTS[case]
