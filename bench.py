@@ -76,7 +76,6 @@ def main() -> int:
             gazetteer_path=os.path.join(fdir, "gazetteer.parquet"),
             patterns_path=os.path.join(fdir, "patterns.parquet"),
             out_partitions=int(cpus),
-            dense_ids_impl="two_phase",  # the scale path, live in the headline run
         )
         t0 = time.time()
         pipe.run(["reassemble", "extract", "canonicalize", "dicts", "link", "materialize"])

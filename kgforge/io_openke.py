@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import read_parquet
+
 
 # -- driver-side (small dictionaries / fixtures) ----------------------------
 
@@ -178,8 +180,8 @@ def read_embedding_df(spark: SparkSession, in_dir: str, component: str) -> DataF
     DataFrame — feed this straight to ``link_prediction_ranks_blocked``:
     entity components (``ent*``) stay in Spark and never pass through
     the driver; relation components are |R|-sized and get collected."""
-    return spark.read.parquet(
-        os.path.join(in_dir, "components", f"component={component}")
+    return read_parquet(
+        spark, os.path.join(in_dir, "components", f"component={component}")
     ).select("id", "vec")
 
 
@@ -191,7 +193,7 @@ def read_embeddings_parquet(spark: SparkSession, in_dir: str) -> dict[str, np.nd
 
     with open(os.path.join(in_dir, "meta.json")) as f:
         dims = json.load(f)["dims"]
-    pdf = spark.read.parquet(os.path.join(in_dir, "components")).toPandas()
+    pdf = read_parquet(spark, os.path.join(in_dir, "components")).toPandas()
     out: dict[str, np.ndarray] = {}
     for key, shape in dims.items():
         part = pdf[pdf["component"] == key].sort_values("id")

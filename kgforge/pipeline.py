@@ -20,11 +20,13 @@ import os
 import time
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fixtures, io_openke
 from .manifest import Manifest, fingerprint_config, fingerprint_paths
+from .session import read_parquet
 from .stages import extract, link, materialize, reassemble
 
 
@@ -45,6 +47,11 @@ def _write_counted(df: DataFrame, path: str, partitions: int | None = None) -> i
 
 
 class Pipeline:
+    """The stage DAG over one work directory. ``dense_ids_impl`` ("sort"
+    or "two_phase") is accepted for existing callers and ignored: both
+    values run :func:`materialize.dense_ids`, the one dense-id
+    implementation, so it is not part of the config fingerprint."""
+
     STAGES = ["reassemble", "extract", "canonicalize", "dicts", "link", "materialize", "evaluate"]
 
     def __init__(
@@ -79,7 +86,6 @@ class Pipeline:
         self.export_ntriples = export_ntriples
         if dense_ids_impl not in ("sort", "two_phase"):
             raise ValueError(dense_ids_impl)
-        self.dense_ids_impl = dense_ids_impl
         os.makedirs(work_dir, exist_ok=True)
         self.manifest = Manifest(work_dir)
         self.cfg_fp = fingerprint_config(
@@ -115,12 +121,12 @@ class Pipeline:
         self.manifest.commit(stage, fp, rows, wall, extra=extra or None)
 
     def _gaz(self):
-        return self.spark.read.parquet(self.gazetteer_path)
+        return read_parquet(self.spark, self.gazetteer_path)
 
     # -- stages -------------------------------------------------------------
 
     def stage_reassemble(self) -> dict:
-        df = self.spark.read.parquet(self.input_path)
+        df = read_parquet(self.spark, self.input_path)
         ordered = reassemble.ordered_turns(df)
         # write straight out of the window's shuffle partitioning — an
         # extra repartition() here would be a second full shuffle
@@ -133,9 +139,9 @@ class Pipeline:
         # 54s at local[8]/bench): the extra materialize+reread of ~7M
         # union rows costs more than the saved text scan — regex+Arrow
         # is cheaper than write bandwidth here. See docs/DESIGN_SCALE.md.
-        turns = self.spark.read.parquet(self._out("reassemble"))
+        turns = read_parquet(self.spark, self._out("reassemble"))
         gaz_pdf = self._gaz().toPandas()
-        pat_pdf = self.spark.read.parquet(self.patterns_path).toPandas()
+        pat_pdf = read_parquet(self.spark, self.patterns_path).toPandas()
         tri = extract.extract_triples(turns, gaz_pdf, pat_pdf)
         tri = extract.surface_triples_dedup(tri)
         n = _write_counted(tri, os.path.join(self._out("extract"), "triples"))
@@ -159,7 +165,7 @@ class Pipeline:
         """
         from .stages import canonicalize as canon
 
-        tri = self.spark.read.parquet(os.path.join(self._out("extract"), "triples"))
+        tri = read_parquet(self.spark, os.path.join(self._out("extract"), "triples"))
         gaz = self._gaz()
         gazmap = gaz.select("surface", "canonical").dropDuplicates(["surface"])
         # pinned: referenced by the LSH chain AND the alias_map build —
@@ -218,23 +224,17 @@ class Pipeline:
         return {"row_count": n}
 
     def _alias_map(self):
-        return self.spark.read.parquet(os.path.join(self._out("canonicalize"), "alias_map"))
+        return read_parquet(self.spark, os.path.join(self._out("canonicalize"), "alias_map"))
 
     def stage_dicts(self) -> dict:
-        # dense_ids_impl="two_phase" is the 100x path (range-bucket +
-        # prefix-sum offsets, no single-partition global sort) — output
-        # is identical (tests assert equality), so it is NOT part of the
-        # config fingerprint: switching it never invalidates a resume.
-        pats = self.spark.read.parquet(self.patterns_path)
-        did = (
-            materialize.two_phase_dense_ids
-            if self.dense_ids_impl == "two_phase"
-            else materialize.dense_ids
-        )
-        e2id = did(self._alias_map().select(F.col("canonical").alias("name")))
-        r2id = did(pats.select(F.col("pred").alias("name")))
-        _write(e2id, os.path.join(self._out("dicts"), "entity2id"), 1)
-        _write(r2id, os.path.join(self._out("dicts"), "relation2id"), 1)
+        # one dense-id path (materialize.dense_ids): a single-partition
+        # sort, sized for dictionary cardinality. The dictionary sizes
+        # ride the writes, so sizing the embeddings needs no re-read.
+        pats = read_parquet(self.spark, self.patterns_path)
+        e2id = materialize.dense_ids(self._alias_map().select(F.col("canonical").alias("name")))
+        r2id = materialize.dense_ids(pats.select(F.col("pred").alias("name")))
+        n_ent = _write_counted(e2id, os.path.join(self._out("dicts"), "entity2id"), 1)
+        n_rel = _write_counted(r2id, os.path.join(self._out("dicts"), "relation2id"), 1)
         # A20: the model parameters the link/eval stages score with live
         # in a Parquet (id, vec) checkpoint. A trained checkpoint
         # (training.train* → io_openke.write_embeddings_parquet) plugs in
@@ -242,18 +242,17 @@ class Pipeline:
         # to the dictionaries are generated once and checkpointed here —
         # either way downstream stages READ the same format.
         if self.embeddings_path is None:
-            e2, r2 = self._dicts()
             emb = fixtures.gen_embeddings(
-                n_ent=e2.count(), n_rel=r2.count(), dim=16, seed=self.embeddings_seed
+                n_ent=n_ent, n_rel=n_rel, dim=16, seed=self.embeddings_seed
             )
             io_openke.write_embeddings_parquet(self.spark, emb, self._emb_dir())
-        return {}
+        return {"n_entities": n_ent, "n_relations": n_rel}
 
     def _dicts(self):
         d = self._out("dicts")
         return (
-            self.spark.read.parquet(os.path.join(d, "entity2id")),
-            self.spark.read.parquet(os.path.join(d, "relation2id")),
+            read_parquet(self.spark, os.path.join(d, "entity2id")),
+            read_parquet(self.spark, os.path.join(d, "relation2id")),
         )
 
     def _emb_dir(self) -> str:
@@ -267,7 +266,7 @@ class Pipeline:
         return io_openke.read_embeddings_parquet(self.spark, self._emb_dir())
 
     def stage_link(self) -> dict:
-        tri = self.spark.read.parquet(os.path.join(self._out("extract"), "triples"))
+        tri = read_parquet(self.spark, os.path.join(self._out("extract"), "triples"))
         e2id, r2id = self._dicts()
         emb = self._embeddings()
         # the alias dictionary is the canonicalize stage's CC output —
@@ -279,7 +278,7 @@ class Pipeline:
         return {}
 
     def stage_materialize(self) -> dict:
-        linked = self.spark.read.parquet(self._out("link"))
+        linked = read_parquet(self.spark, self._out("link"))
         out = os.path.join(self._out("materialize"), "triples")
         lineage = materialize.salted_write(
             linked.select("s", "p", "o").dropDuplicates(["s", "p", "o"]),
@@ -288,15 +287,20 @@ class Pipeline:
             salt_cols=("s",),
         )
         # OpenKE-format export (A20 interchange). Dictionaries are
-        # dictionary-sized (driver pandas is fine); the triple file is
-        # data-sized and is written distributed + stream-concatenated.
-        e2id, r2id = self._dicts()
+        # dictionary-sized one-file outputs, read on the driver without a
+        # Spark job; the triple file is data-sized and is written
+        # distributed + stream-concatenated. The fact table is read back
+        # rather than re-executing the link plan.
+        fact = read_parquet(self.spark, out).select("s", "p", "o")
         exp = os.path.join(self._out("materialize"), "openke")
         os.makedirs(exp, exist_ok=True)
-        io_openke.write_dict_txt(e2id.toPandas(), os.path.join(exp, "entity2id.txt"))
-        io_openke.write_dict_txt(r2id.toPandas(), os.path.join(exp, "relation2id.txt"))
+        for name in ("entity2id", "relation2id"):
+            io_openke.write_dict_txt(
+                pd.read_parquet(os.path.join(self._out("dicts"), name)),
+                os.path.join(exp, f"{name}.txt"),
+            )
         io_openke.write_triples_txt_spark(
-            self.spark.read.parquet(out).selectExpr("s as h", "o as t", "p as r"),
+            fact.selectExpr("s as h", "o as t", "p as r"),
             os.path.join(exp, "train2id.txt"),
             n_partitions=self.out_partitions,
         )
@@ -304,13 +308,12 @@ class Pipeline:
         # shuffle ONCE at write time so every downstream groupBy/join on
         # `s` (degree stats, blocked-eval candidate ingestion, self-joins)
         # runs with zero Exchange — the canonical layout for a fact table
-        # consumed by many jobs (joins.write_bucketed). Reads the written
-        # parquet back rather than re-executing the link plan.
+        # consumed by many jobs (joins.write_bucketed).
         if self.bucket_table:
             from .joins import write_bucketed
 
             write_bucketed(
-                self.spark.read.parquet(out).select("s", "p", "o"),
+                fact,
                 self.bucket_table,
                 key="s",
                 buckets=self.out_partitions,
@@ -324,12 +327,12 @@ class Pipeline:
         if self.export_ntriples:
             from .io_rdf import write_ntriples
 
-            ids = self.spark.read.parquet(out).select("s", "p", "o")
+            e2id, r2id = self._dicts()
             e_s = e2id.select(F.col("id").alias("s"), F.col("name").alias("_s"))
             e_o = e2id.select(F.col("id").alias("o"), F.col("name").alias("_o"))
             r_p = r2id.select(F.col("id").alias("p"), F.col("name").alias("_p"))
             named = (
-                ids.join(F.broadcast(e_s), "s")
+                fact.join(F.broadcast(e_s), "s")
                 .join(F.broadcast(r_p), "p")
                 .join(F.broadcast(e_o), "o")
                 .select(
@@ -361,8 +364,8 @@ class Pipeline:
         """
         from . import evaluate as ev
 
-        tri = self.spark.read.parquet(
-            os.path.join(self._out("materialize"), "triples")
+        tri = read_parquet(
+            self.spark, os.path.join(self._out("materialize"), "triples")
         ).selectExpr("s as h", "o as t", "p as r")
         bucket = F.pmod(F.xxhash64("h", "t", "r"), F.lit(10))
         test = tri.where(bucket == F.lit(9)).orderBy("h", "t", "r").limit(500)

@@ -9,6 +9,7 @@ runtime statistics. On a real cluster only ``master`` changes.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import SparkSession
@@ -79,6 +80,50 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: footer key-value entry where Spark's Parquet writer stores the row
+#: schema as JSON; schema inference deserializes the same entry
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """First Parquet data file under ``path`` in sorted order, skipping
+    ``_``/``.`` entries (``_SUCCESS``, ``.crc``, ``_temporary``) the way
+    Spark's file index does; ``path`` itself if it is a file."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    for name in sorted(os.listdir(path)):
+        if name.startswith(("_", ".")):
+            continue
+        found = _first_data_file(os.path.join(path, name))
+        if found:
+            return found
+    return None
+
+
+def read_parquet(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)`` without the schema-inference job.
+
+    A read without a schema runs one Spark job to deserialize the row
+    schema from a file footer. For a Spark-written output the driver
+    reads that footer entry itself (one ``pyarrow`` metadata read) and
+    passes the schema, so the read schedules nothing. Hive partition
+    columns are still discovered from the directory names. Outputs not
+    written by Spark (no schema entry) and paths the driver cannot list
+    fall back to plain inference."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    first = _first_data_file(path)
+    meta = pq.read_metadata(first).metadata if first else None
+    stored = (meta or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is None:
+        return spark.read.parquet(path)
+    schema = StructType.fromJson(json.loads(stored))
+    return spark.read.schema(schema).parquet(path)
 
 
 def tiny_df(spark, rows, schema: str):

@@ -8,13 +8,14 @@ named ``(s, p, o)`` per the north_star contract.
 
 Dense IDs are deterministic: ``row_number() over (order by name)``.
 Never ``monotonically_increasing_id`` (partition-layout-dependent).
-Single-partition sort is fine at dictionary cardinality (entities are
-the *distinct canonical names*, orders of magnitude smaller than the
-corpus); for 100 TB inputs use ``two_phase_dense_ids`` which computes
-per-partition counts + offsets — same output, no global sort bottleneck.
+There is one implementation, a single-partition sort: dictionaries hold
+the *distinct canonical names* (entities) and predicates, orders of
+magnitude fewer rows than the corpus, so one partition holds them.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -22,62 +23,19 @@ from pyspark.sql import functions as F
 
 def dense_ids(names: DataFrame, name_col: str = "name") -> DataFrame:
     """Distinct names → ``(name, id)`` with ids dense 0..N-1, ordered by
-    name. Deliberately a single-partition global row_number — correct at
-    DICTIONARY cardinality only (see :func:`two_phase_dense_ids` for the
-    corpus-scale path). Spark's WindowExec single-partition warning on
-    this operator is expected and benign: Spark 4 emits it whenever the
-    window executes in one partition, even under a constant partition
-    key (verified — both lit(1) and column-derived constants still
-    warn), so it cannot be silenced without changing the plan."""
+    name. Deliberately a single-partition global row_number, sized for
+    DICTIONARY cardinality (distinct names, not corpus rows); it costs
+    fewer jobs than any range-bucketed variant at that size. Spark's
+    WindowExec single-partition warning on this operator is expected and
+    benign: Spark 4 emits it whenever the window executes in one
+    partition, even under a constant partition key (verified — both
+    lit(1) and column-derived constants still warn), so it cannot be
+    silenced without changing the plan."""
     w = Window.orderBy(name_col)
     return (
         names.select(F.col(name_col).alias("name"))
         .distinct()
         .withColumn("id", (F.row_number().over(w) - F.lit(1)).cast("long"))
-    )
-
-
-def two_phase_dense_ids(
-    names: DataFrame, name_col: str = "name", buckets: int | None = None
-) -> DataFrame:
-    """Scale path for dense IDs: range-bucket by name, rank within bucket,
-    add exclusive prefix-sum offsets. Identical output to :func:`dense_ids`
-    (global order by name) without a single-partition global sort.
-
-    ``buckets`` defaults to ``spark.sql.shuffle.partitions`` — the
-    output (global dense rank by name) is identical for ANY bucket
-    count, so the bucketing tracks the session's shuffle sizing instead
-    of a constant (the old fixed 256 scheduled 256 tiny tasks per phase
-    at dictionary cardinality; at real scale raise shuffle partitions
-    and this follows).
-    """
-    distinct = names.select(F.col(name_col).alias("name")).distinct()
-    if buckets is None:
-        buckets = int(names.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # repartitionByRange gives contiguous name ranges per partition
-    ranged = distinct.repartitionByRange(buckets, "name").withColumn(
-        "bucket", F.spark_partition_id()
-    )
-    counts = (
-        ranged.groupBy("bucket").count()
-        .withColumn(
-            "offset",
-            F.coalesce(
-                F.sum("count").over(
-                    # bucket-COUNT-sized table (≤ `buckets` rows): the
-                    # single-partition WindowExec warning here is benign
-                    Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("bucket", "offset")
-    )
-    w = Window.partitionBy("bucket").orderBy("name")
-    return (
-        ranged.withColumn("local_rank", F.row_number().over(w) - F.lit(1))
-        .join(F.broadcast(counts), "bucket")
-        .select("name", (F.col("local_rank") + F.col("offset")).cast("long").alias("id"))
     )
 
 
@@ -121,8 +79,8 @@ def salted_write(
     columns>), 16)`` — a *content* hash, never ``rand()``: partition
     assignment is a pure function of the row, so two runs (or a resume)
     produce byte-identical partition layout regardless of input
-    partitioning. Lineage counters come from ``df.observe`` (no second
-    scan).
+    partitioning. Lineage counters come from ``df.observe`` and the
+    written files' footers (no second scan).
 
     Returns the lineage row (dict) that the manifest records.
     """
@@ -148,23 +106,28 @@ def salted_write(
         "part"
     ).parquet(path)
     lineage = dict(obs.get)
-    # per-partition lineage rows: cheap metadata-sized readback
-    # aggregation — collected ONCE; the lineage parquet is written from
-    # the collected rows (the old collect-after-write re-executed the
-    # whole readback aggregation a second time)
-    spark = df.sparkSession
-    parts = (
-        spark.read.parquet(path)
-        .groupBy("part")
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .orderBy("part")
-        .collect()
-    )
+    parts = _partition_rows(path)
     from ..session import tiny_df
 
-    tiny_df(
-        spark, [(int(r["part"]), int(r["rows"])) for r in parts], "part int, rows bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(path + "_lineage")
-    lineage["partitions"] = {int(r["part"]): int(r["rows"]) for r in parts}
-    lineage["max_partition_rows"] = max((int(r["rows"]) for r in parts), default=0)
+    lin = tiny_df(df.sparkSession, list(parts.items()), "part int, rows bigint")
+    lin.coalesce(1).write.mode("overwrite").parquet(path + "_lineage")
+    lineage["partitions"] = parts
+    lineage["max_partition_rows"] = max(parts.values(), default=0)
     return lineage
+
+
+def _partition_rows(path: str) -> dict[int, int]:
+    """Rows per hive ``part=N`` directory of a just-finished write, summed
+    from the Parquet footers on the driver — the write already knows the
+    counts, so a read-back aggregation would only add Spark jobs."""
+    import pyarrow.parquet as pq
+
+    rows = {}
+    for d in os.listdir(path):
+        if not d.startswith("part="):
+            continue
+        files = [f for f in os.listdir(os.path.join(path, d)) if not f.startswith(("_", "."))]
+        rows[int(d[len("part="):])] = sum(
+            pq.read_metadata(os.path.join(path, d, f)).num_rows for f in files
+        )
+    return dict(sorted(rows.items()))

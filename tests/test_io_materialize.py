@@ -8,7 +8,7 @@ import pandas as pd
 from kgforge.fixtures import gen_openke_split
 from kgforge.io_openke import read_split, read_triples_spark, write_split
 from kgforge.manifest import Manifest, fingerprint_paths
-from kgforge.stages.materialize import dense_ids, salted_write, to_id_triples, two_phase_dense_ids
+from kgforge.stages.materialize import dense_ids, salted_write, to_id_triples
 
 
 def test_openke_roundtrip(tmp_path):
@@ -56,18 +56,18 @@ def test_spark_triple_writer_matches_driver_writer(spark, tmp_path):
 
 
 def test_dense_ids_deterministic_and_dense(spark):
-    names = spark.createDataFrame(pd.DataFrame({"name": ["b", "a", "c", "a", "b"]}))
-    got = dense_ids(names).toPandas().sort_values("id").reset_index(drop=True)
-    assert list(got["name"]) == ["a", "b", "c"]
-    assert list(got["id"]) == [0, 1, 2]
-
-
-def test_two_phase_dense_ids_equivalent(spark):
-    pdf = pd.DataFrame({"name": [f"n{i:04d}" for i in range(500)] * 2})
-    df = spark.createDataFrame(pdf).repartition(11)
-    a = dense_ids(df).toPandas().sort_values("name").reset_index(drop=True)
-    b = two_phase_dense_ids(df, buckets=7).toPandas().sort_values("name").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    """Ids are the dense rank by name, whatever the duplicates and the
+    input partitioning: a tiny frame, and 500 names twice over 11
+    input partitions."""
+    names = [f"n{i:04d}" for i in range(500)]
+    cases = [
+        (spark.createDataFrame(pd.DataFrame({"name": ["b", "a", "c", "a", "b"]})), ["a", "b", "c"]),
+        (spark.createDataFrame(pd.DataFrame({"name": names[::-1] * 2})).repartition(11), names),
+    ]
+    for df, want in cases:
+        got = dense_ids(df).toPandas().sort_values("id").reset_index(drop=True)
+        assert list(got["name"]) == want
+        assert list(got["id"]) == list(range(len(want)))
 
 
 def test_to_id_triples_and_salted_write(spark, tmp_path):

@@ -162,27 +162,113 @@ def test_lineage_counters_recorded(run_dir):
     assert entry["extra"]["lineage"]["row_count"] == entry["row_count"]
 
 
-def test_two_phase_dense_ids_pipeline_identical(spark, tmp_path):
-    """dense_ids_impl='two_phase' (the no-global-sort scale path) must
-    produce byte-identical dictionaries and triples to the sort impl."""
+def test_dict_sizes_recorded(run_dir):
+    """The dicts entry carries the dictionary sizes its writes counted."""
+    work, _, pipe = run_dir
+    extra = pipe.manifest.get("dicts")["extra"]
+    exp = os.path.join(work, "materialize", "openke")
+    for key, name in (("n_entities", "entity2id"), ("n_relations", "relation2id")):
+        lines = open(os.path.join(exp, f"{name}.txt")).read().splitlines()
+        assert extra[key] == int(lines[0]) == len(lines) - 1 > 0
+
+
+#: Spark jobs per stage of a warm unit-fixture build. A budget may only go
+#: down: lower it deliberately when a change saves jobs.
+STAGE_JOB_BUDGET = {
+    "reassemble": 3,
+    "extract": 7,
+    "canonicalize": 22,
+    "dicts": 10,
+    "link": 6,
+    "materialize": 7,
+}
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under its own job group and count the jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.fixture(scope="module")
+def unit_build(spark, tmp_path_factory):
+    """A unit-fixture build after a warm-up build, each stage run under its
+    own job group: ``(work_dir, fixture_dir, jobs per stage)``."""
     fdir = ensure_fixtures("unit")
-    outs = {}
-    for impl in ("sort", "two_phase"):
-        work = str(tmp_path / impl)
-        Pipeline(
+
+    def pipeline(work):
+        return Pipeline(
             spark,
             input_path=os.path.join(fdir, "transcripts.parquet"),
             work_dir=work,
             gazetteer_path=os.path.join(fdir, "gazetteer.parquet"),
             patterns_path=os.path.join(fdir, "patterns.parquet"),
             out_partitions=2,
-            dense_ids_impl=impl,
-        ).run(STAGES)
-        outs[impl] = (
-            open(os.path.join(work, "materialize", "openke", "train2id.txt")).read(),
-            open(os.path.join(work, "materialize", "openke", "entity2id.txt")).read(),
         )
-    assert outs["sort"] == outs["two_phase"]
+
+    pipeline(str(tmp_path_factory.mktemp("unit_warm"))).run(STAGES)
+    work = str(tmp_path_factory.mktemp("unit_build"))
+    pipe = pipeline(work)
+    jobs = {
+        s: _jobs_in_group(spark, f"stage_budget_{s}", lambda s=s: pipe.run([s]))[0]
+        for s in STAGES
+    }
+    return work, fdir, jobs
+
+
+def test_pipeline_stage_job_budget(unit_build):
+    """Spark jobs per stage are pinned exactly. At dictionary scale the
+    stages' cost is job scheduling, so a schema-inferring read, a count
+    after a write or a read-back that a change adds shows here even when
+    every output stays identical."""
+    _, _, jobs = unit_build
+    assert jobs == STAGE_JOB_BUDGET, jobs
+
+
+def test_read_parquet_footer_schema(spark, unit_build, tmp_path):
+    """session.read_parquet returns what schema inference returns — schema,
+    hive partition columns and rows — and schedules no job for a
+    Spark-written output; files without Spark's schema entry fall back to
+    inference."""
+    from kgforge.session import read_parquet
+
+    work, fdir, _ = unit_build
+
+    def same_as_inferred(path):
+        n, df = _jobs_in_group(spark, f"read_parquet:{path}", lambda: read_parquet(spark, path))
+        want = spark.read.parquet(path)
+        assert df.schema == want.schema, path
+        assert sorted(map(repr, df.collect())) == sorted(map(repr, want.collect())), path
+        return n, df
+
+    outputs = [
+        "reassemble", "extract/triples", "extract/mentions", "canonicalize/alias_map",
+        "canonicalize/entities", "dicts/entity2id", "dicts/relation2id", "link",
+        "materialize/triples", "materialize/triples_lineage", "embeddings/components",
+        "embeddings/components/component=ent",
+    ]
+    schemas = {}
+    for out in outputs:
+        n, df = same_as_inferred(os.path.join(work, out))
+        assert n == 0, out
+        schemas[out] = df.schema
+    # the hive partition column is still discovered from the directories
+    assert schemas["materialize/triples"]["part"].dataType.simpleString() == "int"
+
+    empty = str(tmp_path / "empty")
+    spark.createDataFrame([], "a long, b array<string>").write.parquet(empty)
+    n, df = same_as_inferred(empty)
+    assert n == 0 and df.schema.simpleString() == "struct<a:bigint,b:array<string>>"
+
+    # pandas-written input: no Spark schema entry, so inference runs
+    n, _ = same_as_inferred(os.path.join(fdir, "gazetteer.parquet"))
+    assert n == 1
 
 
 def test_entry_and_contract_smoke(spark):
