@@ -617,31 +617,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def a15_ranks_relfilter(spark, sf):
-        # the B12 gate's path: broadcast raw ranks + relational known-
-        # filter correction (known is a DataFrame end to end) — must
-        # equal the broadcast-filter oracle exactly
+        # the B12 gate's call shape: blocked ranks with the known set as
+        # a DataFrame end to end (joined into skip lists, never
+        # collected) — must equal the broadcast-filter oracle exactly
         split, emb, known = _openke_emb()
         known_df = (
             _openke(spark, "train2id")
             .unionByName(_openke(spark, "valid2id"))
             .unionByName(_openke(spark, "test2id"))
         )
-        return ev.link_prediction_ranks_relfilter(
+        return ev.link_prediction_ranks_blocked(
             spark, spark.createDataFrame(split["test2id"]), emb, known_df
         )
 
     def a15_ranks_relfilter_transr(spark, sf):
-        # TransR through the relational-filter path: full rank-protocol
-        # oracle coverage of the per-relation matmul kernel — the DuckDB
-        # side does the matmul relationally (proj CTE). score_decimals=6:
-        # matmul product sums round accumulation-order-dependently.
+        # TransR in the B12 gate's call shape (known set as a DataFrame):
+        # full rank-protocol oracle coverage of the per-relation matmul
+        # kernel — the DuckDB side does the matmul relationally (proj
+        # CTE). score_decimals=6: matmul product sums round
+        # accumulation-order-dependently.
         split, emb, known = _openke_emb()
         known_df = (
             _openke(spark, "train2id")
             .unionByName(_openke(spark, "valid2id"))
             .unionByName(_openke(spark, "test2id"))
         )
-        return ev.link_prediction_ranks_relfilter(
+        return ev.link_prediction_ranks_blocked(
             spark, spark.createDataFrame(split["test2id"]), emb, known_df,
             model="transr", score_decimals=6,
         )
@@ -779,14 +780,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return m.select("category", "n_triples", *[F.round(F.col(c), 9).alias(c) for c in num])
 
     def a17_category_relfilter(spark, sf):
-        """Per-category (1-1/1-N/N-1/N-N) metrics composed with the
-        RELATIONAL filter path — the B12 gate's shape at data-sized
-        known sets: ranks from link_prediction_ranks_relfilter (known
-        stays a DataFrame end to end), categories from train tph/hpt,
-        one aggregation. Output — and oracle — identical to the
-        broadcast-path category metrics (the decomposition is exact)."""
+        """Per-category (1-1/1-N/N-1/N-N) metrics in the B12 gate's
+        call shape at data-sized known sets: ranks from
+        link_prediction_ranks_blocked with the known set as a DataFrame
+        end to end, categories from train tph/hpt, one aggregation.
+        Output — and oracle — identical to the broadcast-path category
+        metrics (the rank protocols agree)."""
         split, emb, known = _openke_emb()
-        ranks = ev.link_prediction_ranks_relfilter(
+        ranks = ev.link_prediction_ranks_blocked(
             spark, spark.createDataFrame(split["test2id"]), emb,
             spark.createDataFrame(known[["h", "t", "r"]]),
         )

@@ -12,25 +12,31 @@ test_link_prediction``, recalled — SURVEY.md §0):
   never skipped).
 * Metrics: MR, MRR, Hits@10/3/1, head/tail averaged, raw + filtered.
 
-Spark execution: test triples flow through one Arrow-batched
-``mapInPandas``; the full entity/relation embedding matrices are
-broadcast once (``sc.broadcast`` NumPy, not a join). Inside a batch the
-test triples are taken in chunks; per chunk and direction, one kernel
-call scores every triple of the chunk against all |E| candidates as a
-``[chunk, |E|]`` block (chunk sized so its temporaries stay ≤16 MB).
-The known-triple filter ships as two sorted-array indexes keyed
-``(r, t) → h`` / ``(r, h) → t``, built from the (dictionary-scale)
-triple splits and probed with ``np.searchsorted``.
+Two entity-rank paths, one protocol (equality-tested and
+contract-checked against the same oracles):
 
-Scale note: embeddings are model-parameter-sized (|E|·d floats), the
-same thing the reference holds on every worker via its parameter-server
-checkpoint — broadcasting them is the intended design, not a shortcut.
-For |E| beyond broadcast reach, :func:`link_prediction_ranks_blocked`
-keeps the entity table in Spark: one ``mapInPandas`` scores each entity
-block against the broadcast test triples with the same kernel call, and
-one aggregation sums the per-block counts — equality-tested and
-contract-checked against the same oracle. Every rank path scores
-through ``kernels.score_batch`` and rounds with ``np.round``.
+* :func:`link_prediction_ranks` (broadcast): test triples flow through
+  one Arrow-batched ``mapInPandas``; the full entity/relation embedding
+  matrices are broadcast once (``sc.broadcast`` NumPy, not a join). Per
+  chunk of test triples and direction, one kernel call scores the chunk
+  against all |E| candidates as a ``[chunk, |E|]`` block (chunk sized
+  so its temporaries stay ≤16 MB). The known set is pandas, shipped as
+  two sorted-array indexes keyed ``(r, t) → h`` / ``(r, h) → t`` and
+  probed with ``np.searchsorted`` — for dictionary-scale splits.
+* :func:`link_prediction_ranks_blocked`: the entity table stays in
+  Spark; one ``mapInPandas`` scores each entity block against the
+  broadcast test triples with the same kernel call, and one aggregation
+  sums the per-block counts. The known set may be a DataFrame: it is
+  joined against the test triples into per-candidate skip lists, so
+  nothing data-sized reaches the driver. The B12 gate
+  (``Pipeline.stage_evaluate``) ranks through this path, with the
+  constructed KG as the known set.
+
+Embeddings are model-parameter-sized (|E|·d floats), the same thing the
+reference holds on every worker via its parameter-server checkpoint —
+broadcasting them is the intended design, not a shortcut. Every rank
+path scores through ``kernels.score_batch`` and rounds with
+``np.round``.
 """
 
 from __future__ import annotations
@@ -77,10 +83,8 @@ def _known_index(known: pd.DataFrame | None) -> tuple[tuple, tuple]:
     ``vals[starts[i]:starts[i + 1]]`` the sorted unique ids known under
     ``keys[i]``.
 
-    ``known=None`` → empty indexes (raw-only ranking; the filtered
-    columns then equal the raw ones — used by
-    :func:`link_prediction_ranks_relfilter`, which applies the
-    known-filter relationally instead).
+    ``known=None`` → empty indexes: raw-only ranking, the filtered
+    columns equal the raw ones.
     """
     h, t, r = (
         (np.empty(0, np.int64),) * 3 if known is None
@@ -226,9 +230,13 @@ def _rank_metrics(ranks: DataFrame, *keys: str, extra=()) -> DataFrame:
     pooled rows, two per test triple) come right after the keys."""
     def _m(tag: str):
         c = F.col(tag).cast("double")
+        # reciprocals summed in decimal: a double sum depends on the
+        # order partitions arrive in, the decimal one is exact.
+        # try_divide: an empty group is null, as avg gives
+        recip = F.sum((1.0 / c).cast("decimal(38,18)")).cast("double")
         return [
             F.avg(c).alias(f"mr_{tag}"),
-            F.avg(1.0 / c).alias(f"mrr_{tag}"),
+            F.try_divide(recip, F.count(c)).alias(f"mrr_{tag}"),
             F.avg((c <= 10).cast("double")).alias(f"hits10_{tag}"),
             F.avg((c <= 3).cast("double")).alias(f"hits3_{tag}"),
             F.avg((c <= 1).cast("double")).alias(f"hits1_{tag}"),
@@ -389,6 +397,18 @@ def link_prediction_ranks_blocked(
     ``emb``: NumPy dict and/or ``(id, vec)`` DataFrames per component
     (:func:`_emb_sides`). Output: RANKS_SCHEMA, one row per distinct test
     triple whose h and t have embeddings.
+
+    Callers: the B12 gate (``Pipeline.stage_evaluate``, known = the
+    constructed KG as a DataFrame) and the A15/A17 blocked contract
+    queries (``a15_ranks_blocked*``, ``a15_constrained_ranks_blocked``,
+    ``a17_category_blocked``, and three that pass the known set as a
+    DataFrame, as the gate does). Trade-off against the broadcast
+    path: a NumPy ``emb`` enters through :func:`_vecs_df`, which puts the
+    entity matrix in ONE partition, so at 10k entities × 1000 test
+    triples this path took 3.9–4.5 s where broadcast scoring with a
+    join-based filter took 2.2–2.7 s (4-core host). No caller runs that
+    size: the gate ranks ≤500 triples against a dictionary of tens of
+    entities, where this path runs fewer jobs.
     """
     ents, rel = _emb_sides(spark, emb)
     ent_keys = [c for c in ents.columns if c != "id"]
@@ -472,93 +492,6 @@ def link_prediction_ranks_blocked(
         .mapInPandas(fn, RANKS_SCHEMA)
         .groupBy("h", "t", "r")
         .agg(*((1 + F.sum(c)).alias(c) for c in RANK_COLS))
-    )
-
-
-def link_prediction_ranks_relfilter(
-    spark: SparkSession,
-    test: DataFrame,
-    emb: dict[str, np.ndarray],
-    known: DataFrame,
-    model: str = "transe",
-    norm: int = 1,
-    score_decimals: int | None = None,
-) -> DataFrame:
-    """A15/A16 with a **relational** known-triple filter — works for all
-    four models and a data-sized known set.
-
-    The broadcast path ships the full known set as driver-built hash
-    maps — fine for dictionary-scale splits, a "collect() on data-sized
-    inputs" violation when the known set is a corpus-derived KG (the B12
-    gate's case). Decomposition: raw ranks need only the (model-
-    parameter-sized, broadcast) embeddings; the filtered rank is then
-
-        rank_filt = rank_raw − |{known cand ≠ true : score(cand) < score(true)}|
-
-    and that correction is a join: known triples sharing the test
-    triple's (r, t) (head side) / (r, h) (tail side) are the only
-    candidates the filter can ever skip, so score exactly those few
-    rows with the same kernel and subtract. ``known`` is a DataFrame end
-    to end — nothing data-sized touches the driver. Output is identical
-    to :func:`link_prediction_ranks` (tested for every model × norm).
-    """
-    raw = link_prediction_ranks(
-        spark, test, emb, None, model=model, norm=norm, score_decimals=score_decimals
-    ).select("h", "t", "r", "rank_head_raw", "rank_tail_raw")
-
-    # true scores once (|test| rows — checkpoint so the two downstream
-    # references don't re-run the scoring UDF); score_triples rounds with
-    # the raw-rank kernel's np.round (_scores), so the decomposition is
-    # exact on .5 boundaries too
-    s_true = score_triples(
-        spark, test.select("h", "t", "r").dropDuplicates(), emb,
-        model=model, norm=norm, decimals=score_decimals,
-    ).withColumnRenamed("score", "s_true")
-    s_true = s_true.localCheckpoint()
-    known = known.select("h", "t", "r")
-
-    # candidates the filter skips: known triples sharing the fixed
-    # (r, other-entity) key, excluding the true entity itself. Both
-    # directions union into ONE scoring pass (side-tagged), then one
-    # conditional aggregation back onto the test key.
-    def _cand(side: str) -> DataFrame:
-        var = "h" if side == "head" else "t"     # the corrupted slot
-        fix = "t" if side == "head" else "h"     # the fixed slot
-        kn = known.select(F.col(var).alias("cand"), fix, "r").dropDuplicates()
-        c = s_true.join(kn, [fix, "r"]).where(F.col("cand") != F.col(var))
-        # scored triple: corrupted slot = cand; original entity rides
-        # along as _true_e to reconstruct the test key after scoring
-        return c.select(
-            F.lit(side).alias("side"),
-            F.col(var).alias("_true_e"),
-            "s_true",
-            F.col("cand").alias(var) if side == "head" else F.col("h"),
-            F.col("t") if side == "head" else F.col("cand").alias("t"),
-            F.col("r"),
-        )
-
-    cands = _cand("head").unionByName(_cand("tail"))
-    scored = score_triples(
-        spark, cands, emb, model=model, norm=norm, decimals=score_decimals
-    )
-    corr = (
-        scored.where(F.col("score") < F.col("s_true"))
-        .groupBy(
-            F.when(F.col("side") == "head", F.col("_true_e")).otherwise(F.col("h")).alias("h"),
-            F.when(F.col("side") == "head", F.col("t")).otherwise(F.col("_true_e")).alias("t"),
-            F.col("r"),
-        )
-        .agg(
-            F.sum((F.col("side") == "head").cast("long")).alias("_corr_head"),
-            F.sum((F.col("side") == "tail").cast("long")).alias("_corr_tail"),
-        )
-    )
-    return raw.join(corr, ["h", "t", "r"], "left").select(
-        "h", "t", "r",
-        "rank_head_raw",
-        (F.col("rank_head_raw") - F.coalesce("_corr_head", F.lit(0))).alias("rank_head_filt"),
-        "rank_tail_raw",
-        (F.col("rank_tail_raw") - F.coalesce("_corr_tail", F.lit(0))).alias("rank_tail_filt"),
     )
 
 

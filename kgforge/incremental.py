@@ -35,54 +35,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import IcebergLiteTable
-from .stages import extract
+from .stages import extract, materialize
 
 
 def dictionary_link_triples(
     extracted: DataFrame, gaz: DataFrame, e2id: DataFrame, r2id: DataFrame
 ) -> DataFrame:
     """Surface triples → distinct dense-id ``(s, p, o)`` via the
-    gazetteer dictionary. All five joins are broadcast (dictionaries are
-    dictionary-sized by definition) — the triple table never shuffles."""
-    surf2canon = gaz.select("surface", "canonical")
-    return (
-        extracted.join(
-            F.broadcast(
-                surf2canon.withColumnRenamed("surface", "subj").withColumnRenamed(
-                    "canonical", "_sc"
-                )
-            ),
-            "subj",
-        )
-        .join(
-            F.broadcast(
-                surf2canon.withColumnRenamed("surface", "obj").withColumnRenamed(
-                    "canonical", "_oc"
-                )
-            ),
-            "obj",
-        )
-        .join(
-            F.broadcast(
-                e2id.withColumnRenamed("name", "_sc").withColumnRenamed("id", "s")
-            ),
-            "_sc",
-        )
-        .join(
-            F.broadcast(
-                e2id.withColumnRenamed("name", "_oc").withColumnRenamed("id", "o")
-            ),
-            "_oc",
-        )
-        .join(
-            F.broadcast(
-                r2id.withColumnRenamed("name", "pred").withColumnRenamed("id", "p")
-            ),
-            "pred",
-        )
-        .select("s", "p", "o")
-        .dropDuplicates(["s", "p", "o"])
+    gazetteer dictionary: two broadcast surface → canonical joins, then
+    :func:`materialize.to_id_triples` (three more broadcast joins) —
+    dictionaries are dictionary-sized by definition, so the triple table
+    never shuffles."""
+    surf2canon = F.broadcast(gaz.select("surface", "canonical"))
+    canon = extracted.join(
+        surf2canon.withColumnRenamed("surface", "subj").withColumnRenamed("canonical", "_sc"),
+        "subj",
+    ).join(
+        surf2canon.withColumnRenamed("surface", "obj").withColumnRenamed("canonical", "_oc"),
+        "obj",
     )
+    return materialize.to_id_triples(canon, e2id, r2id, "_sc", "pred", "_oc")
 
 
 def build_triples(

@@ -218,27 +218,3 @@ def salted_join(
     )
     joined = lsalted.join(rsalted, cond, how)
     return joined.drop(lsalted["_salt"]).drop(rsalted["_salt"])
-
-
-def write_sorted_clustered(
-    df: DataFrame, path: str, sort_col: str, n_files: int = 8
-) -> None:
-    """Range-clustered parquet write for min/max data skipping: rows
-    are range-partitioned on ``sort_col`` (equal keys co-locate) and
-    sorted within each file, so every file's ``sort_col`` range is
-    disjoint — a point or range predicate then prunes to the files
-    whose parquet footer statistics overlap it, the poor-man's Z-order
-    for the single-column case. At 100 TB this is the difference
-    between scanning every file and touching O(selectivity) of them;
-    the reader needs no cooperation beyond normal parquet
-    row-group/footer stats pushdown.
-
-    One range Exchange (sampled boundaries) + in-partition sorts; the
-    write itself is the usual per-partition parquet stream.
-    """
-    (
-        df.repartitionByRange(int(n_files), F.col(sort_col))
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )

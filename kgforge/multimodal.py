@@ -1,6 +1,6 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata, with decode/feature/resize/frame-sample as Arrow-batched
-``mapInPandas`` stages.
+metadata, with decode/feature extraction as an Arrow-batched
+``mapInPandas`` stage.
 
 The sandbox has no image/audio codecs, so the *decode* step is a
 deterministic fake (clearly marked) — the Spark-side plumbing (schema,
@@ -17,7 +17,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -88,38 +87,3 @@ def extract_features(media: DataFrame, out_dim: int = 32) -> DataFrame:
             )
 
     return media.select("media_id", "kind", "payload").mapInPandas(fn, schema)
-
-
-def resize_plan(media: DataFrame, max_side: int = 512) -> DataFrame:
-    """Resize planning — pure JVM-side math on metadata (no decode).
-
-    Output: media_id, scale (double), new_width, new_height. Real resize
-    happens in the decode UDF; the plan itself is Catalyst-optimizable.
-    """
-    scale = F.when(
-        F.greatest("width", "height") > max_side,
-        max_side / F.greatest("width", "height").cast("double"),
-    ).otherwise(F.lit(1.0))
-    return media.where(F.col("kind") == "image").select(
-        "media_id",
-        scale.alias("scale"),
-        F.floor(F.col("width") * scale).cast("int").alias("new_width"),
-        F.floor(F.col("height") * scale).cast("int").alias("new_height"),
-    )
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plan for videos: one row per sampled timestamp.
-
-    ``sequence`` + ``explode`` — JVM-side; the actual frame decode is the
-    (stubbed) decode UDF applied per (media_id, frame_ts).
-    """
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-            ).alias("frame_ts_ms"),
-        )
-    )

@@ -1,7 +1,10 @@
 """Stage DAG + spark-submit entry (SURVEY.md §3.4).
 
-``transcripts → reassemble (B1) → extract (B2/B3) → dicts (B9) →
-link (B4–B6) → canonicalize (B7/B8) → materialize (B10) → evaluate (B12)``
+``transcripts → reassemble (B1) → extract (B3) → canonicalize (B7/B8) →
+dicts (B9) → link (B4–B6) → materialize (B10) → evaluate (B12)``
+
+Mention detection (B2, ``extract.detect_mentions``) is a library
+operator, not a stage output: no stage reads mentions.
 
 Each stage is a pure DataFrame → DataFrame function wrapped with:
 read inputs → build plan → execute → write parquet + ``_SUCCESS`` →
@@ -134,19 +137,12 @@ class Pipeline:
         return {"row_count": n}
 
     def stage_extract(self) -> dict:
-        # B2 and B3 as two independent scans. A single combined pass
-        # (union schema, partitionBy(kind)) was measured SLOWER (95s vs
-        # 54s at local[8]/bench): the extra materialize+reread of ~7M
-        # union rows costs more than the saved text scan — regex+Arrow
-        # is cheaper than write bandwidth here. See docs/DESIGN_SCALE.md.
         turns = read_parquet(self.spark, self._out("reassemble"))
         gaz_pdf = self._gaz().toPandas()
         pat_pdf = read_parquet(self.spark, self.patterns_path).toPandas()
         tri = extract.extract_triples(turns, gaz_pdf, pat_pdf)
         tri = extract.surface_triples_dedup(tri)
         n = _write_counted(tri, os.path.join(self._out("extract"), "triples"))
-        men = extract.detect_mentions(turns, gaz_pdf)
-        _write(men, os.path.join(self._out("extract"), "mentions"))
         return {"row_count": n}
 
     def stage_canonicalize(self) -> dict:
@@ -356,11 +352,12 @@ class Pipeline:
         stage scored with — so a regression anywhere upstream
         (extraction, canonicalization, dense ids, materialization) moves
         ``eval_metrics.json``, and the stage's manifest dependency on
-        materialize is real. The known-triple filter is the materialized
-        set itself, consumed **relationally** (``link_prediction_ranks_
-        relfilter`` joins the known DataFrame; the gate never collects
-        the KG to the driver — only the ≤500-row test sample and the
-        final one-row metrics land there).
+        materialize is real. Ranks come from
+        ``evaluate.link_prediction_ranks_blocked`` with the materialized
+        set itself as the known-triple filter, consumed **relationally**
+        (joined into per-candidate skip lists; the gate never collects
+        the KG to the driver — only the ≤500-row test sample, its h/t
+        vectors and the final one-row metrics land there).
         """
         from . import evaluate as ev
 
@@ -372,7 +369,7 @@ class Pipeline:
         if test.isEmpty():  # tiny KGs: gate on everything
             test = tri.orderBy("h", "t", "r").limit(500)
         emb = self._embeddings()
-        ranks = ev.link_prediction_ranks_relfilter(
+        ranks = ev.link_prediction_ranks_blocked(
             self.spark, test, emb, tri, model=self.model, norm=self.norm
         ).localCheckpoint()  # ≤500 rows; one execution feeds metrics + count
         metrics = ev.link_prediction_metrics(ranks).toPandas().iloc[0].to_dict()

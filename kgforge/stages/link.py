@@ -9,8 +9,8 @@ kernel scoring, best-link selection.
   NumPy, scores computed vectorized per Arrow batch
   (BASELINE.json north_star: "vectorized NumPy inside pandas UDFs —
   never per-row Python").
-* B6: ``row_number() over (partition by triple order by score, s, o)``
-  → rank 1 wins; deterministic tie-break on ids.
+* B6: the minimum of ``(link_score, s, o)`` per extracted triple wins;
+  deterministic tie-break on ids.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import kernels
@@ -53,7 +53,7 @@ def link_triples(
     gazetteer: DataFrame,
     entity2id: DataFrame,
     relation2id: DataFrame,
-    emb: dict[str, np.ndarray] | None = None,
+    emb: dict[str, np.ndarray],
     model: str = "transe",
     norm: int = 1,
     local_select: bool = True,
@@ -113,8 +113,8 @@ def link_triples(
         f"{f.name} {f.dataType.simpleString()}" for f in withids.schema.fields
     ) + ", link_score double"
 
-    if emb is not None and local_select:
-        b_emb = pin_broadcast(spark, emb)
+    b_emb = pin_broadcast(spark, emb)
+    if local_select:
 
         def score_select(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             E = b_emb.value
@@ -127,34 +127,14 @@ def link_triples(
 
         return withids.mapInPandas(score_select, scored_schema)
 
-    if emb is not None:
-        b_emb = pin_broadcast(spark, emb)
+    def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        E = b_emb.value
+        for pdf in batches:
+            if len(pdf):
+                yield _score(pdf, E)
 
-        def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            E = b_emb.value
-            for pdf in batches:
-                if len(pdf):
-                    yield _score(pdf, E)
-
-        scored = withids.mapInPandas(score_fn, scored_schema)
-    else:
-        scored = withids.withColumn("link_score", F.lit(0.0))
-
+    scored = withids.mapInPandas(score_fn, scored_schema)
     rest = [c for c in scored.columns if c not in keys]
-    if local_select:
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in scored.schema.fields
-        )
-
-        def best_local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts = [p for p in batches if len(p)]
-            if not parts:
-                return
-            pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-            pdf = pdf.sort_values(["link_score", "s", "o"], kind="stable")
-            yield pdf.drop_duplicates(subset=keys, keep="first")
-
-        return scored.mapInPandas(best_local, out_schema)
     return (
         scored.groupBy(*keys)
         .agg(

@@ -201,8 +201,8 @@ def test_ranks_across_chunk_boundaries(spark, blocked, with_known):
     blocks. Ranks must equal a per-triple NumPy recomputation. The known
     set hits the filter for the first 8 triples (each with 40 other
     known heads and tails, about half scoring below the true entity)
-    and misses for the rest; ``known=None`` is the empty index that the
-    relational-filter path ranks with (filtered == raw)."""
+    and misses for the rest; ``known=None`` ranks raw-only on the
+    broadcast path (filtered == raw)."""
     from kgforge.evaluate import link_prediction_ranks_blocked
 
     n_ent, n_rel = 60_000, 5
@@ -256,6 +256,24 @@ def test_metrics_match_manual(spark):
     assert (rp["rank_tail_filt"] <= rp["rank_tail_raw"]).all()
 
 
+def test_metrics_independent_of_partitioning(spark):
+    """MRR sums reciprocal ranks: summed in double, the result depends on
+    the order the partitions' partial sums merge in. The metrics of one
+    ranks table must be bit-identical however it is partitioned."""
+    rng = np.random.default_rng(3)
+    ranks = spark.createDataFrame(
+        pd.DataFrame({
+            "h": np.arange(40), "t": np.arange(40), "r": np.zeros(40, np.int64),
+            **{c: rng.integers(1, 200, 40) for c in RANK_COLS},
+        })
+    )
+    got = [
+        link_prediction_metrics(ranks.repartition(n)).collect()[0].asDict()
+        for n in (1, 3, 7, 13)
+    ]
+    assert all(g == got[0] for g in got[1:]), got
+
+
 def test_topk_matches_bruteforce(spark):
     q = SPLIT["test2id"].head(8)[["h", "r"]]
     got = top_k_completions(spark, spark.createDataFrame(q), EMB, k=5).toPandas()
@@ -290,10 +308,12 @@ BLOCKED_CASES = [
 @pytest.mark.parametrize("model,norm,dec", BLOCKED_CASES)
 def test_blocked_ranks_equal_broadcast(spark, model, norm, dec):
     """The blocked path must reproduce the broadcast protocol for every
-    kernel × norm (score_decimals as the contract queries pass it)."""
+    kernel × norm (score_decimals as the contract queries pass it), with
+    the known set as a Spark DataFrame — the form the B12 gate passes."""
     from kgforge.evaluate import link_prediction_ranks_blocked
 
     test = spark.createDataFrame(SPLIT["test2id"].head(12))
+    known_df = spark.createDataFrame(KNOWN[["h", "t", "r"]])
     key = ["h", "t", "r"]
     a = (
         link_prediction_ranks(spark, test, EMB, KNOWN, model=model, norm=norm, score_decimals=dec)
@@ -301,7 +321,7 @@ def test_blocked_ranks_equal_broadcast(spark, model, norm, dec):
     )
     b = (
         link_prediction_ranks_blocked(
-            spark, test, EMB, KNOWN, norm=norm, model=model, score_decimals=dec
+            spark, test, EMB, known_df, norm=norm, model=model, score_decimals=dec
         ).toPandas().sort_values(key).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
@@ -401,29 +421,6 @@ def test_blocked_ranks_partition_independent(spark, tmp_path):
         spark.conf.set(batch_conf, old)
     want = link_prediction_ranks(spark, test, EMB, KNOWN).toPandas().sort_values(key)
     pd.testing.assert_frame_equal(one, want.reset_index(drop=True), check_dtype=False)
-
-
-@pytest.mark.parametrize("model,norm", [("transe", 1), ("transh", 1), ("transr", 1), ("transd", 2)])
-def test_relfilter_ranks_equal_broadcast(spark, model, norm):
-    """The relational known-filter decomposition (raw broadcast ranks −
-    join-scored correction) must equal the broadcast filter for every
-    model."""
-    from kgforge.evaluate import link_prediction_ranks_relfilter
-
-    dec = 6 if (norm == 2 or model != "transe") else None
-    test = spark.createDataFrame(SPLIT["test2id"].head(12))
-    known_df = spark.createDataFrame(KNOWN[["h", "t", "r"]])
-    key = ["h", "t", "r"]
-    a = (
-        link_prediction_ranks(spark, test, EMB, KNOWN, model=model, norm=norm, score_decimals=dec)
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    b = (
-        link_prediction_ranks_relfilter(
-            spark, test, EMB, known_df, model=model, norm=norm, score_decimals=dec
-        ).toPandas().sort_values(key).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_embedding_checkpoint_roundtrip(spark, tmp_path):

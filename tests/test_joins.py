@@ -118,44 +118,3 @@ def test_salted_join_spreads_hot_key(spark):
     plan = salted_join(left, right, "k", "rk", n_salts=16)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "explode" in plan  # the right-side replication is in the plan
-
-
-def test_sorted_clustered_write_has_disjoint_file_ranges(spark, tmp_path):
-    """Every output file's sort-key range is disjoint (pyarrow footer
-    stats), so min/max pruning can skip files — the data-skipping
-    contract of write_sorted_clustered."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from kgforge.joins import write_sorted_clustered
-
-    df = spark.range(0, 10000).select(
-        (F.col("id") * 37 % 9973).alias("k"), F.col("id").alias("payload")
-    )
-    out = str(tmp_path / "clustered")
-    write_sorted_clustered(df, out, "k", n_files=6)
-
-    ranges = []
-    for f in glob.glob(out + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.row_group(rg).num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "k"
-            )
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        if mins:
-            ranges.append((min(mins), max(maxs)))
-    assert len(ranges) >= 3  # the range exchange actually spread files
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2, ranges  # disjoint: equal keys co-locate
-
-    back = spark.read.parquet(out)
-    assert back.count() == 10000
-    assert back.agg(F.sum("payload")).collect()[0][0] == sum(range(10000))

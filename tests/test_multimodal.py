@@ -1,6 +1,6 @@
-"""Multimodal plumbing: schema, feature extraction batches, plans."""
+"""Multimodal plumbing: schema and feature extraction batches."""
 
-from kgforge.multimodal import extract_features, resize_plan, sample_frames, synth_media
+from kgforge.multimodal import extract_features, synth_media
 
 
 def test_extract_features_shape_and_determinism(spark):
@@ -11,17 +11,3 @@ def test_extract_features_shape_and_determinism(spark):
     assert all(len(v) == 16 for v in a["feat"])
     for mid in a.index:
         assert list(a.loc[mid, "feat"]) == list(b.loc[mid, "feat"])
-
-
-def test_resize_plan(spark):
-    media = synth_media(spark, n=30)
-    plan = resize_plan(media, max_side=256).toPandas()
-    assert (plan["new_width"] <= 256).all() and (plan["new_height"] <= 256).all()
-    assert (plan["scale"] <= 1.0).all()
-
-
-def test_sample_frames(spark):
-    media = synth_media(spark, n=30)
-    frames = sample_frames(media, every_ms=5000).toPandas()
-    assert (frames["frame_ts_ms"] % 5000 == 0).all()
-    assert frames.groupby("media_id").size().min() >= 1

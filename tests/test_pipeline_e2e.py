@@ -176,11 +176,12 @@ def test_dict_sizes_recorded(run_dir):
 #: down: lower it deliberately when a change saves jobs.
 STAGE_JOB_BUDGET = {
     "reassemble": 3,
-    "extract": 7,
+    "extract": 6,
     "canonicalize": 22,
     "dicts": 10,
     "link": 6,
     "materialize": 7,
+    "evaluate": 12,
 }
 
 
@@ -212,12 +213,13 @@ def unit_build(spark, tmp_path_factory):
             out_partitions=2,
         )
 
-    pipeline(str(tmp_path_factory.mktemp("unit_warm"))).run(STAGES)
+    stages = [*STAGES, "evaluate"]
+    pipeline(str(tmp_path_factory.mktemp("unit_warm"))).run(stages)
     work = str(tmp_path_factory.mktemp("unit_build"))
     pipe = pipeline(work)
     jobs = {
         s: _jobs_in_group(spark, f"stage_budget_{s}", lambda s=s: pipe.run([s]))[0]
-        for s in STAGES
+        for s in stages
     }
     return work, fdir, jobs
 
@@ -248,7 +250,7 @@ def test_read_parquet_footer_schema(spark, unit_build, tmp_path):
         return n, df
 
     outputs = [
-        "reassemble", "extract/triples", "extract/mentions", "canonicalize/alias_map",
+        "reassemble", "extract/triples", "canonicalize/alias_map",
         "canonicalize/entities", "dicts/entity2id", "dicts/relation2id", "link",
         "materialize/triples", "materialize/triples_lineage", "embeddings/components",
         "embeddings/components/component=ent",
