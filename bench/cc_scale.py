@@ -1,26 +1,26 @@
 #!/usr/bin/env python
-"""Adversarial-scale connected-components evidence (round-4 verdict #7).
+"""Adversarial-scale connected-components evidence.
 
-Two topologies, two algorithms, measured rounds + wall seconds:
+One algorithm (``canonicalize.connected_components``: hash-min with a
+hook and a pointer-jumping shortcut) on two topologies, measured rounds
++ wall seconds:
 
 * **power-law graph** (default 1M edges over 100k nodes, source ids
   log-uniform -> zipf-1-ish degree distribution with a ~60k-degree hub):
-  the realistic alias-graph shape. Both algorithms converge in a few
-  rounds (small diameter); this leg evidences that the star steps'
-  per-node ``collect_set`` neighborhoods survive a real hub at 1M-edge
-  scale, not just toy fixtures.
+  the realistic alias-graph shape — small diameter, a few rounds; this
+  leg evidences the per-node ``groupBy`` surviving a real hub at
+  1M-edge scale, not just toy fixtures.
 * **deep chain** (default 256 nodes): the adversarial diameter case.
-  hash-min label propagation moves the min label ONE hop per round —
-  O(diameter) rounds — while alternating big-star/small-star contracts
-  paths to O(log n). The round-count gap is the point of the star
-  variant (canonicalize.connected_components_star docstring).
+  Plain hash-min moves the min label ONE hop per round — O(diameter)
+  rounds; with the hook and the jump the measured rounds grow with
+  log n. Its labels are checked against the known answer: every node's
+  component is the chain's first node.
 
 Edges are generated DISTRIBUTED and deterministically (xxhash64 of the
-edge index — no RNG state, no driver-side materialization). Labels are
-cross-checked between the two algorithms on the chain leg.
+edge index — no RNG state, no driver-side materialization).
 
 Usage: python bench/cc_scale.py [--edges 1000000] [--nodes 100000]
-       [--chain 256] [--cpus 8]
+       [--chain 256] [--cpus N]   (default: session.local_cpus())
 Prints one JSON line; paste the table into BENCH/BASELINE.md.
 """
 
@@ -37,21 +37,18 @@ sys.path.insert(0, REPO)
 
 
 def main() -> int:
+    from pyspark.sql import functions as F
+
+    from kgforge.session import get_spark, local_cpus
+    from kgforge.stages.canonicalize import connected_components
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--edges", type=int, default=1_000_000)
     ap.add_argument("--nodes", type=int, default=100_000)
     ap.add_argument("--chain", type=int, default=256)
-    ap.add_argument("--cpus", type=int, default=8)
+    ap.add_argument("--cpus", type=int, default=int(local_cpus()))
     ap.add_argument("--pagerank-iters", type=int, default=5)
     args = ap.parse_args()
-
-    from pyspark.sql import functions as F
-
-    from kgforge.session import get_spark
-    from kgforge.stages.canonicalize import (
-        connected_components,
-        connected_components_star,
-    )
 
     spark = get_spark(
         master=f"local[{args.cpus}]", app_name="cc-scale",
@@ -77,12 +74,15 @@ def main() -> int:
         (F.col("id") + base).alias("a"), (F.col("id") + base + 1).alias("b")
     )
 
+    # warm-up: the first CC in a process pays ~8 s of first-use planning
+    # and codegen, which would land on whichever leg runs first
+    connected_components(chain.limit(8)).count()
     results = {}
 
-    def run(tag, fn, edges, max_iter):
+    def run(tag, edges):
         stats: dict = {}
         t0 = time.time()
-        out = fn(edges, max_iter=max_iter, stats=stats)
+        out = connected_components(edges, stats=stats)
         n_comp = out.select("component").distinct().count()
         wall = time.time() - t0
         results[tag] = {
@@ -92,8 +92,7 @@ def main() -> int:
         }
         return out
 
-    run("power_star", connected_components_star, power, 30)
-    run("power_hashmin", connected_components, power, 50)
+    run("power", power)
 
     # PageRank on the same 1M-edge graph: the other iterative-join
     # consumer of this machinery (weighted recursion, no min-fixpoint —
@@ -113,26 +112,18 @@ def main() -> int:
             "top_rank_entity": int(top[0]["e"]),
             "top_rank": top[0]["rank"],
         }
-    s = run("chain_star", connected_components_star, chain, 60)
-    h = run("chain_hashmin", connected_components, chain, args.chain + 10)
-    # correctness cross-check on the adversarial leg
-    diff = (
-        s.select("node", "component")
-        .exceptAll(h.select("node", "component"))
-        .count()
-    )
-    assert diff == 0, "star and hash-min disagree on the chain"
+    chain_cc = run("chain", chain)
+    # correctness on the adversarial leg: one component, labelled base
+    wrong = chain_cc.where(F.col("component") != base).count()
+    assert wrong == 0, f"{wrong} chain nodes not labelled {base}"
 
     out = {
-        "metric": "cc_star_vs_hashmin",
+        "metric": "cc_scale",
         "edges_powerlaw": args.edges,
         "nodes_powerlaw": args.nodes,
         "chain_len": args.chain,
         "cpus": args.cpus,
         "results": results,
-        "round_gap_chain": (
-            results["chain_hashmin"]["rounds"] / max(results["chain_star"]["rounds"], 1)
-        ),
     }
     print(json.dumps(out))
     return 0

@@ -325,8 +325,11 @@ def _emb_sides(spark: SparkSession, emb) -> tuple[DataFrame, dict[str, np.ndarra
 
 def _known_df(spark: SparkSession, known) -> DataFrame:
     """``(h, t, r)`` known triples as a DataFrame, from a DataFrame (scale
-    path) or pandas (tests/fixtures convenience). Duplicates may remain:
-    both consumers collect into sets."""
+    path) or pandas (tests/fixtures convenience); ``None`` is the empty
+    set, so filtered ranks equal raw ranks. Duplicates may remain: both
+    consumers collect into sets."""
+    if known is None:
+        return spark.createDataFrame([], "h long, t long, r long")
     if isinstance(known, pd.DataFrame):
         return spark.createDataFrame(known[["h", "t", "r"]].drop_duplicates())
     return known.select("h", "t", "r")

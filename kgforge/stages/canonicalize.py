@@ -13,14 +13,10 @@ Skew control: buckets are capped (``max_bucket``) — a degenerate bucket
 quadratically at the pair-join. Dropped buckets are observable via the
 returned stats, not silent (SURVEY.md §7.3.4).
 
-B8 (connected components): hash-min label propagation with DataFrame
-joins — GraphFrames is not in the sandbox and north_star allows either.
-``labels(n) = min(labels of n ∪ neighbors)``, iterate to fixpoint;
-``localCheckpoint()`` every iteration truncates the lineage (plan blowup
-is the classic failure here). Converges in O(diameter) rounds; alias
-graphs have tiny diameters. Each iteration: one self-join shuffle on
-``node`` — at 1000-executor scale this is the standard large-graph CC
-pattern (hash-partition on node id, AQE coalesces).
+B8 (connected components): hash-min label propagation with a hook and a
+pointer-jumping shortcut, in DataFrame joins (GraphFrames is not in the
+sandbox); ``localCheckpoint()`` every round truncates the lineage (plan
+blowup is the classic failure here). See ``connected_components``.
 """
 
 from __future__ import annotations
@@ -29,7 +25,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..sampling import splitmix64
@@ -438,26 +434,50 @@ def connected_components(
     stats: dict | None = None,
     driver_threshold: int = 0,
 ) -> DataFrame:
-    """B8: hash-min CC over ``(a, b)`` string/long edges.
+    """B8: CC over ``(a, b)`` string/long edges by hash-min with a hook
+    and pointer jumping. Returns ``(node, component)``, component = min
+    node of the component (total order of the node type).
+    ``localCheckpoint`` per round; with ``L`` the previous labels:
 
-    Returns ``(node, component)`` where component = min node in the
-    component (total order of the node type). Pure DataFrame iteration,
-    ``localCheckpoint`` per round. ``stats`` (optional dict) receives
-    ``{"rounds": n}`` on convergence — the bench/cc_scale.py evidence
-    hook for the O(diameter)-vs-O(log n) round-count comparison.
+    1. hash-min: ``m(x) = min(L(y) : y ∈ {x} ∪ Γ(x))``, one edge ⋈ ``L``
+       join and one ``groupBy(node)``;
+    2. hook: ``h(r) = min(m(z) : L(z) = r)``, a window partitioned by
+       the previous label;
+    3. jump (Shiloach–Vishkin shortcut): ``L'(x) = min(h(L(x)),
+       L(m(x)))``, one join on ``m``.
 
-    ``driver_threshold`` > 0 enables the scale-ADAPTIVE fast path: if
-    the symmetrized edge list is at most that many rows, run union-find
-    on the driver instead of the iterative join (identical output —
-    component = min member — just computed in one job instead of one
-    Spark job per round). The pipeline's alias graph is DICTIONARY-
-    scale (bounded by the gazetteer, not the corpus), so its CC wall
-    was almost entirely per-round job-scheduling overhead — the same
-    fixed cost that depresses measured scaling efficiency at high
-    parallelism. Default 0 keeps every existing caller (tests, the B8
-    contract query, cc_scale) on the distributed path; the threshold
-    gate plus the dictionary-scale argument is what makes this
-    driver-side step legal under the no-data-sized-collect rule.
+    Invariant: ``L(x) ≤ x`` is a member of x's component, and
+    ``L'(x) ≤ h(L(x)) ≤ m(x) ≤ L(x)``. At the fixpoint ``L(x) = m(x)``
+    is at most every neighbour's label, so it is constant over the
+    component and equals its min member. Hash-min alone moves a label
+    one hop per round. The jump alone keeps that on paths where a
+    stretch already holds a local min ``r``: a smaller label reaching
+    the stretch's end is in no node's jump target yet. The hook hands it
+    to every node labelled ``r`` in one round (the connect step of Liu &
+    Tarjan's connect + shortcut algorithms, SOSA'19). Measured rounds
+    grow with log n on chains in any node order: 9 for the 199-node
+    chain, 8 for the path 0-39-38-…-1, at most 10 for the worst
+    256-node orders a search found. No general bound is claimed;
+    exhausting ``max_iter`` raises.
+
+    The previous label rides the aggregate as ``_old`` (label rows
+    carry it in ``_self``, neighbour rows NULL, ``max(_self)`` picks it)
+    instead of a join back to ``L``; the ``changed`` Observation
+    compares it with the new label on the round's checkpoint, so the
+    convergence test costs no job. ``stats`` receives ``{"rounds": n}``.
+
+    Skew: the window and the jump join are keyed on labels, and in the
+    last rounds a giant component's nodes share one label. The window
+    puts that component in one task (spillable buffer, no skew split);
+    the join broadcasts a small label table and otherwise relies on
+    ``spark.sql.adaptive.skewJoin``.
+
+    ``driver_threshold`` > 0: if the symmetrized edge list has at most
+    that many rows, union-find runs on the driver (identical output, one
+    job instead of six per round). The pipeline's alias graph is
+    dictionary-scale (bounded by the gazetteer, not the corpus), which
+    is what makes this collect legal; default 0 keeps every other caller
+    (tests, the B8 contract query, cc_scale) on the distributed path.
     """
     # localCheckpoint: sym is re-joined EVERY round — without it each
     # iteration re-executes the entire upstream edge plan (at the
@@ -481,26 +501,26 @@ def connected_components(
         sym.select(F.col("x").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
+        .localCheckpoint()
     )
-    from pyspark.sql import Observation
-
-    labels = labels.localCheckpoint()
+    no_label = F.lit(None).cast(labels.schema["component"].dataType)
     for i in range(max_iter):
-        # candidate label for each node: min over self + neighbors' labels
         neigh = (
             sym.join(labels.withColumnRenamed("node", "y"), "y")
-            .select(F.col("x").alias("node"), "component")
+            .select(F.col("x").alias("node"), "component", no_label.alias("_self"))
         )
-        # convergence test rides the SAME job as the round's checkpoint:
-        # joining the old label in and observing sum(component != old)
-        # during materialization halves the per-round job count (the
-        # separate changed-count job was half the CC wall at small |E|)
-        obs = Observation(f"cc_round_{i}")
-        new_labels = (
-            labels.unionByName(neigh)
+        hashmin = (
+            labels.withColumn("_self", F.col("component"))
+            .unionByName(neigh)
             .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .join(labels.select("node", F.col("component").alias("_old")), "node")
+            .agg(F.min("component").alias("_m"), F.max("_self").alias("_old"))
+            .withColumn("_hook", F.min("_m").over(Window.partitionBy("_old")))
+        )
+        jump = labels.select(F.col("node").alias("_m"), F.col("component").alias("_jump"))
+        obs = Observation(f"cc_round_{i}")
+        labels = (
+            hashmin.join(jump, "_m")
+            .withColumn("component", F.least("_hook", "_jump"))
             .observe(
                 obs,
                 # coalesce: sum over an EMPTY label set is NULL, and
@@ -512,99 +532,9 @@ def connected_components(
             )
             .select("node", "component")
         ).localCheckpoint()
-        labels = new_labels
         if obs.get["changed"] == 0:
             if stats is not None:
                 stats["rounds"] = i + 1
             return labels
-    # silent wrong labels are worse than a loud failure: hash-min needs
-    # O(diameter) rounds — deep graphs should use connected_components_star
-    raise RuntimeError(
-        f"hash-min CC did not converge in {max_iter} rounds "
-        "(graph diameter too large — use connected_components_star)"
-    )
-
-
-def connected_components_star(
-    edges: DataFrame, max_iter: int = 25, stats: dict | None = None
-) -> DataFrame:
-    """B8 scale variant: alternating big-star/small-star CC
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm).
-
-    Hash-min label propagation (:func:`connected_components`) needs
-    O(diameter) rounds — fine for shallow alias graphs, quadratic work
-    on long chains. The star algorithm contracts paths aggressively and
-    converges in O(log n) rounds on any topology:
-
-    * large-star: per node u, attach every *strictly larger* neighbor to
-      m = min(Γ(u) ∪ {u});
-    * small-star: attach every neighbor ≤ u (and u itself) to m.
-
-    Both steps are one groupBy(u) aggregation + one generate — the same
-    shuffle shape as hash-min, but the round count drops from diameter
-    to log. Returns ``(node, component)``, identical to hash-min (tests
-    assert equality on chains, cycles, and random graphs).
-    """
-    # symmetric, self-loop-free working edge set
-    e = (
-        edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .union(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = e.select(F.col("u").alias("node")).distinct().localCheckpoint()
-
-    def _star(cur: DataFrame, large: bool) -> DataFrame:
-        grouped = (
-            cur.groupBy("u")
-            .agg(F.collect_set("v").alias("nbrs"))
-            .withColumn("m", F.least(F.col("u"), F.array_min("nbrs")))
-        )
-        src = F.explode(
-            F.filter("nbrs", lambda v: v > F.col("u"))
-            if large
-            else F.array_union(F.filter("nbrs", lambda v: v <= F.col("u")), F.array(F.col("u")))
-        )
-        return (
-            grouped.select(src.alias("x"), F.col("m"))
-            .where(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("u"), F.col("m").alias("v"))
-        )
-
-    n_e = e.count()
-    converged = False
-    for _round in range(max_iter):
-        # one large-star + one small-star round over the symmetric view
-        ls = _star(e, large=True)
-        sym_ls = ls.union(ls.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-        ss = _star(sym_ls, large=False)
-        new_e = (
-            ss.union(ss.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # converged when the edge SET is a fixpoint. The test must be
-        # symmetric: a one-direction exceptAll misses rounds that only
-        # REMOVE edges (new_e ⊊ e) — equal count + empty one-direction
-        # diff together imply set equality (both are distinct sets).
-        n_new = new_e.count()
-        changed = (n_new != n_e) or new_e.exceptAll(e).limit(1).count() > 0
-        e, n_e = new_e, n_new
-        if not changed:
-            converged = True
-            if stats is not None:
-                stats["rounds"] = _round + 1
-            break
-    if not converged:
-        # silent wrong labels are worse than a loud failure (same
-        # contract as connected_components)
-        raise RuntimeError(f"star CC did not converge in {max_iter} rounds")
-    roots = e.groupBy("u").agg(F.min("v").alias("component"))
-    return (
-        nodes.join(roots.withColumnRenamed("u", "node"), "node", "left")
-        .withColumn("component", F.least(F.coalesce("component", "node"), F.col("node")))
-    )
-
+    # silent wrong labels are worse than a loud failure
+    raise RuntimeError(f"CC did not converge in {max_iter} rounds")

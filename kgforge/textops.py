@@ -783,7 +783,7 @@ def neardup_groups(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     over-deletes (A~B, B~C, drop B and C loses C's unique content
     twice) or under-deletes; grouping by connected components over the
     pair graph is the standard resolution (same policy as the entity
-    canonicalizer, B7→B8). Plan: the B8 hash-min CC loop runs on the
+    canonicalizer, B7→B8). Plan: the B8 CC loop runs on the
     PAIR graph — component-count-sized, tiny next to the corpus — then
     one left join back to the doc table and one group-size aggregation.
     Filtering ``is_canonical`` yields the deduplicated corpus;

@@ -56,24 +56,30 @@ def test_connected_components_matches_union_find(spark):
 
 
 def test_cc_long_chain_converges(spark):
-    n = 40  # diameter 40 > default rounds? hash-min halves distance each round via min over neighbors
+    # diameter 40 > the default max_iter=25 rounds of plain hash-min; the
+    # hook + jump round needs about log n rounds on a chain
+    n = 40
     edges = [(i, i + 1) for i in range(n)]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
-    got = connected_components(df, max_iter=50).toPandas()
+    got = connected_components(df).toPandas()
     assert (got["component"] == 0).all()
 
 
-def test_star_cc_matches_hashmin_and_scales_deep_graphs(spark):
-    """connected_components_star (big/small-star, O(log n) rounds) must
-    produce identical labels to hash-min on every topology — and
-    converge on a chain whose diameter exceeds hash-min's round budget."""
-    import numpy as np
-
-    from kgforge.stages.canonicalize import connected_components_star
-
+def test_cc_matches_union_find_and_scales_deep_graphs(spark):
+    """connected_components equals the union-find oracle on a cycle,
+    stars, a random graph, a self-loop-only node and two deep paths whose
+    node ids are out of order along the path (0-39-38-…-1, where a jump
+    without the hook moves label 0 one hop per round, and a randomly
+    permuted 199-node chain), each under the default round budget; the
+    in-order 199-node chain converges in at most 10 rounds; a budget too
+    small must fail LOUDLY, never return wrong labels."""
+    perm = [int(v) for v in np.random.default_rng(5).permutation(199)]
     cases = {
         "cycle": [(i, (i + 1) % 50) for i in range(50)],
         "stars": [(0, i) for i in range(1, 20)] + [(100, 100 + i) for i in range(1, 5)],
+        "self_loop": [(1, 2), (2, 3), (7, 7)],
+        "path_0_39_down": [(0, 39)] + [(i, i - 1) for i in range(39, 1, -1)],
+        "permuted_chain": list(zip(perm, perm[1:])),
     }
     rng = np.random.default_rng(3)
     cases["random"] = [
@@ -83,23 +89,19 @@ def test_star_cc_matches_hashmin_and_scales_deep_graphs(spark):
     ]
     for name, edges in cases.items():
         df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
-        hm = connected_components(df, max_iter=200).toPandas().sort_values("node").reset_index(drop=True)
-        st = connected_components_star(df).toPandas().sort_values("node").reset_index(drop=True)
-        pd.testing.assert_frame_equal(hm, st, check_dtype=False), name
-        uf = _union_find(edges)
-        # min-of-component labels: union-find roots path-compress toward
-        # the min because we always parent the larger root
-        got = dict(zip(hm["node"], hm["component"]))
-        assert got == uf, name
+        stats: dict = {}
+        got = {r["node"]: r["component"] for r in connected_components(df, stats=stats).collect()}
+        assert got == _union_find(edges), name
+        assert stats["rounds"] <= 10, (name, stats)
 
-    # diameter-199 chain: star converges in O(log n); hash-min at the
-    # same budget must fail LOUDLY, never return wrong labels
     chain = pd.DataFrame([(i, i + 1) for i in range(199)], columns=["a", "b"])
     df = spark.createDataFrame(chain)
-    st = connected_components_star(df, max_iter=25).toPandas()
-    assert (st["component"] == 0).all()
+    stats: dict = {}
+    got = connected_components(df, stats=stats).toPandas()
+    assert len(got) == 200 and (got["component"] == 0).all()
+    assert stats["rounds"] <= 10, stats
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=25)
+        connected_components(df, max_iter=3)
 
 
 def test_minhash_recovers_alias_groups(spark):
@@ -297,11 +299,8 @@ def test_connected_components_empty_edges(spark):
     """Empty edge set converges immediately to an empty label table
     (the observe-fused convergence sum is NULL over an empty set —
     regression guard for the coalesce)."""
-    from kgforge.stages.canonicalize import connected_components_star
-
     empty = spark.createDataFrame([], "a string, b string")
     assert connected_components(empty).count() == 0
-    assert connected_components_star(empty).count() == 0
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):

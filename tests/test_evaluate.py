@@ -190,8 +190,8 @@ def _numpy_filtered_ranks(ent, rel, test, known_set):
 
 @pytest.mark.parametrize(
     "blocked,with_known",
-    [(False, True), (False, False), (True, True)],
-    ids=["known", "known-none", "known-blocked"],
+    [(False, True), (False, False), (True, True), (True, False)],
+    ids=["known", "known-none", "known-blocked", "known-none-blocked"],
 )
 def test_ranks_across_chunk_boundaries(spark, blocked, with_known):
     """|E| = 60k at d = 8 holds the broadcast path's scoring chunk to 4
@@ -201,8 +201,8 @@ def test_ranks_across_chunk_boundaries(spark, blocked, with_known):
     blocks. Ranks must equal a per-triple NumPy recomputation. The known
     set hits the filter for the first 8 triples (each with 40 other
     known heads and tails, about half scoring below the true entity)
-    and misses for the rest; ``known=None`` ranks raw-only on the
-    broadcast path (filtered == raw)."""
+    and misses for the rest; ``known=None`` ranks raw-only on both
+    paths (filtered == raw)."""
     from kgforge.evaluate import link_prediction_ranks_blocked
 
     n_ent, n_rel = 60_000, 5

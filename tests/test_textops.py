@@ -445,13 +445,21 @@ def test_pagerank_partitioning_independent(spark, op):
 
 
 def test_iterative_graph_ops_job_budget(spark):
-    """Spark jobs per round of each power-iteration loop are pinned
-    exactly, and the one-off set-up jobs (total minus rounds x per-round)
-    may only go down. A refactor that keeps every NumPy oracle green can
-    still add a job to every round; this is the test that catches it."""
+    """Spark jobs per round of each iterative loop are pinned exactly,
+    and the one-off set-up jobs (total minus rounds x per-round) may only
+    go down. A refactor that keeps every NumPy oracle green can still add
+    a job to every round; this is the test that catches it. CC runs to
+    its fixpoint, so its rounds come from ``stats`` on two chains."""
     import numpy as np
 
-    from kgforge.graphstats import hits, pagerank, pagerank_weighted, personalized_pagerank
+    from kgforge.graphstats import (
+        hits,
+        label_propagation,
+        pagerank,
+        pagerank_weighted,
+        personalized_pagerank,
+    )
+    from kgforge.stages.canonicalize import connected_components
 
     rng = np.random.default_rng(41)
     tri = pd.DataFrame(
@@ -473,6 +481,7 @@ def test_iterative_graph_ops_job_budget(spark):
         ),
         "pagerank_weighted": (lambda n: pagerank_weighted(df, n_iter=n), 5, 12),
         "hits": (lambda n: hits(df, n_iter=n), 18, 12),
+        "label_propagation": (lambda n: label_propagation(df, n_iter=n), 3, 5),
     }
 
     def n_jobs(run, n_iter, group):
@@ -489,6 +498,21 @@ def test_iterative_graph_ops_job_budget(spark):
         j2, j3 = (n_jobs(run, n, f"job_budget_{name}_{n}") for n in (2, 3))
         assert j3 - j2 == per_round, (name, j2, j3)
         assert j2 - 2 * per_round <= max_setup, (name, j2, j3)
+
+    rounds: dict = {}
+
+    def chain_cc(n):
+        rounds[n] = {}
+        chain = pd.DataFrame({"a": np.arange(n - 1), "b": np.arange(1, n)})
+        return connected_components(spark.createDataFrame(chain), stats=rounds[n])
+
+    chain_cc(4).collect()
+    j10, j40 = (n_jobs(chain_cc, n, f"job_budget_cc_{n}") for n in (10, 40))
+    r10, r40 = rounds[10]["rounds"], rounds[40]["rounds"]
+    assert r40 > r10, rounds
+    assert j40 - j10 == 6 * (r40 - r10), (j10, j40, rounds)
+    # set-up: 2 or 3 jobs, as AQE plans the first round (measured)
+    assert j10 - 6 * r10 <= 3, (j10, rounds)
 
 
 def test_round4_ops_handle_empty_inputs(spark):
