@@ -4,11 +4,13 @@
   (``zip_with`` dot product + window top-k). The correctness baseline;
   oracle-checkable in DuckDB via ``list_cosine_similarity``.
 * ``cosine_neardup_pairs`` — all pairs above a cosine threshold
-  (embedding near-dup dedup).
+  (embedding near-dup dedup); its LSH path pairs banded hyperplane
+  signatures with the shared ``canonicalize.band_pairs`` step.
 * ``lsh_topk`` — random-hyperplane LSH-bucketed approximate top-k: the
-  scale path. Sign-bit signatures via one vectorized pandas UDF, bucket
-  join, exact re-rank within buckets. At 100 TB the bucket join replaces
-  the O(N·Q) cross product with O(candidates).
+  scale path. One-band ``lsh_band_signatures`` (all ``n_planes`` sign
+  bits in one bucket key), query-bucket join, exact re-rank within
+  buckets. At 100 TB the bucket join replaces the O(N·Q) cross product
+  with O(candidates).
 
 Scores are computed as IEEE doubles; outputs carry ``(query, neighbor,
 rk)`` ordering rather than raw floats where hash-exact oracle parity is
@@ -95,12 +97,12 @@ def cosine_neardup_pairs(
 
     * ``"lsh"`` — the scale path: banded random-hyperplane signatures
       (``n_bands`` bands of ``band_planes`` sign bits), same-(band,
-      bucket) candidate join, exact cosine re-verify. Every *reported*
-      pair is exact; recall is 1 − (1 − p^r)^b with p = 1 − θ/π — at
-      the defaults and cos ≥ 0.93 that is > 0.9999, and the candidate
-      join touches ~b·N²/2^r pairs instead of N²/2 (×800 fewer at the
-      defaults). tests assert LSH == exact output on the planted
-      near-dup fixture.
+      bucket) candidate pairs (``band_pairs``), exact cosine re-verify.
+      Every *reported* pair is exact; recall is 1 − (1 − p^r)^b with
+      p = 1 − θ/π — at the defaults and cos ≥ 0.93 that is > 0.9999,
+      and the pair step builds ~b·N²/2^r pairs instead of N²/2 (×800
+      fewer at the defaults). tests assert LSH == exact output on the
+      planted near-dup fixture.
     * ``"exact"`` — the O(N²) self-join. Deliberately kept: for LOW
       thresholds (τ ≲ 0.7) hyperplane collision probabilities are so
       flat that LSH generates *more* candidate pairs than the cross
@@ -132,18 +134,13 @@ def cosine_neardup_pairs(
             .where(F.col("cos") >= threshold)
             .select("a", "b")
         )
+    from .stages.canonicalize import band_pairs
+
     sig = lsh_band_signatures(
         embeddings, n_bands=n_bands, band_planes=band_planes, dim=dim, seed=seed,
         id_col=id_col, vec_col=vec_col,
     )
-    sa = sig.select(F.col(id_col).alias("a"), "band", "bucket")
-    sb = sig.select(F.col(id_col).alias("b"), "band", "bucket")
-    cands = (
-        sa.join(sb, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
+    cands = band_pairs(sig, id_col)
     va = _w_norm("a", "va")
     vb = _w_norm("b", "vb")
     return (
@@ -195,34 +192,6 @@ def lsh_band_signatures(
             yield pd.DataFrame(
                 {id_col: ids, "band": bands, "bucket": buckets.ravel()}
             )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(fn, schema)
-
-
-def lsh_signatures(
-    embeddings: DataFrame,
-    n_planes: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane sign signature (one int bucket per vector)."""
-    from .session import ensure_min_partitions
-
-    embeddings = ensure_min_partitions(embeddings)
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_planes, dim)).astype("float64")
-    schema = f"{id_col} long, bucket long"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")  # [B, dim]
-            signs = (mat @ planes.T) > 0  # [B, n_planes]
-            bucket = (signs.astype(np.uint64) << np.arange(n_planes, dtype=np.uint64)).sum(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "bucket": bucket.astype("int64")})
 
     return embeddings.select(id_col, vec_col).mapInPandas(fn, schema)
 
@@ -436,11 +405,11 @@ def lsh_topk(
     Recall < 1 by construction; raise multiprobe / lower n_planes to
     trade compute for recall.
     """
-    e_sig = lsh_signatures(embeddings, n_planes, dim, id_col=id_col, vec_col=vec_col)
-    q_sig = lsh_signatures(
-        queries.select(F.col(query_id_col).alias(id_col), vec_col),
-        n_planes, dim, id_col=id_col, vec_col=vec_col,
-    ).withColumnRenamed(id_col, query_id_col)
+    one_band = dict(n_bands=1, band_planes=n_planes, dim=dim, id_col=id_col, vec_col=vec_col)
+    e_sig = lsh_band_signatures(embeddings, **one_band).drop("band")
+    q_sig = lsh_band_signatures(
+        queries.select(F.col(query_id_col).alias(id_col), vec_col), **one_band
+    ).select(F.col(id_col).alias(query_id_col), "bucket")
     if multiprobe >= 1:
         # expand each query signature to its Hamming-1 neighborhood
         probes = F.array(

@@ -4,14 +4,16 @@ iterative-join connected components.
 B7 (MinHash-LSH): char-shingle each name, minhash with ``n_perm``
 universal-hash permutations (counter-based splitmix64 — deterministic,
 partition-independent), band the signature, ``groupBy(band, band_hash)``
-to form candidate buckets, join within buckets to candidate pairs, then
-verify with exact Jaccard. All vectorized NumPy inside one
+to form candidate buckets, pair within buckets (:func:`band_pairs`, the
+pair step the SimHash and hyperplane-LSH paths share), then verify with
+exact Jaccard. All vectorized NumPy inside one
 ``mapInPandas`` (signatures) + built-in joins/aggs (banding, pairing).
 
 Skew control: buckets are capped (``max_bucket``) — a degenerate bucket
 (e.g. every name sharing a stop-shingle band) would otherwise explode
-quadratically at the pair-join. Dropped buckets are observable via the
-returned stats, not silent (SURVEY.md §7.3.4).
+quadratically at the pair step. The drops are silent: nothing counts or
+returns them until the shared cost probe (ROADMAP direction 1) can carry
+a drop counter.
 
 B8 (connected components): hash-min label propagation with a hook and a
 pointer-jumping shortcut, in DataFrame joins (GraphFrames is not in the
@@ -188,6 +190,40 @@ def hash_shingle(s: str, seed: int) -> int:
     return h
 
 
+def band_pairs(banded: DataFrame, id_col: str, max_bucket: int | None = None) -> DataFrame:
+    """The one LSH pair step: ``(id, band, bucket)`` rows → distinct
+    ``(a, b)`` pairs with ``a < b`` that share a bucket in some band.
+
+    A bucket of more than ``max_bucket`` ids is dropped before any pair
+    is built (skew cap; see module docstring); ``None`` keeps every
+    bucket. ``id_col`` may be any orderable type, a struct included
+    (structs compare field by field, first field first).
+
+    Shape: the cap's ``count`` window, the ``collect_list`` and the pair
+    expansion all ride one ``(band, bucket)`` exchange, and the pair
+    dedup is the second and last. The expansion is two-level —
+    ``posexplode(ids)``, then ``explode`` of the ids after each one — so
+    no row ever holds more than one bucket's ids: pairs stream out,
+    the quadratic set of a hot bucket is never one array.
+    """
+    if max_bucket is not None:
+        n = F.count("*").over(Window.partitionBy("band", "bucket"))
+        banded = banded.withColumn("_n", n).where(F.col("_n") <= max_bucket)
+    ids = (
+        banded.groupBy("band", "bucket")
+        .agg(F.collect_list(id_col).alias("_ids"))
+        .select("_ids", F.posexplode("_ids").alias("_pos", "_x"))
+    )
+    xy = ids.select(
+        "_x", F.explode(F.expr("slice(_ids, _pos + 2, size(_ids) - _pos - 1)")).alias("_y")
+    )
+    return (
+        xy.select(F.least("_x", "_y").alias("a"), F.greatest("_x", "_y").alias("b"))
+        .where(F.col("a") < F.col("b"))
+        .dropDuplicates(["a", "b"])
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     name_col: str = "name",
@@ -196,11 +232,13 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """B7 steps 2-3: band signatures → bucket → intra-bucket pairs.
 
-    Output: ``(a, b)`` candidate pairs with a < b. Buckets larger than
-    ``max_bucket`` are dropped (skew cap; see module docstring).
+    Band ``b`` of a signature is its ``b``-th slice of ``size(sig) //
+    n_bands`` values, bucketed by ``xxhash64(slice, b)``; the pairs come
+    from :func:`band_pairs`. Output: ``(a, b)`` candidate pairs with
+    a < b. Buckets larger than ``max_bucket`` are dropped (skew cap;
+    see module docstring).
     """
-    n_perm_col = F.size("sig")
-    rows_per_band = (n_perm_col / n_bands).cast("int")
+    rows_per_band = (F.size("sig") / n_bands).cast("int")
     banded = signatures.select(
         F.col(name_col),
         F.explode(
@@ -215,39 +253,7 @@ def lsh_candidate_pairs(
             )
         ).alias("bb"),
     ).select(name_col, "bb.band", "bb.bucket")
-
-    sized = banded.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band", "bucket"))
-    )
-    # intra-bucket pairs via collect_list + combination expansion in ONE
-    # plan: the groupBy rides the window's (band, bucket) partitioning —
-    # no second corpus exchange, no self-join, no checkpoint (the old
-    # checkpoint + broadcast self-join + dedup shape cost 3 extra
-    # materializations; the executed plan here shows exactly 2 Exchanges
-    # total: the banding shuffle and the final pair dedup). The
-    # bucket_n <= max_bucket filter runs BEFORE collect_list, so no
-    # aggregation row ever exceeds max_bucket ids (degenerate stop-
-    # buckets never materialize as arrays). least/greatest normalizes
-    # pair order (ids within a bucket are distinct).
-    ok = sized.where(F.col("bucket_n") <= max_bucket).drop("bucket_n")
-    grp = (
-        ok.groupBy("band", "bucket")
-        .agg(F.collect_list(name_col).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    return (
-        grp.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(least(x, y) as a, greatest(x, y) as b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .dropDuplicates(["a", "b"])
-    )
+    return band_pairs(banded, name_col, max_bucket)
 
 
 def verify_jaccard(joined: DataFrame, threshold: float) -> DataFrame:

@@ -13,6 +13,7 @@ double division; no engine-ordered float accumulation in outputs).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -364,7 +365,8 @@ def simhash_docs(docs: DataFrame, bits: int = 64) -> DataFrame:
     """64-bit SimHash over word tokens (vectorized NumPy per Arrow batch).
 
     Near-dups have small Hamming distance; pairing is done by banding the
-    hash into 4 x 16-bit keys (exact match on any band → candidate).
+    hash into 4 x 16-bit keys (exact match on any band → candidate; see
+    :func:`simhash_candidate_pairs`).
     Output: ``doc_id, simhash (bigint)``.
     """
     schema = "doc_id long, simhash long"
@@ -426,12 +428,22 @@ def simhash_docs(docs: DataFrame, bits: int = 64) -> DataFrame:
 
 
 def simhash_candidate_pairs(sim: DataFrame, band_bits: int = 16, max_hamming: int = 6) -> DataFrame:
-    """Band the simhash into 16-bit keys; same-band docs are candidates;
-    verify by exact Hamming distance (bit_count of xor)."""
-    n_bands = 63 // band_bits
+    """Band the 63-bit simhash into ``ceil(63 / band_bits)`` keys of
+    ``band_bits`` bits (4 x 16 at the default, the last band 15 bits);
+    docs equal on any band are candidates (:func:`~kgforge.stages.
+    canonicalize.band_pairs`); verify by exact Hamming distance
+    (bit_count of xor). Pigeonhole: a pair at Hamming distance < the
+    band count keeps one band intact, so it is always a candidate.
+
+    The pair ids are ``struct(doc_id, simhash)``: structs order by
+    their first field, so pairs and their dedup are those of
+    ``doc_id``, and the verify reads both hashes without a join back.
+    """
+    from .stages.canonicalize import band_pairs
+
+    n_bands = math.ceil(63 / band_bits)
     banded = sim.select(
-        "doc_id",
-        "simhash",
+        F.struct("doc_id", "simhash").alias("id"),
         F.explode(
             F.array(
                 *[
@@ -439,20 +451,20 @@ def simhash_candidate_pairs(sim: DataFrame, band_bits: int = 16, max_hamming: in
                         F.lit(b).alias("band"),
                         F.shiftright("simhash", b * band_bits)
                         .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("key"),
+                        .alias("bucket"),
                     )
                     for b in range(n_bands)
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key")
-    a = banded.select(F.col("doc_id").alias("a"), F.col("simhash").alias("ha"), "band", "key")
-    b = banded.select(F.col("doc_id").alias("b"), F.col("simhash").alias("hb"), "band", "key")
+    ).select("id", "bk.band", "bk.bucket")
     return (
-        a.join(b, ["band", "key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"))
-        .dropDuplicates(["a", "b"])
+        band_pairs(banded, "id")
+        .select(
+            F.col("a.doc_id").alias("a"),
+            F.col("b.doc_id").alias("b"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
+        )
         .where(F.col("hamming") <= max_hamming)
     )
 
@@ -514,7 +526,7 @@ def minhash_neardup_docs(
 ) -> DataFrame:
     """MinHash-LSH near-duplicate document pairs (scale path for dedup).
 
-    shingle→minhash→band→bucket-join→exact-Jaccard-verify, reusing the
+    shingle→minhash→band→bucket→pairs→exact-Jaccard-verify, reusing the
     B7 machinery keyed by doc_id.
     Output: ``a, b, jaccard`` (doc_id pairs).
     """

@@ -16,6 +16,7 @@ from kgforge.fixtures import gazetteer
 from kgforge.sampling import splitmix64
 from kgforge.stages.canonicalize import (
     alias_pairs,
+    band_pairs,
     char_shingles,
     connected_components,
     exact_jaccard_filter,
@@ -438,3 +439,54 @@ def test_driver_alias_pairs_equals_distributed(spark):
     over = alias_pairs(names, threshold=0.5, driver_threshold=2).toPandas()
     over = over.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(dist, over, check_like=True)
+
+
+def _banded(spark, buckets):
+    """``(id, band, bucket)`` rows: ``buckets`` maps (band, bucket) to
+    its ids."""
+    rows = [(i, band, bucket) for (band, bucket), ids in buckets.items() for i in ids]
+    return spark.createDataFrame(rows, "id long, band int, bucket long")
+
+
+def _pairs(df):
+    """The ``(a, b)`` rows, sorted, duplicates kept."""
+    return sorted(map(tuple, df.toPandas()[["a", "b"]].itertuples(index=False)))
+
+
+def _all_pairs(ids):
+    return {(x, y) for x in ids for y in ids if x < y}
+
+
+def test_band_pairs_max_bucket_cap(spark):
+    """A bucket of exactly max_bucket ids yields all C(n, 2) pairs; one
+    of max_bucket + 1 ids is dropped before pairing. Without a cap both
+    pair, and a pair that shares two buckets comes out once."""
+    at_cap, over_cap = [5, 1, 9, 3], [10, 14, 12, 11, 13]
+    banded = _banded(spark, {(0, 7): at_cap, (1, 7): over_cap, (2, -4): [5, 1]})
+    assert _pairs(band_pairs(banded, "id", max_bucket=4)) == sorted(_all_pairs(at_cap))
+    assert _pairs(band_pairs(banded, "id")) == sorted(_all_pairs(at_cap) | _all_pairs(over_cap))
+
+
+def test_band_pairs_struct_ids_pair_like_plain_ids(spark):
+    """struct(id, payload) ids give the plain-id pairs: structs order by
+    their first field, so least/greatest and the dedup follow ``id``."""
+    buckets = {(0, 1): [4, 2, 8], (1, 1): [8, 3, 2], (1, 2): [6, 7], (2, 5): [1]}
+    plain = band_pairs(_banded(spark, buckets), "id")
+    # the payload descends as the id ascends, so ordering by it would flip pairs
+    structs = _banded(spark, buckets).select(
+        F.struct("id", (100 - F.col("id")).alias("p")).alias("id"), "band", "bucket"
+    )
+    got = band_pairs(structs, "id").select(
+        F.col("a.id").alias("a"), F.col("b.id").alias("b"), F.col("a.p").alias("pa")
+    )
+    want = [(2, 3), (2, 4), (2, 8), (3, 8), (4, 8), (6, 7)]
+    assert _pairs(plain) == want
+    pdf = got.toPandas()
+    assert sorted(map(tuple, pdf[["a", "b"]].itertuples(index=False))) == want
+    assert (pdf["pa"] == 100 - pdf["a"]).all()
+
+
+def test_band_pairs_empty_input(spark):
+    empty = _banded(spark, {})
+    assert band_pairs(empty, "id").count() == 0
+    assert band_pairs(empty, "id", max_bucket=3).count() == 0

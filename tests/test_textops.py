@@ -111,6 +111,19 @@ def test_simhash_neardup(spark, docs):
     assert ham > 10
 
 
+def test_simhash_bands_cover_all_63_bits(spark):
+    """One flipped bit in each of the first three 16-bit bands leaves
+    only the top band (bits 48-62) intact; the pair is at Hamming
+    distance 3 < 4 bands, so the pigeonhole makes it a candidate."""
+    far = (1 << 0) | (1 << 16) | (1 << 32)
+    sim = spark.createDataFrame([(1, 0), (2, far)], "doc_id long, simhash long")
+    got = textops.simhash_candidate_pairs(sim, max_hamming=64).toPandas()
+    assert list(map(tuple, got[["a", "b", "hamming"]].itertuples(index=False))) == [(1, 2, 3)]
+    # a flip in every band leaves none intact: not a candidate
+    sim4 = spark.createDataFrame([(1, 0), (2, far | (1 << 48))], "doc_id long, simhash long")
+    assert textops.simhash_candidate_pairs(sim4, max_hamming=64).count() == 0
+
+
 def test_char_shingle_table_matches_string_sets(spark, docs):
     """Hashed shingle arrays must equal the string-set recipe exactly
     (same normalization, same FNV values) — so array_intersect Jaccard
