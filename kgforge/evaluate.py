@@ -413,7 +413,10 @@ def link_prediction_ranks_blocked(
     size: the gate ranks ≤500 triples against a dictionary of tens of
     entities, where this path runs fewer jobs.
     """
-    ents, rel = _emb_sides(spark, emb)
+    # only what the model scores with: a checkpoint carries every
+    # model's components, and each entity one rides every join below
+    read = kernels.SCORE_COMPONENTS[model]
+    ents, rel = _emb_sides(spark, {k: v for k, v in emb.items() if k in read})
     ent_keys = [c for c in ents.columns if c != "id"]
 
     # one pass over the entity table: the test triples, broadcast, once

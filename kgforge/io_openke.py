@@ -187,13 +187,15 @@ def read_embedding_df(spark: SparkSession, in_dir: str, component: str) -> DataF
 
 def read_embeddings_parquet(spark: SparkSession, in_dir: str) -> dict[str, np.ndarray]:
     """A20 import for the broadcast path: checkpoint → NumPy dict,
-    reshaped per meta.json. Parameter-sized by design (|E|·d floats);
-    one read job for all components."""
+    reshaped per meta.json. Parameter-sized by design (|E|·d floats), so
+    the driver reads the files itself (``pd.read_parquet``, the hive
+    ``component`` column from the directory names) and no Spark job
+    runs."""
     import json
 
     with open(os.path.join(in_dir, "meta.json")) as f:
         dims = json.load(f)["dims"]
-    pdf = read_parquet(spark, os.path.join(in_dir, "components")).toPandas()
+    pdf = pd.read_parquet(os.path.join(in_dir, "components"))
     out: dict[str, np.ndarray] = {}
     for key, shape in dims.items():
         part = pdf[pdf["component"] == key].sort_values("id")

@@ -183,6 +183,22 @@ def hole(h: np.ndarray, r: np.ndarray, t: np.ndarray) -> np.ndarray:
     return -np.einsum("...i,...ik,...k->...", h, tg, r, order="C")
 
 
+#: The ``emb`` components :func:`score_batch` reads, per model.
+SCORE_COMPONENTS = {
+    "transe": ("ent", "rel"),
+    "distmult": ("ent", "rel"),
+    "hole": ("ent", "rel"),
+    "complex": ("ent", "ent_im", "rel", "rel_im"),
+    "rescal": ("ent", "rel", "mat"),
+    "rotate": ("ent", "ent_im", "rot_re", "rot_im"),
+    "analogy": ("ent", "ent_im", "ent_sc", "rel", "rel_im", "rel_sc"),
+    "simple": ("ent", "ent_tail", "rel", "rel_inv"),
+    "transh": ("ent", "rel", "norm"),
+    "transr": ("ent", "rel", "mat"),
+    "transd": ("ent", "ent_p", "rel", "rel_p"),
+}
+
+
 def score_batch(
     model: str,
     emb: dict[str, np.ndarray],

@@ -6,7 +6,8 @@ recalled — SURVEY.md §0). Here the unit of resumability is a *stage
 output*: each stage commits (output parquet + ``_SUCCESS``) and then a
 manifest entry keyed by the stage name and a fingerprint of its inputs.
 On resume, a stage whose manifest entry exists with a matching input
-fingerprint is skipped; any input change invalidates it and everything
+fingerprint is skipped while its outputs are still committed (the
+pipeline checks them); any input change invalidates it and everything
 downstream recomputes.
 
 Entries are single JSON files written atomically (tmp + rename), so a

@@ -9,9 +9,11 @@ operator, not a stage output: no stage reads mentions.
 Each stage is a pure DataFrame → DataFrame function wrapped with:
 read inputs → build plan → execute → write parquet + ``_SUCCESS`` →
 manifest commit (B11). ``--resume`` skips stages whose manifest entry
-matches the current input fingerprint; changing any upstream output
-invalidates everything downstream automatically (the fingerprint of a
-stage includes its input stage's output listing).
+matches the current input fingerprint and whose outputs are all still
+committed (a deleted output, or one without ``_SUCCESS``, re-runs the
+stage); changing any upstream output invalidates everything downstream
+automatically (the fingerprint of a stage includes its input stage's
+output listing).
 
 Launch: ``spark-submit --py-files kgforge.zip run_pipeline.py ...``.
 """
@@ -24,29 +26,37 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import fixtures, io_openke
 from .manifest import Manifest, fingerprint_config, fingerprint_paths
-from .session import read_parquet
+from .session import read_parquet, tiny_df
 from .stages import extract, link, materialize, reassemble
 
 
-def _write(df: DataFrame, path: str, partitions: int | None = None) -> None:
-    w = df.repartition(partitions) if partitions else df
-    w.write.mode("overwrite").parquet(path)
+#: Up to this many distinct alias names, canonicalize runs B7/B8 on the
+#: driver (see ``Pipeline.stage_canonicalize``).
+_DRIVER_NAMES = 10_000
 
 
-def _write_counted(df: DataFrame, path: str, partitions: int | None = None) -> int:
+def _write(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
+
+
+def _write_counted(df: DataFrame, path: str) -> int:
     """Write + row count in ONE job: the count rides the write via
     ``df.observe`` instead of a count-after-write re-read — each re-read
     was a whole extra (footer-only, but scheduled) job per stage."""
-    from pyspark.sql import Observation
-
     obs = Observation()
-    _write(df.observe(obs, F.count(F.lit(1)).alias("n")), path, partitions)
+    _write(df.observe(obs, F.count(F.lit(1)).alias("n")), path)
     return int(obs.get["n"])
+
+
+def _committed(path: str) -> bool:
+    """Whether a stage output is still there: a file, or a Spark output
+    directory with its ``_SUCCESS`` marker."""
+    return os.path.isfile(path) or os.path.isfile(os.path.join(path, "_SUCCESS"))
 
 
 class Pipeline:
@@ -111,9 +121,9 @@ class Pipeline:
     def _out(self, stage: str) -> str:
         return os.path.join(self.work, stage)
 
-    def _run_stage(self, stage: str, input_paths: list[str], fn) -> None:
+    def _run_stage(self, stage: str, input_paths: list[str], outputs: list[str], fn) -> None:
         fp = fingerprint_paths(*input_paths) + ":" + self.cfg_fp
-        if self.resume and self.manifest.is_done(stage, fp):
+        if self.resume and self.manifest.is_done(stage, fp) and all(map(_committed, outputs)):
             self.timings[stage] = 0.0
             return
         t0 = time.time()
@@ -122,9 +132,6 @@ class Pipeline:
         self.timings[stage] = wall / 1000
         rows = extra.pop("row_count", None)
         self.manifest.commit(stage, fp, rows, wall, extra=extra or None)
-
-    def _gaz(self):
-        return read_parquet(self.spark, self.gazetteer_path)
 
     # -- stages -------------------------------------------------------------
 
@@ -138,8 +145,9 @@ class Pipeline:
 
     def stage_extract(self) -> dict:
         turns = read_parquet(self.spark, self._out("reassemble"))
-        gaz_pdf = self._gaz().toPandas()
-        pat_pdf = read_parquet(self.spark, self.patterns_path).toPandas()
+        # dictionary-sized inputs: the driver reads them without a job
+        gaz_pdf = pd.read_parquet(self.gazetteer_path)
+        pat_pdf = pd.read_parquet(self.patterns_path)
         tri = extract.extract_triples(turns, gaz_pdf, pat_pdf)
         tri = extract.surface_triples_dedup(tri)
         n = _write_counted(tri, os.path.join(self._out("extract"), "triples"))
@@ -154,69 +162,66 @@ class Pipeline:
         merge two *different* known canonicals are dropped (supervised
         anchoring), every component maps to its (min) anchored canonical,
         components with no anchor canonicalize to their min surface —
-        so unseen alias variants ride along with known groups.
+        so unseen alias variants ride along with known groups. A surface
+        the gazetteer lists under two canonicals is known as the min one.
 
-        Outputs: ``alias_map(surface, canonical)`` — the link stage's
-        dictionary — and ``entities(canonical, aliases)``.
+        The alias universe is dictionary-scale (distinct surfaces, not
+        the corpus). Up to ``_DRIVER_NAMES`` names it comes back in one
+        collect, and the pairs, the anchor filter and union-find run on
+        the driver; above that the distributed ``alias_pairs →
+        connected_components`` chain runs. Either way one Spark plan
+        builds ``alias_map(surface, canonical)`` — the link stage's
+        dictionary — and ``entities(canonical, aliases)`` from it: 8
+        jobs on the unit fixture.
         """
         from .stages import canonicalize as canon
 
         tri = read_parquet(self.spark, os.path.join(self._out("extract"), "triples"))
-        gaz = self._gaz()
-        gazmap = gaz.select("surface", "canonical").dropDuplicates(["surface"])
-        # pinned: referenced by the LSH chain AND the alias_map build —
-        # each reference would otherwise re-read + re-distinct the triples
+        gaz = pd.read_parquet(self.gazetteer_path, columns=["surface", "canonical"])
+        own = gaz.groupby("surface", as_index=False)["canonical"].min()
+        canon_of = dict(zip(own["surface"], own["canonical"]))
+        own_df = tiny_df(self.spark, own.itertuples(index=False), "name string, _own string")
+        # pinned: the gate's collect, the distributed chain and the
+        # alias_map plan all read it
         names = (
             tri.select(F.col("subj").alias("name"))
             .unionByName(tri.select(F.col("obj").alias("name")))
-            .unionByName(gaz.select(F.col("surface").alias("name")))
+            .unionByName(own_df.select("name"))
             .distinct()
             .localCheckpoint(eager=False)
         )
-        # driver_threshold: like the CC fast path below, the alias
-        # universe is dictionary-scale, so the LSH chain's ~10 small
-        # jobs collapse into one driver pass under the gate (identical
-        # output; above the gate the distributed chain runs unchanged)
-        pairs = canon.alias_pairs(names, threshold=0.5, driver_threshold=10_000)
-        a_can = gazmap.select(F.col("surface").alias("a"), F.col("canonical").alias("_ca"))
-        b_can = gazmap.select(F.col("surface").alias("b"), F.col("canonical").alias("_cb"))
-        anchored = (
-            pairs.join(F.broadcast(a_can), "a", "left")
-            .join(F.broadcast(b_can), "b", "left")
-            .where(
-                F.col("_ca").isNull() | F.col("_cb").isNull() | (F.col("_ca") == F.col("_cb"))
+        head = names.limit(_DRIVER_NAMES + 1).toPandas()["name"]
+        if len(head) <= _DRIVER_NAMES:
+            pairs = canon.drop_cross_anchor(canon.alias_pairs_local(head.tolist()), canon_of)
+            cc = tiny_df(
+                self.spark, canon.unionfind_components(pairs).itertuples(index=False),
+                "node string, component string",
             )
-            .select("a", "b")
-        )
-        # driver_threshold: the alias graph is DICTIONARY-scale (bounded
-        # by distinct surfaces, not the corpus), so its CC wall is
-        # per-round job overhead — the union-find fast path collapses
-        # ~8 scheduling rounds into one job below the gate; above it the
-        # distributed loop runs unchanged (see connected_components)
-        cc = canon.connected_components(anchored, driver_threshold=100_000)
-        # component -> min known canonical (if any anchor in component)
-        comp_canon = (
-            cc.join(gazmap.withColumnRenamed("surface", "node"), "node", "left")
-            .groupBy("component")
-            .agg(F.min("canonical").alias("anchor_canonical"))
-        )
+        else:
+            pairs = canon.alias_pairs(names)
+            cc = canon.connected_components(pairs.mapInPandas(
+                lambda it: (canon.drop_cross_anchor(p, canon_of) for p in it), pairs.schema
+            ))
+        # fallback chain: anchored canonical (the min known canonical in
+        # the component, own one included) > min surface in component
         alias_map = (
-            names.join(cc.withColumnRenamed("node", "name"), "name", "left")
+            names.join(F.broadcast(cc.withColumnRenamed("node", "name")), "name", "left")
+            .join(F.broadcast(own_df), "name", "left")
             .withColumn("component", F.coalesce("component", "name"))
-            .join(F.broadcast(comp_canon), "component", "left")
-            # fallback chain: anchored canonical > own gazetteer canonical > min surface in component
-            .join(F.broadcast(gazmap.withColumnRenamed("surface", "name").withColumnRenamed("canonical", "_own")), "name", "left")
-            .withColumn("canonical", F.coalesce("anchor_canonical", "_own", "component"))
-            .select(F.col("name").alias("surface"), "canonical")
+            .select(
+                F.col("name").alias("surface"),
+                F.coalesce(
+                    F.min("_own").over(Window.partitionBy("component")), "component"
+                ).alias("canonical"),
+            )
+            .localCheckpoint(eager=False)
         )
-        n = _write_counted(alias_map, os.path.join(self._out("canonicalize"), "alias_map"), 1)
-        # the entities rollup reads the written parquet back rather than
-        # re-executing the alias_map join plan
-        ents = (
-            self._alias_map().groupBy("canonical")
-            .agg(F.sort_array(F.collect_set("surface")).alias("aliases"))
+        out = self._out("canonicalize")
+        n = _write_counted(alias_map.coalesce(1), os.path.join(out, "alias_map"))
+        ents = alias_map.groupBy("canonical").agg(
+            F.sort_array(F.collect_set("surface")).alias("aliases")
         )
-        _write(ents, os.path.join(self._out("canonicalize"), "entities"), 1)
+        _write(ents.coalesce(1), os.path.join(out, "entities"))
         return {"row_count": n}
 
     def _alias_map(self):
@@ -224,13 +229,14 @@ class Pipeline:
 
     def stage_dicts(self) -> dict:
         # one dense-id path (materialize.dense_ids): a single-partition
-        # sort, sized for dictionary cardinality. The dictionary sizes
+        # sort, sized for dictionary cardinality, so each dictionary is
+        # written as one file with no repartition. The dictionary sizes
         # ride the writes, so sizing the embeddings needs no re-read.
         pats = read_parquet(self.spark, self.patterns_path)
         e2id = materialize.dense_ids(self._alias_map().select(F.col("canonical").alias("name")))
         r2id = materialize.dense_ids(pats.select(F.col("pred").alias("name")))
-        n_ent = _write_counted(e2id, os.path.join(self._out("dicts"), "entity2id"), 1)
-        n_rel = _write_counted(r2id, os.path.join(self._out("dicts"), "relation2id"), 1)
+        n_ent = _write_counted(e2id, os.path.join(self._out("dicts"), "entity2id"))
+        n_rel = _write_counted(r2id, os.path.join(self._out("dicts"), "relation2id"))
         # A20: the model parameters the link/eval stages score with live
         # in a Parquet (id, vec) checkpoint. A trained checkpoint
         # (training.train* → io_openke.write_embeddings_parquet) plugs in
@@ -258,7 +264,8 @@ class Pipeline:
         """Link-scoring parameters from the A20 Parquet checkpoint
         (written by stage_dicts, or an external trained checkpoint via
         ``embeddings_path``). NumPy load is parameter-sized by design —
-        the same matrices get broadcast to every worker anyway."""
+        the same matrices get broadcast to every worker anyway — and
+        the driver reads the files without a Spark job."""
         return io_openke.read_embeddings_parquet(self.spark, self._emb_dir())
 
     def stage_link(self) -> dict:
@@ -357,7 +364,8 @@ class Pipeline:
         set itself as the known-triple filter, consumed **relationally**
         (joined into per-candidate skip lists; the gate never collects
         the KG to the driver — only the ≤500-row test sample, its h/t
-        vectors and the final one-row metrics land there).
+        vectors and the final one-row metrics land there). 7 jobs on the
+        unit fixture.
         """
         from . import evaluate as ev
 
@@ -371,9 +379,12 @@ class Pipeline:
         emb = self._embeddings()
         ranks = ev.link_prediction_ranks_blocked(
             self.spark, test, emb, tri, model=self.model, norm=self.norm
-        ).localCheckpoint()  # ≤500 rows; one execution feeds metrics + count
-        metrics = ev.link_prediction_metrics(ranks).toPandas().iloc[0].to_dict()
-        metrics["n_gate_triples"] = int(ranks.count())
+        )
+        # the gate count rides the metrics query: one execution of ranks
+        obs = Observation()
+        counted = ranks.observe(obs, F.count(F.lit(1)).alias("n"))
+        metrics = ev.link_prediction_metrics(counted).collect()[0].asDict()
+        metrics["n_gate_triples"] = obs.get["n"]
         with open(os.path.join(self.work, "eval_metrics.json"), "w") as f:
             json.dump({k: float(v) for k, v in metrics.items()}, f, indent=1, sort_keys=True)
         return {"hits10_filt": float(metrics["hits10_filt"]), "mrr_filt": float(metrics["mrr_filt"])}
@@ -391,6 +402,19 @@ class Pipeline:
             "materialize": [self._out("link"), self._out("dicts")],
             "evaluate": [self._out("materialize"), self._emb_dir()],
         }
+        out = self._out
+        exp = os.path.join(out("materialize"), "openke")
+        outputs = {
+            "reassemble": [out("reassemble")],
+            "extract": [os.path.join(out("extract"), "triples")],
+            "canonicalize": [os.path.join(out("canonicalize"), t) for t in ("alias_map", "entities")],
+            "dicts": [os.path.join(out("dicts"), t) for t in ("entity2id", "relation2id")]
+            + ([os.path.join(self._emb_dir(), "components")] if self.embeddings_path is None else []),
+            "link": [out("link")],
+            "materialize": [os.path.join(out("materialize"), "triples")]
+            + [os.path.join(exp, f"{t}.txt") for t in ("entity2id", "relation2id", "train2id")],
+            "evaluate": [os.path.join(self.work, "eval_metrics.json")],
+        }
         for s in stages:
-            self._run_stage(s, deps[s], getattr(self, f"stage_{s}"))
+            self._run_stage(s, deps[s], outputs[s], getattr(self, f"stage_{s}"))
         return {"timings_sec": self.timings, "manifest": self.manifest.entries()}

@@ -104,25 +104,61 @@ def _first_data_file(path: str) -> str | None:
     return None
 
 
+def _footer_spark_type(t):
+    """The Spark type that schema inference gives a Parquet column whose
+    footer maps to Arrow type ``t``, all nullable as inference makes
+    them; ``None`` where the mapping is not known to agree (nanosecond
+    timestamps, unsigned ints, maps, dictionaries, ...)."""
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    if pat.is_list(t):
+        el = _footer_spark_type(t.value_type)
+        return None if el is None else ArrayType(el, True)
+    if pat.is_struct(t):
+        types = [_footer_spark_type(f.type) for f in t]
+        if any(x is None for x in types):
+            return None
+        return StructType([StructField(f.name, x, True) for f, x in zip(t, types)])
+    known = (
+        pat.is_signed_integer(t) or pat.is_float32(t) or pat.is_float64(t)
+        or pat.is_boolean(t) or pat.is_string(t) or pat.is_binary(t)
+        or pat.is_date32(t) or pat.is_decimal128(t)
+        or (pat.is_timestamp(t) and t.unit in ("ms", "us"))
+    )
+    # tz-naive Arrow timestamps are Parquet isAdjustedToUTC=false, which
+    # inference reads as timestamp_ntz
+    return from_arrow_type(t, prefer_timestamp_ntz=True) if known else None
+
+
 def read_parquet(spark: SparkSession, path: str):
     """``spark.read.parquet(path)`` without the schema-inference job.
 
     A read without a schema runs one Spark job to deserialize the row
-    schema from a file footer. For a Spark-written output the driver
-    reads that footer entry itself (one ``pyarrow`` metadata read) and
-    passes the schema, so the read schedules nothing. Hive partition
-    columns are still discovered from the directory names. Outputs not
-    written by Spark (no schema entry) and paths the driver cannot list
-    fall back to plain inference."""
+    schema from a file footer. The driver reads that footer itself (one
+    ``pyarrow`` metadata read) and passes the schema, so the read
+    schedules nothing: a Spark-written output's stored row schema as is,
+    a file written by another Parquet writer (pandas, pyarrow) through
+    its Arrow schema. Hive partition columns are still discovered from
+    the directory names. A column type whose mapping is not known to
+    match inference, and a path the driver cannot list, fall back to
+    plain inference."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
     first = _first_data_file(path)
-    meta = pq.read_metadata(first).metadata if first else None
-    stored = (meta or {}).get(_SPARK_SCHEMA_KEY)
-    if stored is None:
+    if first is None:
         return spark.read.parquet(path)
-    schema = StructType.fromJson(json.loads(stored))
+    meta = pq.read_metadata(first)
+    stored = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        schema = StructType.fromJson(json.loads(stored))
+    else:
+        schema = _footer_spark_type(pa.struct(list(meta.schema.to_arrow_schema())))
+        if schema is None:
+            return spark.read.parquet(path)
     return spark.read.schema(schema).parquet(path)
 
 

@@ -116,16 +116,20 @@ def cosine_neardup_pairs(
     # per-side norms hoisted out of the pair expression everywhere below:
     # N + N interpreted aggregates instead of 3·|pairs| (bit-identical —
     # same operation tree as cosine_expr; see cosine_topk)
-    _w_norm = lambda side, vname: embeddings.select(  # noqa: E731
-        F.col(id_col).alias(side),
-        F.col(vec_col).alias(vname),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias(f"_n{side}"),
-    )
+    # one normalized table, renamed per side: the two sides' plans (and
+    # their broadcasts in the LSH verify) are then equal, so AQE runs
+    # one vector broadcast and reuses it for the other side. The null
+    # filter is explicit because the optimizer infers it for one join
+    # side only, which would make the plans differ.
+    w = embeddings.select(
+        F.col(id_col).alias("a"),
+        F.col(vec_col).alias("va"),
+        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_na"),
+    ).where(F.col("a").isNotNull())
+    va, vb = w, w.toDF("b", "vb", "_nb")
     if method == "exact":
-        a = _w_norm("a", "va")
-        b = _w_norm("b", "vb")
         return (
-            a.crossJoin(b)
+            va.crossJoin(vb)
             .where(F.col("a") < F.col("b"))
             .select(
                 "a", "b",
@@ -141,11 +145,9 @@ def cosine_neardup_pairs(
         id_col=id_col, vec_col=vec_col,
     )
     cands = band_pairs(sig, id_col)
-    va = _w_norm("a", "va")
-    vb = _w_norm("b", "vb")
     return (
-        cands.join(va, "a")
-        .join(vb, "b")
+        cands.join(F.broadcast(va), "a")
+        .join(F.broadcast(vb), "b")
         .select(
             "a", "b",
             (_dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb"))).alias("cos"),

@@ -315,49 +315,28 @@ def alias_pairs(
     n_bands: int = 8,
     threshold: float = 0.5,
     max_bucket: int = 50,
-    driver_threshold: int = 0,
 ) -> DataFrame:
     """Full B7: names → verified near-duplicate alias pairs (a, b, jaccard).
-
-    ``driver_threshold`` > 0 enables the scale-ADAPTIVE fast path
-    (same contract as :func:`connected_components`'s): if there are at
-    most that many distinct names, the whole minhash→band→bucket→verify
-    chain runs on the driver in one pass — identical output (same
-    :func:`minhash_matrix` signatures, same band slicing, same
-    ``max_bucket`` cap, same exact-shingle-Jaccard verify) computed
-    without the ~10 small Spark jobs the distributed chain schedules.
-    The pipeline's alias universe is DICTIONARY-scale (distinct
-    surfaces + gazetteer, not the corpus), so nearly all of its B7 wall
-    was fixed job overhead. Default 0 keeps every other caller on the
-    distributed path.
-    """
-    if driver_threshold:
-        head = (
-            names.select(F.col(name_col).alias("name")).distinct()
-            .limit(driver_threshold + 1).toPandas()
-        )
-        if len(head) <= driver_threshold:
-            return _alias_pairs_driver(
-                head["name"].tolist(), names.sparkSession,
-                n_perm, n_bands, threshold, max_bucket,
-            )
+    :func:`alias_pairs_local` is the same chain on the driver, for a name
+    list the driver already holds."""
     sigs = minhash_signatures(names, name_col, n_perm)
     cands = lsh_candidate_pairs(sigs, name_col, n_bands, max_bucket)
     return exact_jaccard_filter(cands, threshold)
 
 
-def _alias_pairs_driver(
+def alias_pairs_local(
     name_list: list,
-    spark,
-    n_perm: int,
-    n_bands: int,
-    threshold: float,
-    max_bucket: int,
+    n_perm: int = 32,
+    n_bands: int = 8,
+    threshold: float = 0.5,
+    max_bucket: int = 50,
     k: int = 3,
     seed: int = 42,
-) -> DataFrame:
-    """Driver-side replica of the distributed B7 chain (see
-    :func:`alias_pairs` ``driver_threshold``). Signatures and the
+) -> pd.DataFrame:
+    """:func:`alias_pairs` on the driver, as a pandas ``(a, b, jaccard)``
+    frame: same :func:`minhash_matrix` signatures, band slicing,
+    ``max_bucket`` cap and exact-shingle-Jaccard verify, without the ~10
+    small Spark jobs of the distributed chain. Signatures and the
     verify's shingle sets come from one :func:`shingle_hashes` pass —
     the same hashed sets the JVM path intersects, here with
     ``np.intersect1d`` — so only bucket identity differs: the raw
@@ -365,10 +344,10 @@ def _alias_pairs_driver(
     row partition, hash collisions aside)."""
     from collections import defaultdict
 
-    out_schema = "a string, b string, jaccard double"
+    cols = ["a", "b", "jaccard"]
     names_sorted = [s for s in name_list if s is not None]
     if not names_sorted:
-        return spark.createDataFrame([], out_schema)
+        return pd.DataFrame([], columns=cols)
     norm = normalize_names(pd.Series(names_sorted)).tolist()
     grouped = shingle_hashes(norm, k, seed)
     sigs = minhash_from_hashes(grouped, len(norm), n_perm, seed)
@@ -395,15 +374,22 @@ def _alias_pairs_driver(
         j = inter / (len(sa) + len(sb) - inter)
         if j >= threshold:
             rows.append((a, b, j))
-    from ..session import tiny_df
-
-    return tiny_df(spark, rows, out_schema)
+    return pd.DataFrame(rows, columns=cols)
 
 
-def _unionfind_components(pdf, spark) -> DataFrame:
-    """Driver-side union-find over a SMALL edge list (see
-    ``driver_threshold``): same (node, component=min member) contract as
-    the iterative-join paths, exact by construction."""
+def drop_cross_anchor(pairs: pd.DataFrame, canon_of: dict) -> pd.DataFrame:
+    """Supervised anchoring: drop the alias pairs ``(a, b)`` whose two
+    ends are known surfaces (``canon_of``: surface → canonical) of two
+    DIFFERENT canonicals, so no component merges two known entities."""
+    ca, cb = pairs["a"].map(canon_of), pairs["b"].map(canon_of)
+    return pairs[ca.isna() | cb.isna() | (ca == cb)]
+
+
+def unionfind_components(edges: pd.DataFrame) -> pd.DataFrame:
+    """B8 on the driver for a dictionary-sized ``(a, b)`` edge list:
+    union-find with path compression, returning the ``(node, component =
+    min member)`` rows :func:`connected_components` returns, sorted by
+    node."""
     parent: dict = {}
 
     def find(x):
@@ -414,7 +400,7 @@ def _unionfind_components(pdf, spark) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in pdf.itertuples(index=False):
+    for a, b in edges[["a", "b"]].itertuples(index=False):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -426,19 +412,13 @@ def _unionfind_components(pdf, spark) -> DataFrame:
         if r not in comp_min or node < comp_min[r]:
             comp_min[r] = node
     rows = [(node, comp_min[find(node)]) for node in sorted(parent)]
-    if not rows:
-        return spark.createDataFrame(rows, schema=["node", "component"])
-    # pandas/Arrow path: the plain-list createDataFrame parallelizes into
-    # defaultParallelism pickled slices (~4s per call at local[32])
-    pdf = pd.DataFrame(rows, columns=["node", "component"], dtype=object)
-    return spark.createDataFrame(pdf)
+    return pd.DataFrame(rows, columns=["node", "component"])
 
 
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
     stats: dict | None = None,
-    driver_threshold: int = 0,
 ) -> DataFrame:
     """B8: CC over ``(a, b)`` string/long edges by hash-min with a hook
     and pointer jumping. Returns ``(node, component)``, component = min
@@ -478,12 +458,8 @@ def connected_components(
     the join broadcasts a small label table and otherwise relies on
     ``spark.sql.adaptive.skewJoin``.
 
-    ``driver_threshold`` > 0: if the symmetrized edge list has at most
-    that many rows, union-find runs on the driver (identical output, one
-    job instead of six per round). The pipeline's alias graph is
-    dictionary-scale (bounded by the gazetteer, not the corpus), which
-    is what makes this collect legal; default 0 keeps every other caller
-    (tests, the B8 contract query, cc_scale) on the distributed path.
+    :func:`unionfind_components` is the driver-side equivalent for an
+    edge list the driver already holds.
     """
     # localCheckpoint: sym is re-joined EVERY round — without it each
     # iteration re-executes the entire upstream edge plan (at the
@@ -496,13 +472,6 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    if driver_threshold:
-        head = sym.limit(driver_threshold + 1).toPandas()
-        if len(head) <= driver_threshold:
-            if stats is not None:
-                stats["rounds"] = 0
-                stats["mode"] = "driver-unionfind"
-            return _unionfind_components(head, edges.sparkSession)
     labels = (
         sym.select(F.col("x").alias("node"))
         .distinct()

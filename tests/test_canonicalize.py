@@ -382,63 +382,42 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 
 
 def test_driver_unionfind_equals_distributed_cc(spark):
-    """The scale-adaptive union-find fast path must return EXACTLY the
-    distributed hash-min labels (component = min member), including on
-    string nodes, chains, and isolated pairs; above the threshold the
-    distributed path still runs."""
-    import pandas as pd
+    """The driver-side union-find must return EXACTLY the distributed
+    hash-min labels (component = min member), including on string nodes,
+    chains, self-loops and isolated pairs."""
+    from kgforge.stages.canonicalize import unionfind_components
 
-    from kgforge.stages.canonicalize import connected_components
-
-    edges = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "a": ["b", "c", "x", "m", "n", "q"],
-                "b": ["a", "b", "y", "n", "o", "q"],
-            }
-        )
+    edges = pd.DataFrame(
+        {
+            "a": ["b", "c", "x", "m", "n", "q"],
+            "b": ["a", "b", "y", "n", "o", "q"],
+        }
     )
-    stats_fast, stats_dist = {}, {}
-    fast = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            edges, stats=stats_fast, driver_threshold=1000
-        ).collect()
-    }
+    stats = {}
     dist = {
         (r["node"], r["component"])
-        for r in connected_components(edges, stats=stats_dist).collect()
+        for r in connected_components(spark.createDataFrame(edges), stats=stats).collect()
     }
-    assert fast == dist
-    assert stats_fast["mode"] == "driver-unionfind" and stats_fast["rounds"] == 0
-    assert stats_dist["rounds"] > 0
-    # threshold smaller than the edge list -> distributed path taken
-    stats_big = {}
-    big = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            edges, stats=stats_big, driver_threshold=3
-        ).collect()
-    }
-    assert big == dist and "mode" not in stats_big
+    fast = unionfind_components(edges)
+    assert set(fast.itertuples(index=False, name=None)) == dist
+    assert list(fast["node"]) == sorted(fast["node"]) and stats["rounds"] > 0
 
 
 def test_driver_alias_pairs_equals_distributed(spark):
-    """The alias_pairs driver fast path (driver_threshold) must produce
-    exactly the distributed chain's verified pairs — same candidates
-    (band-slice buckets, max_bucket cap) and same jaccard doubles."""
+    """The driver-side B7 chain (alias_pairs_local) must produce exactly
+    the distributed chain's verified pairs — same candidates (band-slice
+    buckets, max_bucket cap) and same jaccard doubles."""
+    from kgforge.stages.canonicalize import alias_pairs_local
+
     gaz = gazetteer()
     names = spark.createDataFrame(gaz[["surface"]].rename(columns={"surface": "name"}))
     dist = alias_pairs(names, threshold=0.5).toPandas()
-    drv = alias_pairs(names, threshold=0.5, driver_threshold=10_000).toPandas()
+    drv = alias_pairs_local(gaz["surface"].tolist(), threshold=0.5)
     key = ["a", "b"]
     dist = dist.sort_values(key).reset_index(drop=True)
     drv = drv.sort_values(key).reset_index(drop=True)
+    assert len(drv) > 0
     pd.testing.assert_frame_equal(dist, drv, check_like=True)
-    # above the gate the distributed path must run unchanged
-    over = alias_pairs(names, threshold=0.5, driver_threshold=2).toPandas()
-    over = over.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(dist, over, check_like=True)
 
 
 def _banded(spark, buckets):

@@ -423,6 +423,52 @@ def test_blocked_ranks_partition_independent(spark, tmp_path):
     pd.testing.assert_frame_equal(one, want.reset_index(drop=True), check_dtype=False)
 
 
+def test_score_components_are_what_score_batch_reads():
+    """kernels.SCORE_COMPONENTS lists exactly the components score_batch
+    reads per model: the listed ones suffice, and each one is needed."""
+    ids = np.arange(2)
+    for model, keys in kernels.SCORE_COMPONENTS.items():
+        kernels.score_batch(model, {k: EMB[k] for k in keys}, ids, ids, ids)
+        for k in keys:
+            with pytest.raises(KeyError):
+                kernels.score_batch(model, {x: EMB[x] for x in keys if x != k}, ids, ids, ids)
+
+
+def test_blocked_ranks_ship_only_scored_components(spark, tmp_path, monkeypatch):
+    """Given a full checkpoint (every model's components), the blocked
+    path ships only what the model scores with: for TransE the entity
+    frame holds ``[id, ent]``, and the ranks equal those from ent + rel
+    alone."""
+    from kgforge import evaluate as ev
+    from kgforge.io_openke import read_embedding_df, write_embeddings_parquet
+
+    d = str(tmp_path / "ckpt")
+    write_embeddings_parquet(spark, EMB, d)
+    full = {k: read_embedding_df(spark, d, k) for k in EMB}
+    entity_frames = []
+    emb_sides = ev._emb_sides
+
+    def spy(spark_, emb):
+        ents, rel = emb_sides(spark_, emb)
+        entity_frames.append(ents.columns)
+        return ents, rel
+
+    monkeypatch.setattr(ev, "_emb_sides", spy)
+    test = spark.createDataFrame(SPLIT["test2id"].head(12))
+    known_df = spark.createDataFrame(KNOWN[["h", "t", "r"]])
+    key = ["h", "t", "r"]
+
+    def ranks(emb):
+        return (
+            ev.link_prediction_ranks_blocked(spark, test, emb, known_df, model="transe")
+            .toPandas().sort_values(key).reset_index(drop=True)
+        )
+
+    got = ranks(full)
+    assert entity_frames == [["id", "ent"]]
+    pd.testing.assert_frame_equal(got, ranks({k: full[k] for k in ("ent", "rel")}))
+
+
 def test_embedding_checkpoint_roundtrip(spark, tmp_path):
     """A20: save → load → bit-identical float32 parameters, all
     components (incl. the reshaped TransR matrices), and identical

@@ -3,7 +3,9 @@ determinism (BASELINE.md target table)."""
 
 import json
 import os
+import shutil
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -175,13 +177,13 @@ def test_dict_sizes_recorded(run_dir):
 #: Spark jobs per stage of a warm unit-fixture build. A budget may only go
 #: down: lower it deliberately when a change saves jobs.
 STAGE_JOB_BUDGET = {
-    "reassemble": 3,
-    "extract": 6,
-    "canonicalize": 22,
-    "dicts": 10,
-    "link": 6,
+    "reassemble": 2,
+    "extract": 2,
+    "canonicalize": 8,
+    "dicts": 7,
+    "link": 5,
     "materialize": 7,
-    "evaluate": 12,
+    "evaluate": 7,
 }
 
 
@@ -197,6 +199,23 @@ def _jobs_in_group(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
+def _unit_pipeline(spark, fdir, work, gazetteer_path=None, resume=False):
+    return Pipeline(
+        spark,
+        input_path=os.path.join(fdir, "transcripts.parquet"),
+        work_dir=work,
+        gazetteer_path=gazetteer_path or os.path.join(fdir, "gazetteer.parquet"),
+        patterns_path=os.path.join(fdir, "patterns.parquet"),
+        out_partitions=2,
+        resume=resume,
+    )
+
+
+def _rows(path):
+    """Sorted row reprs of a Parquet output (row-identical comparisons)."""
+    return sorted(map(repr, pd.read_parquet(path).astype(str).itertuples(index=False)))
+
+
 @pytest.fixture(scope="module")
 def unit_build(spark, tmp_path_factory):
     """A unit-fixture build after a warm-up build, each stage run under its
@@ -204,14 +223,7 @@ def unit_build(spark, tmp_path_factory):
     fdir = ensure_fixtures("unit")
 
     def pipeline(work):
-        return Pipeline(
-            spark,
-            input_path=os.path.join(fdir, "transcripts.parquet"),
-            work_dir=work,
-            gazetteer_path=os.path.join(fdir, "gazetteer.parquet"),
-            patterns_path=os.path.join(fdir, "patterns.parquet"),
-            out_partitions=2,
-        )
+        return _unit_pipeline(spark, fdir, work)
 
     stages = [*STAGES, "evaluate"]
     pipeline(str(tmp_path_factory.mktemp("unit_warm"))).run(stages)
@@ -236,8 +248,8 @@ def test_pipeline_stage_job_budget(unit_build):
 def test_read_parquet_footer_schema(spark, unit_build, tmp_path):
     """session.read_parquet returns what schema inference returns — schema,
     hive partition columns and rows — and schedules no job for a
-    Spark-written output; files without Spark's schema entry fall back to
-    inference."""
+    Spark-written output or a pandas-written input; a column type whose
+    mapping is not known to match inference falls back to inference."""
     from kgforge.session import read_parquet
 
     work, fdir, _ = unit_build
@@ -268,9 +280,97 @@ def test_read_parquet_footer_schema(spark, unit_build, tmp_path):
     n, df = same_as_inferred(empty)
     assert n == 0 and df.schema.simpleString() == "struct<a:bigint,b:array<string>>"
 
-    # pandas-written input: no Spark schema entry, so inference runs
-    n, _ = same_as_inferred(os.path.join(fdir, "gazetteer.parquet"))
+    # pandas-written inputs: no Spark schema entry, the Arrow footer
+    # schema maps to what inference gives (tz-naive ts → timestamp_ntz)
+    for name in ("transcripts", "patterns", "gazetteer"):
+        n, df = same_as_inferred(os.path.join(fdir, f"{name}.parquet"))
+        assert n == 0, name
+        schemas[name] = df.schema
+    assert schemas["transcripts"]["ts"].dataType.simpleString() == "timestamp_ntz"
+
+    # an unsigned column keeps the inference fallback
+    odd = str(tmp_path / "uint.parquet")
+    pd.DataFrame({"u": np.array([1, 2], dtype="uint32")}).to_parquet(odd)
+    n, _ = same_as_inferred(odd)
     assert n == 1
+
+
+def test_canonicalize_distributed_branch_matches_driver(spark, unit_build, tmp_path, monkeypatch):
+    """Above ``_DRIVER_NAMES`` names canonicalize runs the distributed
+    alias_pairs → connected_components chain; it writes the same
+    alias_map and entities as the driver branch the unit build took."""
+    from kgforge import pipeline as pl
+
+    work, fdir, _ = unit_build
+    other = str(tmp_path / "distributed")
+    shutil.copytree(os.path.join(work, "extract"), os.path.join(other, "extract"))
+    monkeypatch.setattr(pl, "_DRIVER_NAMES", 0)
+    _unit_pipeline(spark, fdir, other).run(["canonicalize"])
+    for t in ("alias_map", "entities"):
+        got = _rows(os.path.join(other, "canonicalize", t))
+        assert got == _rows(os.path.join(work, "canonicalize", t)), t
+
+
+def test_conflicting_gazetteer_surface_maps_to_min_canonical(spark, unit_build, tmp_path):
+    """A surface the gazetteer lists under two canonicals is known as the
+    min one, whatever the gazetteer's row order and file partitioning."""
+    work, fdir, _ = unit_build
+    gaz = pd.read_parquet(os.path.join(fdir, "gazetteer.parquet"))
+    surface, canonical = gaz.iloc[0][["surface", "canonical"]]
+    extra = gaz.iloc[[0, 0]].assign(canonical=["~" + canonical, "!" + canonical])
+    conflicted = pd.concat([gaz, extra], ignore_index=True)
+    one_file = str(tmp_path / "gaz.parquet")
+    conflicted.to_parquet(one_file)
+    three_files = str(tmp_path / "gaz_reversed")
+    spark.createDataFrame(conflicted.iloc[::-1]).repartition(3).write.parquet(three_files)
+    amaps = []
+    for i, gaz_path in enumerate((one_file, three_files)):
+        w = str(tmp_path / f"work{i}")
+        shutil.copytree(os.path.join(work, "extract"), os.path.join(w, "extract"))
+        _unit_pipeline(spark, fdir, w, gazetteer_path=gaz_path).run(["canonicalize"])
+        am = pd.read_parquet(os.path.join(w, "canonicalize", "alias_map"))
+        amaps.append(dict(am[["surface", "canonical"]].itertuples(index=False)))
+    assert amaps[0] == amaps[1]
+    assert amaps[0][surface] == "!" + canonical
+
+
+def test_resume_reruns_stage_whose_output_is_gone(spark, unit_build):
+    """--resume trusts a manifest entry only while the stage's outputs are
+    still committed: a deleted output, an output without ``_SUCCESS`` or a
+    missing eval_metrics.json re-runs the stage (and what depends on it),
+    with outputs equal to the first build's."""
+    work, fdir, _ = unit_build
+    stages = [*STAGES, "evaluate"]
+
+    def outputs():
+        got = {
+            rel: _rows(os.path.join(work, rel))
+            for rel in (
+                "canonicalize/alias_map", "canonicalize/entities", "dicts/entity2id",
+                "dicts/relation2id", "materialize/triples",
+            )
+        }
+        for rel in ("materialize/openke/train2id.txt", "eval_metrics.json"):
+            with open(os.path.join(work, rel), "rb") as f:
+                got[rel] = f.read()
+        return got
+
+    def resume(remove):
+        if os.path.isfile(remove):
+            os.remove(remove)
+        else:
+            shutil.rmtree(remove)
+        pipe = _unit_pipeline(spark, fdir, work, resume=True)
+        pipe.run(stages)
+        return {s for s, t in pipe.timings.items() if t > 0.0}
+
+    before = outputs()
+    assert resume(os.path.join(work, "canonicalize", "alias_map")) == set(stages[2:])
+    assert outputs() == before
+    assert resume(os.path.join(work, "link", "_SUCCESS")) == set(stages[4:])
+    assert outputs() == before
+    assert resume(os.path.join(work, "eval_metrics.json")) == {"evaluate"}
+    assert outputs() == before
 
 
 def test_entry_and_contract_smoke(spark):
