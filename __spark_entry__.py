@@ -2070,11 +2070,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def kg_k_core(spark, sf):
         """k-core (k=5) of the bipartite order-part graph from lineitem
-        (disjoint-parity node ids): iterative distributed peel with
-        per-round localCheckpoint, driver sees only a scalar count per
-        round. The oracle unrolls 5 peel rounds — provably past the
-        fixpoint on this input, where extra rounds are no-ops — then
-        applies the same final degree>=k cut."""
+        (disjoint-parity node ids): iterative distributed peel, one
+        localCheckpoint per round with the edge count observed on it
+        for the fixpoint test. The oracle unrolls 5 peel rounds —
+        provably past the fixpoint on this input, where extra rounds
+        are no-ops — then applies the same final degree>=k cut."""
         from kgforge import graphstats
 
         li = spark.read.parquet(f"{sf}/lineitem.parquet")
@@ -4481,10 +4481,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """3-truss of the part co-purchase graph (parts sharing >= 2
         orders): every surviving edge sits in >= 1 triangle of the
         surviving subgraph. Iterative distributed peel to the fixpoint
-        (graphstats.k_truss — per-round localCheckpoint, driver sees
-        scalar counts); the oracle unrolls ONE peel + the final support
-        recount, which this input provably converges to (round 2 is a
-        no-op at sf0.01 — asserted by the engine's own fixpoint loop)."""
+        (graphstats.k_truss — one localCheckpoint per round with the
+        edge count observed on it); the oracle unrolls ONE peel + the
+        final support recount, which this input provably converges to
+        (round 2 is a no-op at sf0.01 — asserted by the engine's own
+        fixpoint loop)."""
         from kgforge import graphstats
 
         lp = (

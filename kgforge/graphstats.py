@@ -156,6 +156,14 @@ def undirected_edges(triples: DataFrame) -> DataFrame:
     )
 
 
+def _adjacency(e: DataFrame) -> DataFrame:
+    """``(u, v)``: both directions of each undirected edge ``(a, b)`` —
+    the symmetric adjacency every neighbourhood operator joins."""
+    return e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
+        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+
+
 def triangle_count(triples: DataFrame) -> DataFrame:
     """Global triangle count of the entity adjacency graph (one row,
     ``n_triangles``) — the standard clustering/community signal.
@@ -199,9 +207,7 @@ def _closed_triangles(e: DataFrame) -> DataFrame:
     w2 = oriented.select("src", F.col("dst").alias("y"))
     wedges = w1.join(w2, "src").where(F.col("x") < F.col("y"))
     return wedges.join(
-        e.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
-            e.select(F.col("b").alias("x"), F.col("a").alias("y"))
-        ),
+        _adjacency(e).select(F.col("u").alias("x"), F.col("v").alias("y")),
         ["x", "y"],
         "left_semi",
     )
@@ -246,6 +252,34 @@ def local_clustering(triples: DataFrame) -> DataFrame:
     )
 
 
+def _peel(
+    edges: DataFrame,
+    survivors: Callable[[DataFrame], DataFrame],
+    max_rounds: int | None,
+) -> DataFrame:
+    """The fixpoint peel of :func:`k_core` and :func:`k_truss`: ``edges``
+    after rounds of ``edges ← survivors(edges)`` until a round drops no
+    row (``survivors`` only drops rows, so an unchanged count is the
+    fixpoint), none is left, or ``max_rounds`` rounds ran. Each round is
+    one ``localCheckpoint`` with its row count riding it as an
+    Observation — no job runs for the fixpoint test, the rule of
+    :func:`_power_iterate`; the input's checkpoint observes its count
+    too."""
+    if max_rounds is not None and max_rounds < 1:
+        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
+    rounds = 0
+    prev = None
+    while True:
+        obs = Observation()
+        edges = edges.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        n = obs.get["n"]
+        if n == 0 or n == prev or rounds == max_rounds:
+            return edges
+        prev = n
+        rounds += 1
+        edges = survivors(edges)
+
+
 def k_core(
     triples: DataFrame, k: int = 3, max_rounds: int | None = None
 ) -> DataFrame:
@@ -254,39 +288,28 @@ def k_core(
     "dense backbone" profile (cohesive-subgroup detection, influence
     seeding) after degree stats and triangles.
 
-    Iterative peel: each round recomputes degrees over the surviving
-    edge list and drops vertices below ``k`` (a cascade — removals can
-    push neighbours below the bar). The loop runs DISTRIBUTED joins
-    only; the driver sees one scalar count per round (the fixpoint
-    test), and the edge list is ``localCheckpoint``-ed every round to
-    truncate the iterative lineage — the same discipline as the B8
-    connected-components loop (canonicalize.py). Rounds are bounded by
-    the peel depth (O(sqrt(m)) worst case, small single digits on
-    real degree distributions); ``max_rounds`` caps them for
-    fixed-round oracle replay — extra rounds past the fixpoint are
-    no-ops, so any ``max_rounds`` >= the true peel depth yields the
-    exact k-core. Output: ``(e, degree)`` of members with their
-    within-core degree.
+    :func:`_peel` over the symmetric adjacency ``(u, v)``: each round
+    counts degrees over the surviving edges and semi-joins both
+    endpoints against the vertices still at >= ``k`` (a cascade —
+    removals can push neighbours below the bar). The loop runs
+    distributed joins only. Rounds are bounded by the peel depth
+    (O(sqrt(m)) worst case, small single digits on real degree
+    distributions); ``max_rounds`` caps them for fixed-round oracle
+    replay — rounds past the fixpoint are no-ops, so any cap >= the peel
+    depth gives the exact k-core. Output: ``(e, degree)`` of members
+    with their within-core degree.
     """
-    e = undirected_edges(triples)
-    edges = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint()
-    prev_n = -1
-    rounds = 0
-    while True:
-        deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.where(F.col("d") >= k).select("u")
-        n = keep.count()
-        if n == prev_n or n == 0 or (max_rounds is not None and rounds >= max_rounds):
-            break
-        prev_n = n
-        rounds += 1
-        edges = (
-            edges.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .localCheckpoint()
+
+    def survivors(edges: DataFrame) -> DataFrame:
+        keep = (
+            edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+            .where(F.col("d") >= k).select("u")
         )
+        return edges.join(keep, "u", "left_semi").join(
+            keep.select(F.col("u").alias("v")), "v", "left_semi"
+        )
+
+    edges = _peel(_adjacency(undirected_edges(triples)), survivors, max_rounds)
     return (
         edges.groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
@@ -326,32 +349,25 @@ def k_truss(
     (every k-truss is inside the (k-1)-core, but prunes bridge edges
     the core keeps).
 
-    Iterative peel, same discipline as :func:`k_core`: each round
-    recomputes per-edge triangle support over the surviving edges (the
-    degree-oriented wedge closure — O(sqrt m) apex out-degree bound)
-    and drops edges below ``k-2``; removals cascade, so the loop runs
-    to the fixpoint (driver sees one scalar count per round, edge list
-    ``localCheckpoint``-ed per round). ``max_rounds`` caps rounds for
-    fixed-round oracle replay — rounds past the fixpoint are no-ops.
-    Output: the surviving edges ``(a, b, support)`` with support
-    recomputed inside the final subgraph.
+    :func:`_peel` over the undirected edges ``(a, b)``, same loop as
+    :func:`k_core`: each round recomputes per-edge triangle support over
+    the surviving edges (the degree-oriented wedge closure — O(sqrt m)
+    apex out-degree bound) and semi-joins the edges at >= ``k-2``;
+    removals cascade, so the loop runs to the fixpoint unless
+    ``max_rounds`` caps it. Output: the surviving edges ``(a, b,
+    support)`` with support recomputed inside the final subgraph.
     """
     if k < 3:
         raise ValueError("k-truss needs k >= 3 (k-2 triangles per edge)")
-    e = undirected_edges(triples).localCheckpoint()
-    prev_n = e.count()
-    rounds = 0
-    while True:
-        sup = _edge_support(e)
-        kept = e.join(
-            sup.where(F.col("support") >= k - 2), ["a", "b"], "left_semi"
-        ).localCheckpoint()
-        n = kept.count()
-        rounds += 1
-        e = kept
-        if n == prev_n or n == 0 or (max_rounds is not None and rounds >= max_rounds):
-            break
-        prev_n = n
+    e = _peel(
+        undirected_edges(triples),
+        lambda cur: cur.join(
+            _edge_support(cur).where(F.col("support") >= k - 2),
+            ["a", "b"],
+            "left_semi",
+        ),
+        max_rounds,
+    )
     return e.join(_edge_support(e), ["a", "b"], "left").select(
         "a", "b", F.coalesce("support", F.lit(0).cast("long")).alias("support")
     )
@@ -367,10 +383,7 @@ def k_hop_neighbors(triples: DataFrame, seeds: DataFrame, k: int = 2) -> DataFra
     sized; the adjacency list is the corpus-sized side and is only ever
     JOINED, never collected or iterated on the driver.
     """
-    e = undirected_edges(triples)
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    adj = _adjacency(undirected_edges(triples))
     frontier = seeds.select(F.col("seed"), F.col("seed").alias("u"))
     reached = None
     for hop in range(1, k + 1):
@@ -569,12 +582,7 @@ def label_propagation(triples: DataFrame, n_iter: int = 5) -> DataFrame:
     ``localCheckpoint``-ed per round (referenced by the next join;
     lineage stays O(1) in rounds — B8's CC lesson).
     """
-    e = undirected_edges(triples)
-    adj = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint()
-    )
+    adj = _adjacency(undirected_edges(triples)).localCheckpoint()
     labels = (
         adj.select(F.col("u").alias("e"))
         .distinct()
@@ -631,12 +639,7 @@ def random_walks(
     O(1) in steps. Every node in the adjacency has ≥1 neighbor, so walks
     never dead-end (isolated entities never enter the walk set).
     """
-    e = undirected_edges(triples)
-    adj = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint()
-    )
+    adj = _adjacency(undirected_edges(triples)).localCheckpoint()
     nodes = adj.select(F.col("u").alias("start")).distinct()
     if starts is not None:
         nodes = (
@@ -700,6 +703,46 @@ def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
     )
 
 
+def _open_wedges(
+    triples: DataFrame, max_degree: int
+) -> tuple[DataFrame, DataFrame]:
+    """``(wedges, deg)`` for the neighbourhood link predictors: ``wedges``
+    is ``(x, y, dz)``, one row per common neighbour ``z`` (of degree
+    ``dz``) of each NON-adjacent pair ``x < y``; ``deg`` is ``(z, dz)``.
+
+    Wedge self-join of the adjacency on the middle node, then an
+    anti-join against the edge set keeps only predicted links.
+    ``max_degree`` drops super-hub middle nodes before the wedge join —
+    the join is Θ(deg²) per middle node, and a 10^6-degree hub
+    contributes ~1/ln(10^6) ≈ 0.07 per pair while exploding the plan
+    (same guard as the n-gram inverted-index df cap). At fixture scale
+    no node reaches the cap, so the oracles need no cap clause."""
+    e = undirected_edges(triples)
+    adj = _adjacency(e)
+    deg = adj.groupBy(F.col("u").alias("z")).agg(
+        F.count(F.lit(1)).cast("long").alias("dz")
+    )
+    mid = adj.select(F.col("u").alias("z"), F.col("v")).join(
+        deg.where(F.col("dz") <= F.lit(int(max_degree))), "z"
+    )
+    w1 = mid.select("z", "dz", F.col("v").alias("x"))
+    w2 = mid.select("z", F.col("v").alias("y"))
+    wedges = w1.join(w2, "z").where(F.col("x") < F.col("y")).join(
+        e.select(F.col("a").alias("x"), F.col("b").alias("y")),
+        ["x", "y"],
+        "left_anti",
+    )
+    return wedges.select("x", "y", "dz"), deg
+
+
+def _adamic_adar(dz: Column) -> Column:
+    """``round(Σ 1/ln dz, 6)`` over a group of wedges: a common neighbour
+    of two distinct nodes has ``dz >= 2``, so ``ln`` is never 0, and the
+    round makes the float sum partitioning-independent and oracle-exact
+    (the kernel-score contract)."""
+    return F.round(F.sum(F.lit(1.0) / F.log(dz.cast("double"))), 6)
+
+
 def adamic_adar_candidates(
     triples: DataFrame, k: int = 20, max_degree: int = 10_000
 ) -> DataFrame:
@@ -709,44 +752,13 @@ def adamic_adar_candidates(
     classic non-embedding KG-completion baseline (and the sanity
     companion to the TransE-style A19 completions).
 
-    Plan: wedge self-join of the adjacency on the middle node ``z``
-    (``x < y`` dedups the unordered pair), anti-join against the edge
-    set to keep only predicted (non-existing) links, one sum
-    aggregation, TakeOrdered top-k. A common neighbor of two DISTINCT
-    nodes has degree ≥ 2, so ``ln(deg)`` never divides by zero. Scores
-    are ``round(…, 6)`` — a floating sum's last ulp is accumulation-
-    order-dependent, and the rounding is what makes the result
-    partitioning-independent and oracle-exact (same contract as the
-    kernel scores).
-
-    ``max_degree`` drops super-hub middle nodes before the wedge join —
-    the join is Θ(deg²) per middle node, and a 10^6-degree hub
-    contributes ~1/ln(10^6) ≈ 0.07 per pair while exploding the plan;
-    capping is the standard scale guard (same pattern as the n-gram
-    inverted-index df cap). At fixture scale no node reaches the cap,
-    so the oracle needs no cap clause.
+    Plan: :func:`_open_wedges` (wedge join, hub cap, anti-join), one sum
+    aggregation, TakeOrdered top-k with ties to the pair id.
     """
-    e = undirected_edges(triples)
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = adj.groupBy(F.col("u").alias("z")).agg(
-        F.count(F.lit(1)).cast("double").alias("dz")
-    )
-    mid = adj.select(F.col("u").alias("z"), F.col("v")).join(
-        deg.where(F.col("dz") <= F.lit(float(max_degree))), "z"
-    )
-    w1 = mid.select("z", "dz", F.col("v").alias("x"))
-    w2 = mid.select("z", F.col("v").alias("y"))
-    wedges = w1.join(w2, "z").where(F.col("x") < F.col("y"))
+    wedges, _ = _open_wedges(triples, max_degree)
     return (
-        wedges.join(
-            e.select(F.col("a").alias("x"), F.col("b").alias("y")),
-            ["x", "y"],
-            "left_anti",
-        )
-        .groupBy("x", "y")
-        .agg(F.round(F.sum(F.lit(1.0) / F.log(F.col("dz"))), 6).alias("score"))
+        wedges.groupBy("x", "y")
+        .agg(_adamic_adar(F.col("dz")).alias("score"))
         .orderBy(F.col("score").desc(), F.col("x"), F.col("y"))
         .limit(k)
     )
@@ -762,43 +774,21 @@ def link_prediction_scores(
     ``resource_alloc`` (``Σ 1/d(z)``), ``pref_attach`` (``d(x)·d(y)``).
     Top-``k`` by Adamic-Adar (ties to the pair id).
 
-    The wedge join, anti-join and middle-node hub cap are exactly
-    :func:`adamic_adar_candidates`'s plan — the extra metrics are free
+    The wedges are :func:`_open_wedges`, as in
+    :func:`adamic_adar_candidates` — the extra metrics are free
     aggregates on the SAME shuffled rows plus two node-keyed degree
     joins for the endpoint degrees (entity-dictionary-sized, broadcast
     at any realistic entity count). Float sums are ``round(…, 6)`` for
     accumulation-order independence; jaccard is an exact double of two
     integers and pref_attach an exact long.
     """
-    e = undirected_edges(triples)
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = adj.groupBy(F.col("u").alias("z")).agg(
-        F.count(F.lit(1)).cast("long").alias("dz")
-    )
-    mid = adj.select(F.col("u").alias("z"), F.col("v")).join(
-        deg.where(F.col("dz") <= F.lit(int(max_degree))), "z"
-    )
-    w1 = mid.select("z", "dz", F.col("v").alias("x"))
-    w2 = mid.select("z", F.col("v").alias("y"))
-    wedges = w1.join(w2, "z").where(F.col("x") < F.col("y"))
-    pairs = (
-        wedges.join(
-            e.select(F.col("a").alias("x"), F.col("b").alias("y")),
-            ["x", "y"],
-            "left_anti",
-        )
-        .groupBy("x", "y")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_common"),
-            F.round(F.sum(F.lit(1.0) / F.log(F.col("dz").cast("double"))), 6).alias(
-                "adamic_adar"
-            ),
-            F.round(F.sum(F.lit(1.0) / F.col("dz").cast("double")), 6).alias(
-                "resource_alloc"
-            ),
-        )
+    wedges, deg = _open_wedges(triples, max_degree)
+    pairs = wedges.groupBy("x", "y").agg(
+        F.count(F.lit(1)).cast("long").alias("n_common"),
+        _adamic_adar(F.col("dz")).alias("adamic_adar"),
+        F.round(F.sum(F.lit(1.0) / F.col("dz").cast("double")), 6).alias(
+            "resource_alloc"
+        ),
     )
     dx = deg.select(F.col("z").alias("x"), F.col("dz").alias("dx"))
     dy = deg.select(F.col("z").alias("y"), F.col("dz").alias("dy"))
@@ -906,76 +896,71 @@ def hits(
     Fixed-iteration mutual power method with L1 (sum) normalization:
     per iteration ``auth'(v) = Σ_{u→v} hub(u)`` then ``auth /= Σ auth``,
     then ``hub'(u) = Σ_{u→v} auth(v)`` then ``hub /= Σ hub``. L1 keeps
-    the normalizer a plain one-row SUM (broadcast) instead of a
-    sqrt-of-squares, and the fixed point is the same principal
-    eigenvector direction as the textbook L2 variant — only the scale
-    of the reported scores differs (they sum to 1, which is also the
-    more interpretable contract).
+    the normalizer a plain SUM instead of a sqrt-of-squares, and the
+    fixed point is the same principal eigenvector direction as the
+    textbook L2 variant — only the scale of the reported scores differs
+    (they sum to 1, which is also the more interpretable contract).
+    ``n_iter = 0`` gives the uniform ``round(1/N, …)`` on both axes.
 
-    Same determinism contract as :func:`_power_iterate`: both half-step score
-    tables are rounded to ``round_decimals`` AFTER normalization, so the
+    One loop of ``2·n_iter`` half-steps alternating ``src→dst`` (auth)
+    and ``dst→src`` (hub). The loop state is the raw sums ``(e, s)``,
+    ``localCheckpoint``-ed each half-step with ``Σ s`` riding the
+    checkpoint as an Observation; the next half-step joins the
+    normalized score ``round(s / Σ s, round_decimals)`` per edge. So a
+    half-step is one join shuffle + one agg shuffle, and no job runs
+    for the normalizer — the rule of :func:`_power_iterate`. The node
+    table is joined once, at the end: sink-only nodes keep hub 0,
+    source-only nodes auth 0.
+
+    Same determinism contract as :func:`_power_iterate`: every score is
+    rounded to ``round_decimals`` AFTER normalization, so the
     accumulation-order ulp noise of the float sums (~1e-16 relative)
     cannot drift across iterations and the DuckDB unrolled-CTE oracle
-    is hash-exact. Same scale shape too: per-iteration state is two
-    node-cardinality score tables, edges are only ever joined, each
-    half-step is one join shuffle + one agg shuffle + a one-row
-    broadcast normalizer, and score tables are ``localCheckpoint``-ed
-    (each is referenced by the next half-step's join AND its
-    normalizer; lineage would otherwise double per iteration).
-    Sink-only nodes keep hub 0, source-only nodes auth 0 — they stay in
-    the output via the left join against the node table.
+    is hash-exact.
     """
     edges = _directed_edges(triples).localCheckpoint()
-    nodes = _endpoints(edges).localCheckpoint()
-    nn = nodes.agg(F.count(F.lit(1)).cast("double").alias("n")).localCheckpoint()
-    hub = (
-        nodes.crossJoin(F.broadcast(nn))
-        .select("e", F.round(F.lit(1.0) / F.col("n"), round_decimals).alias("hub"))
-        .localCheckpoint()
+
+    def checkpoint(raw: DataFrame) -> tuple[DataFrame, Column]:
+        obs = Observation()
+        raw = raw.observe(obs, F.sum("s").alias("tot")).localCheckpoint()
+        # an empty sum observes None: a NULL total, over no rows
+        return raw, F.lit(obs.get["tot"]).cast("double")
+
+    def normalized(s: Column, tot: Column) -> Column:
+        return F.round(s / tot, round_decimals)
+
+    # hub0 = round(1/N): a raw 1.0 per node over their sum N
+    hub = checkpoint(_endpoints(edges).withColumn("s", F.lit(1.0)))
+    nodes, auth = hub[0].select("e"), None
+    for i in range(2 * n_iter):
+        (raw, tot), key, out = (
+            (hub, "src", "dst") if i % 2 == 0 else (auth, "dst", "src")
+        )
+        summed = checkpoint(
+            edges.join(
+                raw.select(
+                    F.col("e").alias(key), normalized(F.col("s"), tot).alias("w")
+                ),
+                key,
+            )
+            .groupBy(F.col(out).alias("e"))
+            .agg(F.sum("w").alias("s"))
+        )
+        if i % 2 == 0:
+            auth = summed
+        else:
+            hub = summed
+    auth = auth or hub
+    zero = F.lit(0.0)
+    return (
+        nodes.join(hub[0].withColumnRenamed("s", "sh"), "e", "left")
+        .join(auth[0].withColumnRenamed("s", "sa"), "e", "left")
+        .select(
+            "e",
+            normalized(F.coalesce("sh", zero), hub[1]).alias("hub"),
+            normalized(F.coalesce("sa", zero), auth[1]).alias("auth"),
+        )
     )
-    auth = None
-    for _ in range(n_iter):
-        a_raw = (
-            edges.join(hub.withColumnRenamed("e", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("s"))
-            .withColumnRenamed("dst", "e")
-        )
-        a_tot = a_raw.agg(F.sum("s").alias("tot"))
-        auth = (
-            nodes.join(a_raw, "e", "left")
-            .crossJoin(F.broadcast(a_tot))
-            .select(
-                "e",
-                F.round(
-                    F.coalesce("s", F.lit(0.0)) / F.col("tot"), round_decimals
-                ).alias("auth"),
-            )
-            .localCheckpoint()
-        )
-        h_raw = (
-            edges.join(auth.withColumnRenamed("e", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.sum("auth").alias("s"))
-            .withColumnRenamed("src", "e")
-        )
-        h_tot = h_raw.agg(F.sum("s").alias("tot"))
-        hub = (
-            nodes.join(h_raw, "e", "left")
-            .crossJoin(F.broadcast(h_tot))
-            .select(
-                "e",
-                F.round(
-                    F.coalesce("s", F.lit(0.0)) / F.col("tot"), round_decimals
-                ).alias("hub"),
-            )
-            .localCheckpoint()
-        )
-    if auth is None:  # n_iter == 0: uniform scores on both axes
-        return hub.join(
-            hub.select("e", F.col("hub").alias("auth")), "e"
-        ).select("e", "hub", "auth")
-    return hub.join(auth, "e").select("e", "hub", "auth")
 
 
 def community_modularity(triples: DataFrame, labels: DataFrame) -> DataFrame:
@@ -1171,12 +1156,7 @@ def node2vec_walks(
     the adjacency is only ever joined, state localCheckpointed per
     round.
     """
-    e = undirected_edges(triples)
-    adj = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint()
-    )
+    adj = _adjacency(undirected_edges(triples)).localCheckpoint()
     nodes = adj.select(F.col("u").alias("start")).distinct()
     if starts is not None:
         nodes = (

@@ -467,6 +467,8 @@ def test_iterative_graph_ops_job_budget(spark):
 
     from kgforge.graphstats import (
         hits,
+        k_core,
+        k_truss,
         label_propagation,
         pagerank,
         pagerank_weighted,
@@ -484,17 +486,24 @@ def test_iterative_graph_ops_job_budget(spark):
     )
     df = spark.createDataFrame(tri)
     seeds = spark.createDataFrame([(0,), (1,), (99,)], "seed long")
+    # the peels run ``max_rounds=n`` on graphs that still have edges after
+    # round 3: a 40-node path at k=2 (20 rounds) and a 7-ring cylinder at
+    # k=4 (7 rounds, 95 -> 85 -> 65 -> 55 -> ... edges)
+    path = spark.createDataFrame(_path_graph(40))
+    cylinder = spark.createDataFrame(_cylinder_graph(6, 5))
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
-    # operator: (run(n_iter), jobs per round, max set-up jobs)
+    # operator: (run(n_iter or max_rounds), jobs per round, max set-up jobs)
     budget = {
         "pagerank": (lambda n: pagerank(df, n_iter=n), 5, 10),
         "personalized_pagerank": (
             lambda n: personalized_pagerank(df, seeds, n_iter=n), 5, 14
         ),
         "pagerank_weighted": (lambda n: pagerank_weighted(df, n_iter=n), 5, 12),
-        "hits": (lambda n: hits(df, n_iter=n), 18, 12),
+        "hits": (lambda n: hits(df, n_iter=n), 6, 10),
         "label_propagation": (lambda n: label_propagation(df, n_iter=n), 3, 5),
+        "k_core": (lambda n: k_core(path, k=2, max_rounds=n), 4, 4),
+        "k_truss": (lambda n: k_truss(cylinder, k=4, max_rounds=n), 9, 11),
     }
 
     def n_jobs(run, n_iter, group):
@@ -564,14 +573,32 @@ def test_round4_ops_handle_empty_inputs(spark):
 
 
 def test_round5_ops_handle_empty_inputs(spark):
-    """Same battery for the round-5 operators: no loops, raises, or
-    null rows on empty inputs."""
-    from kgforge.graphstats import pagerank
+    """Same battery for the round-5 operators and the iterative graph
+    loops: no loops, raises, or null rows on empty inputs (an observed
+    ``sum`` over no rows is NULL, not 0)."""
+    from kgforge.graphstats import (
+        hits,
+        k_core,
+        k_truss,
+        label_propagation,
+        pagerank,
+        shortest_paths,
+    )
     from kgforge.incremental import dictionary_link_triples
     from kgforge.textops import stratified_sample
 
     empty_tri = spark.createDataFrame([], "h long, t long, r long")
     assert pagerank(empty_tri, n_iter=3).count() == 0
+    assert hits(empty_tri, n_iter=0).count() == 0
+    assert k_core(empty_tri, k=2).count() == 0
+    assert k_core(empty_tri, k=2, max_rounds=1).count() == 0
+    assert k_truss(empty_tri, k=3).count() == 0
+    assert label_propagation(empty_tri, n_iter=2).count() == 0
+    no_edges = spark.createDataFrame([], "u long, v long, w long")
+    sources = spark.createDataFrame([(7,)], "src long")
+    got = shortest_paths(no_edges, sources, n_rounds=2).collect()
+    assert [tuple(r) for r in got] == [(7, 7, 0)]
+    assert shortest_paths(no_edges, sources.limit(0), n_rounds=2).count() == 0
 
     empty_ext = spark.createDataFrame([], "subj string, pred string, obj string")
     gaz = spark.createDataFrame([("a", "A")], "surface string, canonical string")
@@ -842,7 +869,8 @@ def test_round5b_ops_handle_empty_inputs(spark):
 def test_hits_matches_numpy_mutual_power_iteration(spark):
     """Spark HITS == dense NumPy mutual power method with the SAME L1
     normalization and per-half-step rounding — exact equality (the
-    rounding contract makes the operator engine-independent)."""
+    rounding contract makes the operator engine-independent). At
+    ``n_iter=0`` both axes are the uniform ``round(1/N, 9)``."""
     import numpy as np
 
     from kgforge.graphstats import hits
@@ -851,11 +879,18 @@ def test_hits_matches_numpy_mutual_power_iteration(spark):
     tri = pd.DataFrame(
         {"h": rng.integers(0, 30, 150), "t": rng.integers(0, 30, 150), "r": 0}
     )
-    n_iter = 8
-    got = {
-        r["e"]: (r["hub"], r["auth"])
-        for r in hits(spark.createDataFrame(tri), n_iter=n_iter).collect()
-    }
+    for n_iter in (0, 8):
+        got = {
+            r["e"]: (r["hub"], r["auth"])
+            for r in hits(spark.createDataFrame(tri), n_iter=n_iter).collect()
+        }
+        assert got == _np_hits(tri, n_iter), n_iter
+        assert abs(sum(h for h, _ in got.values()) - 1.0) < 1e-6
+        assert abs(sum(x for _, x in got.values()) - 1.0) < 1e-6
+
+
+def _np_hits(tri, n_iter):
+    """Dense NumPy HITS: ``{e: (hub, auth)}``."""
     edges = sorted({(h, t) for h, t in tri[["h", "t"]].itertuples(index=False) if h != t})
     nodes = sorted({v for e in edges for v in e})
     idx = {v: i for i, v in enumerate(nodes)}
@@ -863,18 +898,13 @@ def test_hits_matches_numpy_mutual_power_iteration(spark):
     a = np.zeros((n, n))  # a[u, v] = 1 for edge u -> v
     for h, t in edges:
         a[idx[h], idx[t]] = 1.0
-    hub = np.round(np.full(n, 1.0 / n), 9)
-    auth = None
+    hub = auth = np.round(np.full(n, 1.0 / n), 9)
     for _ in range(n_iter):
         auth = a.T @ hub
         auth = np.round(auth / auth.sum(), 9)
         hub = a @ auth
         hub = np.round(hub / hub.sum(), 9)
-    assert set(got) == set(nodes)
-    for v in nodes:
-        assert got[v] == (hub[idx[v]], auth[idx[v]]), (v, got[v])
-    assert abs(sum(h for h, _ in got.values()) - 1.0) < 1e-6
-    assert abs(sum(x for _, x in got.values()) - 1.0) < 1e-6
+    return {v: (hub[idx[v]], auth[idx[v]]) for v in nodes}
 
 
 def test_hits_partitioning_independent_and_empty(spark):
@@ -1311,20 +1341,57 @@ def test_local_clustering_matches_bruteforce(spark):
     assert set(got.index) == set(nbrs)
 
 
-def _py_k_core(edges, k):
-    """Reference peel: exact fixpoint k-core on a python edge set."""
+def _path_graph(n):
+    """Triples of the path 0-1-...-(n-1)."""
+    return pd.DataFrame({"h": range(n - 1), "t": range(1, n), "r": 0})
+
+
+def _cylinder_graph(n_strips, ring):
+    """Triples of a triangulated cylinder: ``n_strips + 1`` rings of
+    ``ring`` nodes, each strip between two rings cut into triangles by
+    one diagonal per square. Inner edges sit in exactly two triangles,
+    edges of the two end rings in one, so the 4-truss peel removes one
+    layer (a ring, then the strip behind it) from each end per round."""
+    def v(r, c):
+        return r * ring + c % ring
+
+    rows = []
+    for r in range(n_strips + 1):
+        for c in range(ring):
+            rows.append((v(r, c), v(r, c + 1)))
+            if r < n_strips:
+                rows += [(v(r, c), v(r + 1, c)), (v(r, c), v(r + 1, c + 1))]
+    return pd.DataFrame(
+        {"h": [a for a, _ in rows], "t": [b for _, b in rows], "r": 0}
+    )
+
+
+def _band_graph(n, d):
+    """Triples of the band graph: ``(i, i + j)`` for 1 <= j <= d."""
+    rows = [(i, i + j) for i in range(n) for j in range(1, d + 1) if i + j < n]
+    return pd.DataFrame(
+        {"h": [a for a, _ in rows], "t": [b for _, b in rows], "r": 0}
+    )
+
+
+def _py_k_core(edges, k, max_rounds=None):
+    """Reference peel on a python edge set: each round drops every vertex
+    below ``k`` at once; after the fixpoint (or ``max_rounds`` rounds),
+    the vertices of degree >= ``k`` with their degree."""
     nbrs = {}
     for a, b in edges:
         nbrs.setdefault(a, set()).add(b)
         nbrs.setdefault(b, set()).add(a)
-    changed = True
-    while changed:
-        changed = False
-        for v in [v for v, ns in nbrs.items() if len(ns) < k]:
+    rounds = 0
+    while rounds != max_rounds:
+        low = [v for v, ns in nbrs.items() if len(ns) < k]
+        if not low:
+            break
+        for v in low:
             for u in nbrs.pop(v):
                 nbrs[u].discard(v)
-            changed = True
-    return {v: len(ns) for v, ns in nbrs.items() if ns}
+        rounds += 1
+    return {v: len(ns) for v, ns in nbrs.items() if len(ns) >= k}
 
 
 def test_k_core_matches_python_peel(spark):
@@ -1355,7 +1422,7 @@ def test_k_core_deep_cascade_chain(spark):
     from kgforge.graphstats import k_core
 
     n = 12
-    path = pd.DataFrame({"h": range(n - 1), "t": range(1, n), "r": 0})
+    path = _path_graph(n)
     assert k_core(spark.createDataFrame(path), k=2).count() == 0
     # add one chord closing a 4-cycle at the far end: that cycle alone
     # survives as the 2-core
@@ -2003,26 +2070,23 @@ def test_mix_rebalance_caps_strata_and_is_deterministic(spark):
     assert a == b
 
 
-def _py_k_truss(edges, k):
-    """Reference peel in pure python sets."""
-    import itertools
-
+def _py_k_truss(edges, k, max_rounds=None):
+    """Reference peel in pure python sets: each round drops every edge
+    in fewer than ``k - 2`` triangles at once; after the fixpoint (or
+    ``max_rounds`` rounds), the surviving edges with their support."""
     e = set(edges)
+    rounds = 0
     while True:
         adj = {}
         for a, b in e:
             adj.setdefault(a, set()).add(b)
             adj.setdefault(b, set()).add(a)
-        sup = {
-            (a, b): len((adj.get(a, set()) & adj.get(b, set())))
-            for a, b in e
-        }
+        sup = {(a, b): len(adj[a] & adj[b]) for a, b in e}
         kept = {ed for ed in e if sup[ed] >= k - 2}
-        if kept == e:
-            return {ed: sup[ed] for ed in e}
+        if kept == e or rounds == max_rounds:
+            return sup
         e = kept
-        if not e:
-            return {}
+        rounds += 1
 
 
 def test_k_truss_matches_python_peel(spark):
@@ -2046,22 +2110,74 @@ def test_k_truss_matches_python_peel(spark):
 
 
 def test_k_truss_cascade_on_triangle_strip(spark):
-    """A strip of triangles sharing edges (0-1-2, 1-2-3, 2-3-4, ...):
-    boundary edges sit in one triangle, inner edges in two. The 4-truss
-    peel must cascade — removing the strip's ends re-exposes new
-    boundary edges each round until NOTHING survives — exercising the
-    fixpoint loop well past one round."""
+    """Two graphs the truss peel must cascade through to the fixpoint.
+
+    The n=10 strip of triangles sharing edges (0-1-2, 1-2-3, 2-3-4, ...)
+    is the d=2 band graph: its 3-truss is the whole strip, and its
+    4-truss peels in 2 rounds (17 -> 7 -> 0 edges): round 1 drops every
+    edge in one triangle, which leaves the inner path edges without a
+    triangle. The d=4 band graph on 30 nodes peels its 6-truss in 3
+    rounds (110 -> 78 -> 23 -> 0 edges)."""
     from kgforge.graphstats import k_truss
 
-    n = 10
-    rows = [(i, i + 1) for i in range(n - 1)] + [(i, i + 2) for i in range(n - 2)]
-    tri = pd.DataFrame({"h": [a for a, _ in rows], "t": [b for _, b in rows], "r": 0})
-    edges = {(a, b) for a, b in rows}
+    def run(tri, k, max_rounds=None):
+        df = spark.createDataFrame(tri)
+        return {
+            (r["a"], r["b"]): r["support"]
+            for r in k_truss(df, k=k, max_rounds=max_rounds).collect()
+        }
+
+    strip = _band_graph(10, 2)
+    edges = set(zip(strip["h"], strip["t"]))
+    assert len(_py_k_truss(edges, 4, max_rounds=1)) == 7
     assert _py_k_truss(edges, 4) == {}  # the reference agrees it all peels
-    assert k_truss(spark.createDataFrame(tri), k=4).count() == 0
-    # while the 3-truss keeps the whole strip (every edge in >= 1 triangle)
-    got = k_truss(spark.createDataFrame(tri), k=3)
-    assert got.count() == len(edges)
+    assert run(strip, 4) == {}
+    assert len(run(strip, 3)) == len(edges)  # every edge in >= 1 triangle
+
+    band = _band_graph(30, 4)
+    edges = set(zip(band["h"], band["t"]))
+    assert len(_py_k_truss(edges, 6, max_rounds=2)) == 23
+    assert _py_k_truss(edges, 6) == {}
+    assert run(band, 6, max_rounds=2) == _py_k_truss(edges, 6, max_rounds=2)
+    assert run(band, 6) == {}
+
+
+def test_peels_truncate_at_max_rounds(spark):
+    """``max_rounds=r`` is exactly r peel rounds — the contract the
+    ``kg_k_core`` oracle replays — and a cap below 1 raises (k_truss
+    used to peel one round at ``max_rounds=0``, k_core none)."""
+    from kgforge.graphstats import k_core, k_truss
+
+    rng = np.random.default_rng(17)
+    tri = pd.DataFrame(
+        {"h": rng.integers(0, 30, 140), "t": rng.integers(0, 30, 140), "r": 0}
+    )
+    cases = [
+        (tri, 3),
+        (_path_graph(12), 2),
+        (_band_graph(20, 3), 4),
+    ]
+    for g, k in cases:
+        df = spark.createDataFrame(g)
+        edges = {(min(h, t), max(h, t)) for h, t in zip(g["h"], g["t"]) if h != t}
+        for r in (1, 2):
+            got = dict(
+                k_core(df, k=k, max_rounds=r)
+                .toPandas()[["e", "degree"]]
+                .itertuples(index=False)
+            )
+            assert got == _py_k_core(edges, k, max_rounds=r), (k, r)
+            got = {
+                (x["a"], x["b"]): x["support"]
+                for x in k_truss(df, k=k + 1, max_rounds=r).collect()
+            }
+            assert got == _py_k_truss(edges, k + 1, max_rounds=r), (k, r)
+    df = spark.createDataFrame(_path_graph(5))
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_rounds"):
+            k_core(df, k=2, max_rounds=bad)
+        with pytest.raises(ValueError, match="max_rounds"):
+            k_truss(df, k=3, max_rounds=bad)
 
 
 def test_duplicate_spans_exact_union(spark):
