@@ -461,17 +461,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # surface pair must survive minhash+banding+verify. The oracle
         # recomputes n_exact_pairs independently with DuckDB list ops.
         names = spark.createDataFrame(_gaz_pdf()[["surface"]].drop_duplicates())
-        a = names.select(F.col("surface").alias("a"))
-        b = names.select(F.col("surface").alias("b"))
-        all_pairs = a.crossJoin(b).where(F.col("a") < F.col("b"))
-        exact = canonicalize.exact_jaccard_filter(all_pairs, threshold=0.5).select("a", "b")
+        exact = textops.exact_char_jaccard_pairs(
+            names.select(F.col("surface").alias("doc_id"), F.col("surface").alias("text")),
+            k=3, threshold=0.5,
+        ).select("a", "b")
         lsh = canonicalize.alias_pairs(
             names.select(F.col("surface").alias("name")), threshold=0.5
-        ).select("a", "b")
-        missed = exact.join(lsh, ["a", "b"], "left_anti")
-        return (
-            exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))
-            .crossJoin(missed.agg(F.count("*").cast("long").alias("n_missed")))
+        ).select("a", "b", F.lit(True).alias("_hit"))
+        # one left join and one aggregate: the exact pair set is built once
+        return exact.join(lsh, ["a", "b"], "left").agg(
+            F.count("*").cast("long").alias("n_exact_pairs"),
+            F.count_if(F.col("_hit").isNull()).cast("long").alias("n_missed"),
         )
 
     def dedup_minhash_containment(spark, sf):
@@ -479,20 +479,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # MinHash-LSH candidate set (pairs on this corpus sit at
         # j >= 0.93 where banding recall is ~1-1e-10). The oracle
         # recomputes n_exact_pairs independently with DuckDB list ops
-        # and expects n_missed = 0.
-        from kgforge.stages.canonicalize import lsh_candidate_pairs, minhash_signatures
-
+        # and expects n_missed = 0. The chain at threshold=0 returns every
+        # LSH candidate: its size prefilter and jaccard >= 0 always hold.
         docs = spark.read.parquet(f"{sf}/documents.parquet")
         exact = textops.exact_char_jaccard_pairs(docs, k=5, threshold=0.5).select("a", "b")
-        sigs = minhash_signatures(
-            docs.select("doc_id", "text"), name_col="text", id_col="doc_id",
-            n_perm=64, k=5,
+        cands = textops.minhash_neardup_docs(docs, threshold=0.0).select(
+            "a", "b", F.lit(True).alias("_hit")
         )
-        cands = lsh_candidate_pairs(sigs, "doc_id", n_bands=16, max_bucket=100)
-        missed = exact.join(cands, ["a", "b"], "left_anti")
-        return (
-            exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))
-            .crossJoin(missed.agg(F.count("*").cast("long").alias("n_missed")))
+        return exact.join(cands, ["a", "b"], "left").agg(
+            F.count("*").cast("long").alias("n_exact_pairs"),
+            F.count_if(F.col("_hit").isNull()).cast("long").alias("n_missed"),
         )
 
     def ann_lsh_topk_recall(spark, sf):

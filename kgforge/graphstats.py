@@ -526,10 +526,14 @@ def _uniform_pagerank(
     # out-strength is static: folded into the edge table ONCE, so the
     # loop never joins (or worse, broadcasts) the |V|-sized out table
     edges_out = edges.join(out, "src").localCheckpoint(eager=False)
-    nodes = _flag_dangling(edges, out).localCheckpoint()
+    # N rides the node table's checkpoint as an Observation, as in hits
+    obs = Observation()
+    nodes = (
+        _flag_dangling(edges, out).observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    )
     # max(1): an empty graph has no rank rows at all, so the value is
     # never observed — the guard only avoids Python's 0-division
-    n_val = float(nodes.count()) or 1.0
+    n_val = float(obs.get["n"]) or 1.0
     d, n = F.lit(damping), F.lit(n_val)
     return _power_iterate(
         edges_out, contrib, nodes, F.round(F.lit(1.0 / n_val), round_decimals),

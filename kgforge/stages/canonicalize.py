@@ -1,13 +1,15 @@
 """Stages B7/B8 — alias canonicalization: MinHash-LSH blocking +
 iterative-join connected components.
 
-B7 (MinHash-LSH): char-shingle each name, minhash with ``n_perm``
+B7 (MinHash-LSH): char-shingle each name once, minhash with ``n_perm``
 universal-hash permutations (counter-based splitmix64 — deterministic,
-partition-independent), band the signature, ``groupBy(band, band_hash)``
-to form candidate buckets, pair within buckets (:func:`band_pairs`, the
-pair step the SimHash and hyperplane-LSH paths share), then verify with
-exact Jaccard. All vectorized NumPy inside one
-``mapInPandas`` (signatures) + built-in joins/aggs (banding, pairing).
+partition-independent) and fold each band's signature slice into one
+int64 bucket key (:func:`minhash_lsh_batch`, vectorized NumPy inside one
+``mapInPandas``), pair within ``(band, bucket)`` groups
+(:func:`band_pairs`, the pair step the SimHash and hyperplane-LSH paths
+share), then verify with exact Jaccard (:func:`verify_jaccard`). The
+cluster chain is :func:`minhash_lsh_pairs`; the driver runs the same
+keys and cap in :func:`alias_pairs_local`.
 
 Skew control: buckets are capped (``max_bucket``) — a degenerate bucket
 (e.g. every name sharing a stop-shingle band) would otherwise explode
@@ -145,41 +147,39 @@ def shingle_sets(grouped: tuple[np.ndarray, np.ndarray, np.ndarray], n: int) -> 
     return out
 
 
-def minhash_matrix(strings: list[str], n_perm: int, k: int, seed: int) -> np.ndarray:
-    """MinHash signatures for normalized strings → ``[n, n_perm]`` int64,
-    bit-identical to the scalar recipe ``min(splitmix64(hash_shingle(s)
-    ^ perm_const)) >> 1`` over each string's shingle set."""
-    return minhash_from_hashes(shingle_hashes(strings, k, seed), len(strings), n_perm, seed)
+def minhash_lsh_batch(
+    strings: list[str], k: int, n_perm: int, n_bands: int, seed: int
+) -> tuple[np.ndarray, list]:
+    """The per-row half of the MinHash-LSH chain over a batch of
+    normalized strings: ``(keys, sets)`` from one :func:`shingle_hashes`
+    result per chunk.
 
+    ``keys`` is ``[n, n_bands]`` int64: the key of string ``i`` in band
+    ``b`` folds that band's ``n_perm // n_bands`` signature values
+    (:func:`minhash_from_hashes`) as ``h = splitmix64(h ^ v)`` from
+    ``h = 0``. ``sets[i]`` is the sorted shingle set (:func:`shingle_sets`).
+    The batch is walked in :func:`row_chunks` of <= 262144 chars, so no
+    temporary outgrows ~16 MB whatever the batch size.
 
-def minhash_signatures(
-    names: DataFrame,
-    name_col: str = "name",
-    n_perm: int = 32,
-    k: int = 3,
-    seed: int = 42,
-    id_col: str | None = None,
-) -> DataFrame:
-    """B7 step 1: minhash signatures.
-
-    Output: ``(<key>, sig: array<bigint>)`` where key is ``id_col`` if
-    given (signature computed over ``name_col`` text) else ``name_col``.
+    Raises ``ValueError`` unless ``n_bands`` divides ``n_perm``: a
+    remainder would silently drop the signature's tail.
     """
-    key = id_col or name_col
-    key_type = "string"
-    if id_col is not None:
-        key_type = dict(names.dtypes)[id_col]
-    schema = f"{key} {key_type}, sig array<long>"
-    sel = names.select(key, name_col) if id_col else names.select(name_col).distinct()
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sigs = minhash_matrix(normalize_names(pdf[name_col]).tolist(), n_perm, k, seed)
-            yield pd.DataFrame({key: pdf[key], "sig": list(sigs)})
-
-    return sel.mapInPandas(fn, schema)
+    if n_bands < 1 or n_perm % n_bands:
+        raise ValueError(f"n_bands={n_bands} must divide n_perm={n_perm}")
+    rows_per_band = n_perm // n_bands
+    bounds = np.concatenate(([0], np.cumsum([len(s) for s in strings], dtype=np.int64)))
+    keys = np.empty((len(strings), n_bands), dtype=np.uint64)
+    sets: list = []
+    for lo, hi in row_chunks(bounds, 262144):
+        grouped = shingle_hashes(strings[lo:hi], k, seed)
+        sig = minhash_from_hashes(grouped, hi - lo, n_perm, seed).view(np.uint64)
+        sig = sig.reshape(hi - lo, n_bands, rows_per_band)
+        h = np.zeros((hi - lo, n_bands), dtype=np.uint64)
+        for j in range(rows_per_band):
+            h = splitmix64(h ^ sig[:, :, j])
+        keys[lo:hi] = h
+        sets += shingle_sets(grouped, hi - lo)
+    return keys.view(np.int64), sets
 
 
 def hash_shingle(s: str, seed: int) -> int:
@@ -224,38 +224,6 @@ def band_pairs(banded: DataFrame, id_col: str, max_bucket: int | None = None) ->
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    name_col: str = "name",
-    n_bands: int = 8,
-    max_bucket: int = 50,
-) -> DataFrame:
-    """B7 steps 2-3: band signatures → bucket → intra-bucket pairs.
-
-    Band ``b`` of a signature is its ``b``-th slice of ``size(sig) //
-    n_bands`` values, bucketed by ``xxhash64(slice, b)``; the pairs come
-    from :func:`band_pairs`. Output: ``(a, b)`` candidate pairs with
-    a < b. Buckets larger than ``max_bucket`` are dropped (skew cap;
-    see module docstring).
-    """
-    rows_per_band = (F.size("sig") / n_bands).cast("int")
-    banded = signatures.select(
-        F.col(name_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.slice("sig", b * rows_per_band + 1, rows_per_band), b
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(name_col, "bb.band", "bb.bucket")
-    return band_pairs(banded, name_col, max_bucket)
-
-
 def verify_jaccard(joined: DataFrame, threshold: float) -> DataFrame:
     """Exact-Jaccard verify of candidate rows ``(a, b, _sa, _sb)`` whose
     ``_sa``/``_sb`` are sorted distinct hashed shingle arrays
@@ -276,36 +244,56 @@ def verify_jaccard(joined: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def exact_jaccard_filter(
-    pairs: DataFrame, threshold: float = 0.5, k: int = 3, seed: int = 42
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    n_perm: int,
+    n_bands: int,
+    max_bucket: int,
+    threshold: float,
+    seed: int = 42,
 ) -> DataFrame:
-    """B7 step 4: verify candidate name pairs ``(a, b)`` with exact
-    shingle Jaccard.
+    """The one MinHash-LSH chain: ``docs`` → verified near-duplicate
+    ``(a, b, jaccard)`` pairs of ``id_col`` values, over the char
+    k-shingles of ``text_col``.
 
-    Each *distinct name* is shingled exactly once
-    (:func:`kgforge.textops.char_shingle_table`, keyed by the name
-    string); both sides join that table and :func:`verify_jaccard`
-    checks the pairs — the same per-doc-once shingling and verify the
-    document dedup paths use.
+    One fused ``mapInPandas`` runs :func:`minhash_lsh_batch` per Arrow
+    batch and is checkpointed once as ``(id, keys, shingles)``; the
+    ``posexplode`` of its keys feeds :func:`band_pairs` (cap
+    ``max_bucket``), and :func:`verify_jaccard` reads both pair ends'
+    shingles from the same table. Every text is shingled exactly once.
+    Both verify joins read one unrenamed ``(id, shingles)`` projection,
+    so its exchange is built once and reused (``ReusedExchange``).
+    ``threshold=0`` keeps every candidate (shingle sets are never empty).
     """
-    from ..textops import char_shingle_table
+    minhash_lsh_batch([], k, n_perm, n_bands, seed)  # a bad band split raises before any job
+    id_type = dict(docs.dtypes)[id_col]
 
-    # referenced three times below (a-names, b-names, join base): pin the
-    # candidate set once or every reference re-runs the upstream LSH plan
-    # (bucket-capped, so this is always small relative to the corpus)
-    pairs = pairs.select("a", "b").localCheckpoint(eager=False)
-    names = (
-        pairs.select(F.col("a").alias("name"))
-        .union(pairs.select(F.col("b").alias("name")))
-        .distinct()
-        .withColumn("_text", F.col("name"))
+    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            norm = normalize_names(pdf["_text"]).tolist()
+            keys, sets = minhash_lsh_batch(norm, k, n_perm, n_bands, seed)
+            yield pd.DataFrame({"id": pdf["id"], "keys": list(keys), "shingles": sets})
+
+    table = (
+        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text"))
+        .mapInPandas(fused, f"id {id_type}, keys array<long>, shingles array<long>")
+        .localCheckpoint(eager=False)
     )
-    # referenced twice (a-side and b-side joins): localCheckpoint so the
-    # mapInPandas shingling runs once, not per downstream reference
-    sh = char_shingle_table(names, k=k, seed=seed, id_col="name", text_col="_text").localCheckpoint(eager=False)
-    a = sh.select(F.col("name").alias("a"), F.col("shingles").alias("_sa"))
-    b = sh.select(F.col("name").alias("b"), F.col("shingles").alias("_sb"))
-    return verify_jaccard(pairs.join(a, "a").join(b, "b"), threshold)
+    banded = table.select("id", F.posexplode("keys").alias("band", "bucket"))
+    sh = table.select("id", "shingles")
+    x, y = sh.alias("x"), sh.alias("y")
+    joined = (
+        band_pairs(banded, "id", max_bucket)
+        .join(x, F.col("a") == F.col("x.id"))
+        .join(y, F.col("b") == F.col("y.id"))
+        .select("a", "b", F.col("x.shingles").alias("_sa"), F.col("y.shingles").alias("_sb"))
+    )
+    return verify_jaccard(joined, threshold)
 
 
 def alias_pairs(
@@ -316,12 +304,15 @@ def alias_pairs(
     threshold: float = 0.5,
     max_bucket: int = 50,
 ) -> DataFrame:
-    """Full B7: names → verified near-duplicate alias pairs (a, b, jaccard).
-    :func:`alias_pairs_local` is the same chain on the driver, for a name
-    list the driver already holds."""
-    sigs = minhash_signatures(names, name_col, n_perm)
-    cands = lsh_candidate_pairs(sigs, name_col, n_bands, max_bucket)
-    return exact_jaccard_filter(cands, threshold)
+    """Full B7: distinct non-null names → verified near-duplicate alias
+    pairs ``(a, b, jaccard)``, by :func:`minhash_lsh_pairs` over char
+    3-shingles keyed by the name itself. :func:`alias_pairs_local` is
+    the same chain on the driver, for a name list the driver already
+    holds."""
+    distinct = names.select(name_col).where(F.col(name_col).isNotNull()).distinct()
+    return minhash_lsh_pairs(
+        distinct, name_col, name_col, 3, n_perm, n_bands, max_bucket, threshold
+    )
 
 
 def alias_pairs_local(
@@ -334,47 +325,34 @@ def alias_pairs_local(
     seed: int = 42,
 ) -> pd.DataFrame:
     """:func:`alias_pairs` on the driver, as a pandas ``(a, b, jaccard)``
-    frame: same :func:`minhash_matrix` signatures, band slicing,
-    ``max_bucket`` cap and exact-shingle-Jaccard verify, without the ~10
-    small Spark jobs of the distributed chain. Signatures and the
-    verify's shingle sets come from one :func:`shingle_hashes` pass —
-    the same hashed sets the JVM path intersects, here with
-    ``np.intersect1d`` — so only bucket identity differs: the raw
-    band-slice bytes here, the slice's xxhash64 on the JVM path (same
-    row partition, hash collisions aside)."""
+    frame, without the Spark jobs of the distributed chain. The distinct
+    non-null names go through the same :func:`minhash_lsh_batch`; names
+    sharing an int64 bucket key in some band pair up unless the
+    ``(band, key)`` bucket holds more than ``max_bucket`` names, and the
+    verify intersects the same sorted shingle sets with
+    ``np.intersect1d``. Candidates and verified pairs equal
+    :func:`alias_pairs`' exactly."""
     from collections import defaultdict
+    from itertools import combinations
 
-    cols = ["a", "b", "jaccard"]
-    names_sorted = [s for s in name_list if s is not None]
-    if not names_sorted:
-        return pd.DataFrame([], columns=cols)
-    norm = normalize_names(pd.Series(names_sorted)).tolist()
-    grouped = shingle_hashes(norm, k, seed)
-    sigs = minhash_from_hashes(grouped, len(norm), n_perm, seed)
-    shingles = dict(zip(names_sorted, shingle_sets(grouped, len(norm))))
-    rpb = n_perm // n_bands
+    names = sorted({s for s in name_list if s is not None})
+    norm = normalize_names(pd.Series(names, dtype="string")).tolist()
+    keys, sets = minhash_lsh_batch(norm, k, n_perm, n_bands, seed)
+    buckets: dict = defaultdict(list)
+    for i, row in enumerate(keys.tolist()):
+        for band_key in enumerate(row):
+            buckets[band_key].append(i)
     cand: set = set()
-    for b in range(n_bands):
-        buckets: dict = defaultdict(list)
-        sl = sigs[:, b * rpb:(b + 1) * rpb]
-        for i in range(len(names_sorted)):
-            buckets[sl[i].tobytes()].append(i)
-        for grp in buckets.values():
-            if len(grp) > max_bucket:
-                continue
-            for x in range(len(grp)):
-                for y in range(x + 1, len(grp)):
-                    p, q = names_sorted[grp[x]], names_sorted[grp[y]]
-                    if p != q:
-                        cand.add((p, q) if p < q else (q, p))
+    for grp in buckets.values():
+        if len(grp) <= max_bucket:
+            cand.update(combinations(grp, 2))  # i < j, so names[i] < names[j]
     rows = []
-    for a, b in sorted(cand):
-        sa, sb = shingles[a], shingles[b]
-        inter = len(np.intersect1d(sa, sb, assume_unique=True))
-        j = inter / (len(sa) + len(sb) - inter)
-        if j >= threshold:
-            rows.append((a, b, j))
-    return pd.DataFrame(rows, columns=cols)
+    for i, j in sorted(cand):
+        inter = len(np.intersect1d(sets[i], sets[j], assume_unique=True))
+        jac = inter / (len(sets[i]) + len(sets[j]) - inter)
+        if jac >= threshold:
+            rows.append((names[i], names[j], jac))
+    return pd.DataFrame(rows, columns=["a", "b", "jaccard"])
 
 
 def drop_cross_anchor(pairs: pd.DataFrame, canon_of: dict) -> pd.DataFrame:

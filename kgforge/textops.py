@@ -469,11 +469,8 @@ def simhash_candidate_pairs(sim: DataFrame, band_bits: int = 16, max_hamming: in
     )
 
 
-def char_shingle_table(
-    docs: DataFrame, k: int = 5, seed: int = 42,
-    id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """``(<id_col>, shingles array<long>)`` — sorted distinct hashed char
+def char_shingle_table(docs: DataFrame, k: int = 5, seed: int = 42) -> DataFrame:
+    """``(doc_id, shingles array<long>)`` — sorted distinct hashed char
     k-shingles per doc: :func:`~kgforge.stages.canonicalize.
     normalize_names`, then :func:`~kgforge.stages.canonicalize.
     shingle_hashes` + ``shingle_sets`` per Arrow batch (same values as
@@ -483,24 +480,23 @@ def char_shingle_table(
 
     Computing shingles ONCE per doc and verifying pairs with JVM
     ``array_intersect`` replaces per-pair Python set shingling — the
-    pair side only ever joins against this table. ``id_col`` may be any
-    type (the alias canonicalizer keys by the name string itself).
+    pair side only ever joins against this table.
     """
     from .session import ensure_min_partitions
     from .stages.canonicalize import normalize_names, shingle_hashes, shingle_sets
 
     docs = ensure_min_partitions(docs)
-    schema = f"{id_col} {dict(docs.dtypes)[id_col]}, shingles array<long>"
+    schema = f"doc_id {dict(docs.dtypes)['doc_id']}, shingles array<long>"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            norm = normalize_names(pdf[text_col]).tolist()
+            norm = normalize_names(pdf["text"]).tolist()
             out = shingle_sets(shingle_hashes(norm, k, seed), len(norm))
-            yield pd.DataFrame({id_col: pdf[id_col], "shingles": out})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "shingles": out})
 
-    return docs.select(id_col, text_col).mapInPandas(fn, schema)
+    return docs.select("doc_id", "text").mapInPandas(fn, schema)
 
 
 def exact_char_jaccard_pairs(
@@ -514,7 +510,7 @@ def exact_char_jaccard_pairs(
     design (it IS the oracle baseline)."""
     from .stages.canonicalize import verify_jaccard
 
-    sh = char_shingle_table(docs, k, seed).localCheckpoint()
+    sh = char_shingle_table(docs, k, seed).localCheckpoint(eager=False)
     a = sh.select(F.col("doc_id").alias("a"), F.col("shingles").alias("_sa"))
     b = sh.select(F.col("doc_id").alias("b"), F.col("shingles").alias("_sb"))
     return verify_jaccard(a.crossJoin(b).where(F.col("a") < F.col("b")), threshold)
@@ -524,53 +520,19 @@ def minhash_neardup_docs(
     docs: DataFrame, n_perm: int = 64, n_bands: int = 16, threshold: float = 0.7,
     shingle_k: int = 5, max_bucket: int = 100,
 ) -> DataFrame:
-    """MinHash-LSH near-duplicate document pairs (scale path for dedup).
-
-    shingle→minhash→band→bucket→pairs→exact-Jaccard-verify, reusing the
-    B7 machinery keyed by doc_id.
+    """MinHash-LSH near-duplicate document pairs (scale path for dedup):
+    the B7 chain :func:`~kgforge.stages.canonicalize.minhash_lsh_pairs`
+    keyed by ``doc_id`` over char ``shingle_k``-shingles of ``text``, on
+    a min-parallelism-guarded input.
     Output: ``a, b, jaccard`` (doc_id pairs).
     """
     from .session import ensure_min_partitions
-    from .stages.canonicalize import (
-        lsh_candidate_pairs,
-        minhash_from_hashes,
-        normalize_names,
-        shingle_hashes,
-        shingle_sets,
-        verify_jaccard,
+    from .stages.canonicalize import minhash_lsh_pairs
+
+    return minhash_lsh_pairs(
+        ensure_min_partitions(docs), "doc_id", "text", shingle_k, n_perm, n_bands,
+        max_bucket, threshold,
     )
-
-    docs = ensure_min_partitions(docs)
-    # ONE fused pass computes signatures AND the verify shingle arrays
-    # from one shingle_hashes result per batch: every document is
-    # normalized and hashed once, and the checkpointed table feeds both
-    # the banding and both verify sides. Shingle SETS are identical to
-    # char_shingle_table's (same normalization, same FNV, same seed), so
-    # jaccard doubles are unchanged.
-    id_type = dict(docs.dtypes)["doc_id"]
-    seed = 42
-
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            norm = normalize_names(pdf["text"]).tolist()
-            grouped = shingle_hashes(norm, shingle_k, seed)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "sig": list(minhash_from_hashes(grouped, len(norm), n_perm, seed)),
-                "shingles": shingle_sets(grouped, len(norm)),
-            })
-
-    combo = (
-        docs.select("doc_id", "text")
-        .mapInPandas(_fused, f"doc_id {id_type}, sig array<long>, shingles array<long>")
-        .localCheckpoint(eager=False)
-    )
-    cands = lsh_candidate_pairs(combo.select("doc_id", "sig"), "doc_id", n_bands, max_bucket)
-    sa = combo.select(F.col("doc_id").alias("a"), F.col("shingles").alias("_sa"))
-    sb = combo.select(F.col("doc_id").alias("b"), F.col("shingles").alias("_sb"))
-    return verify_jaccard(cands.join(sa, "a").join(sb, "b"), threshold)
 
 
 def tfidf_top_terms(

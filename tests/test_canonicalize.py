@@ -16,13 +16,13 @@ from kgforge.fixtures import gazetteer
 from kgforge.sampling import splitmix64
 from kgforge.stages.canonicalize import (
     alias_pairs,
+    alias_pairs_local,
     band_pairs,
-    char_shingles,
     connected_components,
-    exact_jaccard_filter,
     hash_shingle,
-    minhash_matrix,
-    minhash_signatures,
+    minhash_from_hashes,
+    minhash_lsh_batch,
+    minhash_lsh_pairs,
     shingle_hashes,
     shingle_sets,
 )
@@ -162,54 +162,57 @@ def test_minhash_and_shingle_sets_match_scalar_recipe(strings, k):
     """The NumPy hashing split (ASCII windows, short whole-string
     shingles, non-ASCII scalar fallback) is bit-identical to FNV-1a
     ``hash_shingle`` over each string's shingle set: signatures equal
-    ``min(splitmix64(h ^ perm_const)) >> 1`` and the verify sets equal
-    ``np.unique`` of the hashes — including empty, shorter-than-k and
-    non-ASCII strings."""
-    n_perm, seed = 16, 42
+    ``min(splitmix64(h ^ perm_const)) >> 1``, the verify sets equal
+    ``np.unique`` of the hashes, and each band's bucket key equals the
+    scalar fold ``h = splitmix64(h ^ v)`` over its signature slice —
+    including empty, shorter-than-k and non-ASCII strings."""
+    n_perm, n_bands, seed = 16, 4, 42
+    rpb = n_perm // n_bands
     pc = splitmix64(np.arange(n_perm, dtype=np.uint64) + np.uint64(seed))
-    sigs = minhash_matrix(strings, n_perm, k, seed)
-    sets = shingle_sets(shingle_hashes(strings, k, seed), len(strings))
+    grouped = shingle_hashes(strings, k, seed)
+    sigs = minhash_from_hashes(grouped, len(strings), n_perm, seed)
+    sets = shingle_sets(grouped, len(strings))
+    keys, batch_sets = minhash_lsh_batch(strings, k, n_perm, n_bands, seed)
     assert sigs.shape == (len(strings), n_perm) and len(sets) == len(strings)
-    for s, sig, got in zip(strings, sigs, sets):
+    assert keys.shape == (len(strings), n_bands) and keys.dtype == np.int64
+    for s, sig, got, key, got_b in zip(strings, sigs, sets, keys, batch_sets):
         sh = {s[j:j + k] for j in range(max(1, len(s) - k + 1))}
         base = np.array([hash_shingle(x, seed) for x in sh], dtype=np.uint64)
         want = (splitmix64(base[:, None] ^ pc[None, :]).min(axis=0) >> np.uint64(1)).astype(np.int64)
         assert np.array_equal(sig, want), s
-        assert got.dtype == np.int64 and np.array_equal(got, np.unique(base.astype(np.int64))), s
+        want_set = np.unique(base.astype(np.int64))
+        assert got.dtype == np.int64 and np.array_equal(got, want_set), s
+        assert np.array_equal(got_b, want_set), s
+        for band in range(n_bands):
+            h = np.zeros(1, dtype=np.uint64)
+            for v in want[band * rpb:(band + 1) * rpb]:
+                h = splitmix64(h ^ np.uint64(v))
+            assert key[band] == h.view(np.int64)[0], (s, band)
 
 
-def test_exact_jaccard_filter_equals_string_set_jaccard(spark):
-    """The name verify (size prefilter + hashed array_intersect) keeps
-    exactly the gazetteer surface pairs whose string-set char-3 Jaccard
-    is >= 0.3, with the same doubles."""
-    surf = sorted(set(gazetteer()["surface"]))
-    sh = dict(zip(surf, char_shingles(pd.Series(surf), 3)))
-    want = {}
-    for i, a in enumerate(surf):
-        for b in surf[i + 1:]:
-            j = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
-            if j >= 0.3:
-                want[(a, b)] = j
-    names = spark.createDataFrame(pd.DataFrame({"n": surf}))
-    pairs = (
-        names.select(F.col("n").alias("a"))
-        .crossJoin(names.select(F.col("n").alias("b")))
-        .where(F.col("a") < F.col("b"))
-    )
-    got = {(a, b): j for a, b, j in exact_jaccard_filter(pairs, threshold=0.3).collect()}
-    assert want and got.keys() == want.keys()
-    assert all(abs(got[p] - want[p]) < 1e-12 for p in want)
+def test_band_split_must_divide_signature(spark):
+    """A signature that the bands do not split evenly is refused on both
+    paths instead of silently losing its tail."""
+    with pytest.raises(ValueError, match="must divide"):
+        minhash_lsh_batch(["acme"], 3, 30, 8, 42)
+    with pytest.raises(ValueError, match="must divide"):
+        alias_pairs_local(["acme", "acme corp"], n_perm=30, n_bands=8)
+    names = spark.createDataFrame([("acme",), ("acme corp",)], "name string")
+    with pytest.raises(ValueError, match="must divide"):
+        alias_pairs(names, n_perm=30, n_bands=8)
 
 
 def test_signatures_deterministic_across_partitioning(spark):
-    gaz = gazetteer()
-    names = pd.DataFrame({"name": gaz["surface"]})
-    a = minhash_signatures(spark.createDataFrame(names)).toPandas()
-    b = minhash_signatures(spark.createDataFrame(names).repartition(9)).toPandas()
-    a = a.sort_values("name").reset_index(drop=True)
-    b = b.sort_values("name").reset_index(drop=True)
-    assert (a["name"] == b["name"]).all()
-    assert all(list(x) == list(y) for x, y in zip(a["sig"], b["sig"]))
+    """The chain's candidates do not depend on how the input is split
+    into partitions and Arrow batches."""
+    names = pd.DataFrame({"name": sorted(set(gazetteer()["surface"]))})
+
+    def cands(df):
+        pairs = minhash_lsh_pairs(df, "name", "name", 3, 32, 8, 50, 0.0).toPandas()
+        return set(pairs.itertuples(index=False, name=None))
+
+    one = cands(spark.createDataFrame(names).coalesce(1))
+    assert one and cands(spark.createDataFrame(names).repartition(9)) == one
 
 
 def test_link_local_select_equals_min_by(spark):
@@ -404,20 +407,24 @@ def test_driver_unionfind_equals_distributed_cc(spark):
 
 
 def test_driver_alias_pairs_equals_distributed(spark):
-    """The driver-side B7 chain (alias_pairs_local) must produce exactly
-    the distributed chain's verified pairs — same candidates (band-slice
-    buckets, max_bucket cap) and same jaccard doubles."""
-    from kgforge.stages.canonicalize import alias_pairs_local
-
-    gaz = gazetteer()
-    names = spark.createDataFrame(gaz[["surface"]].rename(columns={"surface": "name"}))
-    dist = alias_pairs(names, threshold=0.5).toPandas()
-    drv = alias_pairs_local(gaz["surface"].tolist(), threshold=0.5)
+    """The driver-side B7 chain (alias_pairs_local) produces exactly the
+    distributed chain's candidates (``threshold=0``) and verified pairs,
+    with the same jaccard doubles — also where the ``max_bucket`` cap
+    acts: 51 spellings of one normalized name fill one bucket in every
+    band, so neither path pairs them. A None and a repeated name ride
+    along."""
+    same = [f"Zed{'-' * i}Corp" for i in range(1, 52)]
+    surfaces = gazetteer()["surface"].tolist() + same + [None, "Acme Corp", "Acme Corp"]
+    names = spark.createDataFrame(pd.DataFrame({"name": surfaces}), "name string")
     key = ["a", "b"]
-    dist = dist.sort_values(key).reset_index(drop=True)
-    drv = drv.sort_values(key).reset_index(drop=True)
-    assert len(drv) > 0
-    pd.testing.assert_frame_equal(dist, drv, check_like=True)
+    for threshold in (0.0, 0.5):
+        dist = alias_pairs(names, threshold=threshold).toPandas()
+        drv = alias_pairs_local(surfaces, threshold=threshold)
+        dist = dist.sort_values(key).reset_index(drop=True)
+        drv = drv.sort_values(key).reset_index(drop=True)
+        assert len(drv) > 0
+        assert not (drv["a"].isin(same) & drv["b"].isin(same)).any()
+        pd.testing.assert_frame_equal(dist, drv, check_like=True)
 
 
 def _banded(spark, buckets):
