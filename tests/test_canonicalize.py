@@ -18,13 +18,16 @@ from kgforge.stages.canonicalize import (
     alias_pairs,
     alias_pairs_local,
     band_pairs,
+    char_shingles,
     connected_components,
     hash_shingle,
     minhash_from_hashes,
     minhash_lsh_batch,
     minhash_lsh_pairs,
+    normalize_names,
     shingle_hashes,
     shingle_sets,
+    verify_jaccard,
 )
 
 
@@ -188,6 +191,32 @@ def test_minhash_and_shingle_sets_match_scalar_recipe(strings, k):
             for v in want[band * rpb:(band + 1) * rpb]:
                 h = splitmix64(h ^ np.uint64(v))
             assert key[band] == h.view(np.int64)[0], (s, band)
+
+
+def test_exact_jaccard_filter_equals_string_set_jaccard(spark):
+    """The name verify (size prefilter + hashed array_intersect in
+    :func:`verify_jaccard`) keeps exactly the gazetteer surface pairs
+    whose string-set char-3 Jaccard is >= 0.3, with the same doubles."""
+    surf = sorted(set(gazetteer()["surface"]))
+    sh = dict(zip(surf, char_shingles(pd.Series(surf), 3)))
+    want = {}
+    for i, a in enumerate(surf):
+        for b in surf[i + 1:]:
+            j = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+            if j >= 0.3:
+                want[(a, b)] = j
+    sets = shingle_sets(shingle_hashes(normalize_names(pd.Series(surf)).tolist(), 3, 42), len(surf))
+    names = spark.createDataFrame(
+        pd.DataFrame({"n": surf, "s": [x.tolist() for x in sets]}), "n string, s array<long>"
+    )
+    pairs = (
+        names.select(F.col("n").alias("a"), F.col("s").alias("_sa"))
+        .crossJoin(names.select(F.col("n").alias("b"), F.col("s").alias("_sb")))
+        .where(F.col("a") < F.col("b"))
+    )
+    got = {(a, b): j for a, b, j in verify_jaccard(pairs, threshold=0.3).collect()}
+    assert want and got.keys() == want.keys()
+    assert all(abs(got[p] - want[p]) < 1e-12 for p in want)
 
 
 def test_band_split_must_divide_signature(spark):

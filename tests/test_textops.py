@@ -142,9 +142,7 @@ def test_char_shingle_table_matches_string_sets(spark, docs):
 
 def test_exact_char_jaccard_pairs(spark, docs):
     """Brute-force exact pairs: near-exact dup (0,1) well above 0.5;
-    jaccard values match the Python set computation, on the documents
-    at k=5 and on the gazetteer surfaces at k=3."""
-    from kgforge.fixtures import gazetteer
+    jaccard values match the Python set computation."""
     from kgforge.stages.canonicalize import char_shingles
 
     got = textops.exact_char_jaccard_pairs(docs, k=5, threshold=0.3).toPandas()
@@ -155,23 +153,6 @@ def test_exact_char_jaccard_pairs(spark, docs):
     for (a, b), j in pairs.items():
         x, y = sh.iloc[a], sh.iloc[b]
         assert abs(j - len(x & y) / len(x | y)) < 1e-12
-
-    # gazetteer surfaces at k=3: exactly the string-set pairs >= 0.3
-    surf = sorted(set(gazetteer()["surface"]))
-    sh3 = dict(zip(surf, char_shingles(pd.Series(surf), 3)))
-    want = {}
-    for i, a in enumerate(surf):
-        for b in surf[i + 1:]:
-            j = len(sh3[a] & sh3[b]) / len(sh3[a] | sh3[b])
-            if j >= 0.3:
-                want[(a, b)] = j
-    names = spark.createDataFrame(pd.DataFrame({"doc_id": surf, "text": surf}))
-    got = {
-        (a, b): j
-        for a, b, j in textops.exact_char_jaccard_pairs(names, k=3, threshold=0.3).collect()
-    }
-    assert want and got.keys() == want.keys()
-    assert all(abs(got[p] - want[p]) < 1e-12 for p in want)
 
 
 def test_minhash_neardup_docs(spark, docs):
