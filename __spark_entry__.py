@@ -415,7 +415,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         d = tempfile.mkdtemp(prefix="kgforge_a14_")
         write_embeddings_parquet(spark, emb, d)
-        back = read_embeddings_parquet(spark, d)
+        back = read_embeddings_parquet(d)
         known = pd.concat([split["train2id"], split["valid2id"], split["test2id"]])
         ranks = ev.link_prediction_ranks(
             spark, spark.createDataFrame(split["test2id"]), back, known
@@ -521,108 +521,71 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def a15_ranks_blocked(spark, sf):
-        # the |E|-beyond-broadcast escape hatch, live: entity blocks
-        # scored in mapInPandas, counts summed — same oracle as the
-        # broadcast path
+        # the A15 ranks with the known set as a DataFrame: only the known
+        # triples sharing a test triple's fixed slot are collected — same
+        # oracle as a15_link_prediction_ranks
         split, emb, known = _openke_emb()
-        return ev.link_prediction_ranks_blocked(
-            spark, spark.createDataFrame(split["test2id"]), emb, known
-        )
-
-    def a15_ranks_blocked_l2(spark, sf):
-        # blocked path, Euclidean scoring: ranks on 6-decimal-rounded
-        # scores in BOTH engines (L2 float sums are accumulation-order
-        # dependent; same recipe as a15_ranks_l2)
-        split, emb, known = _openke_emb()
-        return ev.link_prediction_ranks_blocked(
-            spark, spark.createDataFrame(split["test2id"]), emb, known,
-            norm=2, score_decimals=6,
+        return ev.link_prediction_ranks(
+            spark, spark.createDataFrame(split["test2id"]), emb,
+            spark.createDataFrame(known[["h", "t", "r"]]),
         )
 
     def a15_ranks_blocked_transh(spark, sf):
-        # blocked path under TransH (hyperplane projection in the kernel)
+        # A15 ranks under TransH (hyperplane projection in the kernel)
         split, emb, known = _openke_emb()
-        return ev.link_prediction_ranks_blocked(
+        return ev.link_prediction_ranks(
             spark, spark.createDataFrame(split["test2id"]), emb, known,
             model="transh", score_decimals=6,
         )
 
     def a15_ranks_blocked_transd(spark, sf):
-        # blocked path under TransD (rank-1 dynamic projection; ent_p
-        # rides on the entity rows beside ent)
+        # A15 ranks under TransD (rank-1 dynamic projection; ent_p is
+        # broadcast beside ent)
         split, emb, known = _openke_emb()
-        return ev.link_prediction_ranks_blocked(
+        return ev.link_prediction_ranks(
             spark, spark.createDataFrame(split["test2id"]), emb, known,
             model="transd", score_decimals=6,
         )
 
-    def a15_ranks_blocked_distmult(spark, sf):
-        """Blocked (beyond-broadcast) rank path under the DistMult
-        kernel: each entity block is scored by the same score_batch
-        call as the broadcast path, so the bilinear family needs no
-        broadcast entity matrix at |E| beyond executor memory. Same
-        protocol text as the broadcast a15_ranks_distmult; equality
-        pinned by test_blocked_ranks_equal_broadcast[distmult-1-6]."""
-        split, emb, known = _openke_emb()
-        return ev.link_prediction_ranks_blocked(
-            spark, spark.createDataFrame(split["test2id"]), emb, known,
-            model="distmult", score_decimals=6,
-        )
-
-    def a15_ranks_blocked_complex(spark, sf):
-        """Blocked rank path under ComplEx: the imaginary halves ride
-        exactly like the real ones (ent_im on the entity rows, rel_im
-        broadcast with rel). Equality with the broadcast path pinned by
-        test_blocked_ranks_equal_broadcast[complex-1-6]."""
-        split, emb, known = _openke_emb()
-        return ev.link_prediction_ranks_blocked(
-            spark, spark.createDataFrame(split["test2id"]), emb, known,
-            model="complex", score_decimals=6,
-        )
-
     def a15_ranks_blocked_transr(spark, sf):
-        # blocked path under TransR: the |R|-sized matrices ride
-        # broadcast and each block applies the kernel's per-relation
-        # matmul. Same oracle as the relfilter TransR query (the DuckDB
-        # proj CTE is the same matmul).
+        # A15 ranks under TransR: the kernel's per-relation matmul over
+        # the broadcast |R|-sized matrices. Same oracle as the relfilter
+        # TransR query (the DuckDB proj CTE is the same matmul).
         split, emb, known = _openke_emb()
-        return ev.link_prediction_ranks_blocked(
+        return ev.link_prediction_ranks(
             spark, spark.createDataFrame(split["test2id"]), emb, known,
             model="transr", score_decimals=6,
         )
 
     def a15_ranks_blocked_from_parquet(spark, sf):
-        # A20 → blocked eval, end to end DataFrame-native: embeddings
-        # enter as Parquet (id, vec) tables and the known set as the
-        # union of the split parquets — zero data-sized driver pulls
-        # (the round-1/2 path built these from driver NumPy/pandas).
-        from kgforge.io_openke import read_embedding_df
+        # A20 → A15 eval end to end: the embeddings come from a Parquet
+        # checkpoint (read on the driver, no Spark job) and the known set
+        # is the union of the split parquets as a DataFrame — only the
+        # triples sharing a test triple's fixed slot reach the driver.
+        from kgforge.io_openke import read_embeddings_parquet
 
         # checkpoint fixture is written ONCE per process (seeded, so
         # reuse is exact); the query itself measures the Parquet-ingested
-        # blocked-eval path — read + ranks — not fixture setup
-        d = _a20_ckpt_dir(spark)
-        emb_dfs = {k: read_embedding_df(spark, d, k) for k in ("ent", "rel")}
+        # eval path — read + ranks — not fixture setup
+        emb = read_embeddings_parquet(_a20_ckpt_dir(spark))
         known_df = (
             _openke(spark, "train2id")
             .unionByName(_openke(spark, "valid2id"))
             .unionByName(_openke(spark, "test2id"))
         )
-        return ev.link_prediction_ranks_blocked(
-            spark, _openke(spark, "test2id"), emb_dfs, known_df
-        )
+        return ev.link_prediction_ranks(spark, _openke(spark, "test2id"), emb, known_df)
 
     def a15_ranks_relfilter(spark, sf):
-        # the B12 gate's call shape: blocked ranks with the known set as
-        # a DataFrame end to end (joined into skip lists, never
-        # collected) — must equal the broadcast-filter oracle exactly
+        # the B12 gate's call shape: the known set as a DataFrame of the
+        # split parquets, cut to the test triples' fixed slots before it
+        # is collected — must equal the pandas-filter oracle exactly
         split, emb, known = _openke_emb()
         known_df = (
             _openke(spark, "train2id")
             .unionByName(_openke(spark, "valid2id"))
             .unionByName(_openke(spark, "test2id"))
         )
-        return ev.link_prediction_ranks_blocked(
+        return ev.link_prediction_ranks(
             spark, spark.createDataFrame(split["test2id"]), emb, known_df
         )
 
@@ -638,7 +601,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .unionByName(_openke(spark, "valid2id"))
             .unionByName(_openke(spark, "test2id"))
         )
-        return ev.link_prediction_ranks_blocked(
+        return ev.link_prediction_ranks(
             spark, spark.createDataFrame(split["test2id"]), emb, known_df,
             model="transr", score_decimals=6,
         )
@@ -655,7 +618,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         emb = gen_embeddings(n_ent=len(split["entity2id"]), n_rel=len(split["relation2id"]))
         d = tempfile.mkdtemp(prefix="kgforge_a20s_")
         write_embeddings_parquet(spark, emb, d)
-        back = read_embeddings_parquet(spark, d)
+        back = read_embeddings_parquet(d)
         test = spark.createDataFrame(split["test2id"])
         return ev.score_triples(spark, test, back, model="transe", norm=1).select(
             "h", "t", "r", F.round("score", 9).alias("score")
@@ -760,30 +723,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         num = [c for c in m.columns if c not in ("category", "n_triples")]
         return m.select("category", "n_triples", *[F.round(F.col(c), 9).alias(c) for c in num])
 
-    def a17_category_blocked(spark, sf):
-        # per-category (1-1/1-N/N-1/N-N) breakdown in the BEYOND-broadcast
-        # regime: the blocked ranks compose with
-        # relation_categories exactly like the broadcast path — the oracle
-        # is identical because the rank protocols agree (pinned by
-        # test_blocked_category_metrics_equal_broadcast)
-        split, emb, known = _openke_emb()
-        ranks = ev.link_prediction_ranks_blocked(
-            spark, spark.createDataFrame(split["test2id"]), emb, known
-        )
-        cats = ev.relation_categories(spark.createDataFrame(split["train2id"]))
-        m = ev.link_prediction_metrics_by_category(ranks, cats)
-        num = [c for c in m.columns if c not in ("category", "n_triples")]
-        return m.select("category", "n_triples", *[F.round(F.col(c), 9).alias(c) for c in num])
-
     def a17_category_relfilter(spark, sf):
         """Per-category (1-1/1-N/N-1/N-N) metrics in the B12 gate's
         call shape at data-sized known sets: ranks from
-        link_prediction_ranks_blocked with the known set as a DataFrame
-        end to end, categories from train tph/hpt, one aggregation.
-        Output — and oracle — identical to the broadcast-path category
-        metrics (the rank protocols agree)."""
+        link_prediction_ranks with the known set as a DataFrame,
+        categories from train tph/hpt, one aggregation. Output — and
+        oracle — identical to the pandas-known category metrics."""
         split, emb, known = _openke_emb()
-        ranks = ev.link_prediction_ranks_blocked(
+        ranks = ev.link_prediction_ranks(
             spark, spark.createDataFrame(split["test2id"]), emb,
             spark.createDataFrame(known[["h", "t", "r"]]),
         )
@@ -940,23 +887,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             int(r): np.unique(g["t"].to_numpy()) for r, g in known.groupby("r")
         }
         return ev.link_prediction_ranks(
-            spark, spark.createDataFrame(split["test2id"]), emb, known,
-            constraints=(domains, ranges),
-        )
-
-    def a15_constrained_ranks_blocked(spark, sf):
-        """Type-constrained eval on the BLOCKED (beyond-broadcast) path:
-        domain/range lists ride broadcast and each entity block tests
-        its own ids — same protocol, same oracle as the broadcast
-        constrained query."""
-        split, emb, known = _openke_emb()
-        domains = {
-            int(r): np.unique(g["h"].to_numpy()) for r, g in known.groupby("r")
-        }
-        ranges = {
-            int(r): np.unique(g["t"].to_numpy()) for r, g in known.groupby("r")
-        }
-        return ev.link_prediction_ranks_blocked(
             spark, spark.createDataFrame(split["test2id"]), emb, known,
             constraints=(domains, ranges),
         )
@@ -4636,17 +4566,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "a8_transh_scores_l2": a8_transh_scores_l2,
         "a9_transr_scores_l2": a9_transr_scores_l2,
         "a10_transd_scores_l2": a10_transd_scores_l2,
-        "a15_ranks_blocked_l2": a15_ranks_blocked_l2,
         "a15_ranks_blocked_transh": a15_ranks_blocked_transh,
         "a15_ranks_blocked_transd": a15_ranks_blocked_transd,
         "a15_ranks_blocked_transr": a15_ranks_blocked_transr,
         "a15_ranks_blocked_from_parquet": a15_ranks_blocked_from_parquet,
         "a15_ranks_relfilter_transr": a15_ranks_relfilter_transr,
         "a15_constrained_ranks": a15_constrained_ranks,
-        "a15_constrained_ranks_blocked": a15_constrained_ranks_blocked,
         "a17_metrics_by_category": a17_metrics_by_category,
         "a17_category_relfilter": a17_category_relfilter,
-        "a17_category_blocked": a17_category_blocked,
         "a18_thresholds": a18_thresholds,
         "txt_length_quantiles": txt_length_quantiles,
         "txt_length_quantiles_approx": txt_length_quantiles_approx,
@@ -4784,8 +4711,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "a15_ranks_analogy": a15_ranks_analogy,
         "a15_ranks_hole": a15_ranks_hole,
         "a11_selfadv_rotate": a11_selfadv_rotate,
-        "a15_ranks_blocked_distmult": a15_ranks_blocked_distmult,
-        "a15_ranks_blocked_complex": a15_ranks_blocked_complex,
         "cat_partition_evolution": cat_partition_evolution,
         "txt_duplicate_spans": txt_duplicate_spans,
         "a17_kernel_leaderboard": a17_kernel_leaderboard,
@@ -6514,10 +6439,6 @@ def oracle_sql() -> dict[str, str]:
             WITH {_RANK_CTES}
             SELECT * FROM ranks
         """,
-        "a15_ranks_blocked_l2": f"""
-            WITH {_RANK_CTES_L2}
-            SELECT * FROM ranks
-        """,
         "a15_ranks_blocked_transh": f"""
             WITH {_RANK_CTES_TRANSH}
             SELECT * FROM ranks
@@ -7093,31 +7014,7 @@ def oracle_sql() -> dict[str, str]:
             WITH {_RANK_CTES_CONSTRAINED}
             SELECT * FROM ranks
         """,
-        "a15_constrained_ranks_blocked": f"""
-            WITH {_RANK_CTES_CONSTRAINED}
-            SELECT * FROM ranks
-        """,
         "a17_metrics_by_category": f"""
-            WITH {_RANK_CTES},
-            {_CAT_CTE},
-            bothc AS (
-                SELECT c.category, rank_head_raw AS raw, rank_head_filt AS filt
-                FROM ranks JOIN cat c ON ranks.r = c.r
-                UNION ALL
-                SELECT c.category, rank_tail_raw AS raw, rank_tail_filt AS filt
-                FROM ranks JOIN cat c ON ranks.r = c.r
-            )
-            SELECT category,
-              CAST(count(*)/2 AS BIGINT) AS n_triples,
-              round(avg(raw), 9) AS mr_raw,
-              round(avg(1.0/raw), 9) AS mrr_raw,
-              round(avg(CASE WHEN raw <= 10 THEN 1.0 ELSE 0.0 END), 9) AS hits10_raw,
-              round(avg(filt), 9) AS mr_filt,
-              round(avg(1.0/filt), 9) AS mrr_filt,
-              round(avg(CASE WHEN filt <= 10 THEN 1.0 ELSE 0.0 END), 9) AS hits10_filt
-            FROM bothc GROUP BY category
-        """,
-        "a17_category_blocked": f"""
             WITH {_RANK_CTES},
             {_CAT_CTE},
             bothc AS (
@@ -8948,14 +8845,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "a15_ranks_hole": f"""
             WITH {_RANK_CTES_HOLE}
-            SELECT * FROM ranks
-        """,
-        "a15_ranks_blocked_distmult": f"""
-            WITH {_RANK_CTES_DISTMULT}
-            SELECT * FROM ranks
-        """,
-        "a15_ranks_blocked_complex": f"""
-            WITH {_RANK_CTES_COMPLEX}
             SELECT * FROM ranks
         """,
         "cat_partition_evolution": """

@@ -94,7 +94,7 @@ def main() -> int:
         "b3_extract_triples",
         "b8_connected_components",
         "a15_link_prediction_ranks",
-        "a15_ranks_blocked_from_parquet",  # the beyond-broadcast eval story
+        "a15_ranks_blocked_from_parquet",  # checkpoint + DataFrame known set → eval
         "a19_topk_completions",
         "dedup_exact",
         "dedup_minhash",

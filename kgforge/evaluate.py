@@ -12,37 +12,30 @@ test_link_prediction``, recalled — SURVEY.md §0):
   never skipped).
 * Metrics: MR, MRR, Hits@10/3/1, head/tail averaged, raw + filtered.
 
-Two entity-rank paths, one protocol (equality-tested and
-contract-checked against the same oracles):
-
-* :func:`link_prediction_ranks` (broadcast): test triples flow through
-  one Arrow-batched ``mapInPandas``; the full entity/relation embedding
-  matrices are broadcast once (``sc.broadcast`` NumPy, not a join). Per
-  chunk of test triples and direction, one kernel call scores the chunk
-  against all |E| candidates as a ``[chunk, |E|]`` block (chunk sized
-  so its temporaries stay ≤16 MB). The known set is pandas, shipped as
-  two sorted-array indexes keyed ``(r, t) → h`` / ``(r, h) → t`` and
-  probed with ``np.searchsorted`` — for dictionary-scale splits.
-* :func:`link_prediction_ranks_blocked`: the entity table stays in
-  Spark; one ``mapInPandas`` scores each entity block against the
-  broadcast test triples with the same kernel call, and one aggregation
-  sums the per-block counts. The known set may be a DataFrame: it is
-  joined against the test triples into per-candidate skip lists, so
-  nothing data-sized reaches the driver. The B12 gate
-  (``Pipeline.stage_evaluate``) ranks through this path, with the
-  constructed KG as the known set.
+One entity-rank path, :func:`link_prediction_ranks_multi` (and its
+one-model form :func:`link_prediction_ranks`): test triples flow through
+one Arrow-batched ``mapInPandas``; the embedding components the models
+score with are broadcast once (``sc.broadcast`` NumPy, not a join). Per
+chunk of test triples and direction, one kernel call scores the chunk
+against all |E| candidates as a ``[chunk, |E|]`` block (chunk sized so
+its temporaries stay ≤16 MB). The known set is shipped as two sorted
+indexes keyed ``(r, t) → h`` / ``(r, h) → t`` and probed with
+``np.searchsorted``. It may be pandas, or a DataFrame of any size: then
+only the known triples sharing a test triple's fixed slot are collected
+(one left-semi join against the broadcast test keys), a test-sized set.
+The B12 gate (``Pipeline.stage_evaluate``) ranks through this path, with
+the constructed KG as the known DataFrame.
 
 Embeddings are model-parameter-sized (|E|·d floats), the same thing the
 reference holds on every worker via its parameter-server checkpoint —
-broadcasting them is the intended design, not a shortcut. Every rank
-path scores through ``kernels.score_batch`` and rounds with
-``np.round``.
+broadcasting them is the intended design, not a shortcut; the link
+stage broadcasts the same matrices. Every rank path scores through
+``kernels.score_batch`` and rounds with ``np.round``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -76,46 +69,80 @@ def _scores(model: str, emb: dict, h, r, t, norm: int, dec: int | None) -> np.nd
     return s if dec is None else np.round(s, dec)
 
 
-def _known_index(known: pd.DataFrame | None) -> tuple[tuple, tuple]:
-    """Known-triple filter as one sorted index per side, ``(keys,
-    starts, vals)``: ``keys`` are the unique ``(r << 32) | e`` keys (``e``
-    = t on the head side, h on the tail side) and
-    ``vals[starts[i]:starts[i + 1]]`` the sorted unique ids known under
-    ``keys[i]``.
-
-    ``known=None`` → empty indexes: raw-only ranking, the filtered
-    columns equal the raw ones.
-    """
-    h, t, r = (
-        (np.empty(0, np.int64),) * 3 if known is None
-        else (known[c].to_numpy(np.int64) for c in ("h", "t", "r"))
-    )
-
-    def index(fixed: np.ndarray, var: np.ndarray) -> tuple:
-        # unique (key, id) columns, sorted by key, then id
-        key, var = np.unique(np.stack([(r << 32) | fixed, var]), axis=1)
-        keys, starts = np.unique(key, return_index=True)
-        return keys, np.append(starts, len(key)), var
-
-    return index(t, h), index(h, t)
+def _test_ids(pdf: pd.DataFrame, n_ent: int, n_rel: int) -> list[np.ndarray]:
+    """The ``h``, ``t``, ``r`` columns of a test batch as int64. An id
+    outside ``[0, |E|)`` (``[0, |R|)`` for ``r``) raises ``ValueError``
+    naming it: NumPy would read ``-1`` as the last row and fail on
+    ``|E|`` with a bare ``IndexError``."""
+    cols = []
+    for c, n, size in (("h", n_ent, "|E|"), ("t", n_ent, "|E|"), ("r", n_rel, "|R|")):
+        ids = pdf[c].to_numpy(np.int64)
+        bad = ids[(ids < 0) | (ids >= n)]
+        if len(bad):
+            raise ValueError(f"test triple {c} id {bad[0]} is out of range: {size} = {n}")
+        cols.append(ids)
+    return cols
 
 
-def _known_ids(index: tuple, r: np.ndarray, e: np.ndarray) -> list[np.ndarray]:
-    """Per row, the sorted ids known under key ``(r, e)``: the left and
-    right ``searchsorted`` slots of a key in ``keys`` differ by one on a
-    hit and coincide on a miss, which yields an empty slice."""
+def _index(key: np.ndarray, val: np.ndarray) -> tuple:
+    """Sorted index ``(keys, starts, vals)`` of ``(key, val)`` pairs:
+    ``keys`` are the unique keys and ``vals[starts[i]:starts[i + 1]]``
+    the sorted unique values under ``keys[i]``."""
+    key, val = np.unique(np.stack([key, val]), axis=1)
+    keys, starts = np.unique(key, return_index=True)
+    return keys, np.append(starts, len(key)), val
+
+
+def _known_ids(index: tuple, key: np.ndarray) -> list[np.ndarray]:
+    """Per key, the sorted values :func:`_index` holds under it: the left
+    and right ``searchsorted`` slots of a key in ``keys`` differ by one
+    on a hit and coincide on a miss, which yields an empty slice."""
     keys, starts, vals = index
-    key = (r << 32) | e
     lo = starts[np.searchsorted(keys, key)]
     hi = starts[np.searchsorted(keys, key, side="right")]
     return [vals[a:b] for a, b in zip(lo, hi)]
+
+
+def _known_cols(known: pd.DataFrame | None) -> list[np.ndarray]:
+    """``h``, ``t``, ``r`` of the known triples as int64; ``None`` is the
+    empty set, so filtered ranks equal raw ranks."""
+    if known is None:
+        return [np.empty(0, np.int64)] * 3
+    return [known[c].to_numpy(np.int64) for c in ("h", "t", "r")]
+
+
+def _known_index(known: pd.DataFrame | None) -> tuple[tuple, tuple]:
+    """Known-triple filter as one :func:`_index` per side, keyed ``(r <<
+    32) | e`` (``e`` = t on the head side, h on the tail side) over the
+    known ids of the varied slot."""
+    h, t, r = _known_cols(known)
+    return _index((r << 32) | t, h), _index((r << 32) | h, t)
+
+
+def _near_known(known, test: DataFrame, *keys: str) -> pd.DataFrame | None:
+    """A DataFrame ``known`` cut to the triples that share a key with a
+    test triple, collected: ``keys`` are SQL expressions over ``h``,
+    ``t``, ``r`` (a ``stack`` may emit one key row per direction), and
+    one left-semi join against the broadcast test keys keeps the known
+    rows whose keys match. The result is test-sized, and it is all the
+    known-triple index of a call ever probes. pandas or ``None`` pass
+    through unchanged."""
+    if not isinstance(known, DataFrame):
+        return known
+    test_keys = test.selectExpr(*keys)
+    return (
+        known.selectExpr("h AS _h", "t AS _t", "r AS _r", *keys)
+        .join(F.broadcast(test_keys), test_keys.columns, "left_semi")
+        .selectExpr("_h AS h", "_t AS t", "_r AS r")
+        .toPandas()
+    )
 
 
 def link_prediction_ranks(
     spark: SparkSession,
     test: DataFrame,
     emb: dict[str, np.ndarray],
-    known: pd.DataFrame | None,
+    known: pd.DataFrame | DataFrame | None,
     model: str = "transe",
     norm: int = 1,
     constraints: tuple[dict | None, dict | None] | None = None,
@@ -157,7 +184,7 @@ def link_prediction_ranks_multi(
     spark: SparkSession,
     test: DataFrame,
     emb: dict[str, np.ndarray],
-    known: pd.DataFrame | None,
+    known: pd.DataFrame | DataFrame | None,
     models: list[tuple[str, int | None]],
     norm: int = 1,
     constraints: tuple[dict | None, dict | None] | None = None,
@@ -166,15 +193,23 @@ def link_prediction_ranks_multi(
     kernels in ONE pass: the test table crosses the Arrow boundary once
     and one broadcast set serves every kernel (a unioned per-kernel plan
     cost ~2.7 s of scheduling for ~0.4 s of NumPy at fixture scale).
-    Output: ``model`` + RANKS_SCHEMA.
+    Output: ``model`` + RANKS_SCHEMA, one row per test row.
 
+    The broadcast set holds only the components the models score with
+    (``kernels.SCORE_COMPONENTS``): a checkpoint carries every model's.
     Per chunk of test triples and direction, one ``kernels.score_batch``
     call scores ``[chunk, 1]`` fixed-slot and relation ids against
     ``[1, |E|]`` candidate ids into a ``[chunk, |E|]`` block (bit-identical
     to flat per-row calls), rounded with ``np.round`` to the model's
     ``score_decimals`` when given; :func:`_rank` counts each row. A chunk
     keeps one ``[chunk, |E|, d]`` float64 temporary within
-    ``_CHUNK_BYTES`` (HolE's gathered operand is ``d``× wider).
+    ``_CHUNK_BYTES`` (HolE's gathered operand is ``d``× wider). A test
+    id outside the embedding tables raises ``ValueError``.
+
+    ``known``: pandas, a DataFrame or ``None`` (raw-only). A DataFrame
+    is cut to the triples sharing a test triple's fixed slot — ``(r, t)``
+    on the head side, ``(r, h)`` on the tail side — and collected
+    (:func:`_near_known`); nothing else of it reaches the driver.
 
     ``constraints``: optional ``(domains, ranges)`` maps ``r → entity
     ids`` (``type_constrain.txt`` semantics; either side may be None):
@@ -183,9 +218,13 @@ def link_prediction_ranks_multi(
     stay unconstrained — the reference's type-constrained protocol
     (``base/Test.h``, recalled — SURVEY.md §0).
     """
+    read = dict.fromkeys(k for model, _ in models for k in kernels.SCORE_COMPONENTS[model])
+    emb = {k: emb[k] for k in read}
     n_ent, dim = emb["ent"].shape
+    n_rel = min(len(v) for k, v in emb.items() if not k.startswith("ent"))
     chunk = {model: _chunk_rows(n_ent, dim, model) for model, _ in models}
-    b_emb = pin_broadcast(spark, dict(emb))
+    b_emb = pin_broadcast(spark, emb)
+    known = _near_known(known, test, "r", "stack(2, true, t, false, h) AS (head, fix)")
     domains, ranges = constraints or (None, None)
     b_filter = pin_broadcast(spark, (*_known_index(known), domains or {}, ranges or {}))
 
@@ -197,11 +236,9 @@ def link_prediction_ranks_multi(
         for pdf in batches:
             if pdf.empty:
                 continue
-            h_arr = pdf["h"].to_numpy(np.int64)
-            t_arr = pdf["t"].to_numpy(np.int64)
-            r_arr = pdf["r"].to_numpy(np.int64)
-            known_h = _known_ids(heads_of, r_arr, t_arr)
-            known_t = _known_ids(tails_of, r_arr, h_arr)
+            h_arr, t_arr, r_arr = _test_ids(pdf, n_ent, n_rel)
+            known_h = _known_ids(heads_of, (r_arr << 32) | t_arr)
+            known_t = _known_ids(tails_of, (r_arr << 32) | h_arr)
             outs = []
             for model, dec in models:
                 ranks = np.empty((len(pdf), 4), dtype=np.int64)
@@ -260,252 +297,11 @@ def link_prediction_metrics_by_model(ranks: DataFrame) -> DataFrame:
     return _rank_metrics(ranks, "model")
 
 
-def _vecs_df(spark: SparkSession, mats: dict[str, np.ndarray]) -> DataFrame:
-    """``[n, d]`` NumPy components → one ``(id, <key> array<double>, …)``
-    DataFrame whose row ``i`` carries every component's row ``i``, in ONE
-    partition: ``createDataFrame`` alone splits even a tiny frame over
-    every core, and each partition a ``mapInPandas`` reads costs a Python
-    task (~0.2 s of fixed start-up on a 4-core host).
-
-    Test/fixture convenience only — the scale path reads ``(id, vec)``
-    straight from a Parquet checkpoint (:func:`kgforge.io_openke.
-    read_embedding_df`), never through the driver."""
-    mats = {k: np.asarray(m, dtype="float64") for k, m in mats.items()}
-    n = len(next(iter(mats.values())))
-    # ndarray.tolist() (NOT list(map(list, ...))) — native Python floats,
-    # plus an explicit schema: non-Arrow createDataFrame (Spark defaults;
-    # the driver's harness) rejects np.float64 scalars and cannot infer
-    # array<double> from object cells. The repo's own session enables
-    # Arrow, which masked this — see tests/test_arrow_off.py.
-    pdf = pd.DataFrame(
-        {"id": np.arange(n, dtype="int64").tolist(), **{k: m.tolist() for k, m in mats.items()}}
-    )
-    schema = ", ".join(["id long", *(f"{k} array<double>" for k in mats)])
-    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
-
-
-def _emb_sides(spark: SparkSession, emb) -> tuple[DataFrame, dict[str, np.ndarray]]:
-    """Split an embeddings argument — NumPy arrays and/or ``(id, vec)``
-    DataFrames (Parquet-backed, :func:`kgforge.io_openke.
-    read_embedding_df`) per component — into the two sides of the blocked
-    paths:
-
-    * the entity components (keys starting ``ent``) as ONE ``(id, ent,
-      ent_p, …)`` DataFrame of ``array<double>`` columns — the |E|-sized
-      side, which never leaves Spark;
-    * the relation-indexed components (``rel``, ``norm``, ``mat``, …) as
-      NumPy indexed by relation id — |R|-sized, so DataFrame ones are
-      collected, all in one job. A checkpoint's ``mat`` rows arrive flat
-      (``[|R|, d_r·d_e]``; io_openke flattens trailing dims).
-    """
-    def side(ent: bool, frames: bool) -> dict:
-        return {
-            k: v for k, v in emb.items()
-            if k.startswith("ent") == ent and isinstance(v, DataFrame) == frames
-        }
-
-    ents = [_vecs_df(spark, side(True, False))] if side(True, False) else []
-    ents += [
-        v.select(F.col("id").cast("long"), F.col("vec").cast("array<double>").alias(k))
-        for k, v in side(True, True).items()
-    ]
-    rel = {k: np.asarray(v) for k, v in side(False, False).items()}
-    rel_dfs = [
-        v.select(F.lit(k).alias("key"), F.col("id").cast("long"), F.col("vec").cast("array<double>"))
-        for k, v in side(False, True).items()
-    ]
-    if rel_dfs:
-        for k, g in reduce(DataFrame.unionByName, rel_dfs).toPandas().groupby("key"):
-            g = g.sort_values("id")
-            if not (g["id"].to_numpy() == np.arange(len(g))).all():
-                raise ValueError(f"non-dense relation ids in {k!r}")
-            rel[k] = np.stack(g["vec"].to_numpy())
-    return reduce(lambda a, b: a.join(b, "id"), ents), rel
-
-
-def _known_df(spark: SparkSession, known) -> DataFrame:
-    """``(h, t, r)`` known triples as a DataFrame, from a DataFrame (scale
-    path) or pandas (tests/fixtures convenience); ``None`` is the empty
-    set, so filtered ranks equal raw ranks. Duplicates may remain: both
-    consumers collect into sets."""
-    if known is None:
-        return spark.createDataFrame([], "h long, t long, r long")
-    if isinstance(known, pd.DataFrame):
-        return spark.createDataFrame(known[["h", "t", "r"]].drop_duplicates())
-    return known.select("h", "t", "r")
-
-
-def _skip_pairs(lists: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """One block's skip-list cells (null, or arrays of test-row indexes)
-    → flat ``(tid, block row)`` pairs, sorted by tid."""
-    cells = [np.empty(0, np.int64) if v is None else np.asarray(v, np.int64) for v in lists]
-    tid = np.concatenate([np.empty(0, np.int64), *cells])
-    row = np.repeat(np.arange(len(cells)), [len(c) for c in cells])
-    order = np.argsort(tid, kind="stable")
-    return tid[order], row[order]
-
-
-def _skipped(below: np.ndarray, pairs: tuple, lo: int) -> np.ndarray:
-    """Per row of a ``[chunk, block]`` hit mask whose first row is test
-    row ``lo``: how many of its skip pairs are hits."""
-    tid, row = pairs
-    a, b = np.searchsorted(tid, [lo, lo + len(below)])
-    i = tid[a:b] - lo
-    return np.bincount(i, weights=below[i, row[a:b]], minlength=len(below)).astype(np.int64)
-
-
-def link_prediction_ranks_blocked(
-    spark: SparkSession,
-    test: DataFrame,
-    emb,
-    known,
-    norm: int = 1,
-    model: str = "transe",
-    constraints: tuple[dict | None, dict | None] | None = None,
-    score_decimals: int | None = None,
-) -> DataFrame:
-    """A15/A16 scale path: the broadcast path's ranks, with the entity
-    side kept in Spark.
-
-    :func:`link_prediction_ranks` holds the whole |E|·d entity matrix on
-    every Python worker — the right plan at model-parameter scale. When
-    |E| grows beyond broadcast reach, ranks decompose over entity blocks,
-
-        rank = 1 + Σ_block |{e ∈ block : s(e) < s(true)}|
-
-    so one ``mapInPandas`` over the entity table takes each Arrow batch
-    as one block (no worker holds more, nothing is carried across
-    batches), emits partial counts for every test triple, and one
-    ``groupBy(h, t, r)`` sums them. Broadcast: the |R|-sized relation
-    components and the distinct test triples with their h/t entity-side
-    vectors (test-sized, one collect). Nothing |E|-sized reaches the
-    driver.
-
-    Per chunk of test rows (``_chunk_rows`` with the block in place of
-    |E|) and direction, one ``kernels.score_batch`` call scores
-    ``[chunk, block]`` on a local embedding dict — test vectors first,
-    then the block's rows — rounded like :func:`link_prediction_ranks_multi`;
-    the true score is a flat call on the same dict, bitwise equal to its
-    block element. Every kernel ``score_batch`` serves is supported.
-
-    ``constraints``: ``(domains, ranges)`` maps, broadcast, with
-    :func:`link_prediction_ranks_multi`'s semantics (relations absent
-    from a map stay unconstrained). ``known`` (triples DataFrame, or
-    pandas) filters relationally: ``known ⋈ test`` on the fixed slot,
-    minus the true entity, grouped per candidate into head and tail
-    skip lists of test-row indexes and left-joined onto the entity rows;
-    a block subtracts its skipped in-constraint candidates that score
-    below the true score.
-
-    ``emb``: NumPy dict and/or ``(id, vec)`` DataFrames per component
-    (:func:`_emb_sides`). Output: RANKS_SCHEMA, one row per distinct test
-    triple whose h and t have embeddings.
-
-    Callers: the B12 gate (``Pipeline.stage_evaluate``, known = the
-    constructed KG as a DataFrame) and the A15/A17 blocked contract
-    queries (``a15_ranks_blocked*``, ``a15_constrained_ranks_blocked``,
-    ``a17_category_blocked``, and three that pass the known set as a
-    DataFrame, as the gate does). Trade-off against the broadcast
-    path: a NumPy ``emb`` enters through :func:`_vecs_df`, which puts the
-    entity matrix in ONE partition, so at 10k entities × 1000 test
-    triples this path took 3.9–4.5 s where broadcast scoring with a
-    join-based filter took 2.2–2.7 s (4-core host). No caller runs that
-    size: the gate ranks ≤500 triples against a dictionary of tens of
-    entities, where this path runs fewer jobs.
-    """
-    # only what the model scores with: a checkpoint carries every
-    # model's components, and each entity one rides every join below
-    read = kernels.SCORE_COMPONENTS[model]
-    ents, rel = _emb_sides(spark, {k: v for k, v in emb.items() if k in read})
-    ent_keys = [c for c in ents.columns if c != "id"]
-
-    # one pass over the entity table: the test triples, broadcast, once
-    # per slot (id = h, id = t); ids without embeddings drop their rows
-    got = ents.join(
-        F.broadcast(test.selectExpr("h", "t", "r", "explode(array(h, t)) AS id")), "id"
-    ).toPandas()
-    vecs = got.drop_duplicates("id").set_index("id")
-    tests = got[["h", "t", "r"]].drop_duplicates(ignore_index=True)
-    tests = tests[tests["h"].isin(vecs.index) & tests["t"].isin(vecs.index)]
-    n = len(tests)
-    if n == 0:
-        return spark.createDataFrame([], RANKS_SCHEMA)
-    h_arr, t_arr, r_arr = (tests[c].to_numpy(np.int64) for c in ("h", "t", "r"))
-    # entity-side vectors of the test rows: heads at local ids [0, n),
-    # tails at [n, 2n); a block's rows follow from 2n
-    slots = np.concatenate([h_arr, t_arr])
-    test_vecs = {k: np.stack(vecs[k].loc[slots].to_numpy()) for k in ent_keys}
-    dim = test_vecs["ent"].shape[1]
-    if "mat" in rel:
-        rel["mat"] = rel["mat"].reshape(len(rel["mat"]), -1, dim)
-    test_rels = set(r_arr.tolist())
-    domains, ranges = (
-        {int(r): np.asarray(c) for r, c in (m or {}).items() if int(r) in test_rels}
-        for m in (constraints or (None, None))
-    )
-    b_test = pin_broadcast(spark, (test_vecs, h_arr, t_arr, r_arr, rel, domains, ranges))
-
-    tid = spark.createDataFrame(
-        pd.DataFrame({"tid": np.arange(n), "h": h_arr, "t": t_arr, "r": r_arr}),
-        "tid long, h long, t long, r long",
-    )
-    # known ⋈ test on the fixed slot, both directions in one broadcast
-    # join: each triple once per direction as (head?, fixed slot, varied
-    # slot). A candidate's skip lists are bounded by the test rows sharing
-    # its fixed slots, so they ride broadcast onto the entity rows.
-    slots = "stack(2, true, t, h, false, h, t) AS (head, fix, {})"
-    pairs = _known_df(spark, known).selectExpr("r", slots.format("cand")).join(
-        F.broadcast(tid.selectExpr("tid", "r", slots.format("true_e"))), ["head", "fix", "r"]
-    ).where("cand != true_e")
-    skips = pairs.groupBy(F.col("cand").alias("id")).agg(
-        F.collect_set(F.when(F.col("head"), F.col("tid"))).alias("skip_h"),
-        F.collect_set(F.when(~F.col("head"), F.col("tid"))).alias("skip_t"),
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        test_vecs, h_arr, t_arr, r_arr, rel, domains, ranges = b_test.value
-        loc = np.arange(n, dtype=np.int64)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy(np.int64)
-            E = dict(rel)
-            for k in ent_keys:
-                E[k] = np.concatenate([test_vecs[k], np.stack(pdf[k].to_numpy())])
-            cand = (2 * n + np.arange(len(ids), dtype=np.int64))[None, :]
-            # per direction (head, tail): the block's membership in each
-            # constrained relation's list, and its skip pairs
-            everyone = np.ones(len(ids), dtype=bool)
-            members = [{r: np.isin(ids, c) for r, c in m.items()} for m in (domains, ranges)]
-            skip_pairs = [_skip_pairs(pdf[c]) for c in ("skip_h", "skip_t")]
-            counts = np.empty((n, 4), dtype=np.int64)
-            chunk = _chunk_rows(len(ids), dim, model)
-            for lo in range(0, n, chunk):
-                rows = slice(lo, lo + chunk)
-                h, t, r = loc[rows, None], n + loc[rows, None], r_arr[rows, None]
-                true = _scores(model, E, h[:, 0], r[:, 0], t[:, 0], norm, score_decimals)[:, None]
-                for j, (heads, tails) in enumerate(((cand, t), (h, cand))):
-                    allowed = np.stack([members[j].get(x, everyone) for x in r_arr[rows].tolist()])
-                    below = (_scores(model, E, heads, r, tails, norm, score_decimals) < true) & allowed
-                    counts[rows, 2 * j] = below.sum(axis=1)
-                    counts[rows, 2 * j + 1] = counts[rows, 2 * j] - _skipped(below, skip_pairs[j], lo)
-            out = pd.DataFrame({"h": h_arr, "t": t_arr, "r": r_arr})
-            out[list(RANK_COLS)] = counts
-            yield out
-
-    return (
-        ents.join(F.broadcast(skips), "id", "left")
-        .mapInPandas(fn, RANKS_SCHEMA)
-        .groupBy("h", "t", "r")
-        .agg(*((1 + F.sum(c)).alias(c) for c in RANK_COLS))
-    )
-
-
 def relation_prediction_ranks(
     spark: SparkSession,
     test: DataFrame,
-    emb,
-    known,
+    emb: dict[str, np.ndarray],
+    known: pd.DataFrame | DataFrame | None,
     norm: int = 1,
     score_decimals: int | None = None,
 ) -> DataFrame:
@@ -518,61 +314,46 @@ def relation_prediction_ranks(
     ``(h, cand, t)`` with ``cand != r`` never counts against the
     filtered rank).
 
-    Test rows are joined relationally to their h/t vectors and to the
-    ``collect_set(r)`` of known triples per ``(h, t)``. The candidate
-    side is the relation matrix — model-parameter-sized (|R| rows), so
-    it is broadcast: per Arrow batch, one ``kernels.score_batch`` call
-    per chunk scores ``[rows, |R|]`` and :func:`_rank` ranks each row.
-    At any corpus scale |R| stays dictionary-sized, which makes relation
-    prediction the cheapest eval direction (the entity ranks pay
-    |test| x |E|).
+    The shape of :func:`link_prediction_ranks_multi`: the entity and
+    relation matrices are broadcast, and the known relations come from
+    one sorted :func:`_index` keyed ``(h << 32) | t`` (a DataFrame
+    ``known`` is cut to the test pairs' triples first). Per Arrow batch,
+    one ``kernels.score_batch`` call per chunk scores ``[rows, |R|]``
+    and :func:`_rank` ranks each row. At any corpus scale |R| stays
+    dictionary-sized, which makes relation prediction the cheapest eval
+    direction (the entity ranks pay |test| x |E|).
 
     TransE, L1 or L2; pass ``score_decimals`` (6) with ``norm=2`` —
     the same cross-engine float-ordering story as the entity ranks.
-    ``emb``/``known`` take the same shapes as
-    :func:`link_prediction_ranks_blocked`.
     """
-    ents, rel = _emb_sides(spark, {k: emb[k] for k in ("ent", "rel")})
-    b_rel = pin_broadcast(spark, rel["rel"])
-
-    def vec(slot: str) -> DataFrame:
-        return ents.select(F.col("id").alias(slot), F.col("ent").alias(f"{slot}_vec"))
-
-    known_r = _known_df(spark, known).groupBy("h", "t").agg(F.collect_set("r").alias("known_r"))
-    rows = (
-        test.select("h", "t", "r").dropDuplicates()
-        .join(vec("h"), "h").join(vec("t"), "t")
-        .join(known_r, ["h", "t"], "left")
-    )
+    emb = {k: emb[k] for k in ("ent", "rel")}
+    (n_ent, _), (n_rel, dim) = emb["ent"].shape, emb["rel"].shape
+    b_emb = pin_broadcast(spark, emb)
+    kh, kt, kr = _known_cols(_near_known(known, test, "h", "t"))
+    b_known = pin_broadcast(spark, _index((kh << 32) | kt, kr))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        R = b_rel.value
-        cands = np.arange(len(R), dtype=np.int64)[None, :]
-        chunk = _chunk_rows(len(R), R.shape[1], "transe")
+        E = b_emb.value
+        cands = np.arange(n_rel, dtype=np.int64)[None, :]
+        chunk = _chunk_rows(n_rel, dim, "transe")
         for pdf in batches:
             if pdf.empty:
                 continue
-            n = len(pdf)
-            # heads at local ids [0, n), tails at [n, 2n)
-            ent = np.concatenate([np.stack(pdf[c].to_numpy()) for c in ("h_vec", "t_vec")])
-            E = {"ent": ent, "rel": R}
-            r = pdf["r"].to_numpy(np.int64)
-            ranks = np.empty((n, 2), dtype=np.int64)
-            for lo in range(0, n, chunk):
-                loc = np.arange(lo, min(lo + chunk, n), dtype=np.int64)[:, None]
-                s = _scores("transe", E, loc, cands, loc + n, norm, score_decimals)
-                for j, i in enumerate(loc[:, 0]):
-                    kr = pdf["known_r"].iat[i]
-                    kr = np.asarray([] if kr is None else kr, np.int64)
-                    ranks[i] = _rank(s[j], r[i], None, kr)
+            h, t, r = _test_ids(pdf, n_ent, n_rel)
+            known_r = _known_ids(b_known.value, (h << 32) | t)
+            ranks = np.empty((len(pdf), 2), dtype=np.int64)
+            for lo in range(0, len(pdf), chunk):
+                rows = slice(lo, lo + chunk)
+                s = _scores("transe", E, h[rows, None], cands, t[rows, None], norm, score_decimals)
+                for j, i in enumerate(range(lo, lo + len(s))):
+                    ranks[i] = _rank(s[j], r[i], None, known_r[i])
             out = pdf[["h", "t", "r"]].copy()
             out["rank_rel_raw"], out["rank_rel_filt"] = ranks[:, 0], ranks[:, 1]
             yield out
 
-    return rows.mapInPandas(
+    return test.select("h", "t", "r").dropDuplicates().mapInPandas(
         fn, "h long, t long, r long, rank_rel_raw long, rank_rel_filt long"
     )
-
 
 
 def link_prediction_metrics(ranks: DataFrame) -> DataFrame:

@@ -24,8 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .session import read_parquet
-
 
 # -- driver-side (small dictionaries / fixtures) ----------------------------
 
@@ -136,10 +134,10 @@ def write_embeddings_parquet(spark: SparkSession, emb: dict, out_dir: str) -> No
 
     Embeddings are model-parameter-sized (the same thing the reference
     checkpoints from its parameter server), so a driver-side write is
-    the intended design; the *readers* below serve both regimes — NumPy
-    for the broadcast eval path, ``(id, vec)`` DataFrames for the
-    beyond-broadcast blocked path. float32 round-trips bit-identical
-    (f32 → f64 python floats → f32 parquet is exact).
+    the intended design, and :func:`read_embeddings_parquet` reads them
+    back on the driver for the broadcast link and eval paths. float32
+    round-trips bit-identical (f32 → f64 python floats → f32 parquet is
+    exact).
     """
     import json
 
@@ -175,22 +173,11 @@ def write_embeddings_parquet(spark: SparkSession, emb: dict, out_dir: str) -> No
         json.dump({"dims": dims}, f, indent=1, sort_keys=True)
 
 
-def read_embedding_df(spark: SparkSession, in_dir: str, component: str) -> DataFrame:
-    """A20 scale-path import: one checkpoint component as an ``(id, vec)``
-    DataFrame — feed this straight to ``link_prediction_ranks_blocked``:
-    entity components (``ent*``) stay in Spark and never pass through
-    the driver; relation components are |R|-sized and get collected."""
-    return read_parquet(
-        spark, os.path.join(in_dir, "components", f"component={component}")
-    ).select("id", "vec")
-
-
-def read_embeddings_parquet(spark: SparkSession, in_dir: str) -> dict[str, np.ndarray]:
-    """A20 import for the broadcast path: checkpoint → NumPy dict,
-    reshaped per meta.json. Parameter-sized by design (|E|·d floats), so
-    the driver reads the files itself (``pd.read_parquet``, the hive
-    ``component`` column from the directory names) and no Spark job
-    runs."""
+def read_embeddings_parquet(in_dir: str) -> dict[str, np.ndarray]:
+    """A20 import: checkpoint → NumPy dict, reshaped per meta.json.
+    Parameter-sized by design (|E|·d floats), so the driver reads the
+    files itself (``pd.read_parquet``, the hive ``component`` column from
+    the directory names) and no Spark job runs."""
     import json
 
     with open(os.path.join(in_dir, "meta.json")) as f:

@@ -266,7 +266,7 @@ class Pipeline:
         ``embeddings_path``). NumPy load is parameter-sized by design —
         the same matrices get broadcast to every worker anyway — and
         the driver reads the files without a Spark job."""
-        return io_openke.read_embeddings_parquet(self.spark, self._emb_dir())
+        return io_openke.read_embeddings_parquet(self._emb_dir())
 
     def stage_link(self) -> dict:
         tri = read_parquet(self.spark, os.path.join(self._out("extract"), "triples"))
@@ -360,12 +360,12 @@ class Pipeline:
         (extraction, canonicalization, dense ids, materialization) moves
         ``eval_metrics.json``, and the stage's manifest dependency on
         materialize is real. Ranks come from
-        ``evaluate.link_prediction_ranks_blocked`` with the materialized
-        set itself as the known-triple filter, consumed **relationally**
-        (joined into per-candidate skip lists; the gate never collects
-        the KG to the driver — only the ≤500-row test sample, its h/t
-        vectors and the final one-row metrics land there). 7 jobs on the
-        unit fixture.
+        ``evaluate.link_prediction_ranks`` with the materialized set
+        itself as the known-triple DataFrame: only the known triples that
+        share a test triple's fixed slot are collected, so the gate never
+        collects the KG to the driver — only the ≤500-row test sample's
+        neighbourhood and the final one-row metrics land there. 4 jobs on
+        the unit fixture.
         """
         from . import evaluate as ev
 
@@ -376,9 +376,8 @@ class Pipeline:
         test = tri.where(bucket == F.lit(9)).orderBy("h", "t", "r").limit(500)
         if test.isEmpty():  # tiny KGs: gate on everything
             test = tri.orderBy("h", "t", "r").limit(500)
-        emb = self._embeddings()
-        ranks = ev.link_prediction_ranks_blocked(
-            self.spark, test, emb, tri, model=self.model, norm=self.norm
+        ranks = ev.link_prediction_ranks(
+            self.spark, test, self._embeddings(), tri, model=self.model, norm=self.norm
         )
         # the gate count rides the metrics query: one execution of ranks
         obs = Observation()

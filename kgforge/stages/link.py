@@ -56,7 +56,6 @@ def link_triples(
     emb: dict[str, np.ndarray],
     model: str = "transe",
     norm: int = 1,
-    local_select: bool = True,
 ) -> DataFrame:
     """B4+B5+B6: surface triples → linked ``(..., s, p, o, link_score)``.
 
@@ -64,6 +63,12 @@ def link_triples(
     kernel over broadcast embeddings; rank-1 per extracted triple wins.
     Unlinkable triples (no candidate for either side) are dropped — they
     feed the canonicalization stage's unseen-alias path instead.
+
+    Precondition: ``surface_triples`` is distinct on ``(conv_id,
+    turn_idx, subj, pred, obj)`` (``extract.surface_triples_dedup``
+    output, as both callers pass). The best link is then chosen inside
+    the partition its candidates are born in; two input rows with one
+    key in different partitions would each keep a winner.
     """
     cands = candidate_links(surface_triples, gazetteer, "subj", "subj_canon")
     cands = candidate_links(cands, gazetteer, "obj", "obj_canon")
@@ -75,72 +80,40 @@ def link_triples(
         cands.join(e2.withColumnRenamed("name", "subj_canon").withColumnRenamed("id", "s"), "subj_canon")
         .join(e2.withColumnRenamed("name", "obj_canon").withColumnRenamed("id", "o"), "obj_canon")
         .join(r2.withColumnRenamed("name", "pred").withColumnRenamed("id", "p"), "pred")
-        # slim before the scoring UDF and the selection shuffle: every
-        # byte here crosses Arrow AND the min_by exchange — canon strings
-        # are recoverable from ids downstream.
+        # slim before the scoring UDF: every byte here crosses Arrow —
+        # canon strings are recoverable from ids downstream.
         .select("conv_id", "turn_idx", "subj", "pred", "obj", "s", "p", "o")
     )
 
-    # B6 best-link selection. Two scale-aware plans, same semantics
-    # (min over (link_score, s, o) per extracted triple):
-    #
-    # * local_select=True (default): candidate rows for one extracted
-    #   triple are *born co-partitioned* — they fan out of a single input
-    #   row via broadcast joins, which never move rows — so the argmin is
-    #   computable per partition with ZERO shuffle (mapInPandas groupby).
-    #   The b5 oracle check guards the co-partitioning assumption.
-    #   Scoring and selection are FUSED into one mapInPandas: two
-    #   back-to-back pandas stages would ship the full candidate table
-    #   across the Arrow boundary twice (JVM→Py→JVM→Py→JVM) for no plan
-    #   benefit — both are partition-local.
-    # * local_select=False: general-input path — score as its own pandas
-    #   pass, then min_by hash aggregation (partial map-side combine, one
-    #   shuffle, no sort; still strictly better than a window row_number
-    #   which must shuffle AND sort).
+    # B6 best-link selection, min over (link_score, s, o) per extracted
+    # triple. Candidate rows for one extracted triple are *born
+    # co-partitioned* — they fan out of a single input row via broadcast
+    # joins, which never move rows — so the argmin is computable per
+    # partition with ZERO shuffle (mapInPandas sort + drop_duplicates).
+    # The b5 oracle check guards the co-partitioning assumption. Scoring
+    # and selection are FUSED into one mapInPandas: two back-to-back
+    # pandas stages would ship the full candidate table across the Arrow
+    # boundary twice (JVM→Py→JVM→Py→JVM) for no plan benefit.
     keys = ["conv_id", "turn_idx", "subj", "pred", "obj"]
 
-    def _score(pdf: pd.DataFrame, E) -> pd.DataFrame:
+    scored_schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in withids.schema.fields
+    ) + ", link_score double"
+    b_emb = pin_broadcast(spark, emb)
+
+    def score_select(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parts = [p for p in batches if len(p)]
+        if not parts:
+            return
+        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
         pdf["link_score"] = kernels.score_batch(
-            model, E,
+            model, b_emb.value,
             pdf["s"].to_numpy(np.int64),
             pdf["p"].to_numpy(np.int64),
             pdf["o"].to_numpy(np.int64),
             norm,
         ).astype("float64")
-        return pdf
+        pdf = pdf.sort_values(["link_score", "s", "o"], kind="stable")
+        yield pdf.drop_duplicates(subset=keys, keep="first")
 
-    scored_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in withids.schema.fields
-    ) + ", link_score double"
-
-    b_emb = pin_broadcast(spark, emb)
-    if local_select:
-
-        def score_select(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            E = b_emb.value
-            parts = [_score(p, E) for p in batches if len(p)]
-            if not parts:
-                return
-            pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-            pdf = pdf.sort_values(["link_score", "s", "o"], kind="stable")
-            yield pdf.drop_duplicates(subset=keys, keep="first")
-
-        return withids.mapInPandas(score_select, scored_schema)
-
-    def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        E = b_emb.value
-        for pdf in batches:
-            if len(pdf):
-                yield _score(pdf, E)
-
-    scored = withids.mapInPandas(score_fn, scored_schema)
-    rest = [c for c in scored.columns if c not in keys]
-    return (
-        scored.groupBy(*keys)
-        .agg(
-            F.min_by(
-                F.struct(*rest), F.struct("link_score", "s", "o")
-            ).alias("_best")
-        )
-        .select(*keys, "_best.*")
-    )
+    return withids.mapInPandas(score_select, scored_schema)

@@ -5,7 +5,7 @@ driver's harness runs Spark defaults — Arrow conversion OFF — where
 ``createDataFrame`` uses the strict non-Arrow type verifier that rejects
 numpy scalars (``np.float32``/``np.float64``) inside list cells and cannot
 infer ``array<double>`` from object columns. Round 3 shipped exactly that
-bug in evaluate's NumPy → ``(id, vec)`` helper (now ``evaluate._vecs_df``) and
+bug in evaluate's NumPy → ``(id, vec)`` helper (since removed) and
 ``io_openke.write_embeddings_parquet``
 and 8 driver queries errored while all builder-side checks stayed green.
 
@@ -34,19 +34,6 @@ def arrow_off(spark):
             spark.conf.set(k, v)
 
 
-def test_mat_to_vec_df_arrow_off(arrow_off):
-    from kgforge import evaluate as ev
-
-    mat = np.arange(12, dtype="float32").reshape(4, 3) / 7.0
-    df = ev._vecs_df(arrow_off, {"vec": mat})
-    assert [f.dataType.simpleString() for f in df.schema.fields] == [
-        "bigint",
-        "array<double>",
-    ]
-    rows = {r["id"]: r["vec"] for r in df.collect()}
-    assert rows[2] == pytest.approx(mat[2].astype("float64").tolist())
-
-
 def test_embedding_checkpoint_roundtrip_arrow_off(arrow_off, tmp_path):
     from kgforge import io_openke as io
 
@@ -58,17 +45,15 @@ def test_embedding_checkpoint_roundtrip_arrow_off(arrow_off, tmp_path):
     }
     out = str(tmp_path / "ckpt")
     io.write_embeddings_parquet(arrow_off, emb, out)
-    back = io.read_embeddings_parquet(arrow_off, out)
+    back = io.read_embeddings_parquet(out)
     for k, v in emb.items():
         np.testing.assert_array_equal(back[k], v)  # f32 round-trip is exact
-    ent_df = io.read_embedding_df(arrow_off, out, "ent")
-    assert ent_df.count() == 6
 
 
 def test_blocked_ranks_arrow_off(arrow_off):
-    """One blocked-rank call end-to-end with Arrow off — the exact driver
-    shape that errored in round 3 (numpy emb dict → _emb_sides →
-    createDataFrame)."""
+    """One rank call end-to-end with Arrow off, with the known set as a
+    DataFrame (semi-joined against the test keys and collected without
+    Arrow) and with it as pandas: the same ranks."""
     from kgforge import evaluate as ev
 
     rng = np.random.default_rng(7)
@@ -80,10 +65,11 @@ def test_blocked_ranks_arrow_off(arrow_off):
     known = arrow_off.createDataFrame(
         [(0, 1, 0), (2, 3, 1), (4, 1, 0)], "h long, t long, r long"
     )
-    got = ev.link_prediction_ranks_blocked(
-        arrow_off, test, emb, known, model="transe", norm=1
+    got, want = (
+        sorted(map(tuple, ev.link_prediction_ranks(arrow_off, test, emb, k).collect()))
+        for k in (known, known.toPandas())
     )
-    assert got.count() == 2
+    assert got == want and len(got) == 2
 
 
 def test_ivf_index_write_arrow_off(arrow_off, tmp_path):

@@ -244,41 +244,6 @@ def test_signatures_deterministic_across_partitioning(spark):
     assert one and cands(spark.createDataFrame(names).repartition(9)) == one
 
 
-def test_link_local_select_equals_min_by(spark):
-    """B6's two selection plans — fused zero-shuffle local argmin vs
-    min_by hash aggregation — must be row-identical (same deterministic
-    (link_score, s, o) tie-break)."""
-    from kgforge.fixtures import (
-        gazetteer,
-        gen_embeddings,
-        gen_transcripts,
-        patterns_df,
-    )
-    from kgforge.stages import extract as ex
-    from kgforge.stages import link as lk
-    from kgforge.stages.materialize import dense_ids
-    from pyspark.sql import functions as F
-
-    t = spark.createDataFrame(gen_transcripts(40)[0])
-    gaz_pdf = gazetteer()
-    gaz = spark.createDataFrame(gaz_pdf)
-    tri = ex.surface_triples_dedup(ex.extract_triples(t, gaz_pdf, patterns_df()))
-    e2id = dense_ids(gaz.select(F.col("canonical").alias("name")))
-    r2id = dense_ids(spark.createDataFrame(patterns_df()).select(F.col("pred").alias("name")))
-    emb = gen_embeddings(n_ent=60, n_rel=12, dim=16)
-
-    cols = ["conv_id", "turn_idx", "subj", "pred", "obj", "s", "p", "o", "link_score"]
-    a = (
-        lk.link_triples(spark, tri, gaz, e2id, r2id, emb, local_select=True)
-        .select(cols).toPandas().sort_values(cols).reset_index(drop=True)
-    )
-    b = (
-        lk.link_triples(spark, tri, gaz, e2id, r2id, emb, local_select=False)
-        .select(cols).toPandas().sort_values(cols).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
-
-
 def test_asof_join_manual_case(spark):
     """As-of semantics on a hand-checked case: inclusive tie (right row
     at the SAME instant matches), carry-forward across later lefts,

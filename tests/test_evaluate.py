@@ -5,6 +5,8 @@ filtered excludes known-true candidates except the target itself)
 directly with loops — no code shared with kgforge.evaluate.
 """
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -110,21 +112,40 @@ def test_relation_ranks_match_oracle(spark, norm):
     from kgforge.evaluate import relation_prediction_ranks
 
     test = SPLIT["test2id"]
-    got = (
-        relation_prediction_ranks(spark, spark.createDataFrame(test), EMB, KNOWN, norm=norm)
-        .toPandas()
-        .sort_values(["h", "t", "r"])
-        .reset_index(drop=True)
-    )
     want = (
         _oracle_relation_ranks(test, norm=norm)
         .drop_duplicates(["h", "t", "r"])
         .sort_values(["h", "t", "r"])
         .reset_index(drop=True)
     )
-    pd.testing.assert_frame_equal(
-        got.astype("int64"), want.astype("int64"), check_like=True
-    )
+    # the known set as pandas and as a DataFrame: same ranks
+    for known in (KNOWN, spark.createDataFrame(KNOWN[["h", "t", "r"]])):
+        got = (
+            relation_prediction_ranks(spark, spark.createDataFrame(test), EMB, known, norm=norm)
+            .toPandas()
+            .sort_values(["h", "t", "r"])
+            .reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(
+            got.astype("int64"), want.astype("int64"), check_like=True
+        )
+
+
+@pytest.mark.parametrize("slot,bad", [("h", -1), ("t", N_ENT), ("r", -1), ("r", N_REL)])
+def test_out_of_range_test_id_raises(spark, slot, bad):
+    """A test id outside the embedding tables fails loudly, naming the id
+    and the table size, on the entity and the relation ranks alike: NumPy
+    would read -1 as the last row and fail on |E| with a bare
+    IndexError."""
+    from kgforge.evaluate import relation_prediction_ranks
+
+    test = SPLIT["test2id"].head(3).copy()
+    test.loc[1, slot] = bad
+    size = f"|R| = {N_REL}" if slot == "r" else f"|E| = {N_ENT}"
+    tdf = spark.createDataFrame(test)
+    for rank in (link_prediction_ranks, relation_prediction_ranks):
+        with pytest.raises(Exception, match=rf"ValueError: test triple {slot} id {bad} .*{re.escape(size)}"):
+            rank(spark, tdf, EMB, KNOWN).collect()
 
 
 @pytest.mark.parametrize(
@@ -188,23 +209,15 @@ def _numpy_filtered_ranks(ent, rel, test, known_set):
     return pd.DataFrame(rows, columns=["h", "t", "r", *RANK_COLS])
 
 
-@pytest.mark.parametrize(
-    "blocked,with_known",
-    [(False, True), (False, False), (True, True), (True, False)],
-    ids=["known", "known-none", "known-blocked", "known-none-blocked"],
-)
-def test_ranks_across_chunk_boundaries(spark, blocked, with_known):
-    """|E| = 60k at d = 8 holds the broadcast path's scoring chunk to 4
-    test triples, so the 15 triples of one Arrow batch score as chunks
-    of 4, 4, 4 and 3; on the blocked path the 60k entities span at least
-    4 Arrow-batch blocks (≤16384 rows each), so every rank is a sum over
-    blocks. Ranks must equal a per-triple NumPy recomputation. The known
-    set hits the filter for the first 8 triples (each with 40 other
-    known heads and tails, about half scoring below the true entity)
-    and misses for the rest; ``known=None`` ranks raw-only on both
-    paths (filtered == raw)."""
-    from kgforge.evaluate import link_prediction_ranks_blocked
-
+@pytest.mark.parametrize("with_known", [True, False], ids=["known", "known-none"])
+def test_ranks_across_chunk_boundaries(spark, with_known):
+    """|E| = 60k at d = 8 holds the scoring chunk to 4 test triples, so
+    the 15 triples of one Arrow batch score as chunks of 4, 4, 4 and 3.
+    Ranks must equal a per-triple NumPy recomputation. The known set
+    hits the filter for the first 8 triples (each with 40 other known
+    heads and tails, about half scoring below the true entity) and
+    misses for the rest; ``known=None`` ranks raw-only (filtered ==
+    raw)."""
     n_ent, n_rel = 60_000, 5
     emb = gen_embeddings(n_ent=n_ent, n_rel=n_rel, dim=8)
     rng = np.random.default_rng(11)
@@ -226,8 +239,7 @@ def test_ranks_across_chunk_boundaries(spark, blocked, with_known):
         known = pd.concat(parts, ignore_index=True)
     known_set = set() if known is None else set(known.itertuples(index=False, name=None))
 
-    rank = link_prediction_ranks_blocked if blocked else link_prediction_ranks
-    got = rank(spark, spark.createDataFrame(test).coalesce(1), emb, known).toPandas()
+    got = link_prediction_ranks(spark, spark.createDataFrame(test).coalesce(1), emb, known).toPandas()
     want = _numpy_filtered_ranks(
         emb["ent"].astype(np.float64), emb["rel"].astype(np.float64), test, known_set
     )
@@ -286,7 +298,7 @@ def test_topk_matches_bruteforce(spark):
         assert list(grp.sort_values("rk")["candidate"]) == list(want)
 
 
-BLOCKED_CASES = [
+KERNEL_CASES = [
     ("transe", 1, None),
     ("transe", 2, 6),
     ("transh", 1, 6),
@@ -305,122 +317,82 @@ BLOCKED_CASES = [
 ]
 
 
-@pytest.mark.parametrize("model,norm,dec", BLOCKED_CASES)
-def test_blocked_ranks_equal_broadcast(spark, model, norm, dec):
-    """The blocked path must reproduce the broadcast protocol for every
-    kernel × norm (score_decimals as the contract queries pass it), with
-    the known set as a Spark DataFrame — the form the B12 gate passes."""
-    from kgforge.evaluate import link_prediction_ranks_blocked
+def _sorted(df) -> pd.DataFrame:
+    return df.toPandas().sort_values(["h", "t", "r"]).reset_index(drop=True)
 
+
+@pytest.mark.parametrize("model,norm,dec", KERNEL_CASES)
+def test_blocked_ranks_equal_broadcast(spark, model, norm, dec):
+    """Every kernel × norm (score_decimals as the contract queries pass
+    it) ranks the same with the known set as a Spark DataFrame — the form
+    the B12 gate passes, cut to the test triples' fixed slots before it
+    is collected — as with the known set as pandas."""
     test = spark.createDataFrame(SPLIT["test2id"].head(12))
     known_df = spark.createDataFrame(KNOWN[["h", "t", "r"]])
-    key = ["h", "t", "r"]
-    a = (
-        link_prediction_ranks(spark, test, EMB, KNOWN, model=model, norm=norm, score_decimals=dec)
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    b = (
-        link_prediction_ranks_blocked(
-            spark, test, EMB, known_df, norm=norm, model=model, score_decimals=dec
-        ).toPandas().sort_values(key).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    a = _sorted(link_prediction_ranks(spark, test, EMB, KNOWN, model=model, norm=norm, score_decimals=dec))
+    b = _sorted(link_prediction_ranks(spark, test, EMB, known_df, model=model, norm=norm, score_decimals=dec))
+    pd.testing.assert_frame_equal(a, b)
 
 
 def test_blocked_category_metrics_equal_broadcast(spark):
-    """The 1-1/1-N/N-1/N-N breakdown must agree between the broadcast
-    and blocked rank paths — the category composition is path-agnostic."""
-    from kgforge.evaluate import (
-        link_prediction_metrics_by_category,
-        link_prediction_ranks_blocked,
-        relation_categories,
-    )
+    """The 1-1/1-N/N-1/N-N breakdown agrees between the known set as
+    pandas and as a DataFrame — the category composition does not care
+    where the filter came from."""
+    from kgforge.evaluate import link_prediction_metrics_by_category, relation_categories
 
     test = spark.createDataFrame(SPLIT["test2id"].head(12))
     cats = relation_categories(spark.createDataFrame(SPLIT["train2id"]))
-    a = link_prediction_metrics_by_category(
-        link_prediction_ranks(spark, test, EMB, KNOWN), cats
-    ).toPandas().sort_values("category").reset_index(drop=True)
-    b = link_prediction_metrics_by_category(
-        link_prediction_ranks_blocked(spark, test, EMB, KNOWN), cats
-    ).toPandas().sort_values("category").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    a, b = (
+        link_prediction_metrics_by_category(link_prediction_ranks(spark, test, EMB, known), cats)
+        .toPandas().sort_values("category").reset_index(drop=True)
+        for known in (KNOWN, spark.createDataFrame(KNOWN[["h", "t", "r"]]))
+    )
+    pd.testing.assert_frame_equal(a, b)
 
 
 def test_blocked_ranks_from_parquet_checkpoint(spark, tmp_path):
-    """A20 + blocked eval end to end: embeddings and the known set enter
-    as Parquet-backed DataFrames — zero data-sized driver pulls."""
-    from kgforge.evaluate import link_prediction_ranks_blocked
-    from kgforge.io_openke import read_embedding_df, write_embeddings_parquet
+    """A20 + eval end to end: the embeddings come back from a Parquet
+    checkpoint and the known set enters as a Parquet-backed DataFrame;
+    the ranks equal those from the in-memory embeddings and the pandas
+    known set, for TransE and for TransR (whose checkpoint stores the
+    matrices flat and reads them back reshaped)."""
+    from kgforge.io_openke import read_embeddings_parquet, write_embeddings_parquet
 
     d = str(tmp_path / "ckpt")
     write_embeddings_parquet(spark, EMB, d)
-    known_df = spark.createDataFrame(KNOWN[["h", "t", "r"]])
+    KNOWN[["h", "t", "r"]].to_parquet(str(tmp_path / "known.parquet"))
+    known_df = spark.read.parquet(str(tmp_path / "known.parquet"))
     test = spark.createDataFrame(SPLIT["test2id"].head(12))
-    key = ["h", "t", "r"]
-
-    emb_dfs = {k: read_embedding_df(spark, d, k) for k in ("ent", "rel")}
-    a = (
-        link_prediction_ranks(spark, test, EMB, KNOWN)
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    b = (
-        link_prediction_ranks_blocked(spark, test, emb_dfs, known_df)
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-    # TransR too: the checkpoint's flat (id, vec) mat rows are reshaped
-    # to [|R|, d_r, d_e] once collected
-    emb_r = {k: read_embedding_df(spark, d, k) for k in ("ent", "rel", "mat")}
-    ar = (
-        link_prediction_ranks(spark, test, EMB, KNOWN, model="transr", score_decimals=6)
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    br = (
-        link_prediction_ranks_blocked(
-            spark, test, emb_r, known_df, model="transr", score_decimals=6
-        ).toPandas().sort_values(key).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(ar, br, check_dtype=False)
+    back = read_embeddings_parquet(d)
+    for model, dec in (("transe", None), ("transr", 6)):
+        a = _sorted(link_prediction_ranks(spark, test, EMB, KNOWN, model=model, score_decimals=dec))
+        b = _sorted(link_prediction_ranks(spark, test, back, known_df, model=model, score_decimals=dec))
+        pd.testing.assert_frame_equal(a, b)
 
 
-def test_blocked_ranks_partition_independent(spark, tmp_path):
-    """Blocks are Arrow batches of whatever partitions the entity table
-    has; the summed ranks must not depend on them. Parquet-backed
-    embeddings with the entity table at one partition (one block), at
-    seven, and at one partition cut into 8-row Arrow batches (eight
-    blocks through one Python worker)."""
-    from kgforge.evaluate import link_prediction_ranks_blocked
-    from kgforge.io_openke import read_embedding_df, write_embeddings_parquet
-
-    d = str(tmp_path / "ckpt")
-    write_embeddings_parquet(spark, EMB, d)
+def test_blocked_ranks_partition_independent(spark):
+    """The ranks must not depend on how the test triples and the known
+    DataFrame are partitioned or cut into Arrow batches: test and known
+    at one partition, at seven, and at one partition cut into 4-row
+    Arrow batches all equal the pandas-known ranks."""
     test = spark.createDataFrame(SPLIT["test2id"].head(15))
     known_df = spark.createDataFrame(KNOWN[["h", "t", "r"]])
-    key = ["h", "t", "r"]
 
     def ranks(n_parts):
-        emb = {
-            "ent": read_embedding_df(spark, d, "ent").repartition(n_parts),
-            "rel": read_embedding_df(spark, d, "rel"),
-        }
-        return (
-            link_prediction_ranks_blocked(spark, test, emb, known_df)
-            .toPandas().sort_values(key).reset_index(drop=True)
-        )
+        return _sorted(link_prediction_ranks(
+            spark, test.repartition(n_parts), EMB, known_df.repartition(n_parts)
+        ))
 
-    one, seven = ranks(1), ranks(7)
-    pd.testing.assert_frame_equal(one, seven)
+    one = ranks(1)
+    pd.testing.assert_frame_equal(one, ranks(7))
     batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(batch_conf)
-    spark.conf.set(batch_conf, "8")
+    spark.conf.set(batch_conf, "4")
     try:
         pd.testing.assert_frame_equal(one, ranks(1))
     finally:
         spark.conf.set(batch_conf, old)
-    want = link_prediction_ranks(spark, test, EMB, KNOWN).toPandas().sort_values(key)
-    pd.testing.assert_frame_equal(one, want.reset_index(drop=True), check_dtype=False)
+    pd.testing.assert_frame_equal(one, _sorted(link_prediction_ranks(spark, test, EMB, KNOWN)))
 
 
 def test_score_components_are_what_score_batch_reads():
@@ -435,38 +407,37 @@ def test_score_components_are_what_score_batch_reads():
 
 
 def test_blocked_ranks_ship_only_scored_components(spark, tmp_path, monkeypatch):
-    """Given a full checkpoint (every model's components), the blocked
-    path ships only what the model scores with: for TransE the entity
-    frame holds ``[id, ent]``, and the ranks equal those from ent + rel
-    alone."""
+    """Given a full checkpoint (every model's components), the rank path
+    broadcasts only what the models score with: ``ent`` and ``rel`` for
+    TransE, plus ``ent_im`` and ``rel_im`` when ComplEx rides the same
+    call; the ranks equal those from those components alone."""
     from kgforge import evaluate as ev
-    from kgforge.io_openke import read_embedding_df, write_embeddings_parquet
+    from kgforge.io_openke import read_embeddings_parquet, write_embeddings_parquet
 
     d = str(tmp_path / "ckpt")
     write_embeddings_parquet(spark, EMB, d)
-    full = {k: read_embedding_df(spark, d, k) for k in EMB}
-    entity_frames = []
-    emb_sides = ev._emb_sides
+    full = read_embeddings_parquet(d)
+    shipped = []
+    pin = ev.pin_broadcast
 
-    def spy(spark_, emb):
-        ents, rel = emb_sides(spark_, emb)
-        entity_frames.append(ents.columns)
-        return ents, rel
+    def spy(spark_, value):
+        if isinstance(value, dict):
+            shipped.append(sorted(value))
+        return pin(spark_, value)
 
-    monkeypatch.setattr(ev, "_emb_sides", spy)
+    monkeypatch.setattr(ev, "pin_broadcast", spy)
     test = spark.createDataFrame(SPLIT["test2id"].head(12))
     known_df = spark.createDataFrame(KNOWN[["h", "t", "r"]])
-    key = ["h", "t", "r"]
 
-    def ranks(emb):
-        return (
-            ev.link_prediction_ranks_blocked(spark, test, emb, known_df, model="transe")
-            .toPandas().sort_values(key).reset_index(drop=True)
-        )
+    def ranks(emb, models):
+        return _sorted(ev.link_prediction_ranks_multi(spark, test, emb, known_df, models))
 
-    got = ranks(full)
-    assert entity_frames == [["id", "ent"]]
-    pd.testing.assert_frame_equal(got, ranks({k: full[k] for k in ("ent", "rel")}))
+    got = ranks(full, [("transe", None)])
+    assert shipped == [["ent", "rel"]]
+    pd.testing.assert_frame_equal(got, ranks({k: full[k] for k in ("ent", "rel")}, [("transe", None)]))
+    shipped.clear()
+    ranks(full, [("transe", None), ("complex", 6)])
+    assert shipped == [["ent", "ent_im", "rel", "rel_im"]]
 
 
 def test_embedding_checkpoint_roundtrip(spark, tmp_path):
@@ -478,7 +449,7 @@ def test_embedding_checkpoint_roundtrip(spark, tmp_path):
 
     d = str(tmp_path / "ckpt")
     write_embeddings_parquet(spark, EMB, d)
-    back = read_embeddings_parquet(spark, d)
+    back = read_embeddings_parquet(d)
     assert set(back) == set(EMB)
     for k in EMB:
         np.testing.assert_array_equal(back[k], EMB[k].astype("float32"))
@@ -515,14 +486,12 @@ def test_triple_classification_reasonable(spark):
 
 
 def test_blocked_constrained_equals_broadcast_constrained(spark):
-    """Type-constrained protocol on the blocked path: per-block domain/
-    range membership must reproduce the broadcast kernel's constrained
-    ranks exactly (incl. relations ABSENT from the constraint maps
-    staying unconstrained). Lists from the known set contain every known
-    candidate; the train-only DOMAINS/RANGES leave some known
-    candidates outside, which the filtered rank must not subtract."""
-    from kgforge.evaluate import link_prediction_ranks_blocked
-
+    """Type-constrained ranks with the known set as a DataFrame equal
+    those with the known set as pandas (incl. relations ABSENT from the
+    constraint maps staying unconstrained). Lists from the known set
+    contain every known candidate; the train-only DOMAINS/RANGES leave
+    some known candidates outside, which the filtered rank must not
+    subtract."""
     # constraints for relations 0..2 only; 3..4 unconstrained on purpose
     domains = {
         int(r): np.unique(g["h"].to_numpy())
@@ -533,19 +502,11 @@ def test_blocked_constrained_equals_broadcast_constrained(spark):
         for r, g in KNOWN.groupby("r") if int(r) < 3
     }
     test = spark.createDataFrame(SPLIT["test2id"].head(15))
-    key = ["h", "t", "r"]
+    known_df = spark.createDataFrame(KNOWN[["h", "t", "r"]])
     for constraints in ((domains, ranges), (DOMAINS, RANGES)):
-        a = (
-            link_prediction_ranks(
-                spark, test, EMB, KNOWN, constraints=constraints
-            ).toPandas().sort_values(key).reset_index(drop=True)
-        )
-        b = (
-            link_prediction_ranks_blocked(
-                spark, test, EMB, KNOWN, constraints=constraints
-            ).toPandas().sort_values(key).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(a, b, check_dtype=False)
+        a = _sorted(link_prediction_ranks(spark, test, EMB, KNOWN, constraints=constraints))
+        b = _sorted(link_prediction_ranks(spark, test, EMB, known_df, constraints=constraints))
+        pd.testing.assert_frame_equal(a, b)
 
 
 def test_kernel_leaderboard_consistent_with_individual_metrics(spark):

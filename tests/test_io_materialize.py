@@ -148,24 +148,6 @@ def test_type_constraint_roundtrip(tmp_path):
     assert d2 == domains and r2 == ranges
 
 
-def test_blocked_ranks_equal_broadcast_ranks(spark):
-    """The |E|-beyond-broadcast relational eval path must reproduce the
-    broadcast-NumPy protocol exactly (raw + filtered, both directions)."""
-    import pandas as pd
-
-    from kgforge.evaluate import link_prediction_ranks, link_prediction_ranks_blocked
-    from kgforge.fixtures import gen_embeddings, gen_openke_split
-
-    S = gen_openke_split(n_ent=50, n_rel=4, n_train=300, n_valid=30, n_test=30)
-    emb = gen_embeddings(n_ent=50, n_rel=4, dim=8)
-    known = pd.concat([S["train2id"], S["valid2id"], S["test2id"]])
-    test = spark.createDataFrame(S["test2id"])
-    key = ["h", "t", "r"]
-    a = link_prediction_ranks(spark, test, emb, known).toPandas().sort_values(key).reset_index(drop=True)
-    b = link_prediction_ranks_blocked(spark, test, emb, known).toPandas().sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-
 def test_constrained_ranks_tighter_than_raw(spark):
     """Type constraints shrink the candidate pool -> ranks never worsen."""
     import numpy as np

@@ -183,7 +183,7 @@ STAGE_JOB_BUDGET = {
     "dicts": 7,
     "link": 5,
     "materialize": 7,
-    "evaluate": 7,
+    "evaluate": 4,
 }
 
 
