@@ -56,8 +56,8 @@ _CHUNK_BYTES = 16 << 20
 
 def _chunk_rows(n_cand: int, dim: int, model: str) -> int:
     """Test rows per scoring chunk against ``n_cand`` candidates: one
-    ``[chunk, n_cand, d]`` float64 temporary stays within ``_CHUNK_BYTES``
-    (HolE's gathered operand is ``d``× wider)."""
+    component-major ``[d, chunk, n_cand]`` float64 temporary stays within
+    ``_CHUNK_BYTES`` (HolE's gathered operand is ``d``× wider)."""
     return max(1, _CHUNK_BYTES // (n_cand * dim * (dim if model == "hole" else 1) * 8))
 
 
@@ -69,8 +69,8 @@ def _scores(model: str, emb: dict, h, r, t, norm: int, dec: int | None) -> np.nd
     return s if dec is None else np.round(s, dec)
 
 
-def _test_ids(pdf: pd.DataFrame, n_ent: int, n_rel: int) -> list[np.ndarray]:
-    """The ``h``, ``t``, ``r`` columns of a test batch as int64. An id
+def _triple_ids(pdf: pd.DataFrame, n_ent: int, n_rel: int, kind: str = "test") -> list[np.ndarray]:
+    """The ``h``, ``t``, ``r`` columns of ``kind`` triples as int64. An id
     outside ``[0, |E|)`` (``[0, |R|)`` for ``r``) raises ``ValueError``
     naming it: NumPy would read ``-1`` as the last row and fail on
     ``|E|`` with a bare ``IndexError``."""
@@ -79,7 +79,7 @@ def _test_ids(pdf: pd.DataFrame, n_ent: int, n_rel: int) -> list[np.ndarray]:
         ids = pdf[c].to_numpy(np.int64)
         bad = ids[(ids < 0) | (ids >= n)]
         if len(bad):
-            raise ValueError(f"test triple {c} id {bad[0]} is out of range: {size} = {n}")
+            raise ValueError(f"{kind} triple {c} id {bad[0]} is out of range: {size} = {n}")
         cols.append(ids)
     return cols
 
@@ -103,19 +103,21 @@ def _known_ids(index: tuple, key: np.ndarray) -> list[np.ndarray]:
     return [vals[a:b] for a, b in zip(lo, hi)]
 
 
-def _known_cols(known: pd.DataFrame | None) -> list[np.ndarray]:
-    """``h``, ``t``, ``r`` of the known triples as int64; ``None`` is the
-    empty set, so filtered ranks equal raw ranks."""
+def _known_cols(known: pd.DataFrame | None, n_ent: int, n_rel: int) -> list[np.ndarray]:
+    """``h``, ``t``, ``r`` of the known triples as int64, range-checked on
+    the driver as the test ids are (:func:`_triple_ids`): a ``-1`` would
+    otherwise filter entity |E|−1 as known. ``None`` is the empty set, so
+    filtered ranks equal raw ranks."""
     if known is None:
         return [np.empty(0, np.int64)] * 3
-    return [known[c].to_numpy(np.int64) for c in ("h", "t", "r")]
+    return _triple_ids(known, n_ent, n_rel, "known")
 
 
-def _known_index(known: pd.DataFrame | None) -> tuple[tuple, tuple]:
+def _known_index(known: pd.DataFrame | None, n_ent: int, n_rel: int) -> tuple[tuple, tuple]:
     """Known-triple filter as one :func:`_index` per side, keyed ``(r <<
     32) | e`` (``e`` = t on the head side, h on the tail side) over the
     known ids of the varied slot."""
-    h, t, r = _known_cols(known)
+    h, t, r = _known_cols(known, n_ent, n_rel)
     return _index((r << 32) | t, h), _index((r << 32) | h, t)
 
 
@@ -202,9 +204,10 @@ def link_prediction_ranks_multi(
     ``[1, |E|]`` candidate ids into a ``[chunk, |E|]`` block (bit-identical
     to flat per-row calls), rounded with ``np.round`` to the model's
     ``score_decimals`` when given; :func:`_rank` counts each row. A chunk
-    keeps one ``[chunk, |E|, d]`` float64 temporary within
-    ``_CHUNK_BYTES`` (HolE's gathered operand is ``d``× wider). A test
-    id outside the embedding tables raises ``ValueError``.
+    keeps one component-major ``[d, chunk, |E|]`` float64 temporary
+    within ``_CHUNK_BYTES`` (HolE's gathered operand is ``d``× wider). A
+    test or known id outside the embedding tables raises ``ValueError``
+    (known ids on the driver, before any job).
 
     ``known``: pandas, a DataFrame or ``None`` (raw-only). A DataFrame
     is cut to the triples sharing a test triple's fixed slot — ``(r, t)``
@@ -226,7 +229,7 @@ def link_prediction_ranks_multi(
     b_emb = pin_broadcast(spark, emb)
     known = _near_known(known, test, "r", "stack(2, true, t, false, h) AS (head, fix)")
     domains, ranges = constraints or (None, None)
-    b_filter = pin_broadcast(spark, (*_known_index(known), domains or {}, ranges or {}))
+    b_filter = pin_broadcast(spark, (*_known_index(known, n_ent, n_rel), domains or {}, ranges or {}))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         E = b_emb.value
@@ -236,7 +239,7 @@ def link_prediction_ranks_multi(
         for pdf in batches:
             if pdf.empty:
                 continue
-            h_arr, t_arr, r_arr = _test_ids(pdf, n_ent, n_rel)
+            h_arr, t_arr, r_arr = _triple_ids(pdf, n_ent, n_rel)
             known_h = _known_ids(heads_of, (r_arr << 32) | t_arr)
             known_t = _known_ids(tails_of, (r_arr << 32) | h_arr)
             outs = []
@@ -329,7 +332,7 @@ def relation_prediction_ranks(
     emb = {k: emb[k] for k in ("ent", "rel")}
     (n_ent, _), (n_rel, dim) = emb["ent"].shape, emb["rel"].shape
     b_emb = pin_broadcast(spark, emb)
-    kh, kt, kr = _known_cols(_near_known(known, test, "h", "t"))
+    kh, kt, kr = _known_cols(_near_known(known, test, "h", "t"), n_ent, n_rel)
     b_known = pin_broadcast(spark, _index((kh << 32) | kt, kr))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -339,7 +342,7 @@ def relation_prediction_ranks(
         for pdf in batches:
             if pdf.empty:
                 continue
-            h, t, r = _test_ids(pdf, n_ent, n_rel)
+            h, t, r = _triple_ids(pdf, n_ent, n_rel)
             known_r = _known_ids(b_known.value, (h << 32) | t)
             ranks = np.empty((len(pdf), 2), dtype=np.int64)
             for lo in range(0, len(pdf), chunk):

@@ -215,7 +215,7 @@ def _transe_score_grads(P, h, t, r, norm=1):
     """TransE ``‖h + r − t‖_norm``: ``g = ∂s/∂h = ∂s/∂r = −∂s/∂t``."""
     ent, rel = P
     d = ent[h] + rel[r] - ent[t]
-    s = kernels._dist(d, norm)
+    s = kernels._dist(d.T.copy(), norm)  # component-major, and _dist overwrites it
     g = np.sign(d) if norm == 1 else d / np.maximum(s, 1e-12)[:, None]
     return s, (g,), (-g,), (g,)
 
@@ -299,10 +299,11 @@ def sgd_epochs(
 
 def valid_mrr(ent: np.ndarray, rel: np.ndarray, valid: pd.DataFrame, norm: int = 1) -> float:
     """Raw tail-MRR on a validation split (vectorized; early-stop metric)."""
-    h = ent[valid["h"].to_numpy(np.int64)]
-    r = rel[valid["r"].to_numpy(np.int64)]
+    h = ent[valid["h"].to_numpy(np.int64)].T
+    r = rel[valid["r"].to_numpy(np.int64)].T
     t_idx = valid["t"].to_numpy(np.int64)
-    scores = kernels.transe(h[:, None], r[:, None], ent[None], norm)  # [B, |E|]
+    # component-major [d, B, 1] against [d, 1, |E|] → [B, |E|]
+    scores = kernels.transe(h[:, :, None], r[:, :, None], np.ascontiguousarray(ent.T)[:, None], norm)
     true_s = scores[np.arange(len(valid)), t_idx]
     ranks = 1 + (scores < true_s[:, None]).sum(1)
     return float((1.0 / ranks).mean())

@@ -148,6 +148,33 @@ def test_out_of_range_test_id_raises(spark, slot, bad):
             rank(spark, tdf, EMB, KNOWN).collect()
 
 
+@pytest.mark.parametrize("slot,bad", [("h", -1), ("t", N_ENT), ("r", -1), ("r", N_REL)])
+def test_out_of_range_known_id_raises(spark, slot, bad):
+    """A known id outside the embedding tables fails on the driver, before
+    any job, naming the id and the table size, on the entity and the
+    relation ranks alike. The row is a copy of a test triple that entity
+    |E|-1 outranks on the head side, so reading ``-1`` as |E|-1 would
+    have filtered it and moved the filtered head rank."""
+    from kgforge.evaluate import relation_prediction_ranks
+
+    test = SPLIT["test2id"]
+    h, t, r = (test[c].to_numpy() for c in ("h", "t", "r"))
+    last = kernels.score_batch("transe", EMB, np.full_like(h, N_ENT - 1), r, t)
+    row = test[last < kernels.score_batch("transe", EMB, h, r, t)].head(1)
+    assert len(row) == 1
+    known = pd.concat([KNOWN, row.assign(**{slot: bad})], ignore_index=True)
+    size = f"|R| = {N_REL}" if slot == "r" else f"|E| = {N_ENT}"
+    tdf = spark.createDataFrame(row)
+    # a DataFrame known set is cut to the rows that share a test triple's
+    # fixed slots, so the bad row reaches the driver when its bad id sits
+    # in the slot the call varies
+    kdf = spark.createDataFrame(known)
+    for rank, varied in ((link_prediction_ranks, "ht"), (relation_prediction_ranks, "r")):
+        for k in (known, kdf) if slot in varied else (known,):
+            with pytest.raises(ValueError, match=rf"known triple {slot} id {bad} .*{re.escape(size)}"):
+                rank(spark, tdf, EMB, k)
+
+
 @pytest.mark.parametrize(
     "models,sides",
     [

@@ -2,6 +2,8 @@
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from kgforge import kernels
 from kgforge.fixtures import gen_embeddings
@@ -39,9 +41,43 @@ def _oracle_score(model, i, norm):
 @pytest.mark.parametrize("model", ["transe", "transh", "transr", "transd"])
 @pytest.mark.parametrize("norm", [1, 2])
 def test_kernel_matches_oracle(model, norm):
+    """TransE is EXACT: the per-row oracle's 1-D sum adds the components
+    in the same pairwise order as the kernel's plane sum."""
     got = kernels.score_batch(model, EMB, H, R, T, norm)
     want = np.array([_oracle_score(model, i, norm) for i in range(B)])
-    np.testing.assert_allclose(got, want, rtol=1e-5)
+    if model == "transe":
+        assert np.array_equal(got, want)
+    else:
+        np.testing.assert_allclose(got, want, rtol=1e-5)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    d=st.integers(1, 300),
+    lead=st.sampled_from([(), (3,), (2, 5)]),
+    seed=st.integers(0, 2**32 - 1),
+    dtype=st.sampled_from([np.float64, np.float32]),
+)
+@example(d=7, lead=(3,), seed=0, dtype=np.float64)  # sequential branch
+@example(d=128, lead=(3,), seed=1, dtype=np.float64)  # last 8-accumulator size
+@example(d=129, lead=(3,), seed=2, dtype=np.float64)  # first split
+@example(d=300, lead=(2, 5), seed=3, dtype=np.float32)
+def test_sum0_is_bitwise_numpy_row_sum(d, lead, seed, dtype):
+    """``_sum0`` over the leading axis is array_equal to NumPy's sum over
+    the last axis of the C-contiguous rows (the layout the row-major
+    kernels reduced) for every d in 1..300 — all three branches of
+    NumPy's pairwise sum — on signed values spread over 60 binades, with
+    signed zeros among them."""
+    rng = np.random.default_rng(seed)
+    rows = rng.uniform(1, 2, (*lead, d)) * 2.0 ** rng.integers(-30, 31, (*lead, d))
+    rows *= rng.choice([-1.0, 1.0], rows.shape)
+    rows[rng.random(rows.shape) < 0.1] = -0.0
+    x = np.moveaxis(rows.astype(dtype), -1, 0)
+    want = np.moveaxis(x, 0, -1).sum(-1)
+    got = kernels._sum0(np.ascontiguousarray(x))  # a component-major kernel temporary
+    assert got.dtype == want.dtype
+    assert np.array_equal(got, want)
+    assert np.array_equal(np.signbit(got), np.signbit(want))
 
 
 def test_distmult_matches_paper_loop_and_is_symmetric():
@@ -149,15 +185,13 @@ def test_analogy_is_distmult_plus_complex():
     complex block (Liu et al. 2017's block-diagonal normal form), and a
     paper-style explicit loop over both blocks."""
     got = kernels.score_batch("analogy", EMB, H, R, T)
-    dm = kernels.distmult(
-        EMB["ent_sc"][H].astype(np.float64),
-        EMB["rel_sc"][R].astype(np.float64),
-        EMB["ent_sc"][T].astype(np.float64),
-    )
+
+    def cm(k, ids):  # component-major [d, B] float64, as the kernels take
+        return EMB[k][ids].T.astype(np.float64)
+
+    dm = kernels.distmult(cm("ent_sc", H), cm("rel_sc", R), cm("ent_sc", T))
     cx = kernels.complex_score(
-        EMB["ent"][H].astype(np.float64), EMB["ent_im"][H].astype(np.float64),
-        EMB["rel"][R].astype(np.float64), EMB["rel_im"][R].astype(np.float64),
-        EMB["ent"][T].astype(np.float64), EMB["ent_im"][T].astype(np.float64),
+        cm("ent", H), cm("ent_im", H), cm("rel", R), cm("rel_im", R), cm("ent", T), cm("ent_im", T)
     )
     np.testing.assert_allclose(got, dm + cx, rtol=1e-12)
     want = []

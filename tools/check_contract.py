@@ -54,7 +54,10 @@ def main() -> int:
         # where Arrow conversion is OFF and createDataFrame uses the
         # strict non-Arrow type verifier (round-3 incident class)
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
-    con = duckdb.connect()
+    # DuckDB's default memory limit is 80% of the host's RAM, under which
+    # the six-way join oracle of a7e_simple_scores grew past 11 GB on a
+    # 16 GB host and was OOM-killed; held to a limit it completes
+    con = duckdb.connect(config={"memory_limit": "2GB"})
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
