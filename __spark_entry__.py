@@ -893,9 +893,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def a19_topk_constrained(spark, sf):
         """A19 under type constraints: tail completion draws candidates
-        from the relation's known range only (type_constrain semantics),
-        which also shrinks the scoring work per query — the serving-time
-        fast path. Oracle replays the range-restricted top-k in SQL."""
+        from the relation's known range only (type_constrain semantics):
+        each query row is scored against all entities in one block, and
+        only the range's candidates are ranked. Oracle replays the
+        range-restricted top-k in SQL."""
         split, emb, known = _openke_emb()
         domains = {
             int(r): np.unique(g["h"].to_numpy()) for r, g in known.groupby("r")

@@ -8,15 +8,19 @@ config change:
 * **Partition spec**: hive-style ``col=value`` directories →
   Catalyst partition pruning works natively (filters on partition
   columns prune directories before any file is opened).
-* **Snapshot manifest**: every commit writes ``snap-<n>.json`` (file
-  listing + row count + summary) and atomically swaps a
-  ``version-hint.text`` pointer (tmp + rename) — readers always see a
-  complete snapshot, never a partial write.
+* **One commit path**: every commit is at most one data write
+  (:meth:`_write_data`, ``data/v<n>/``) and one publish
+  (:meth:`_publish`): the complete ``snap-<n>.json`` (file listing +
+  row count + summary with its ``operation``) is written whole (tmp +
+  rename), then the ``version-hint.text`` pointer — or a branch ref —
+  is swapped the same way. Nothing is written after the swap, so a
+  crash at any point leaves either the previous or the new snapshot
+  current, each complete; readers never see a partial write.
 * **Time travel (lite)**: read any retained snapshot by id.
 
 The adapter is deliberately small; it exists so the pipeline's write
 path has Iceberg semantics (atomic commit, snapshot lineage, partition
-pruning) that swap 1:1 for ``df.writeTo(...).append()`` on a real
+pruning) that swap 1:1 for Spark's ``writeTo(...).append()`` on a real
 catalog.
 """
 
@@ -24,9 +28,18 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: :meth:`IcebergLiteTable.append`'s default data-dir bound, which branch
+#: commits apply too
+_MAX_DATA_DIRS = 64
+
+
+def _now() -> str:
+    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
 
 class IcebergLiteTable:
@@ -39,6 +52,9 @@ class IcebergLiteTable:
 
     def _hint_path(self) -> str:
         return os.path.join(self.meta, "version-hint.text")
+
+    def _ref_path(self, name: str) -> str:
+        return os.path.join(self.meta, f"ref-{name}.json")
 
     def current_snapshot_id(self) -> int | None:
         p = self._hint_path()
@@ -71,6 +87,20 @@ class IcebergLiteTable:
         ids = [s["snapshot_id"] for s in self.snapshots()]
         return (max(ids) + 1) if ids else 1
 
+    @staticmethod
+    def _dirs(snap: dict) -> list[str]:
+        """The data dirs a snapshot reads (manifests from before
+        ``data_dirs`` name their one dir as ``data_dir``)."""
+        return snap.get("data_dirs") or [snap["data_dir"]]
+
+    def _dir_specs(self, snap: dict) -> dict[str, list[str]]:
+        """Per-dir partition layout of a snapshot: its recorded
+        ``dir_specs``, else every dir under the snapshot's spec."""
+        return dict(
+            snap.get("dir_specs")
+            or {d: list(snap.get("partition_spec") or []) for d in self._dirs(snap)}
+        )
+
     def _list_data_files(self, data_dir: str) -> list[dict]:
         files = []
         for root, _dirs, fns in os.walk(data_dir):
@@ -85,6 +115,157 @@ class IcebergLiteTable:
                     )
         return files
 
+    # -- the one commit path --------------------------------------------------
+
+    def _atomic_write(self, path: str, text: str) -> None:
+        """Write ``path`` whole or not at all: a tmp file, then one
+        rename. A crash leaves at most a stray ``.tmp`` beside it."""
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+
+    def _write_ref(self, name: str, snap_id: int, kind: str) -> dict:
+        ref = {"name": name, "snapshot_id": snap_id, "type": kind}
+        self._atomic_write(self._ref_path(name), json.dumps(ref))
+        return ref
+
+    def _swap(self, snap_id: int, branch: str | None = None) -> None:
+        """The commit point: atomically move the main pointer, or the
+        ref of ``branch``, to ``snap_id``."""
+        if branch is None:
+            self._atomic_write(self._hint_path(), str(snap_id))
+        else:
+            self._write_ref(branch, snap_id, "branch")
+
+    def _publish(self, manifest: dict, branch: str | None = None) -> dict:
+        """Write the complete manifest, then swap the main pointer (or the
+        branch ref) to it. Every commit ends here, and nothing is written
+        after the swap: a crash before it leaves the previous snapshot
+        current (the new manifest, if renamed into place, is an orphan no
+        pointer reaches); a crash after it has nothing left to do."""
+        snap_id = manifest["snapshot_id"]
+        self._atomic_write(
+            os.path.join(self.meta, f"snap-{snap_id}.json"), json.dumps(manifest, indent=1)
+        )
+        self._swap(snap_id, branch)
+        return manifest
+
+    def _write_data(self, df: DataFrame, partition_by: tuple[str, ...]) -> tuple[int, str]:
+        """Allocate the next snapshot id and write ``df`` to
+        ``data/v<id>`` under ``partition_by``; returns the id and the
+        dir relative to the table root."""
+        snap_id = self._next_snapshot_id()
+        rel = os.path.join("data", f"v{snap_id}")
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(os.path.join(self.root, rel))
+        return snap_id, rel
+
+    def _commit_data(
+        self,
+        df: DataFrame,
+        partition_by: tuple[str, ...],
+        summary: dict,
+        base: dict | None = None,
+        branch: str | None = None,
+        max_data_dirs: int = _MAX_DATA_DIRS,
+        allow_schema_evolution: bool = False,
+    ) -> dict:
+        """Write ``df`` as one new data dir and publish a snapshot that
+        reads ``base``'s dirs plus it. With a ``base`` this is the guarded
+        fast-append :meth:`append` (main) and :meth:`commit_to_branch`
+        (``branch``) share; ``base=None`` is a full rewrite whose parent
+        is the current snapshot."""
+        if base is None:
+            parent_id, dirs, dir_specs = self.current_snapshot_id(), [], {}
+        else:
+            self._check_append(base, df, partition_by, max_data_dirs, allow_schema_evolution)
+            parent_id, dirs, dir_specs = base["snapshot_id"], self._dirs(base), self._dir_specs(base)
+        snap_id, new_dir = self._write_data(df, partition_by)
+        dirs = [*dirs, new_dir]
+        # per-dir layout record: earlier dirs keep their pinned spec, the
+        # new dir takes the one it was written under
+        dir_specs[new_dir] = list(partition_by)
+        return self._publish(
+            {
+                "snapshot_id": snap_id,
+                "parent_id": parent_id,
+                "timestamp": _now(),
+                "partition_spec": list(partition_by),
+                "dir_specs": dir_specs,
+                "data_dir": dirs[0],
+                "data_dirs": dirs,
+                "files": [
+                    f for d in dirs for f in self._list_data_files(os.path.join(self.root, d))
+                ],
+                "columns": list(df.columns),
+                "summary": summary,
+            },
+            branch,
+        )
+
+    def _check_append(
+        self,
+        head: dict,
+        df: DataFrame,
+        partition_by: tuple[str, ...],
+        max_data_dirs: int,
+        allow_schema_evolution: bool,
+    ) -> None:
+        """The guards of a fast-append onto ``head``."""
+        if len(self._dirs(head)) >= max_data_dirs:
+            raise RuntimeError(
+                f"snapshot already spans {len(self._dirs(head))} data dirs "
+                f"(max_data_dirs={max_data_dirs}): run compact() before appending more"
+            )
+        # invariant: appends write under the table's CURRENT spec. The
+        # spec itself changes only through an explicit commit —
+        # evolve_partition_spec (metadata-only, old dirs keep their
+        # layout) or overwrite (full rewrite) — so a writer passing a
+        # stale spec is a bug and fails HERE, loudly.
+        if list(partition_by) != list(head.get("partition_spec") or []):
+            raise ValueError(
+                f"append partition_by {list(partition_by)} != table spec "
+                f"{head.get('partition_spec')} (use evolve_partition_spec() "
+                "for a metadata-only spec change, or overwrite() to rewrite)"
+            )
+        # schema evolution (Iceberg add-column): a silent column drift is
+        # almost always a writer bug, so a differing column set REFUSES
+        # unless the caller opts in; with the opt-in, read()'s
+        # allowMissingColumns union null-fills the missing side — old
+        # snapshots keep their own schema (time travel is unaffected)
+        head_cols = head.get("columns")
+        if head_cols is not None and sorted(df.columns) != sorted(head_cols):
+            if not allow_schema_evolution:
+                raise ValueError(
+                    f"append columns {sorted(df.columns)} != table schema "
+                    f"{sorted(head_cols)}; pass allow_schema_evolution=True "
+                    "to commit an add/drop-column evolution"
+                )
+
+    def _commit_metadata(self, base: dict, summary: dict, **changes) -> dict:
+        """Metadata-only commit: a new snapshot on main that reuses
+        ``base``'s data files, with ``changes`` applied to the manifest
+        and ``summary`` merged over ``base``'s. O(1) in table size."""
+        return self._publish(
+            {
+                **base,
+                "snapshot_id": self._next_snapshot_id(),
+                "parent_id": self.current_snapshot_id(),
+                "timestamp": _now(),
+                **changes,
+                "summary": {**(base.get("summary") or {}), **summary},
+            }
+        )
+
+    def _current(self) -> dict:
+        snap = self.snapshot()
+        if snap is None:
+            raise FileNotFoundError(f"no committed snapshot in {self.root}")
+        return snap
+
     # -- write (atomic snapshot commit) ---------------------------------------
 
     def overwrite(
@@ -93,37 +274,16 @@ class IcebergLiteTable:
         """Write a new snapshot: data to ``data/v<n>/``, manifest, then
         atomic pointer swap. A crash before the swap leaves the previous
         snapshot fully intact and readable."""
-        prev = self.current_snapshot_id() or 0
-        snap_id = self._next_snapshot_id()
-        data_dir = os.path.join(self.root, "data", f"v{snap_id}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data_dir)
-        manifest = {
-            "snapshot_id": snap_id,
-            "parent_id": prev or None,
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "partition_spec": list(partition_by),
-            "data_dir": os.path.relpath(data_dir, self.root),
-            "files": self._list_data_files(data_dir),
-            "columns": list(df.columns),
-            "summary": {"row_count": row_count},
-        }
-        with open(os.path.join(self.meta, f"snap-{snap_id}.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
-        tmp = self._hint_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(snap_id))
-        os.replace(tmp, self._hint_path())  # the atomic commit
-        return manifest
+        return self._commit_data(
+            df, partition_by, {"row_count": row_count, "operation": "overwrite"}
+        )
 
     def append(
         self,
         df: DataFrame,
         partition_by: tuple[str, ...] = (),
         row_count: int | None = None,
-        max_data_dirs: int = 64,
+        max_data_dirs: int = _MAX_DATA_DIRS,
         summary_extra: dict | None = None,
         allow_schema_evolution: bool = False,
     ) -> dict:
@@ -139,76 +299,14 @@ class IcebergLiteTable:
         folds all dirs back into one) — a loud stop beats a silent
         slowdown; real Iceberg's equivalent is manifest merging +
         ``rewrite_data_files`` maintenance."""
-        prev = self.snapshot()
-        if prev is not None and len(prev.get("data_dirs") or [prev["data_dir"]]) >= max_data_dirs:
-            raise RuntimeError(
-                f"snapshot already spans {len(prev['data_dirs'])} data dirs "
-                f"(max_data_dirs={max_data_dirs}): run compact() before appending more"
-            )
-        # invariant: appends write under the table's CURRENT spec. The
-        # spec itself changes only through an explicit commit —
-        # evolve_partition_spec (metadata-only, old dirs keep their
-        # layout) or overwrite (full rewrite) — so a writer passing a
-        # stale spec is a bug and fails HERE, loudly.
-        if prev is not None and list(partition_by) != list(prev.get("partition_spec") or []):
-            raise ValueError(
-                f"append partition_by {list(partition_by)} != table spec "
-                f"{prev.get('partition_spec')} (use evolve_partition_spec() "
-                "for a metadata-only spec change, or overwrite() to rewrite)"
-            )
-        # schema evolution (Iceberg add-column): a silent column drift is
-        # almost always a writer bug, so a differing column set REFUSES
-        # unless the caller opts in; with the opt-in, read()'s
-        # allowMissingColumns union null-fills the missing side — old
-        # snapshots keep their own schema (time travel is unaffected)
-        prev_cols = prev.get("columns") if prev else None
-        if prev_cols is not None and sorted(df.columns) != sorted(prev_cols):
-            if not allow_schema_evolution:
-                raise ValueError(
-                    f"append columns {sorted(df.columns)} != table schema "
-                    f"{sorted(prev_cols)}; pass allow_schema_evolution=True "
-                    "to commit an add/drop-column evolution"
-                )
-        prev_dirs = (prev.get("data_dirs") or [prev["data_dir"]]) if prev else []
-        prev_id = prev["snapshot_id"] if prev else 0
-        snap_id = self._next_snapshot_id()
-        data_dir = os.path.join(self.root, "data", f"v{snap_id}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data_dir)
-        new_rel = os.path.relpath(data_dir, self.root)
-        dirs = prev_dirs + [new_rel]
-        # per-dir layout record: pre-evolution dirs keep their pinned
-        # spec, the new dir takes the current one
-        dir_specs = dict(
-            (prev.get("dir_specs") if prev else None)
-            or {d: list((prev or {}).get("partition_spec") or []) for d in prev_dirs}
+        return self._commit_data(
+            df,
+            partition_by,
+            {"row_count": row_count, "operation": "append", **(summary_extra or {})},
+            base=self.snapshot(),
+            max_data_dirs=max_data_dirs,
+            allow_schema_evolution=allow_schema_evolution,
         )
-        dir_specs[new_rel] = list(partition_by)
-        manifest = {
-            "snapshot_id": snap_id,
-            "parent_id": prev_id or None,
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "partition_spec": list(partition_by),
-            "dir_specs": dir_specs,
-            "data_dir": dirs[0],
-            "data_dirs": dirs,
-            "files": [f for d in dirs for f in self._list_data_files(os.path.join(self.root, d))],
-            "columns": list(df.columns),
-            "summary": {
-                "row_count": row_count,
-                "operation": "append",
-                **(summary_extra or {}),
-            },
-        }
-        with open(os.path.join(self.meta, f"snap-{snap_id}.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
-        tmp = self._hint_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(snap_id))
-        os.replace(tmp, self._hint_path())
-        return manifest
 
     def upsert(
         self,
@@ -232,23 +330,18 @@ class IcebergLiteTable:
         trade (cheap reads, expensive writes) — partition_by keys that
         align with the update pattern bound the rewrite in real Iceberg;
         here the rewrite is total, documented."""
-        snap = self.snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot in {self.root}")
+        snap = self._current()
         incoming_keys = df.select(*key_cols).dropDuplicates()
         merged = (
             self.read(spark)
             .join(incoming_keys, key_cols, "left_anti")
             .unionByName(df)
         )
-        m = self.overwrite(
-            merged, partition_by=tuple(snap.get("partition_spec") or ()),
-            row_count=row_count,
+        return self._commit_data(
+            merged,
+            tuple(snap.get("partition_spec") or ()),
+            {"row_count": row_count, "operation": "upsert"},
         )
-        m["summary"]["operation"] = "upsert"
-        with open(os.path.join(self.meta, f"snap-{m['snapshot_id']}.json"), "w") as f:
-            json.dump(m, f, indent=1)
-        return m
 
     def delete_where(self, spark: SparkSession, condition) -> dict:
         """Row-level DELETE, copy-on-write: rows matching ``condition``
@@ -259,17 +352,12 @@ class IcebergLiteTable:
         window by construction, and the reason a GDPR purge is
         ``delete_where`` FOLLOWED BY expiry of every snapshot that
         still references the old files."""
-        snap = self.snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot in {self.root}")
-        kept = self.read(spark).where(~condition)
-        m = self.overwrite(
-            kept, partition_by=tuple(snap.get("partition_spec") or ())
+        snap = self._current()
+        return self._commit_data(
+            self.read(spark).where(~condition),
+            tuple(snap.get("partition_spec") or ()),
+            {"row_count": None, "operation": "delete"},
         )
-        m["summary"]["operation"] = "delete"
-        with open(os.path.join(self.meta, f"snap-{m['snapshot_id']}.json"), "w") as f:
-            json.dump(m, f, indent=1)
-        return m
 
     def compact(self, spark: SparkSession, target_files: int = 1) -> dict:
         """Maintenance: rewrite the current snapshot's data into
@@ -278,18 +366,12 @@ class IcebergLiteTable:
         time travel to the pre-compaction state keeps working; the row
         set is unchanged by construction (read → repartition → write,
         no filters)."""
-        snap = self.snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot in {self.root}")
-        df = self.read(spark).repartition(target_files)
-        m = self.overwrite(
-            df, partition_by=tuple(snap.get("partition_spec") or ()),
-            row_count=(snap.get("summary") or {}).get("row_count"),
+        snap = self._current()
+        return self._commit_data(
+            self.read(spark).repartition(target_files),
+            tuple(snap.get("partition_spec") or ()),
+            {"row_count": (snap.get("summary") or {}).get("row_count"), "operation": "compact"},
         )
-        m["summary"]["operation"] = "compact"
-        with open(os.path.join(self.meta, f"snap-{m['snapshot_id']}.json"), "w") as f:
-            json.dump(m, f, indent=1)
-        return m
 
     def rollback(self, snapshot_id: int) -> dict:
         """Iceberg ``rollback_to_snapshot``: make the table read as it
@@ -303,24 +385,9 @@ class IcebergLiteTable:
         target = self.snapshot(snapshot_id)
         if target is None:
             raise FileNotFoundError(f"snapshot {snapshot_id} does not exist")
-        cur = self.current_snapshot_id() or 0
-        new_id = self._next_snapshot_id()
-        manifest = dict(target)
-        manifest["snapshot_id"] = new_id
-        manifest["parent_id"] = cur or None
-        manifest["timestamp"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        manifest["summary"] = {
-            **(target.get("summary") or {}),
-            "operation": "rollback",
-            "rolled_back_to": snapshot_id,
-        }
-        with open(os.path.join(self.meta, f"snap-{new_id}.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
-        tmp = self._hint_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(new_id))
-        os.replace(tmp, self._hint_path())
-        return manifest
+        return self._commit_metadata(
+            target, {"operation": "rollback", "rolled_back_to": snapshot_id}
+        )
 
     def evolve_partition_spec(self, partition_by: tuple[str, ...]) -> dict:
         """Iceberg partition-spec EVOLUTION: change the table's spec
@@ -345,42 +412,35 @@ class IcebergLiteTable:
         :meth:`compact` rewrites everything under the CURRENT spec
         (Iceberg ``rewrite_data_files``), which is how a table
         eventually converges to one layout."""
-        cur = self.snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot in {self.root}")
+        cur = self._current()
         new_spec = list(partition_by)
         for c in new_spec:
             if c not in (cur.get("columns") or []):
                 raise ValueError(
                     f"partition column {c!r} not in table schema {cur.get('columns')}"
                 )
-        if new_spec == list(cur.get("partition_spec") or []):
+        old_spec = list(cur.get("partition_spec") or [])
+        if new_spec == old_spec:
             raise ValueError(f"table already partitioned by {new_spec}")
-        dirs = cur.get("data_dirs") or [cur["data_dir"]]
-        old_specs = cur.get("dir_specs") or {
-            d: list(cur.get("partition_spec") or []) for d in dirs
-        }
-        new_id = self._next_snapshot_id()
-        manifest = dict(cur)
-        manifest["snapshot_id"] = new_id
-        manifest["parent_id"] = cur["snapshot_id"]
-        manifest["timestamp"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        manifest["partition_spec"] = new_spec
-        manifest["dir_specs"] = old_specs  # existing dirs keep their layout
-        manifest["summary"] = {
-            **(cur.get("summary") or {}),
-            "operation": "evolve_partition_spec",
-            "previous_spec": list(cur.get("partition_spec") or []),
-        }
-        with open(os.path.join(self.meta, f"snap-{new_id}.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
-        tmp = self._hint_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(new_id))
-        os.replace(tmp, self._hint_path())
-        return manifest
+        return self._commit_metadata(
+            cur,
+            {"operation": "evolve_partition_spec", "previous_spec": old_spec},
+            partition_spec=new_spec,
+            dir_specs=self._dir_specs(cur),  # existing dirs keep their layout
+        )
 
-    # -- named refs (tags) ----------------------------------------------------
+    # -- named refs (tags and branches) ----------------------------------------
+
+    def _create_ref(self, kind: str, name: str, snapshot_id: int | None) -> dict:
+        """Point the named ref ``name`` of type ``kind`` at a snapshot
+        (default: the current one). Atomic (tmp + rename), same
+        discipline as the version-hint pointer."""
+        if not name or not all(c.isalnum() or c in "-_." for c in name):
+            raise ValueError(f"invalid {kind} name: {name!r}")
+        snap_id = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
+        if snap_id is None or self.snapshot(snap_id) is None:
+            raise FileNotFoundError(f"snapshot {snap_id} does not exist")
+        return self._write_ref(name, snap_id, kind)
 
     def create_tag(self, name: str, snapshot_id: int | None = None) -> dict:
         """Pin a snapshot under a stable name (Iceberg ``create_tag``) —
@@ -390,18 +450,7 @@ class IcebergLiteTable:
         (tagged snapshots are protected from :meth:`expire_snapshots`).
         Defaults to the current snapshot. Atomic (tmp + rename), same
         discipline as the version-hint pointer."""
-        if not name or not all(c.isalnum() or c in "-_." for c in name):
-            raise ValueError(f"invalid tag name: {name!r}")
-        snap_id = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if snap_id is None or self.snapshot(snap_id) is None:
-            raise FileNotFoundError(f"snapshot {snap_id} does not exist")
-        ref = {"name": name, "snapshot_id": snap_id, "type": "tag"}
-        p = os.path.join(self.meta, f"ref-{name}.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ref, f)
-        os.replace(tmp, p)
-        return ref
+        return self._create_ref("tag", name, snapshot_id)
 
     # -- branches (write-audit-publish) ----------------------------------------
 
@@ -412,21 +461,10 @@ class IcebergLiteTable:
         audit reads the branch head, and :meth:`fast_forward` publishes
         it to main atomically. Branch heads are protected from
         :meth:`expire_snapshots` like any named ref."""
-        if not name or not all(c.isalnum() or c in "-_." for c in name):
-            raise ValueError(f"invalid branch name: {name!r}")
-        snap_id = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if snap_id is None or self.snapshot(snap_id) is None:
-            raise FileNotFoundError(f"snapshot {snap_id} does not exist")
-        ref = {"name": name, "snapshot_id": snap_id, "type": "branch"}
-        p = os.path.join(self.meta, f"ref-{name}.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ref, f)
-        os.replace(tmp, p)
-        return ref
+        return self._create_ref("branch", name, snapshot_id)
 
     def _ref(self, name: str) -> dict:
-        p = os.path.join(self.meta, f"ref-{name}.json")
+        p = self._ref_path(name)
         if not os.path.exists(p):
             raise FileNotFoundError(f"no ref {name!r}")
         with open(p) as f:
@@ -435,49 +473,22 @@ class IcebergLiteTable:
     def commit_to_branch(
         self, name: str, df: DataFrame, partition_by: tuple[str, ...] = ()
     ) -> dict:
-        """Append-shaped commit whose parent is the BRANCH head: data
-        and manifest are written exactly like :meth:`append`, but only
+        """Append-shaped commit whose parent is the BRANCH head: the same
+        guarded fast-append as :meth:`append` with its defaults (data-dir
+        bound, spec and schema guards, per-dir ``dir_specs``), but only
         the branch ref advances — the main pointer (and every main
         reader) is untouched until :meth:`fast_forward`. This is
         Iceberg's WAP staging write."""
         ref = self._ref(name)
         if ref.get("type") != "branch":
             raise ValueError(f"ref {name!r} is a {ref.get('type')}, not a branch")
-        head = self.snapshot(ref["snapshot_id"])
-        if head is not None and list(partition_by) != list(
-            head.get("partition_spec") or []
-        ):
-            raise ValueError(
-                f"branch commit partition_by {list(partition_by)} != spec "
-                f"{head.get('partition_spec')}"
-            )
-        prev_dirs = (head.get("data_dirs") or [head["data_dir"]]) if head else []
-        snap_id = self._next_snapshot_id()
-        data_dir = os.path.join(self.root, "data", f"v{snap_id}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data_dir)
-        dirs = prev_dirs + [os.path.relpath(data_dir, self.root)]
-        manifest = {
-            "snapshot_id": snap_id,
-            "parent_id": ref["snapshot_id"],
-            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "partition_spec": list(partition_by),
-            "data_dir": dirs[0],
-            "data_dirs": dirs,
-            "files": [
-                f
-                for d in dirs
-                for f in self._list_data_files(os.path.join(self.root, d))
-            ],
-            "columns": list(df.columns),
-            "summary": {"operation": "branch-append", "branch": name},
-        }
-        with open(os.path.join(self.meta, f"snap-{snap_id}.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
-        self.create_branch(name, snapshot_id=snap_id)  # advance the ref
-        return manifest
+        return self._commit_data(
+            df,
+            partition_by,
+            {"operation": "branch-append", "branch": name},
+            base=self.snapshot(ref["snapshot_id"]),
+            branch=name,
+        )
 
     def read_branch(self, spark: SparkSession, name: str) -> DataFrame:
         """Read a branch head (the audit step of write-audit-publish)."""
@@ -505,10 +516,7 @@ class IcebergLiteTable:
                 f"{head}: fast-forward would drop main commits (rebase or "
                 "rollback first)"
             )
-        tmp = self._hint_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(head))
-        os.replace(tmp, self._hint_path())
+        self._swap(head)
         return {"published_snapshot_id": head, "previous": cur}
 
     def tags(self) -> dict[str, int]:
@@ -522,7 +530,7 @@ class IcebergLiteTable:
         return out
 
     def drop_tag(self, name: str) -> None:
-        p = os.path.join(self.meta, f"ref-{name}.json")
+        p = self._ref_path(name)
         if not os.path.exists(p):
             raise FileNotFoundError(f"no tag {name!r}")
         os.remove(p)
@@ -556,7 +564,7 @@ class IcebergLiteTable:
         retained_dirs = set()
         for s in snaps:
             if s["snapshot_id"] in keep:
-                retained_dirs.update(s.get("data_dirs") or [s["data_dir"]])
+                retained_dirs.update(self._dirs(s))
         expired = [i for i in ids if i not in keep]
         for i in expired:
             os.remove(os.path.join(self.meta, f"snap-{i}.json"))
@@ -566,8 +574,6 @@ class IcebergLiteTable:
             for d in sorted(os.listdir(data_root)):
                 rel = os.path.join("data", d)
                 if rel not in retained_dirs:
-                    import shutil
-
                     shutil.rmtree(os.path.join(data_root, d))
                     removed_dirs.append(rel)
         return {
@@ -595,10 +601,21 @@ class IcebergLiteTable:
         old = self.snapshot(since_snapshot_id)
         if new is None or old is None:
             raise FileNotFoundError("both snapshots must exist")
-        old_dirs = set(old.get("data_dirs") or [old["data_dir"]])
-        return [
-            d for d in (new.get("data_dirs") or [new["data_dir"]]) if d not in old_dirs
-        ]
+        old_dirs = set(self._dirs(old))
+        return [d for d in self._dirs(new) if d not in old_dirs]
+
+    def _scan(self, spark: SparkSession, dirs: list[str]) -> DataFrame:
+        """Union of per-dir scans. Each data dir is its own hive tree:
+        ``basePath`` keeps its partition columns as columns, so Catalyst
+        prunes partitions inside every dir; allowMissingColumns
+        null-fills the columns a schema-evolved dir lacks (Iceberg
+        add-column reads)."""
+        out = None
+        for d in dirs:
+            data_dir = os.path.join(self.root, d)
+            part = spark.read.option("basePath", data_dir).parquet(data_dir)
+            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
+        return out
 
     def read_added(
         self, spark: SparkSession, since_snapshot_id: int, as_of: int | None = None
@@ -610,30 +627,11 @@ class IcebergLiteTable:
         dirs = self.added_data_dirs(since_snapshot_id, as_of)
         if not dirs:
             return self.read(spark, since_snapshot_id).limit(0)
-        out = None
-        for d in dirs:
-            data_dir = os.path.join(self.root, d)
-            part = spark.read.option("basePath", data_dir).parquet(data_dir)
-            # allowMissingColumns: schema-evolved commits null-fill the
-            # columns the other side lacks (Iceberg add-column reads)
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        return out
+        return self._scan(spark, dirs)
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         snap = self.snapshot(snapshot_id)
         if snap is None:
             raise FileNotFoundError(f"no committed snapshot in {self.root}")
-        # hive-style partition dirs → Catalyst partition pruning on the
-        # partition columns; basePath keeps them as columns. Append
-        # snapshots span several data dirs (one per commit); each dir is
-        # its own hive tree, so read per dir and union — Catalyst still
-        # prunes partitions inside every dir.
-        dirs = snap.get("data_dirs") or [snap["data_dir"]]
-        out = None
-        for d in dirs:
-            data_dir = os.path.join(self.root, d)
-            part = spark.read.option("basePath", data_dir).parquet(data_dir)
-            # allowMissingColumns: schema-evolved commits null-fill the
-            # columns the other side lacks (Iceberg add-column reads)
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        return out
+        # append snapshots span several data dirs (one per commit)
+        return self._scan(spark, self._dirs(snap))

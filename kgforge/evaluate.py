@@ -69,19 +69,31 @@ def _scores(model: str, emb: dict, h, r, t, norm: int, dec: int | None) -> np.nd
     return s if dec is None else np.round(s, dec)
 
 
-def _triple_ids(pdf: pd.DataFrame, n_ent: int, n_rel: int, kind: str = "test") -> list[np.ndarray]:
-    """The ``h``, ``t``, ``r`` columns of ``kind`` triples as int64. An id
-    outside ``[0, |E|)`` (``[0, |R|)`` for ``r``) raises ``ValueError``
-    naming it: NumPy would read ``-1`` as the last row and fail on
-    ``|E|`` with a bare ``IndexError``."""
-    cols = []
-    for c, n, size in (("h", n_ent, "|E|"), ("t", n_ent, "|E|"), ("r", n_rel, "|R|")):
+def _triple_ids(
+    pdf: pd.DataFrame, n_ent: int, n_rel: int, kind: str = "test", cols=("h", "t", "r")
+) -> list[np.ndarray]:
+    """The ``cols`` columns of ``kind`` triples as int64. An id outside
+    ``[0, |E|)`` (``[0, |R|)`` for ``r``) raises ``ValueError`` naming
+    it: NumPy would read ``-1`` as the last row and fail on ``|E|`` with
+    a bare ``IndexError``."""
+    out = []
+    for c in cols:
+        n, size = (n_rel, "|R|") if c == "r" else (n_ent, "|E|")
         ids = pdf[c].to_numpy(np.int64)
         bad = ids[(ids < 0) | (ids >= n)]
         if len(bad):
             raise ValueError(f"{kind} triple {c} id {bad[0]} is out of range: {size} = {n}")
-        cols.append(ids)
-    return cols
+        out.append(ids)
+    return out
+
+
+def _score_tables(emb: dict, models) -> tuple[dict, int, int]:
+    """The components ``models`` score with (``kernels.SCORE_COMPONENTS``:
+    a checkpoint carries every model's), |E| and |R| — the smallest
+    relation-side table, so every relation id in range reads each one."""
+    emb = {k: emb[k] for k in dict.fromkeys(k for m in models for k in kernels.SCORE_COMPONENTS[m])}
+    n_rel = min(len(v) for k, v in emb.items() if not k.startswith("ent"))
+    return emb, emb["ent"].shape[0], n_rel
 
 
 def _index(key: np.ndarray, val: np.ndarray) -> tuple:
@@ -221,11 +233,8 @@ def link_prediction_ranks_multi(
     stay unconstrained — the reference's type-constrained protocol
     (``base/Test.h``, recalled — SURVEY.md §0).
     """
-    read = dict.fromkeys(k for model, _ in models for k in kernels.SCORE_COMPONENTS[model])
-    emb = {k: emb[k] for k in read}
-    n_ent, dim = emb["ent"].shape
-    n_rel = min(len(v) for k, v in emb.items() if not k.startswith("ent"))
-    chunk = {model: _chunk_rows(n_ent, dim, model) for model, _ in models}
+    emb, n_ent, n_rel = _score_tables(emb, [model for model, _ in models])
+    chunk = {model: _chunk_rows(n_ent, emb["ent"].shape[1], model) for model, _ in models}
     b_emb = pin_broadcast(spark, emb)
     known = _near_known(known, test, "r", "stack(2, true, t, false, h) AS (head, fix)")
     domains, ranges = constraints or (None, None)
@@ -329,8 +338,7 @@ def relation_prediction_ranks(
     TransE, L1 or L2; pass ``score_decimals`` (6) with ``norm=2`` —
     the same cross-engine float-ordering story as the entity ranks.
     """
-    emb = {k: emb[k] for k in ("ent", "rel")}
-    (n_ent, _), (n_rel, dim) = emb["ent"].shape, emb["rel"].shape
+    emb, n_ent, n_rel = _score_tables(emb, ["transe"])
     b_emb = pin_broadcast(spark, emb)
     kh, kt, kr = _known_cols(_near_known(known, test, "h", "t"), n_ent, n_rel)
     b_known = pin_broadcast(spark, _index((kh << 32) | kt, kr))
@@ -338,7 +346,7 @@ def relation_prediction_ranks(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         E = b_emb.value
         cands = np.arange(n_rel, dtype=np.int64)[None, :]
-        chunk = _chunk_rows(n_rel, dim, "transe")
+        chunk = _chunk_rows(n_rel, E["rel"].shape[1], "transe")
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -411,62 +419,64 @@ def top_k_completions(
 ) -> DataFrame:
     """A19: best-k completions for ``(h, r)`` (mode='tail') or ``(r, t)``.
 
-    Scores all entities per query inside the UDF and emits only the top-k
-    (partial top-k inside the batch — nothing |E|-sized ever shuffles).
+    Scores the queries in blocks inside the UDF and emits only the top-k
+    (partial top-k inside the batch — nothing |E|-sized ever shuffles):
+    per chunk of queries, one ``kernels.score_batch`` call scores
+    ``[chunk, 1]`` fixed-slot and relation ids against ``[1, |E|]``
+    candidates, the call :func:`link_prediction_ranks_multi` makes, and
+    each row is ranked with a stable argsort (ties keep id order). A
+    query id outside the embedding tables raises ``ValueError``.
 
     ``constraints``: optional ``(domains, ranges)`` maps ``r → entity
     ids`` (``type_constrain.txt`` semantics). Tail completion draws
     candidates from the relation's range, head completion from its
-    domain; relations absent from the map stay unconstrained. The
-    constrained candidate set also SHRINKS the per-query scoring work —
-    at serving time this is the fast path, not just a filter.
+    domain; relations absent from the map stay unconstrained. A
+    constrained row is ranked over ``s[j, cand]``, its candidates'
+    entries of the scored row, in the order the map lists them.
     """
-    n_ent = emb["ent"].shape[0]
+    emb, n_ent, n_rel = _score_tables(emb, [model])
+    chunk = _chunk_rows(n_ent, emb["ent"].shape[1], model)
     b_emb = pin_broadcast(spark, emb)
     b_constr = pin_broadcast(spark, constraints)
-    in_cols = ["h", "r"] if mode == "tail" else ["t", "r"]
+    in_cols = ("h", "r") if mode == "tail" else ("t", "r")
     out_schema = f"{in_cols[0]} long, r long, candidate long, score double, rk long"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         E = b_emb.value
         constr = b_constr.value
-        cand_of = None
-        if constr is not None:
-            cand_of = constr[1] if mode == "tail" else constr[0]
-        all_ents = np.arange(n_ent, dtype=np.int64)
+        cand_of = (constr[1] if mode == "tail" else constr[0]) if constr else None
+        all_ents = np.arange(n_ent, dtype=np.int64)[None, :]
         for pdf in batches:
+            if pdf.empty:
+                continue
+            a_arr, r_arr = _triple_ids(pdf, n_ent, n_rel, "query", in_cols)
             rows = []
-            for a, r in pdf[in_cols].itertuples(index=False):
-                cand = all_ents
-                if cand_of is not None:
-                    c = cand_of.get(int(r))
-                    if c is not None:
-                        cand = np.asarray(c, dtype=np.int64)
-                r_ids = np.full(len(cand), int(r), dtype=np.int64)
-                fixed = np.full(len(cand), int(a), dtype=np.int64)
+            for lo in range(0, len(pdf), chunk):
+                a, r = a_arr[lo : lo + chunk, None], r_arr[lo : lo + chunk, None]
                 s = (
-                    kernels.score_batch(model, E, fixed, r_ids, cand, norm)
+                    kernels.score_batch(model, E, a, r, all_ents, norm)
                     if mode == "tail"
-                    else kernels.score_batch(model, E, cand, r_ids, fixed, norm)
+                    else kernels.score_batch(model, E, all_ents, r, a, norm)
                 )
-                order = np.argsort(s, kind="stable")[:k]
-                top = cand[order]
-                s = s[order]
-                rows.append(
-                    pd.DataFrame(
-                        {
-                            in_cols[0]: int(a),
-                            "r": int(r),
-                            "candidate": top.astype(np.int64),
-                            "score": s.astype(np.float64),
-                            "rk": np.arange(1, len(top) + 1, dtype=np.int64),
-                        }
+                for j, i in enumerate(range(lo, lo + len(a))):
+                    c = None if cand_of is None else cand_of.get(int(r_arr[i]))
+                    cand = all_ents[0] if c is None else np.asarray(c, dtype=np.int64)
+                    si = s[j] if c is None else s[j, cand]
+                    order = np.argsort(si, kind="stable")[:k]
+                    rows.append(
+                        pd.DataFrame(
+                            {
+                                in_cols[0]: a_arr[i],
+                                "r": r_arr[i],
+                                "candidate": cand[order],
+                                "score": si[order],
+                                "rk": np.arange(1, len(order) + 1, dtype=np.int64),
+                            }
+                        )
                     )
-                )
-            if rows:
-                yield pd.concat(rows, ignore_index=True)
+            yield pd.concat(rows, ignore_index=True)
 
-    return queries.select(*in_cols).dropDuplicates(in_cols).mapInPandas(fn, out_schema)
+    return queries.select(*in_cols).dropDuplicates(list(in_cols)).mapInPandas(fn, out_schema)
 
 
 def score_triples(
@@ -483,8 +493,10 @@ def score_triples(
     shared scoring primitive for classification/calibration paths.
     ``decimals`` rounds with :func:`_scores` — the rule every rank path
     applies to its candidate scores, so rank decompositions built on
-    these scores use one consistent rounding.
+    these scores use one consistent rounding. An id outside the
+    embedding tables raises ``ValueError`` naming it.
     """
+    emb, n_ent, n_rel = _score_tables(emb, [model])
     b_emb = pin_broadcast(spark, emb)
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in triples.schema.fields
@@ -494,14 +506,9 @@ def score_triples(
         E = b_emb.value
         for pdf in batches:
             if len(pdf):
+                h, t, r = _triple_ids(pdf, n_ent, n_rel, "scored")
                 pdf = pdf.copy()
-                pdf["score"] = _scores(
-                    model, E,
-                    pdf["h"].to_numpy(np.int64),
-                    pdf["r"].to_numpy(np.int64),
-                    pdf["t"].to_numpy(np.int64),
-                    norm, decimals,
-                ).astype("float64")
+                pdf["score"] = _scores(model, E, h, r, t, norm, decimals).astype("float64")
                 yield pdf
 
     return triples.mapInPandas(fn, schema)

@@ -1,11 +1,13 @@
 """Iceberg-lite catalog: atomic snapshot commit, time travel, pruning."""
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from kgforge import catalog
 from kgforge.catalog import IcebergLiteTable
 
 
@@ -360,3 +362,181 @@ def test_partition_spec_evolution(spark, tmp_path):
         t.evolve_partition_spec(("nope",))
     with pytest.raises(ValueError, match="already partitioned"):
         t.evolve_partition_spec(("grp",))
+
+
+def test_branch_commits_keep_append_guards(spark, tmp_path):
+    """A branch commit is append's guarded fast-append: column drift and
+    spec drift refuse as they do on main, and the per-dir layout record
+    survives the branch, so a dir written before a spec evolution keeps
+    its pinned spec through commit_to_branch, fast_forward and a later
+    main append."""
+    t = IcebergLiteTable(str(tmp_path / "tbl"))
+
+    def df(xs, **extra):
+        cols = {"part": [x % 2 for x in xs], "grp": [x % 3 for x in xs], "x": xs}
+        return spark.createDataFrame(pd.DataFrame({**cols, **extra}))
+
+    t.append(df([1, 2, 3]), partition_by=("part",))
+    t.create_branch("b")
+    with pytest.raises(ValueError, match="allow_schema_evolution"):
+        t.commit_to_branch("b", df([4], extra=[0]), partition_by=("part",))
+    with pytest.raises(ValueError, match="partition_by"):
+        t.commit_to_branch("b", df([4]))
+    assert t.snapshots()[-1]["snapshot_id"] == 1  # refused before any write
+
+    t.evolve_partition_spec(("grp",))
+    t.create_branch("b")  # re-point at the evolved head
+    staged = t.commit_to_branch("b", df([4, 5]), partition_by=("grp",))
+    assert staged["dir_specs"] == {"data/v1": ["part"], "data/v3": ["grp"]}
+    t.fast_forward("b")
+    m = t.append(df([6]), partition_by=("grp",))
+    assert m["dir_specs"] == {
+        "data/v1": ["part"], "data/v3": ["grp"], "data/v4": ["grp"],
+    }
+    got = t.read(spark).select("part", "grp", "x").toPandas().sort_values("x")
+    assert got["x"].tolist() == [1, 2, 3, 4, 5, 6]
+    assert got["part"].astype(int).tolist() == [1, 0, 1, 0, 1, 0]
+    assert got["grp"].astype(int).tolist() == [1, 2, 0, 1, 2, 0]
+
+
+class _Crash(Exception):
+    """A simulated process death at one metadata write."""
+
+
+def _crash_at(mp, meta, k):
+    """Make the ``k``-th metadata write under ``meta`` die (``k = 0``:
+    none does). A metadata write is an ``open(..., "w")`` — which dies
+    after truncating its file, as a writer killed inside ``json.dump``
+    leaves it — or an ``os.replace`` onto a path there, which dies
+    before the rename. Returns the running count of metadata writes."""
+    seen = [0]
+    real_open, real_replace = open, os.replace
+
+    def hit(path):
+        if not os.path.abspath(path).startswith(meta + os.sep):
+            return False
+        seen[0] += 1
+        return seen[0] == k
+
+    def crash_open(path, mode="r", *args, **kwargs):
+        if "w" in mode and hit(path):
+            real_open(path, mode, *args, **kwargs).close()
+            raise _Crash(path)
+        return real_open(path, mode, *args, **kwargs)
+
+    def crash_replace(src, dst):
+        if hit(dst):
+            raise _Crash(dst)
+        real_replace(src, dst)
+
+    mp.setattr(catalog, "open", crash_open, raising=False)
+    mp.setattr(catalog.os, "replace", crash_replace)
+    return seen
+
+
+# op name -> (set-up, the commit under test, the operation it records);
+# every table is partitioned by "part" and one branch "b" may exist
+CRASH_OPS = {
+    "overwrite": (
+        lambda s, t: t.overwrite(_df(s, [1, 2, 3]), partition_by=("part",)),
+        lambda s, t: t.overwrite(_df(s, [10, 20]), partition_by=("part",)),
+        "overwrite",
+    ),
+    "append": (
+        lambda s, t: t.append(_df(s, [1, 2, 3]), partition_by=("part",)),
+        lambda s, t: t.append(_df(s, [4, 5]), partition_by=("part",)),
+        "append",
+    ),
+    "upsert": (
+        lambda s, t: t.append(_df(s, [1, 2, 3]), partition_by=("part",)),
+        lambda s, t: t.upsert(s, _df(s, [3, 7]), ["x"]),
+        "upsert",
+    ),
+    "delete_where": (
+        lambda s, t: t.append(_df(s, [1, 2, 3]), partition_by=("part",)),
+        lambda s, t: t.delete_where(s, F.col("x") == 2),
+        "delete",
+    ),
+    "compact": (
+        lambda s, t: [t.append(_df(s, v), partition_by=("part",)) for v in ([1, 2], [3])],
+        lambda s, t: t.compact(s),
+        "compact",
+    ),
+    "rollback": (
+        lambda s, t: [t.append(_df(s, v), partition_by=("part",)) for v in ([1, 2], [3])],
+        lambda s, t: t.rollback(1),
+        "rollback",
+    ),
+    "evolve_partition_spec": (
+        lambda s, t: t.append(_df(s, [1, 2, 3]), partition_by=("part",)),
+        lambda s, t: t.evolve_partition_spec(("x",)),
+        "evolve_partition_spec",
+    ),
+    "commit_to_branch": (
+        lambda s, t: (t.append(_df(s, [1, 2]), partition_by=("part",)), t.create_branch("b")),
+        lambda s, t: t.commit_to_branch("b", _df(s, [3]), partition_by=("part",)),
+        "branch-append",
+    ),
+    "fast_forward": (
+        lambda s, t: (
+            t.append(_df(s, [1, 2]), partition_by=("part",)),
+            t.create_branch("b"),
+            t.commit_to_branch("b", _df(s, [3]), partition_by=("part",)),
+        ),
+        lambda s, t: t.fast_forward("b"),
+        "branch-append",
+    ),
+}
+
+
+def _state(spark, t):
+    """Main and branch ``b`` as ``(snapshot id, sorted rows)`` each."""
+
+    def rows(df):
+        return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
+
+    refs = t.tags()
+    return {
+        "main": (t.current_snapshot_id(), rows(t.read(spark))),
+        "b": (refs["b"], rows(t.read_branch(spark, "b"))) if "b" in refs else None,
+    }
+
+
+@pytest.mark.parametrize("op", list(CRASH_OPS))
+def test_every_commit_survives_a_crash_at_each_metadata_write(spark, tmp_path, op):
+    """Kill the commit at its k-th metadata write, for every k the call
+    makes. Each time, every manifest and ref on disk must parse, main
+    and branch ``b`` must each read exactly as before the call or as
+    after it, and a snapshot a pointer moved to must carry the call's
+    ``operation``: a commit publishes one complete manifest, once, and
+    writes nothing after its pointer swap."""
+    setup, commit, operation = CRASH_OPS[op]
+    template = str(tmp_path / "template")
+    setup(spark, IcebergLiteTable(template))
+
+    def fresh(name):
+        shutil.copytree(template, str(tmp_path / name))
+        return IcebergLiteTable(str(tmp_path / name))
+
+    t = fresh("clean")
+    before = _state(spark, t)
+    with pytest.MonkeyPatch.context() as mp:
+        n_writes = _crash_at(mp, t.meta, 0)
+        commit(spark, t)
+    after = _state(spark, t)
+    assert after != before and n_writes[0] >= 2
+
+    for k in range(1, n_writes[0] + 1):
+        t = fresh(f"crash{k}")
+        with pytest.MonkeyPatch.context() as mp:
+            _crash_at(mp, t.meta, k)
+            with pytest.raises(_Crash):
+                commit(spark, t)
+        t.snapshot()
+        t.snapshots()
+        got = _state(spark, t)
+        for ref in ("main", "b"):
+            assert got[ref] in (before[ref], after[ref]), (k, ref)
+            if got[ref] is not None and got[ref] != before[ref]:
+                snap = t.snapshot(got[ref][0])
+                assert snap["summary"]["operation"] == operation, (k, ref)

@@ -325,6 +325,61 @@ def test_topk_matches_bruteforce(spark):
         assert list(grp.sort_values("rk")["candidate"]) == list(want)
 
 
+
+@pytest.mark.parametrize("mode", ["tail", "head"])
+def test_topk_blocks_equal_flat_per_query_scoring(spark, mode):
+    """|E| = 60k at d = 8 holds the scoring block to 4 queries, so the 15
+    queries of one Arrow batch score as blocks of 4, 4, 4 and 3. Each
+    query's candidates and scores must equal a flat per-query
+    ``score_batch`` over its candidate set, bit for bit, with and
+    without type constraints; the constrained relations list their
+    candidates unsorted, and relations 3..4 stay unconstrained."""
+    n_ent, n_rel, k = 60_000, 5, 7
+    emb = gen_embeddings(n_ent=n_ent, n_rel=n_rel, dim=8)
+    rng = np.random.default_rng(5)
+    fix = "h" if mode == "tail" else "t"
+    q = pd.DataFrame({fix: rng.permutation(n_ent)[:15], "r": rng.integers(0, n_rel, 15)})
+    allowed = {r: rng.permutation(n_ent)[:500] for r in range(3)}
+    for constraints in (None, (allowed, allowed)):
+        got = top_k_completions(
+            spark, spark.createDataFrame(q).coalesce(1), emb, k=k, mode=mode,
+            constraints=constraints,
+        ).toPandas()
+        assert len(got) == 15 * k
+        for a, r in q.itertuples(index=False):
+            cand = np.arange(n_ent)
+            if constraints is not None and r in allowed:
+                cand = allowed[r]
+            fixed, rel = np.full(len(cand), a), np.full(len(cand), r)
+            s = (
+                kernels.score_batch("transe", emb, fixed, rel, cand)
+                if mode == "tail"
+                else kernels.score_batch("transe", emb, cand, rel, fixed)
+            )
+            order = np.argsort(s, kind="stable")[:k]
+            row = got[(got[fix] == a) & (got["r"] == r)].sort_values("rk")
+            assert row["candidate"].tolist() == cand[order].tolist()
+            assert row["score"].to_numpy().tobytes() == s[order].tobytes()
+
+
+@pytest.mark.parametrize("slot,bad", [("h", -1), ("t", N_ENT), ("r", -1), ("r", N_REL)])
+def test_out_of_range_query_and_scored_ids_raise(spark, slot, bad):
+    """Top-k queries and scored triples range-check their ids as the rank
+    paths do: NumPy would read -1 as the last entity (relation) and
+    score it silently."""
+    from kgforge.evaluate import score_triples
+
+    test = SPLIT["test2id"].head(3).copy()
+    test.loc[1, slot] = bad
+    size = f"|R| = {N_REL}" if slot == "r" else f"|E| = {N_ENT}"
+    tdf = spark.createDataFrame(test)
+    with pytest.raises(Exception, match=rf"ValueError: scored triple {slot} id {bad} .*{re.escape(size)}"):
+        score_triples(spark, tdf, EMB).collect()
+    for mode, fix in (("tail", "h"), ("head", "t")):
+        if slot in (fix, "r"):
+            with pytest.raises(Exception, match=rf"ValueError: query triple {slot} id {bad} .*{re.escape(size)}"):
+                top_k_completions(spark, tdf, EMB, k=3, mode=mode).collect()
+
 KERNEL_CASES = [
     ("transe", 1, None),
     ("transe", 2, 6),
