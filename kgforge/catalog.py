@@ -80,6 +80,23 @@ class IcebergLiteTable:
         # numeric order: filename sort would put snap-10 before snap-2
         return sorted(out, key=lambda s: s["snapshot_id"])
 
+    def ancestors(self, snap_id: int | None = None) -> list[dict]:
+        """The manifests along the ``parent_id`` chain from ``snap_id``
+        (default: main's current snapshot) back to the first, newest
+        first — what that snapshot's history holds, unlike
+        :meth:`snapshots`, which also lists orphans (a manifest whose
+        pointer swap never happened) and other branches' commits. The
+        walk stops at a manifest that :meth:`expire_snapshots` removed."""
+        node = snap_id if snap_id is not None else self.current_snapshot_id()
+        out = []
+        while node is not None:
+            try:
+                out.append(self.snapshot(node))
+            except FileNotFoundError:
+                break
+            node = out[-1].get("parent_id")
+        return out
+
     def _next_snapshot_id(self) -> int:
         """Next free snapshot id: max over ALL manifests, not the current
         pointer — branch commits create snapshots the main pointer never
@@ -501,16 +518,9 @@ class IcebergLiteTable:
         branch head (the fast-forward invariant — anything else would
         silently discard main commits; Iceberg's
         ``fast_forward('main', branch)`` has the same precondition)."""
-        ref = self._ref(name)
-        head = ref["snapshot_id"]
+        head = self._ref(name)["snapshot_id"]
         cur = self.current_snapshot_id()
-        node: int | None = head
-        ancestors = set()
-        while node is not None:
-            ancestors.add(node)
-            snap = self.snapshot(node)
-            node = snap.get("parent_id") if snap else None
-        if cur is not None and cur not in ancestors:
+        if cur is not None and cur not in {s["snapshot_id"] for s in self.ancestors(head)}:
             raise ValueError(
                 f"main snapshot {cur} is not an ancestor of branch head "
                 f"{head}: fast-forward would drop main commits (rebase or "

@@ -27,38 +27,52 @@ from pyspark.sql import functions as F
 
 # -- driver-side (small dictionaries / fixtures) ----------------------------
 
+def _check_count(n: int, rows: int, path: str) -> None:
+    if rows != n:
+        raise ValueError(f"count header {n} != rows {rows} in {path}")
+
+
 def write_dict_txt(df: pd.DataFrame, path: str) -> None:
-    """``(name, id)`` → OpenKE dictionary file (count header + TSV)."""
+    """``(name, id)`` → OpenKE dictionary file (count header + TSV).
+    A name holding a tab or a line break (``\n``, or ``\r``, which the
+    reader's universal newlines also split on) cannot be read back, so
+    it raises ``ValueError``."""
     df = df[["name", "id"]].sort_values("id")
-    with open(path, "w") as f:
+    bad = df["name"].astype(str).str.contains(r"[\t\n\r]")
+    if bad.any():
+        raise ValueError(
+            f"{int(bad.sum())} names hold a tab or line break, e.g. "
+            f"{df['name'][bad].iloc[0]!r}: not representable in {path}"
+        )
+    with open(path, "w", encoding="utf-8") as f:
         f.write(f"{len(df)}\n")
         for name, i in df.itertuples(index=False):
             f.write(f"{name}\t{i}\n")
 
 
 def read_dict_txt(path: str) -> pd.DataFrame:
-    with open(path) as f:
+    with open(path, encoding="utf-8") as f:
         n = int(f.readline())
         rows = [line.rstrip("\n").split("\t") for line in f]
     df = pd.DataFrame(rows, columns=["name", "id"])
     df["id"] = df["id"].astype("int64")
-    assert len(df) == n, f"count header {n} != rows {len(df)} in {path}"
+    _check_count(n, len(df), path)
     return df
 
 
 def write_triples_txt(df: pd.DataFrame, path: str) -> None:
     """``(h, t, r)`` int triples → OpenKE split file (h t r, count header)."""
-    with open(path, "w") as f:
+    with open(path, "w", encoding="utf-8") as f:
         f.write(f"{len(df)}\n")
         for h, t, r in df[["h", "t", "r"]].itertuples(index=False):
             f.write(f"{h} {t} {r}\n")
 
 
 def read_triples_txt(path: str) -> pd.DataFrame:
-    with open(path) as f:
+    with open(path, encoding="utf-8") as f:
         n = int(f.readline())
         df = pd.read_csv(f, sep=" ", names=["h", "t", "r"], dtype="int64")
-    assert len(df) == n, f"count header {n} != rows {len(df)} in {path}"
+    _check_count(n, len(df), path)
     return df
 
 

@@ -251,10 +251,12 @@ def stream_to_catalog(
 
     Exactly-once: ``foreachBatch`` is at-least-once on retry, so each
     commit records ``(source_id, batch_id)`` in the snapshot summary
-    and a batch whose key an existing snapshot already carries is
-    SKIPPED — the idempotent-commit pattern real Iceberg sinks use. The
-    check scans manifest summaries (metadata-sized, driver-side), never
-    data.
+    and a batch whose key a snapshot in main's history already carries
+    is SKIPPED — the idempotent-commit pattern real Iceberg sinks use.
+    Only main's ``parent_id`` chain counts: a batch whose manifest was
+    written but whose pointer swap died is an orphan, and its retry
+    commits it. The check walks manifest summaries (metadata-sized,
+    driver-side), never data.
 
     At scale the file source becomes Kafka and availableNow becomes a
     continuous trigger; the commit protocol is unchanged. Returns the
@@ -263,9 +265,7 @@ def stream_to_catalog(
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         key = f"{source_id}:{batch_id}"
-        done = {
-            s.get("summary", {}).get("stream_batch") for s in table.snapshots()
-        }
+        done = {s.get("summary", {}).get("stream_batch") for s in table.ancestors()}
         if key in done:
             return
         table.append(

@@ -15,6 +15,24 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def jobs_in_group(spark):
+    """``jobs_in_group(group, fn)`` runs ``fn`` under its own job group and
+    returns the number of Spark jobs it started and ``fn``'s result."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def unit_fixture_dir():
     from kgforge.fixtures import ensure_fixtures
 

@@ -109,6 +109,8 @@ def test_expire_snapshots_after_compaction_reclaims_dirs(spark, tmp_path):
     assert t.read(spark).count() == 10  # 8 + 2 post-compaction rows
     with pytest.raises(FileNotFoundError):
         t.read(spark, 3)
+    # main's lineage ends where expiry removed the manifests
+    assert [s["snapshot_id"] for s in t.ancestors()] == [11, 10, 9]
 
 
 def test_expire_keeps_dirs_still_referenced_by_retained(spark, tmp_path):
@@ -540,3 +542,34 @@ def test_every_commit_survives_a_crash_at_each_metadata_write(spark, tmp_path, o
             if got[ref] is not None and got[ref] != before[ref]:
                 snap = t.snapshot(got[ref][0])
                 assert snap["summary"]["operation"] == operation, (k, ref)
+
+
+def test_stream_batch_orphaned_at_its_pointer_write_is_retried(spark, tmp_path):
+    """A stream batch whose append died at its pointer write left a
+    manifest that main never reached. The stream's re-run retries that
+    batch, so every batch is published on main exactly once."""
+    from pyspark.errors import StreamingQueryException
+
+    from kgforge.streaming import stream_to_catalog
+
+    src = str(tmp_path / "in")
+    spark.createDataFrame(pd.DataFrame({"x": range(6)})).repartition(2).write.parquet(src)
+
+    def run(t):
+        stream = spark.readStream.schema("x bigint").option("maxFilesPerTrigger", 1).parquet(src)
+        stream_to_catalog(stream, t, str(tmp_path / "ckpt"), source_id="s")
+
+    t = IcebergLiteTable(str(tmp_path / "tbl"))
+    with pytest.MonkeyPatch.context() as mp:
+        # batch 0's commit: the manifest's tmp write and rename, then the
+        # pointer's tmp write and rename, which dies
+        seen = _crash_at(mp, t.meta, 4)
+        with pytest.raises(StreamingQueryException, match="_Crash"):
+            run(t)
+    assert seen[0] == 4 and t.current_snapshot_id() is None
+    assert [s["summary"]["stream_batch"] for s in t.snapshots()] == ["s:0"]
+
+    run(t)
+    keys = sorted(s["summary"]["stream_batch"] for s in t.ancestors())
+    assert keys == ["s:0", "s:1"]
+    assert sorted(r.x for r in t.read(spark).collect()) == list(range(6))

@@ -2,11 +2,24 @@
 lineage (B10), manifest resume (B11)."""
 
 import os
+import tempfile
 
+import numpy as np
 import pandas as pd
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from kgforge.fixtures import gen_openke_split
-from kgforge.io_openke import read_split, read_triples_spark, write_split
+from kgforge.io_openke import (
+    read_dict_txt,
+    read_split,
+    read_triples_spark,
+    read_triples_txt,
+    write_dict_txt,
+    write_split,
+    write_triples_txt,
+)
 from kgforge.manifest import Manifest, fingerprint_paths
 from kgforge.stages.materialize import dense_ids, salted_write, to_id_triples
 
@@ -23,6 +36,48 @@ def test_openke_roundtrip(tmp_path):
     assert lines[0] == "200"
     h, t, r = map(int, lines[1].split(" "))
     assert (h, t, r) == tuple(split["train2id"].iloc[0][["h", "t", "r"]])
+
+
+#: a name the dictionary format can hold: no tab, no line break
+_NAME = st.text(st.characters(exclude_characters="\t\n\r"))
+_INT64 = st.integers(-(2**63), 2**63 - 1)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    names=st.lists(_NAME, max_size=20),
+    triples=st.lists(st.tuples(_INT64, _INT64, _INT64), max_size=20),
+)
+def test_openke_txt_roundtrip_property(names, triples):
+    """Any text names and any int64 ``(h, t, r)`` rows read back exactly."""
+    ents = pd.DataFrame({"name": pd.Series(names, dtype=object), "id": np.arange(len(names))})
+    tri = pd.DataFrame(triples, columns=["h", "t", "r"], dtype="int64")
+    with tempfile.TemporaryDirectory() as d:
+        write_dict_txt(ents, os.path.join(d, "entity2id.txt"))
+        write_triples_txt(tri, os.path.join(d, "train2id.txt"))
+        pd.testing.assert_frame_equal(read_dict_txt(os.path.join(d, "entity2id.txt")), ents)
+        pd.testing.assert_frame_equal(read_triples_txt(os.path.join(d, "train2id.txt")), tri)
+
+
+@settings(max_examples=100, deadline=None)
+@given(head=_NAME, sep=st.sampled_from("\t\n\r"), tail=_NAME)
+def test_openke_dict_name_with_tab_or_line_break_raises(head, sep, tail):
+    names = pd.DataFrame({"name": ["ok", head + sep + tail], "id": [0, 1]})
+    with tempfile.TemporaryDirectory() as d:
+        with pytest.raises(ValueError, match="tab or line break"):
+            write_dict_txt(names, os.path.join(d, "e.txt"))
+        assert not os.path.exists(os.path.join(d, "e.txt"))
+
+
+def test_openke_count_header_mismatch_raises(tmp_path):
+    """The count header is checked with ``ValueError``, which ``-O`` keeps."""
+    d, t = tmp_path / "e.txt", tmp_path / "t.txt"
+    d.write_text("3\na\t0\nb\t1\n", encoding="utf-8")
+    t.write_text("1\n0 1 2\n3 4 5\n", encoding="utf-8")
+    with pytest.raises(ValueError, match="count header 3 != rows 2"):
+        read_dict_txt(str(d))
+    with pytest.raises(ValueError, match="count header 1 != rows 2"):
+        read_triples_txt(str(t))
 
 
 def test_spark_triple_reader(spark, tmp_path):

@@ -187,18 +187,6 @@ STAGE_JOB_BUDGET = {
 }
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn`` under its own job group and count the jobs it started."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
 def _unit_pipeline(spark, fdir, work, gazetteer_path=None, resume=False):
     return Pipeline(
         spark,
@@ -217,7 +205,7 @@ def _rows(path):
 
 
 @pytest.fixture(scope="module")
-def unit_build(spark, tmp_path_factory):
+def unit_build(spark, jobs_in_group, tmp_path_factory):
     """A unit-fixture build after a warm-up build, each stage run under its
     own job group: ``(work_dir, fixture_dir, jobs per stage)``."""
     fdir = ensure_fixtures("unit")
@@ -230,7 +218,7 @@ def unit_build(spark, tmp_path_factory):
     work = str(tmp_path_factory.mktemp("unit_build"))
     pipe = pipeline(work)
     jobs = {
-        s: _jobs_in_group(spark, f"stage_budget_{s}", lambda s=s: pipe.run([s]))[0]
+        s: jobs_in_group(f"stage_budget_{s}", lambda s=s: pipe.run([s]))[0]
         for s in stages
     }
     return work, fdir, jobs
@@ -245,7 +233,7 @@ def test_pipeline_stage_job_budget(unit_build):
     assert jobs == STAGE_JOB_BUDGET, jobs
 
 
-def test_read_parquet_footer_schema(spark, unit_build, tmp_path):
+def test_read_parquet_footer_schema(spark, jobs_in_group, unit_build, tmp_path):
     """session.read_parquet returns what schema inference returns — schema,
     hive partition columns and rows — and schedules no job for a
     Spark-written output or a pandas-written input; a column type whose
@@ -255,7 +243,7 @@ def test_read_parquet_footer_schema(spark, unit_build, tmp_path):
     work, fdir, _ = unit_build
 
     def same_as_inferred(path):
-        n, df = _jobs_in_group(spark, f"read_parquet:{path}", lambda: read_parquet(spark, path))
+        n, df = jobs_in_group(f"read_parquet:{path}", lambda: read_parquet(spark, path))
         want = spark.read.parquet(path)
         assert df.schema == want.schema, path
         assert sorted(map(repr, df.collect())) == sorted(map(repr, want.collect())), path

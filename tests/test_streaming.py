@@ -2,6 +2,7 @@
 watermarked windowed counts."""
 
 import os
+import time
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -19,6 +20,20 @@ def _stage_files(tmp_path, n_convs=25, parts=3):
     for i in range(parts):
         t.iloc[i * step:(i + 1) * step].to_parquet(d / f"part-{i}.parquet", index=False)
     return str(d), t
+
+
+def _write_arrivals(src, *frames):
+    """Write ``frames`` as ``part-<i>.parquet`` files under ``src``, each
+    file one micro-batch under ``maxFilesPerTrigger=1``. The file source
+    takes files in modification-time order, with millisecond resolution,
+    and two small files written back to back often share a millisecond,
+    so their mtimes are set one second apart, in arrival order."""
+    os.makedirs(src)
+    now = time.time()
+    for i, pdf in enumerate(frames):
+        path = os.path.join(src, f"part-{i}.parquet")
+        pdf.assign(ts=pdf["ts"].astype("datetime64[us]")).to_parquet(path, index=False)
+        os.utime(path, (now + i, now + i))
 
 
 def test_streaming_extraction_matches_batch(spark, tmp_path):
@@ -146,11 +161,7 @@ def test_stream_dedup_across_microbatches(spark, tmp_path):
         }
     )
     src = str(tmp_path / "docs")
-    os.makedirs(src)
-    for name, pdf in (("part-0.parquet", f1), ("part-1.parquet", f2)):
-        pdf.assign(ts=pdf["ts"].astype("datetime64[us]")).to_parquet(
-            os.path.join(src, name), index=False
-        )
+    _write_arrivals(src, f1, f2)
 
     schema = spark.read.parquet(src).schema
     st = (
@@ -192,11 +203,7 @@ def test_stateful_running_counts_across_microbatches(spark, tmp_path):
     f1 = pd.DataFrame({"user_id": [1, 1, 2], "ts": [base] * 3})
     f2 = pd.DataFrame({"user_id": [1, 2, 3], "ts": [base + pd.Timedelta(minutes=1)] * 3})
     src = str(tmp_path / "ev")
-    os.makedirs(src)
-    for name, pdf in (("part-0.parquet", f1), ("part-1.parquet", f2)):
-        pdf.assign(ts=pdf["ts"].astype("datetime64[us]")).to_parquet(
-            os.path.join(src, name), index=False
-        )
+    _write_arrivals(src, f1, f2)
     schema = spark.read.parquet(src).schema
     st = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
     out = streaming.stateful_running_counts(st, key="user_id")
@@ -296,7 +303,8 @@ def test_stream_stream_join_equals_batch(spark, tmp_path):
 def test_stream_to_catalog_commits_batches_idempotently(spark, tmp_path):
     """Each micro-batch lands as its own fast-append snapshot keyed by
     (source_id, batch_id); a replayed batch is skipped (exactly-once);
-    the final read equals the batch input regardless of batching."""
+    the final read equals the batch input regardless of batching. The
+    retry of a batch whose commit died is in test_catalog.py."""
     import pandas as pd
 
     from kgforge.catalog import IcebergLiteTable
@@ -318,26 +326,14 @@ def test_stream_to_catalog_commits_batches_idempotently(spark, tmp_path):
     assert len(keys) == len(set(keys))  # one commit per batch id
     got = {(r["k"], r["v"]) for r in t.read(spark).collect()}
     assert got == set(pdf.itertuples(index=False, name=None))
-    # replaying an already-committed batch id is a no-op
+    # a replay of the same batch ids (a fresh checkpoint numbers the
+    # batches from 0 again) commits nothing; another source_id commits
     n_before = len(t.snapshots())
-    replay = spark.createDataFrame(pdf.head(5))
-    done = {s["summary"]["stream_batch"] for s in t.snapshots()}
-    assert f"s1:0" in done
-    from kgforge import streaming as _s
-
-    # simulate the foreachBatch retry path directly
-    def commit(batch_df, batch_id):
-        key = f"s1:{batch_id}"
-        if key in {s["summary"].get("stream_batch") for s in t.snapshots()}:
-            return
-        t.append(batch_df, summary_extra={"stream_batch": key})
-
-    commit(replay, 0)
+    stream_to_catalog(st, t, str(tmp_path / "ckpt_replay"), source_id="s1")
     assert len(t.snapshots()) == n_before
-    # a NEW source_id's batch 0 does commit
-    commit2_key_count = len(t.snapshots())
-    t.append(replay, summary_extra={"stream_batch": "s2:0"})
-    assert len(t.snapshots()) == commit2_key_count + 1
+    stream_to_catalog(st, t, str(tmp_path / "ckpt_s2"), source_id="s2")
+    assert len(t.snapshots()) == 2 * n_before
+    assert t.read(spark).count() == 2 * len(pdf)
     # time travel to the first streaming commit still reads its rows only
     first = t.snapshots()[0]
     early = t.read(spark, snapshot_id=first["snapshot_id"]).count()
