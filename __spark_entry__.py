@@ -123,7 +123,7 @@ def _mini_pipeline(spark: SparkSession) -> dict:
 _A20_CKPT: dict[str, str] = {}
 
 
-def _a20_ckpt_dir(spark: SparkSession) -> str:
+def _a20_ckpt_dir() -> str:
     """Seeded A20 embedding checkpoint, written once per process and
     reused by every Parquet-ingested eval query (fixture setup isn't the
     operator under measurement)."""
@@ -134,7 +134,7 @@ def _a20_ckpt_dir(spark: SparkSession) -> str:
 
         _split, emb, _known = _openke_emb()
         d = tempfile.mkdtemp(prefix="kgforge_a20_")
-        write_embeddings_parquet(spark, emb, d)
+        write_embeddings_parquet(emb, d)
         _A20_CKPT["dir"] = d
     return _A20_CKPT["dir"]
 
@@ -414,7 +414,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             margin=1.0, seed=11, valid_triples=split["valid2id"], eval_every=10,
         )
         d = tempfile.mkdtemp(prefix="kgforge_a14_")
-        write_embeddings_parquet(spark, emb, d)
+        write_embeddings_parquet(emb, d)
         back = read_embeddings_parquet(d)
         known = pd.concat([split["train2id"], split["valid2id"], split["test2id"]])
         ranks = ev.link_prediction_ranks(
@@ -567,7 +567,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # checkpoint fixture is written ONCE per process (seeded, so
         # reuse is exact); the query itself measures the Parquet-ingested
         # eval path — read + ranks — not fixture setup
-        emb = read_embeddings_parquet(_a20_ckpt_dir(spark))
+        emb = read_embeddings_parquet(_a20_ckpt_dir())
         known_df = (
             _openke(spark, "train2id")
             .unionByName(_openke(spark, "valid2id"))
@@ -617,7 +617,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         split = gen_openke_split()
         emb = gen_embeddings(n_ent=len(split["entity2id"]), n_rel=len(split["relation2id"]))
         d = tempfile.mkdtemp(prefix="kgforge_a20s_")
-        write_embeddings_parquet(spark, emb, d)
+        write_embeddings_parquet(emb, d)
         back = read_embeddings_parquet(d)
         test = spark.createDataFrame(split["test2id"])
         return ev.score_triples(spark, test, back, model="transe", norm=1).select(

@@ -35,8 +35,9 @@ def _check_count(n: int, rows: int, path: str) -> None:
 def write_dict_txt(df: pd.DataFrame, path: str) -> None:
     """``(name, id)`` → OpenKE dictionary file (count header + TSV).
     A name holding a tab or a line break (``\n``, or ``\r``, which the
-    reader's universal newlines also split on) cannot be read back, so
-    it raises ``ValueError``."""
+    reader's universal newlines also split on) cannot be read back, and
+    a name UTF-8 cannot encode (a lone surrogate) cannot be written: both
+    raise ``ValueError`` before the file is opened."""
     df = df[["name", "id"]].sort_values("id")
     bad = df["name"].astype(str).str.contains(r"[\t\n\r]")
     if bad.any():
@@ -44,10 +45,16 @@ def write_dict_txt(df: pd.DataFrame, path: str) -> None:
             f"{int(bad.sum())} names hold a tab or line break, e.g. "
             f"{df['name'][bad].iloc[0]!r}: not representable in {path}"
         )
-    with open(path, "w", encoding="utf-8") as f:
-        f.write(f"{len(df)}\n")
-        for name, i in df.itertuples(index=False):
-            f.write(f"{name}\t{i}\n")
+    text = f"{len(df)}\n" + "".join(f"{name}\t{i}\n" for name, i in df.itertuples(index=False))
+    try:
+        data = text.encode("utf-8")
+    except UnicodeEncodeError as e:
+        raise ValueError(
+            f"a name holds {e.object[e.start:e.end]!r}, which UTF-8 cannot encode: "
+            f"not representable in {path}"
+        ) from None
+    with open(path, "wb") as f:
+        f.write(data)
 
 
 def read_dict_txt(path: str) -> pd.DataFrame:
@@ -141,50 +148,53 @@ EMB_COMPONENTS = (
 )
 
 
-def write_embeddings_parquet(spark: SparkSession, emb: dict, out_dir: str) -> None:
-    """A20 parameter export: NumPy embedding dict → Parquet ``(id,
-    vec array<float>)`` tables, one per component (SURVEY.md §2 A20:
-    "Parquet write/read of (id, vec) tables").
+def write_embeddings_parquet(emb: dict, out_dir: str) -> None:
+    """A20 parameter export: NumPy embedding dict → Parquet ``(id, vec
+    array<float>)`` tables, one per component, in the hive layout
+    ``components/component=<key>/`` (SURVEY.md §2 A20: "Parquet
+    write/read of (id, vec) tables").
 
     Embeddings are model-parameter-sized (the same thing the reference
-    checkpoints from its parameter server), so a driver-side write is
-    the intended design, and :func:`read_embeddings_parquet` reads them
-    back on the driver for the broadcast link and eval paths. float32
-    round-trips bit-identical (f32 → f64 python floats → f32 parquet is
-    exact).
+    checkpoints from its parameter server), so the driver writes the
+    files itself with pyarrow and no Spark job runs;
+    :func:`read_embeddings_parquet` reads them back on the driver
+    for the broadcast link and eval paths. float32 values are stored as
+    they are, so the round-trip is bit-identical (NaN payloads, ±0.0,
+    subnormals). A write replaces the previous checkpoint and names its
+    data files afresh, so a rewrite always changes the
+    ``manifest.fingerprint_paths`` listing; ``_SUCCESS`` is written last.
     """
     import json
+    import shutil
+    import uuid
 
-    os.makedirs(out_dir, exist_ok=True)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    comp_dir = os.path.join(out_dir, "components")
+    shutil.rmtree(comp_dir, ignore_errors=True)
+    os.makedirs(comp_dir)
+    fname = f"part-{uuid.uuid4().hex}.parquet"
     dims = {}
-    frames = []
     for key in EMB_COMPONENTS:
         if key not in emb:
             continue
         mat = np.asarray(emb[key])
         dims[key] = list(mat.shape)
-        flat = mat.reshape(mat.shape[0], -1).astype("float32")
-        frames.append(
-            pd.DataFrame(
-                {
-                    "component": key,
-                    "id": np.arange(flat.shape[0], dtype="int64"),
-                    # .tolist() → native Python floats: the non-Arrow
-                    # createDataFrame verifier (driver sessions run Spark
-                    # defaults, Arrow off) rejects np.float32 elements.
-                    "vec": flat.tolist(),
-                }
-            )
+        flat = np.ascontiguousarray(mat.reshape(mat.shape[0], -1), dtype="float32")
+        n, width = flat.shape
+        vec = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, n * width + 1, width, dtype="int32")), pa.array(flat.ravel())
         )
-    # one write job for all components: hive-partitioned by component, so
-    # the (id, vec) per-component layout survives as subdirectories
-    spark.createDataFrame(
-        pd.concat(frames, ignore_index=True), "component string, id long, vec array<float>"
-    ).coalesce(1).write.mode("overwrite").partitionBy("component").parquet(
-        os.path.join(out_dir, "components")
-    )
+        part = os.path.join(comp_dir, f"component={key}")
+        os.makedirs(part)
+        pq.write_table(
+            pa.table({"id": pa.array(np.arange(n, dtype="int64")), "vec": vec}),
+            os.path.join(part, fname),
+        )
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
         json.dump({"dims": dims}, f, indent=1, sort_keys=True)
+    open(os.path.join(comp_dir, "_SUCCESS"), "w").close()
 
 
 def read_embeddings_parquet(in_dir: str) -> dict[str, np.ndarray]:

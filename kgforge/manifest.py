@@ -4,11 +4,11 @@ The reference resumes incremental training from the previous snapshot's
 checkpoint (OpenKEonSpark numbered dataset batches + TF checkpoints,
 recalled — SURVEY.md §0). Here the unit of resumability is a *stage
 output*: each stage commits (output parquet + ``_SUCCESS``) and then a
-manifest entry keyed by the stage name and a fingerprint of its inputs.
-On resume, a stage whose manifest entry exists with a matching input
-fingerprint is skipped while its outputs are still committed (the
-pipeline checks them); any input change invalidates it and everything
-downstream recomputes.
+manifest entry keyed by the stage name, holding a fingerprint of its
+inputs and one of its outputs. On resume, a stage whose manifest entry
+exists with a matching input fingerprint is skipped while its outputs
+still fingerprint as at the commit (the pipeline checks them); any input
+change invalidates it and everything downstream recomputes.
 
 Entries are single JSON files written atomically (tmp + rename), so a
 kill at any point leaves either a committed stage or no entry — never a
@@ -40,15 +40,21 @@ class Manifest:
         with open(p) as f:
             return json.load(f)
 
-    def is_done(self, stage: str, input_fprint: str) -> bool:
+    def is_done(self, stage: str, input_fprint: str, output_fprint: str) -> bool:
+        """Whether ``stage`` committed with these inputs and its outputs
+        still fingerprint as they did at the commit."""
         e = self.get(stage)
-        return bool(e and e.get("status") == "done" and e.get("input_fprint") == input_fprint)
+        return bool(
+            e and e.get("status") == "done" and e.get("input_fprint") == input_fprint
+            and e.get("output_fprint") == output_fprint
+        )
 
-    def commit(self, stage: str, input_fprint: str, row_count: int | None,
-               wall_ms: float, extra: dict | None = None) -> dict:
+    def commit(self, stage: str, input_fprint: str, output_fprint: str,
+               row_count: int | None, wall_ms: float, extra: dict | None = None) -> dict:
         entry = {
             "stage": stage,
             "input_fprint": input_fprint,
+            "output_fprint": output_fprint,
             "row_count": row_count,
             "status": "done",
             "wall_ms": round(wall_ms, 1),

@@ -8,12 +8,13 @@ operator, not a stage output: no stage reads mentions.
 
 Each stage is a pure DataFrame → DataFrame function wrapped with:
 read inputs → build plan → execute → write parquet + ``_SUCCESS`` →
-manifest commit (B11). ``--resume`` skips stages whose manifest entry
-matches the current input fingerprint and whose outputs are all still
-committed (a deleted output, or one without ``_SUCCESS``, re-runs the
-stage); changing any upstream output invalidates everything downstream
-automatically (the fingerprint of a stage includes its input stage's
-output listing).
+manifest commit (B11), which records the fingerprint of the stage's
+inputs and of its outputs. ``--resume`` skips a stage only while both
+still match: an output deleted, truncated or rewritten after its commit
+(or left without ``_SUCCESS`` by a crash) re-runs the stage, and so does
+a crash between the write and the commit. Changing any upstream output
+invalidates everything downstream automatically (the fingerprint of a
+stage includes its input stage's output listing).
 
 Launch: ``spark-submit --py-files kgforge.zip run_pipeline.py ...``.
 """
@@ -35,6 +36,10 @@ from .session import read_parquet, tiny_df
 from .stages import extract, link, materialize, reassemble
 
 
+#: The dicts stage's dictionaries, the values of its ``kind`` partition
+#: column, in the order ``Pipeline._dicts`` returns them.
+_DICT_KINDS = ("entity", "relation")
+
 #: Up to this many distinct alias names, canonicalize runs B7/B8 on the
 #: driver (see ``Pipeline.stage_canonicalize``).
 _DRIVER_NAMES = 10_000
@@ -51,12 +56,6 @@ def _write_counted(df: DataFrame, path: str) -> int:
     obs = Observation()
     _write(df.observe(obs, F.count(F.lit(1)).alias("n")), path)
     return int(obs.get["n"])
-
-
-def _committed(path: str) -> bool:
-    """Whether a stage output is still there: a file, or a Spark output
-    directory with its ``_SUCCESS`` marker."""
-    return os.path.isfile(path) or os.path.isfile(os.path.join(path, "_SUCCESS"))
 
 
 class Pipeline:
@@ -123,7 +122,7 @@ class Pipeline:
 
     def _run_stage(self, stage: str, input_paths: list[str], outputs: list[str], fn) -> None:
         fp = fingerprint_paths(*input_paths) + ":" + self.cfg_fp
-        if self.resume and self.manifest.is_done(stage, fp) and all(map(_committed, outputs)):
+        if self.resume and self.manifest.is_done(stage, fp, fingerprint_paths(*outputs)):
             self.timings[stage] = 0.0
             return
         t0 = time.time()
@@ -131,7 +130,7 @@ class Pipeline:
         wall = (time.time() - t0) * 1000
         self.timings[stage] = wall / 1000
         rows = extra.pop("row_count", None)
-        self.manifest.commit(stage, fp, rows, wall, extra=extra or None)
+        self.manifest.commit(stage, fp, fingerprint_paths(*outputs), rows, wall, extra=extra or None)
 
     # -- stages -------------------------------------------------------------
 
@@ -170,9 +169,9 @@ class Pipeline:
         collect, and the pairs, the anchor filter and union-find run on
         the driver; above that the distributed ``alias_pairs →
         connected_components`` chain runs. Either way one Spark plan
-        builds ``alias_map(surface, canonical)`` — the link stage's
-        dictionary — and ``entities(canonical, aliases)`` from it: 8
-        jobs on the unit fixture.
+        builds and writes ``alias_map(surface, canonical)``, the
+        dictionary of the dicts and link stages: 6 jobs on the unit
+        fixture.
         """
         from .stages import canonicalize as canon
 
@@ -214,29 +213,39 @@ class Pipeline:
                     F.min("_own").over(Window.partitionBy("component")), "component"
                 ).alias("canonical"),
             )
-            .localCheckpoint(eager=False)
         )
-        out = self._out("canonicalize")
-        n = _write_counted(alias_map.coalesce(1), os.path.join(out, "alias_map"))
-        ents = alias_map.groupBy("canonical").agg(
-            F.sort_array(F.collect_set("surface")).alias("aliases")
-        )
-        _write(ents.coalesce(1), os.path.join(out, "entities"))
+        n = _write_counted(alias_map.coalesce(1), os.path.join(self._out("canonicalize"), "alias_map"))
         return {"row_count": n}
 
     def _alias_map(self):
         return read_parquet(self.spark, os.path.join(self._out("canonicalize"), "alias_map"))
 
     def stage_dicts(self) -> dict:
-        # one dense-id path (materialize.dense_ids): a single-partition
-        # sort, sized for dictionary cardinality, so each dictionary is
-        # written as one file with no repartition. The dictionary sizes
-        # ride the writes, so sizing the embeddings needs no re-read.
+        """B9 — both dense-id dictionaries in one Spark plan and one write.
+
+        The entity names (canonicals of the alias map) and the relation
+        names (pattern predicates) are tagged with their ``kind``, shuffled
+        once on it, and :func:`materialize.dense_ids` numbers each kind
+        ``0..N-1`` by name in one window partition per kind. The write is
+        partitioned by ``kind`` (``dicts/kind=entity``,
+        ``dicts/kind=relation``, one file each), and both dictionary sizes
+        ride it as an ``Observation``, so sizing the embeddings needs no
+        re-read. The seeded embedding checkpoint is written on the driver:
+        2 jobs on the unit fixture.
+        """
         pats = read_parquet(self.spark, self.patterns_path)
-        e2id = materialize.dense_ids(self._alias_map().select(F.col("canonical").alias("name")))
-        r2id = materialize.dense_ids(pats.select(F.col("pred").alias("name")))
-        n_ent = _write_counted(e2id, os.path.join(self._out("dicts"), "entity2id"))
-        n_rel = _write_counted(r2id, os.path.join(self._out("dicts"), "relation2id"))
+        names = self._alias_map().select(
+            F.lit("entity").alias("kind"), F.col("canonical").alias("name")
+        ).unionByName(pats.select(F.lit("relation").alias("kind"), F.col("pred").alias("name")))
+        # hash partitioning on kind clusters both the distinct and the
+        # window: the plan has one Exchange
+        ids = materialize.dense_ids(names.repartition("kind"), by=("kind",))
+        obs = Observation()
+        sizes = [F.count_if(F.col("kind") == k).alias(k) for k in _DICT_KINDS]
+        ids.observe(obs, *sizes).write.mode("overwrite").partitionBy("kind").parquet(
+            self._out("dicts")
+        )
+        n_ent, n_rel = (int(obs.get[k]) for k in _DICT_KINDS)
         # A20: the model parameters the link/eval stages score with live
         # in a Parquet (id, vec) checkpoint. A trained checkpoint
         # (training.train* → io_openke.write_embeddings_parquet) plugs in
@@ -247,15 +256,15 @@ class Pipeline:
             emb = fixtures.gen_embeddings(
                 n_ent=n_ent, n_rel=n_rel, dim=16, seed=self.embeddings_seed
             )
-            io_openke.write_embeddings_parquet(self.spark, emb, self._emb_dir())
+            io_openke.write_embeddings_parquet(emb, self._emb_dir())
         return {"n_entities": n_ent, "n_relations": n_rel}
 
+    def _dict_path(self, kind: str) -> str:
+        return os.path.join(self._out("dicts"), f"kind={kind}")
+
     def _dicts(self):
-        d = self._out("dicts")
-        return (
-            read_parquet(self.spark, os.path.join(d, "entity2id")),
-            read_parquet(self.spark, os.path.join(d, "relation2id")),
-        )
+        """``(entity2id, relation2id)`` as ``(name, id)`` DataFrames."""
+        return tuple(read_parquet(self.spark, self._dict_path(k)) for k in _DICT_KINDS)
 
     def _emb_dir(self) -> str:
         return self.embeddings_path or os.path.join(self.work, "embeddings")
@@ -284,7 +293,7 @@ class Pipeline:
         linked = read_parquet(self.spark, self._out("link"))
         out = os.path.join(self._out("materialize"), "triples")
         lineage = materialize.salted_write(
-            linked.select("s", "p", "o").dropDuplicates(["s", "p", "o"]),
+            linked.select("s", "p", "o"),
             out,
             n_partitions=self.out_partitions,
             salt_cols=("s",),
@@ -297,10 +306,9 @@ class Pipeline:
         fact = read_parquet(self.spark, out).select("s", "p", "o")
         exp = os.path.join(self._out("materialize"), "openke")
         os.makedirs(exp, exist_ok=True)
-        for name in ("entity2id", "relation2id"):
+        for kind in _DICT_KINDS:
             io_openke.write_dict_txt(
-                pd.read_parquet(os.path.join(self._out("dicts"), name)),
-                os.path.join(exp, f"{name}.txt"),
+                pd.read_parquet(self._dict_path(kind)), os.path.join(exp, f"{kind}2id.txt")
             )
         io_openke.write_triples_txt_spark(
             fact.selectExpr("s as h", "o as t", "p as r"),
@@ -406,8 +414,8 @@ class Pipeline:
         outputs = {
             "reassemble": [out("reassemble")],
             "extract": [os.path.join(out("extract"), "triples")],
-            "canonicalize": [os.path.join(out("canonicalize"), t) for t in ("alias_map", "entities")],
-            "dicts": [os.path.join(out("dicts"), t) for t in ("entity2id", "relation2id")]
+            "canonicalize": [os.path.join(out("canonicalize"), "alias_map")],
+            "dicts": [out("dicts")]
             + ([os.path.join(self._emb_dir(), "components")] if self.embeddings_path is None else []),
             "link": [out("link")],
             "materialize": [os.path.join(out("materialize"), "triples")]

@@ -35,6 +35,9 @@ def arrow_off(spark):
 
 
 def test_embedding_checkpoint_roundtrip_arrow_off(arrow_off, tmp_path):
+    """The checkpoint that broke with Arrow off is now written with pyarrow
+    and read with pandas on the driver, no ``createDataFrame`` at all: in
+    a session with Arrow off it still round-trips exactly."""
     from kgforge import io_openke as io
 
     rng = np.random.default_rng(5)
@@ -44,7 +47,7 @@ def test_embedding_checkpoint_roundtrip_arrow_off(arrow_off, tmp_path):
         "mat": rng.standard_normal((2, 4, 4)).astype("float32"),
     }
     out = str(tmp_path / "ckpt")
-    io.write_embeddings_parquet(arrow_off, emb, out)
+    io.write_embeddings_parquet(emb, out)
     back = io.read_embeddings_parquet(out)
     for k, v in emb.items():
         np.testing.assert_array_equal(back[k], v)  # f32 round-trip is exact

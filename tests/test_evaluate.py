@@ -441,7 +441,7 @@ def test_blocked_ranks_from_parquet_checkpoint(spark, tmp_path):
     from kgforge.io_openke import read_embeddings_parquet, write_embeddings_parquet
 
     d = str(tmp_path / "ckpt")
-    write_embeddings_parquet(spark, EMB, d)
+    write_embeddings_parquet(EMB, d)
     KNOWN[["h", "t", "r"]].to_parquet(str(tmp_path / "known.parquet"))
     known_df = spark.read.parquet(str(tmp_path / "known.parquet"))
     test = spark.createDataFrame(SPLIT["test2id"].head(12))
@@ -497,7 +497,7 @@ def test_blocked_ranks_ship_only_scored_components(spark, tmp_path, monkeypatch)
     from kgforge.io_openke import read_embeddings_parquet, write_embeddings_parquet
 
     d = str(tmp_path / "ckpt")
-    write_embeddings_parquet(spark, EMB, d)
+    write_embeddings_parquet(EMB, d)
     full = read_embeddings_parquet(d)
     shipped = []
     pin = ev.pin_broadcast
@@ -530,7 +530,7 @@ def test_embedding_checkpoint_roundtrip(spark, tmp_path):
     from kgforge.io_openke import read_embeddings_parquet, write_embeddings_parquet
 
     d = str(tmp_path / "ckpt")
-    write_embeddings_parquet(spark, EMB, d)
+    write_embeddings_parquet(EMB, d)
     back = read_embeddings_parquet(d)
     assert set(back) == set(EMB)
     for k in EMB:

@@ -12,16 +12,19 @@ from hypothesis import strategies as st
 
 from kgforge.fixtures import gen_openke_split
 from kgforge.io_openke import (
+    EMB_COMPONENTS,
     read_dict_txt,
+    read_embeddings_parquet,
     read_split,
     read_triples_spark,
     read_triples_txt,
     write_dict_txt,
+    write_embeddings_parquet,
     write_split,
     write_triples_txt,
 )
 from kgforge.manifest import Manifest, fingerprint_paths
-from kgforge.stages.materialize import dense_ids, salted_write, to_id_triples
+from kgforge.stages.materialize import dense_ids, salted_partitions, salted_write, to_id_triples
 
 
 def test_openke_roundtrip(tmp_path):
@@ -38,8 +41,9 @@ def test_openke_roundtrip(tmp_path):
     assert (h, t, r) == tuple(split["train2id"].iloc[0][["h", "t", "r"]])
 
 
-#: a name the dictionary format can hold: no tab, no line break
-_NAME = st.text(st.characters(exclude_characters="\t\n\r"))
+#: a name the dictionary format can hold: UTF-8 text (no lone surrogate),
+#: no tab, no line break
+_NAME = st.text(st.characters(codec="utf-8", exclude_characters="\t\n\r"))
 _INT64 = st.integers(-(2**63), 2**63 - 1)
 
 
@@ -65,6 +69,18 @@ def test_openke_dict_name_with_tab_or_line_break_raises(head, sep, tail):
     names = pd.DataFrame({"name": ["ok", head + sep + tail], "id": [0, 1]})
     with tempfile.TemporaryDirectory() as d:
         with pytest.raises(ValueError, match="tab or line break"):
+            write_dict_txt(names, os.path.join(d, "e.txt"))
+        assert not os.path.exists(os.path.join(d, "e.txt"))
+
+
+@settings(max_examples=100, deadline=None)
+@given(head=_NAME, bad=st.characters(categories=["Cs"]), tail=_NAME)
+def test_openke_dict_name_not_utf8_raises(head, bad, tail):
+    """A name with a lone surrogate, which no UTF-8 file can hold, raises
+    ``ValueError`` and leaves no partial dictionary file behind."""
+    names = pd.DataFrame({"name": ["ok", head + bad + tail], "id": [0, 1]})
+    with tempfile.TemporaryDirectory() as d:
+        with pytest.raises(ValueError, match="UTF-8 cannot encode"):
             write_dict_txt(names, os.path.join(d, "e.txt"))
         assert not os.path.exists(os.path.join(d, "e.txt"))
 
@@ -148,15 +164,46 @@ def test_to_id_triples_and_salted_write(spark, tmp_path):
     assert sum(lineage["partitions"].values()) == 2  # per-partition rows
     back = (
         spark.read.parquet(out)
-        .select("s", "p", "o")
         .toPandas()
         .sort_values(["s", "p", "o"])
         .reset_index(drop=True)
     )
-    pd.testing.assert_frame_equal(back, got)
-    # lineage side table exists and agrees
-    lin = spark.read.parquet(out + "_lineage").toPandas()
-    assert lin["rows"].sum() == 2
+    pd.testing.assert_frame_equal(back[["s", "p", "o"]], got)
+    # the manifest's per-partition lineage agrees with the part= dirs
+    assert lineage["partitions"] == back.groupby("part").size().to_dict()
+    assert lineage["max_partition_rows"] == max(lineage["partitions"].values())
+
+
+#: (s, p, o, part) of the 12 distinct rows below at n_partitions=4, as
+#: salted_write laid them out when it was two shuffles (a dropDuplicates
+#: before it, then its repartition on part)
+_SALTED_LAYOUT = [
+    (1, 6, 3, 3), (2, 7, 1, 2), (3, 8, 4, 0), (4, 9, 2, 1), (5, 10, 0, 1), (6, 11, 3, 1),
+    (7, 0, 0, 1), (7, 1, 3, 2), (7, 2, 1, 3), (7, 3, 4, 2), (7, 4, 2, 1), (7, 5, 0, 0),
+]
+
+
+def test_salted_write_dedups_in_one_shuffle(spark, tmp_path):
+    """Duplicates split across input partitions are stored once, each row in
+    the part= directory it always had, one file per directory — and the
+    plan shuffles once: the hash partitioning on ``part`` clusters the
+    dropDuplicates too."""
+    rows = pd.DataFrame([r[:3] for r in _SALTED_LAYOUT], columns=["s", "p", "o"])
+    copies = [spark.createDataFrame(rows.sample(frac=1.0, random_state=i)) for i in range(3)]
+    df = copies[0].union(copies[1]).union(copies[2])  # each copy in its own partitions
+    assert df.rdd.getNumPartitions() >= 3
+    plan = salted_partitions(df, 4, ("s",))._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+
+    out = str(tmp_path / "triples")
+    lineage = salted_write(df, out, n_partitions=4, salt_cols=("s",))
+    assert lineage["row_count"] == len(_SALTED_LAYOUT)
+    back = spark.read.parquet(out).toPandas()
+    assert sorted(map(tuple, back[["s", "p", "o", "part"]].values.tolist())) == _SALTED_LAYOUT
+    for d in os.listdir(out):
+        if d.startswith("part="):
+            files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+            assert len(files) == 1, d
 
 
 def test_salted_write_deterministic_layout(spark, tmp_path):
@@ -183,13 +230,16 @@ def test_salted_write_deterministic_layout(spark, tmp_path):
 def test_manifest_resume(tmp_path):
     m = Manifest(str(tmp_path))
     fp = fingerprint_paths(str(tmp_path))
-    assert not m.is_done("extract", fp)
-    m.commit("extract", fp, row_count=10, wall_ms=5.0)
-    assert m.is_done("extract", fp)
+    out = fingerprint_paths(str(tmp_path / "out"))
+    assert not m.is_done("extract", fp, out)
+    m.commit("extract", fp, out, row_count=10, wall_ms=5.0)
+    assert m.is_done("extract", fp, out)
     # changed input -> invalid
-    assert not m.is_done("extract", fp + "x")
+    assert not m.is_done("extract", fp + "x", out)
+    # changed output -> invalid
+    assert not m.is_done("extract", fp, out + "x")
     m.invalidate("extract")
-    assert not m.is_done("extract", fp)
+    assert not m.is_done("extract", fp, out)
 
 
 def test_type_constraint_roundtrip(tmp_path):
@@ -227,3 +277,47 @@ def test_constrained_ranks_tighter_than_raw(spark):
     for col in ["rank_head_raw", "rank_head_filt", "rank_tail_raw", "rank_tail_filt"]:
         assert (c[col] <= f[col]).all()
     assert (c["rank_head_raw"] < f["rank_head_raw"]).any()  # constraints bite
+
+
+#: float32 bit patterns the checkpoint must keep: ±0.0, ±inf, a quiet, a
+#: negative and a signalling NaN with payloads, the smallest and largest
+#: subnormals of both signs
+_SPECIAL_F32_BITS = [
+    0x00000000, 0x80000000, 0x7F800000, 0xFF800000, 0x7FC00000, 0xFFC00123,
+    0x7F800001, 0x00000001, 0x807FFFFF, 0x007FFFFF, 0x80000001,
+]
+
+
+@st.composite
+def _checkpoints(draw):
+    """A dict of float32 components of random shapes (TransR's ``mat`` 3-D),
+    drawn as bit patterns so every float32 value can occur."""
+    import hypothesis.extra.numpy as hnp
+
+    keys = draw(st.lists(st.sampled_from(EMB_COMPONENTS), min_size=1, max_size=4, unique=True))
+    bits = st.integers(0, 2**32 - 1) | st.sampled_from(_SPECIAL_F32_BITS)
+    emb = {}
+    for key in keys:
+        dim = st.integers(1, 4)
+        shape = draw(st.tuples(st.integers(1, 6), dim, *([dim] if key == "mat" else [])))
+        emb[key] = draw(hnp.arrays(np.uint32, shape, elements=bits)).view(np.float32)
+    return emb
+
+
+@settings(max_examples=60, deadline=None)
+@given(emb=_checkpoints())
+def test_embedding_checkpoint_roundtrip_is_bitwise(emb):
+    """The A20 checkpoint reads back every component bit for bit, shape
+    included — ±0.0, ±inf, NaN payloads and subnormals — and a rewrite
+    names its data files afresh, so the fingerprint resume compares moves
+    even when the contents are equal."""
+    with tempfile.TemporaryDirectory() as d:
+        write_embeddings_parquet(emb, d)
+        listing = fingerprint_paths(os.path.join(d, "components"))
+        back = read_embeddings_parquet(d)
+        assert set(back) == set(emb)
+        for key, mat in emb.items():
+            assert back[key].dtype == np.float32 and back[key].shape == mat.shape, key
+            np.testing.assert_array_equal(back[key].view(np.uint32), mat.view(np.uint32))
+        write_embeddings_parquet(emb, d)
+        assert fingerprint_paths(os.path.join(d, "components")) != listing

@@ -2,8 +2,11 @@
 deterministic layout, lenient parse."""
 
 import os
+import tempfile
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from kgforge.io_rdf import read_ntriples, write_ntriples
 
@@ -24,6 +27,26 @@ def test_roundtrip_identity_on_hostile_strings(spark, tmp_path):
     write_ntriples(df, out, n_partitions=3)
     back = read_ntriples(spark, out)
     assert sorted(map(tuple, back.collect())) == sorted(NASTY)
+
+
+#: any UTF-8 text (no lone surrogate), with the characters
+#: percent-encoding has to get right (``%``, ``+``, space, tab, line
+#: breaks, the IRI delimiters) drawn often
+_TERM = st.text(st.characters(codec="utf-8") | st.sampled_from("%+ \t\n\r<>\"\\."), max_size=12)
+
+
+@settings(max_examples=25, deadline=None)
+@given(rows=st.lists(st.tuples(_TERM, _TERM, _TERM), min_size=1, max_size=8))
+def test_roundtrip_identity_property(spark, rows):
+    """Any Unicode ``(s, p, o)`` names write as N-Triples and parse back
+    exactly: url_encode with ``+`` rewritten to ``%20`` is inverted by
+    url_decode, and ``%`` and a literal ``+`` survive."""
+    df = spark.createDataFrame(rows, "s string, p string, o string")
+    with tempfile.TemporaryDirectory() as d:
+        out = os.path.join(d, "nt")
+        write_ntriples(df, out, n_partitions=2)
+        back = read_ntriples(spark, out)
+        assert sorted(map(tuple, back.collect())) == sorted(rows)
 
 
 def test_export_is_sorted_and_deterministic(spark, tmp_path):

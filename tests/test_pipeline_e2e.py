@@ -179,10 +179,10 @@ def test_dict_sizes_recorded(run_dir):
 STAGE_JOB_BUDGET = {
     "reassemble": 2,
     "extract": 2,
-    "canonicalize": 8,
-    "dicts": 7,
+    "canonicalize": 6,
+    "dicts": 2,
     "link": 5,
-    "materialize": 7,
+    "materialize": 5,
     "evaluate": 4,
 }
 
@@ -250,18 +250,18 @@ def test_read_parquet_footer_schema(spark, jobs_in_group, unit_build, tmp_path):
         return n, df
 
     outputs = [
-        "reassemble", "extract/triples", "canonicalize/alias_map",
-        "canonicalize/entities", "dicts/entity2id", "dicts/relation2id", "link",
-        "materialize/triples", "materialize/triples_lineage", "embeddings/components",
-        "embeddings/components/component=ent",
+        "reassemble", "extract/triples", "canonicalize/alias_map", "dicts",
+        "dicts/kind=entity", "dicts/kind=relation", "link", "materialize/triples",
+        "embeddings/components", "embeddings/components/component=ent",
     ]
     schemas = {}
     for out in outputs:
         n, df = same_as_inferred(os.path.join(work, out))
         assert n == 0, out
         schemas[out] = df.schema
-    # the hive partition column is still discovered from the directories
+    # the hive partition columns are still discovered from the directories
     assert schemas["materialize/triples"]["part"].dataType.simpleString() == "int"
+    assert schemas["dicts"]["kind"].dataType.simpleString() == "string"
 
     empty = str(tmp_path / "empty")
     spark.createDataFrame([], "a long, b array<string>").write.parquet(empty)
@@ -286,7 +286,7 @@ def test_read_parquet_footer_schema(spark, jobs_in_group, unit_build, tmp_path):
 def test_canonicalize_distributed_branch_matches_driver(spark, unit_build, tmp_path, monkeypatch):
     """Above ``_DRIVER_NAMES`` names canonicalize runs the distributed
     alias_pairs → connected_components chain; it writes the same
-    alias_map and entities as the driver branch the unit build took."""
+    alias_map as the driver branch the unit build took."""
     from kgforge import pipeline as pl
 
     work, fdir, _ = unit_build
@@ -294,9 +294,8 @@ def test_canonicalize_distributed_branch_matches_driver(spark, unit_build, tmp_p
     shutil.copytree(os.path.join(work, "extract"), os.path.join(other, "extract"))
     monkeypatch.setattr(pl, "_DRIVER_NAMES", 0)
     _unit_pipeline(spark, fdir, other).run(["canonicalize"])
-    for t in ("alias_map", "entities"):
-        got = _rows(os.path.join(other, "canonicalize", t))
-        assert got == _rows(os.path.join(work, "canonicalize", t)), t
+    got = _rows(os.path.join(other, "canonicalize", "alias_map"))
+    assert got == _rows(os.path.join(work, "canonicalize", "alias_map"))
 
 
 def test_conflicting_gazetteer_surface_maps_to_min_canonical(spark, unit_build, tmp_path):
@@ -322,6 +321,29 @@ def test_conflicting_gazetteer_surface_maps_to_min_canonical(spark, unit_build, 
     assert amaps[0][surface] == "!" + canonical
 
 
+def _outputs(work):
+    """The unit build's outputs: row sets of the Parquet ones, bytes of the
+    files."""
+    got = {
+        rel: _rows(os.path.join(work, rel))
+        for rel in (
+            "canonicalize/alias_map", "dicts/kind=entity", "dicts/kind=relation",
+            "materialize/triples",
+        )
+    }
+    for rel in ("materialize/openke/train2id.txt", "eval_metrics.json"):
+        with open(os.path.join(work, rel), "rb") as f:
+            got[rel] = f.read()
+    return got
+
+
+def _resume_reruns(spark, fdir, work):
+    """Stages a ``--resume`` build of the unit work dir runs again."""
+    pipe = _unit_pipeline(spark, fdir, work, resume=True)
+    pipe.run([*STAGES, "evaluate"])
+    return {s for s, t in pipe.timings.items() if t > 0.0}
+
+
 def test_resume_reruns_stage_whose_output_is_gone(spark, unit_build):
     """--resume trusts a manifest entry only while the stage's outputs are
     still committed: a deleted output, an output without ``_SUCCESS`` or a
@@ -330,35 +352,64 @@ def test_resume_reruns_stage_whose_output_is_gone(spark, unit_build):
     work, fdir, _ = unit_build
     stages = [*STAGES, "evaluate"]
 
-    def outputs():
-        got = {
-            rel: _rows(os.path.join(work, rel))
-            for rel in (
-                "canonicalize/alias_map", "canonicalize/entities", "dicts/entity2id",
-                "dicts/relation2id", "materialize/triples",
-            )
-        }
-        for rel in ("materialize/openke/train2id.txt", "eval_metrics.json"):
-            with open(os.path.join(work, rel), "rb") as f:
-                got[rel] = f.read()
-        return got
-
     def resume(remove):
         if os.path.isfile(remove):
             os.remove(remove)
         else:
             shutil.rmtree(remove)
-        pipe = _unit_pipeline(spark, fdir, work, resume=True)
-        pipe.run(stages)
-        return {s for s, t in pipe.timings.items() if t > 0.0}
+        return _resume_reruns(spark, fdir, work)
 
-    before = outputs()
+    before = _outputs(work)
     assert resume(os.path.join(work, "canonicalize", "alias_map")) == set(stages[2:])
-    assert outputs() == before
+    assert _outputs(work) == before
     assert resume(os.path.join(work, "link", "_SUCCESS")) == set(stages[4:])
-    assert outputs() == before
+    assert _outputs(work) == before
     assert resume(os.path.join(work, "eval_metrics.json")) == {"evaluate"}
-    assert outputs() == before
+    assert _outputs(work) == before
+
+
+def test_resume_reruns_stage_whose_output_was_tampered(spark, unit_build):
+    """A committed output changed after its commit no longer matches the
+    output fingerprint in the stage's manifest entry: a truncated part file
+    of ``materialize/triples`` that keeps ``_SUCCESS`` re-runs materialize
+    (and evaluate, which reads it), with outputs equal to the first
+    build's."""
+    import glob
+
+    work, fdir, _ = unit_build
+    before = _outputs(work)
+    tri = os.path.join(work, "materialize", "triples")
+    part = sorted(glob.glob(os.path.join(tri, "part=*", "*.parquet")))[0]
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+    assert os.path.isfile(os.path.join(tri, "_SUCCESS"))
+    assert _resume_reruns(spark, fdir, work) == {"materialize", "evaluate"}
+    assert _outputs(work) == before
+
+
+def test_resume_reruns_stage_that_failed_before_its_commit(spark, unit_build, monkeypatch):
+    """A stage that raises between its write and its manifest commit
+    leaves the previous entry behind, whose input fingerprint still
+    matches but whose output fingerprint no longer does: --resume re-runs
+    that stage and what reads it, with outputs equal to the first
+    build's."""
+    from kgforge.manifest import Manifest
+
+    work, fdir, _ = unit_build
+    before = _outputs(work)
+    commit = Manifest.commit
+
+    def fail_dicts(self, stage, *args, **kwargs):
+        if stage == "dicts":
+            raise RuntimeError("killed between the write and the commit")
+        return commit(self, stage, *args, **kwargs)
+
+    monkeypatch.setattr(Manifest, "commit", fail_dicts)
+    with pytest.raises(RuntimeError, match="killed"):
+        _unit_pipeline(spark, fdir, work).run(["dicts"])
+    monkeypatch.setattr(Manifest, "commit", commit)
+    assert _resume_reruns(spark, fdir, work) == {"dicts", "link", "materialize", "evaluate"}
+    assert _outputs(work) == before
 
 
 def test_entry_and_contract_smoke(spark):
