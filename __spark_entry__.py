@@ -5914,24 +5914,32 @@ _SQL_COMPLEX = f"""
 
 # SimplE: ½(⟨he_h, v_r, te_t⟩ + ⟨he_t, v_r', te_h⟩), negated; head-role /
 # forward vectors reuse the ent/rel tables, tail-role / inverse come from
-# the *_tail / *_inv tables
+# the *_tail / *_inv tables. One three-way join per CP half, as the
+# Analogy oracle splits its blocks: a single six-way join grew DuckDB
+# past 11 GB at its default memory limit
 _SQL_SIMPLE = f"""
     WITH {_K_BASE},
     entt AS (SELECT * FROM read_parquet('{OKE}/enttail_long.parquet')),
-    reli AS (SELECT * FROM read_parquet('{OKE}/relinv_long.parquet'))
-    SELECT tt.h, tt.t, tt.r,
-           round(-0.5 * sum(
-               ehh.val * er.val * ett.val
-             + eth.val * eri.val * eht.val
-           ), 9) AS score
-    FROM test tt
-    JOIN rel er ON er.id = tt.r
-    JOIN reli eri ON eri.id = tt.r AND eri.k = er.k
-    JOIN ent ehh ON ehh.id = tt.h AND ehh.k = er.k
-    JOIN entt eht ON eht.id = tt.h AND eht.k = er.k
-    JOIN ent eth ON eth.id = tt.t AND eth.k = er.k
-    JOIN entt ett ON ett.id = tt.t AND ett.k = er.k
-    GROUP BY tt.h, tt.t, tt.r
+    reli AS (SELECT * FROM read_parquet('{OKE}/relinv_long.parquet')),
+    fwd AS (
+      SELECT tt.h, tt.t, tt.r, sum(ehh.val * er.val * ett.val) AS s
+      FROM test tt
+      JOIN rel er ON er.id = tt.r
+      JOIN ent ehh ON ehh.id = tt.h AND ehh.k = er.k
+      JOIN entt ett ON ett.id = tt.t AND ett.k = er.k
+      GROUP BY tt.h, tt.t, tt.r
+    ),
+    inv AS (
+      SELECT tt.h, tt.t, tt.r, sum(eth.val * eri.val * eht.val) AS s
+      FROM test tt
+      JOIN reli eri ON eri.id = tt.r
+      JOIN ent eth ON eth.id = tt.t AND eth.k = eri.k
+      JOIN entt eht ON eht.id = tt.h AND eht.k = eri.k
+      GROUP BY tt.h, tt.t, tt.r
+    )
+    SELECT fwd.h, fwd.t, fwd.r, round(-0.5 * (fwd.s + inv.s), 9) AS score
+    FROM fwd
+    JOIN inv ON inv.h = fwd.h AND inv.t = fwd.t AND inv.r = fwd.r
 """
 
 # RESCAL: full bilinear h^T M_r t (negated) — a relational double

@@ -18,11 +18,12 @@ one Arrow-batched ``mapInPandas``; the embedding components the models
 score with are broadcast once (``sc.broadcast`` NumPy, not a join). Per
 chunk of test triples and direction, one kernel call scores the chunk
 against all |E| candidates as a ``[chunk, |E|]`` block (chunk sized so
-its temporaries stay ≤16 MB). The known set is shipped as two sorted
-indexes keyed ``(r, t) → h`` / ``(r, h) → t`` and probed with
-``np.searchsorted``. It may be pandas, or a DataFrame of any size: then
-only the known triples sharing a test triple's fixed slot are collected
-(one left-semi join against the broadcast test keys), a test-sized set.
+its temporaries stay ≤16 MB). The known set is shipped as two
+``sampling.sorted_index`` indexes (the one known-triple index, which the
+trainer's negatives also avoid) keyed ``(r, t) → h`` / ``(r, h) → t``.
+It may be pandas, or a DataFrame of any size: then only the known
+triples sharing a test triple's fixed slot are collected (one left-semi
+join against the broadcast test keys), a test-sized set.
 The B12 gate (``Pipeline.stage_evaluate``) ranks through this path, with
 the constructed KG as the known DataFrame.
 
@@ -43,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import kernels
+from .sampling import indexed_values, sorted_index
 from .session import pin_broadcast
 
 RANK_COLS = ("rank_head_raw", "rank_head_filt", "rank_tail_raw", "rank_tail_filt")
@@ -96,25 +98,6 @@ def _score_tables(emb: dict, models) -> tuple[dict, int, int]:
     return emb, emb["ent"].shape[0], n_rel
 
 
-def _index(key: np.ndarray, val: np.ndarray) -> tuple:
-    """Sorted index ``(keys, starts, vals)`` of ``(key, val)`` pairs:
-    ``keys`` are the unique keys and ``vals[starts[i]:starts[i + 1]]``
-    the sorted unique values under ``keys[i]``."""
-    key, val = np.unique(np.stack([key, val]), axis=1)
-    keys, starts = np.unique(key, return_index=True)
-    return keys, np.append(starts, len(key)), val
-
-
-def _known_ids(index: tuple, key: np.ndarray) -> list[np.ndarray]:
-    """Per key, the sorted values :func:`_index` holds under it: the left
-    and right ``searchsorted`` slots of a key in ``keys`` differ by one
-    on a hit and coincide on a miss, which yields an empty slice."""
-    keys, starts, vals = index
-    lo = starts[np.searchsorted(keys, key)]
-    hi = starts[np.searchsorted(keys, key, side="right")]
-    return [vals[a:b] for a, b in zip(lo, hi)]
-
-
 def _known_cols(known: pd.DataFrame | None, n_ent: int, n_rel: int) -> list[np.ndarray]:
     """``h``, ``t``, ``r`` of the known triples as int64, range-checked on
     the driver as the test ids are (:func:`_triple_ids`): a ``-1`` would
@@ -126,11 +109,11 @@ def _known_cols(known: pd.DataFrame | None, n_ent: int, n_rel: int) -> list[np.n
 
 
 def _known_index(known: pd.DataFrame | None, n_ent: int, n_rel: int) -> tuple[tuple, tuple]:
-    """Known-triple filter as one :func:`_index` per side, keyed ``(r <<
-    32) | e`` (``e`` = t on the head side, h on the tail side) over the
-    known ids of the varied slot."""
+    """Known-triple filter as one ``sampling.sorted_index`` per side,
+    keyed ``(r << 32) | e`` (``e`` = t on the head side, h on the tail
+    side) over the known ids of the varied slot."""
     h, t, r = _known_cols(known, n_ent, n_rel)
-    return _index((r << 32) | t, h), _index((r << 32) | h, t)
+    return sorted_index((r << 32) | t, h), sorted_index((r << 32) | h, t)
 
 
 def _near_known(known, test: DataFrame, *keys: str) -> pd.DataFrame | None:
@@ -249,8 +232,8 @@ def link_prediction_ranks_multi(
             if pdf.empty:
                 continue
             h_arr, t_arr, r_arr = _triple_ids(pdf, n_ent, n_rel)
-            known_h = _known_ids(heads_of, (r_arr << 32) | t_arr)
-            known_t = _known_ids(tails_of, (r_arr << 32) | h_arr)
+            known_h = indexed_values(heads_of, (r_arr << 32) | t_arr)
+            known_t = indexed_values(tails_of, (r_arr << 32) | h_arr)
             outs = []
             for model, dec in models:
                 ranks = np.empty((len(pdf), 4), dtype=np.int64)
@@ -328,7 +311,7 @@ def relation_prediction_ranks(
 
     The shape of :func:`link_prediction_ranks_multi`: the entity and
     relation matrices are broadcast, and the known relations come from
-    one sorted :func:`_index` keyed ``(h << 32) | t`` (a DataFrame
+    one ``sampling.sorted_index`` keyed ``(h << 32) | t`` (a DataFrame
     ``known`` is cut to the test pairs' triples first). Per Arrow batch,
     one ``kernels.score_batch`` call per chunk scores ``[rows, |R|]``
     and :func:`_rank` ranks each row. At any corpus scale |R| stays
@@ -341,7 +324,7 @@ def relation_prediction_ranks(
     emb, n_ent, n_rel = _score_tables(emb, ["transe"])
     b_emb = pin_broadcast(spark, emb)
     kh, kt, kr = _known_cols(_near_known(known, test, "h", "t"), n_ent, n_rel)
-    b_known = pin_broadcast(spark, _index((kh << 32) | kt, kr))
+    b_known = pin_broadcast(spark, sorted_index((kh << 32) | kt, kr))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         E = b_emb.value
@@ -351,7 +334,7 @@ def relation_prediction_ranks(
             if pdf.empty:
                 continue
             h, t, r = _triple_ids(pdf, n_ent, n_rel)
-            known_r = _known_ids(b_known.value, (h << 32) | t)
+            known_r = indexed_values(b_known.value, (h << 32) | t)
             ranks = np.empty((len(pdf), 2), dtype=np.int64)
             for lo in range(0, len(pdf), chunk):
                 rows = slice(lo, lo + chunk)

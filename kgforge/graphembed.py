@@ -6,12 +6,12 @@ is unsupervised structural entity embeddings over the constructed KG —
 the non-triple-supervised counterpart to the A7-A12 kernel family.
 
 Distribution runs through A13's round, ``training.param_average`` (the
-one ``training.train_distributed`` uses): per round, broadcast the
-parameter matrices, shards run local vectorized-NumPy epochs inside
-``applyInPandas``, the driver averages shard results weighted by shard
-size. Pair rows (center, context, n_pairs) carry their co-occurrence
-count as a loss weight, so the aggregated pair table trains identically
-to streaming the raw corpus.
+one ``training.train_distributed`` uses): the pair table is collected
+once and broadcast in hash shards; per round, one Spark job runs each
+shard's local NumPy epochs from the broadcast parameters, and the driver
+averages shard results weighted by shard size. Pair rows (center,
+context, n_pairs) carry their co-occurrence count as a loss weight, so
+the aggregated pair table trains identically to streaming the raw corpus.
 """
 
 from __future__ import annotations
@@ -93,7 +93,8 @@ def train_deepwalk(
     ``{"in": U, "out": V}`` float32 — ``in`` is the embedding consumers
     use. Shard assignment hashes the pair, local work is counter-seeded
     per (shard, round): deterministic for a fixed shard count, and the
-    pair table (not the walk corpus) is what ships to executors."""
+    pair table (not the walk corpus) is what the driver collects and
+    broadcasts: 1 + ``rounds`` Spark jobs."""
     from pyspark.sql import functions as F
 
     from .training import _xavier, param_average
@@ -101,16 +102,16 @@ def train_deepwalk(
     rng = np.random.default_rng(seed)
     u_in = _xavier(rng, n_nodes, dim).astype("float64")
     v_out = _xavier(rng, n_nodes, dim).astype("float64")
-    sharded = pairs_df.withColumn(
+    shards = pairs_df.withColumn(
         "shard", F.pmod(F.hash("center", "context"), F.lit(n_shards))
-    )
+    ).toPandas()
 
-    def local_fit(rnd, shard, pdf, params):
+    def local_fit(rnd, shard, pdf, params, _):
         return sgns_epochs(
             pdf, *params, epochs_per_round, lr, neg, seed=seed * 31 + shard + 1_000_003 * rnd
         )
 
-    u_in, v_out = param_average(spark, sharded, (u_in, v_out), rounds, local_fit)
+    u_in, v_out = param_average(spark, shards, (u_in, v_out), rounds, local_fit)
     return {"in": u_in.astype("float32"), "out": v_out.astype("float32")}
 
 

@@ -399,7 +399,15 @@ class Pipeline:
     # -- driver -------------------------------------------------------------
 
     def run(self, stages: list[str] | None = None) -> dict:
+        """Run ``stages`` (all by default) in order. A patterns table with
+        no rows names no relation and raises before any Spark job: pandas
+        writes its empty ``pred`` column as Arrow ``null``, and the dicts
+        stage's union would cast the entity names to BIGINT."""
         stages = stages or self.STAGES
+        if {"extract", "dicts"} & set(stages) and pd.read_parquet(
+            self.patterns_path, columns=["pred"]
+        ).empty:
+            raise ValueError(f"patterns table {self.patterns_path} has no rows")
         deps = {
             "reassemble": [self.input_path],
             "extract": [self._out("reassemble"), self.gazetteer_path, self.patterns_path],

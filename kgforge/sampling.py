@@ -1,26 +1,34 @@
-"""A3–A6 — relation skew stats + negative sampling (uniform & bern).
+"""A3–A6 — relation skew stats, negative sampling (uniform & bern), and
+the one corruption draw and known-triple index every trainer shares.
 
 Reference semantics (OpenKEonSpark ``base/Corrupt.h::corrupt_head/
 corrupt_tail`` + ``base/Base.cpp::sampling``, recalled — SURVEY.md §0):
 
 * A3: per-relation mean tails-per-head (tph) and heads-per-tail (hpt).
-* A4 uniform: corrupt h or t with a uniform random entity; reject
+* A4 uniform: corrupt h or t with a uniform random entity; redraw
   corruptions that form a *known* triple (the reference binary-searches
-  its sorted triple arrays; we use a distributed ``left_anti`` join).
+  its sorted triple arrays).
 * A5 bern (Wang et al. 2014): corrupt the head with probability
   ``tph/(tph+hpt)`` for the triple's relation, else the tail — fewer
   false negatives on skewed relations.
 
-Determinism without partition-dependence: candidate entities come from a
-counter-based hash (splitmix64 over (h, t, r, seed, attempt)) computed
-vectorized in NumPy — the same row yields the same corruption no matter
-how Spark partitions the data. Rejection via one ``left_anti`` join per
-attempt round, oversampling absorbs most rejections in round one.
+One draw, :func:`corruption_draw`: a counter hash of (h, t, r, key, seed,
+attempt), so a slot's corruption does not depend on partitioning. The
+NumPy trainer (``training._batches``, key ``epoch · n_neg + k``) and the
+Spark sampler (:func:`_slot_candidates`, key = slot index ``k``) call it.
+
+One NumPy known-triple index, :func:`sorted_index`: probed per key by
+:func:`indexed_values` (the evaluator's filter) and per triple by
+:func:`index_contains` (the trainer's redraw test). The Spark sampler
+rejects by a distributed ``left_anti`` join per retry round instead, the
+one filter that never collects the known set to the driver. Both raise
+on a slot still unfilled after ``MAX_ATTEMPTS`` draws.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -31,6 +39,12 @@ from .session import pin_broadcast
 
 _NEG_SCHEMA = "h long, t long, r long, y int"
 
+_PHI = 0x9E3779B97F4A7C15
+#: relation corruption keys its slots from here up: a slot's entity and
+#: relation draws are different hashes
+_REL_KEYS = 1 << 63
+MAX_ATTEMPTS = 16
+
 
 def splitmix64(x: np.ndarray) -> np.ndarray:
     """Vectorized splitmix64 — the counter-based RNG for sampling."""
@@ -39,6 +53,90 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
+
+
+def corruption_draw(h, t, r, key, attempt, n: int, seed: int, bern_p=None,
+                    constraints=None, relation: bool = False):
+    """The ``attempt``-th corruption ``(nh, nt, nr)`` of each ``(h, t, r)``
+    and its side ``head`` (``True`` where the head is replaced; ``None``
+    when ``relation=True`` replaces ``r``, keyed from ``_REL_KEYS`` up).
+
+    ``base = h·0x100000001B3 ^ t·0x1000193 ^ r·0x9E3779B1 ^ (seed·2654435761
+    + key·0x5DEECE66D mod 2^64)``, and attempt ``a`` draws
+    ``splitmix64(base ^ a·φ) % n``; ``key`` and ``attempt`` are scalars
+    or arrays like ``h``. The side is the low bit of
+    ``splitmix64(base ^ 0xABCDEF)`` — or its top 53 bits as a uniform
+    ``u < bern_p[r]``, a dense per-relation array (0.5 past its end) — so
+    it is fixed per slot. ``constraints`` = ``(domains, ranges)`` maps
+    ``r → entity ids`` index head draws into ``domains[r]`` and tail
+    draws into ``ranges[r]``; a relation absent from a map draws from ``n``.
+    """
+    h, t, r = (np.asarray(x, np.int64) for x in (h, t, r))
+    key, attempt = (np.broadcast_to(np.asarray(x, np.uint64), h.shape) for x in (key, attempt))
+    key = key | np.uint64(_REL_KEYS if relation else 0)
+    base = (
+        h.astype(np.uint64) * np.uint64(0x100000001B3)
+        ^ t.astype(np.uint64) * np.uint64(0x1000193)
+        ^ r.astype(np.uint64) * np.uint64(0x9E3779B1)
+        ^ (np.uint64(seed * 2654435761 & 0xFFFFFFFFFFFFFFFF) + key * np.uint64(0x5DEECE66D))
+    )
+    draw = splitmix64(base ^ attempt * np.uint64(_PHI))
+    cand = (draw % np.uint64(n)).astype(np.int64)
+    if relation:
+        return h, t, cand, None
+    side = splitmix64(base ^ np.uint64(0xABCDEF))
+    if bern_p is None:
+        head = (side & np.uint64(1)).astype(bool)
+    else:
+        p = np.append(bern_p, 0.5)[np.minimum(r, len(bern_p))]
+        head = (side >> np.uint64(11)).astype(np.float64) / float(1 << 53) < p
+    if constraints is not None:
+        for r_val in np.unique(r):
+            for lists, on_side in zip(constraints, (head, ~head)):
+                ids = lists.get(int(r_val))
+                if ids is not None and len(ids):
+                    m = (r == r_val) & on_side
+                    cand[m] = ids[(draw[m] % np.uint64(len(ids))).astype(np.int64)]
+    return np.where(head, cand, h), np.where(head, t, cand), r, head
+
+
+def sorted_index(key: np.ndarray, val: np.ndarray) -> tuple:
+    """Sorted index ``(keys, starts, vals)`` of ``(key, val)`` pairs:
+    ``keys`` are the unique keys and ``vals[starts[i]:starts[i + 1]]``
+    the sorted unique values under ``keys[i]``. The known triples are
+    indexed with ``key = (r << 32) | e`` (ids below 2^32 and 2^31)."""
+    key, val = np.unique(np.stack([key, val]), axis=1)
+    keys, starts = np.unique(key, return_index=True)
+    return keys, np.append(starts, len(key)), val
+
+
+def _runs(index: tuple, key: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per key, the bounds of its value run in ``vals``: its left and right
+    ``searchsorted`` slots in ``keys`` coincide on a miss (an empty run)."""
+    keys, starts, _ = index
+    return starts[np.searchsorted(keys, key)], starts[np.searchsorted(keys, key, side="right")]
+
+
+def indexed_values(index: tuple, key: np.ndarray) -> list[np.ndarray]:
+    """Per key, the sorted values :func:`sorted_index` holds under it."""
+    lo, hi = _runs(index, key)
+    return [index[2][a:b] for a, b in zip(lo, hi)]
+
+
+def index_contains(index: tuple, key: np.ndarray, val: np.ndarray) -> np.ndarray:
+    """Whether each ``(key, val)`` pair is in the index: one vectorized
+    bisection of every pair's value run at once."""
+    vals = index[2]
+    lo, end = _runs(index, key)
+    if not len(vals):
+        return np.zeros(len(lo), bool)
+    hi = end.copy()
+    while (open_ := lo < hi).any():
+        mid = (lo + hi) >> 1
+        less = vals[np.minimum(mid, len(vals) - 1)] < val
+        lo = np.where(open_ & less, mid + 1, lo)
+        hi = np.where(open_ & ~less, mid, hi)
+    return (lo < end) & (vals[np.minimum(lo, len(vals) - 1)] == val)
 
 
 def bern_stats(triples: DataFrame) -> DataFrame:
@@ -63,15 +161,13 @@ _CAND_SCHEMA = "sh long, st long, sr long, k long, attempt long, h long, t long,
 _CAND_SIDE_SCHEMA = _CAND_SCHEMA + ", corrupt_head boolean"
 
 
-def _mix_base(H, T, R, K, ATT, seed: int, salt: int) -> np.ndarray:
-    return (
-        H * np.uint64(0x100000001B3)
-        ^ T * np.uint64(0x1000193)
-        ^ R * np.uint64(0x9E3779B1)
-        ^ K
-        ^ splitmix64(ATT + np.uint64(0xA77E3)) * np.uint64(0x9E3779B97F4A7C15)
-        ^ np.uint64((seed * 2654435761 + salt) & 0xFFFFFFFFFFFFFFFF)
-    )
+def _bern_p(triples: DataFrame, stats: DataFrame | None) -> np.ndarray:
+    """A5's head-corruption probability ``tph/(tph+hpt)`` as a dense
+    per-relation array (relations the stats lack corrupt at 0.5)."""
+    st = (stats if stats is not None else bern_stats(triples)).toPandas()
+    p = np.full(int(st["r"].max()) + 1 if len(st) else 0, 0.5)
+    p[st["r"].to_numpy(np.int64)] = (st["tph"] / (st["tph"] + st["hpt"])).to_numpy()
+    return p
 
 
 def _slot_candidates(
@@ -80,7 +176,7 @@ def _slot_candidates(
     att_lo: int,
     att_hi: int,
     seed: int,
-    bern_p: dict[int, float] | None,
+    bern_p: np.ndarray | None,
     corrupt_rel: bool,
     with_side: bool = False,
     constraints_bc=None,
@@ -88,22 +184,18 @@ def _slot_candidates(
     """One candidate per (slot, attempt) for attempts in [att_lo, att_hi).
 
     ``slots`` = ``(h, t, r, k)`` — positive × negative-slot index. The
-    candidate is a pure counter hash of (h, t, r, k, attempt, seed):
-    partition-independent and reproducible across retry rounds.
+    candidate is :func:`corruption_draw` with the slot index ``k`` as its
+    key: partition-independent and reproducible across retry rounds.
+    Degenerate draws (the positive itself) are dropped.
 
     ``with_side=True`` (entity mode only) keeps degenerate draws and
     emits the ``corrupt_head`` decision — the observability path for
     the bern head/tail ratio property (exactly one row per slot ×
     attempt, so row counts are SQL-derivable).
 
-    ``constraints_bc``: optional *broadcast* of ``(domains, ranges)``
-    maps ``r → sorted unique entity ids`` (``type_constrain.txt``
-    semantics): a head corruption draws uniformly from ``domains[r]``
-    and a tail corruption from ``ranges[r]`` instead of the full entity
-    space; relations absent from a map fall back to uniform — mirroring
-    the eval path's candidate semantics (evaluate.link_prediction_ranks).
-    The same counter hash indexes the candidate list, so constrained
-    draws stay partition-independent.
+    ``constraints_bc``: optional *broadcast* of the draw's ``(domains,
+    ranges)`` maps (``type_constrain.txt`` semantics), mirroring the eval
+    path's candidate semantics (evaluate.link_prediction_ranks).
     """
     n_att = att_hi - att_lo
 
@@ -111,69 +203,21 @@ def _slot_candidates(
         for pdf in batches:
             if not len(pdf):
                 continue
-            H = np.repeat(pdf["h"].to_numpy(np.uint64), n_att)
-            T = np.repeat(pdf["t"].to_numpy(np.uint64), n_att)
-            R = np.repeat(pdf["r"].to_numpy(np.uint64), n_att)
-            K = np.repeat(pdf["k"].to_numpy(np.uint64), n_att)
-            ATT = np.tile(np.arange(att_lo, att_hi, dtype=np.uint64), len(pdf))
-            salt = 0xC0FFEE if corrupt_rel else 0x5DEECE66D
-            base = _mix_base(H, T, R, K, ATT, seed, salt)
-            cand = (splitmix64(base) % np.uint64(n_space)).astype(np.int64)
-            if corrupt_rel:
-                nh, nt, nr = H.astype(np.int64), T.astype(np.int64), cand
-                keep = nr != R.astype(np.int64)
-            else:
-                if bern_p is None:
-                    corrupt_head = (
-                        splitmix64(base ^ np.uint64(0xABCDEF)) & np.uint64(1)
-                    ).astype(bool)
-                else:
-                    p = np.array([bern_p.get(int(x), 0.5) for x in R], dtype=np.float64)
-                    u = (
-                        splitmix64(base ^ np.uint64(0xABCDEF)) >> np.uint64(11)
-                    ).astype(np.float64) / float(1 << 53)
-                    corrupt_head = u < p
-                if constraints_bc is not None:
-                    # constrained draw: index the relation's candidate
-                    # list with the SAME counter hash (degenerate/known
-                    # rejection downstream is unchanged)
-                    domains, ranges = constraints_bc.value
-                    draw = splitmix64(base)
-                    Ri = R.astype(np.int64)
-                    for r_val in np.unique(Ri):
-                        dom = domains.get(int(r_val))
-                        rng = ranges.get(int(r_val))
-                        if dom is not None and len(dom):
-                            m = (Ri == r_val) & corrupt_head
-                            cand[m] = dom[
-                                (draw[m] % np.uint64(len(dom))).astype(np.int64)
-                            ]
-                        if rng is not None and len(rng):
-                            m = (Ri == r_val) & ~corrupt_head
-                            cand[m] = rng[
-                                (draw[m] % np.uint64(len(rng))).astype(np.int64)
-                            ]
-                nh = np.where(corrupt_head, cand, H.astype(np.int64))
-                nt = np.where(corrupt_head, T.astype(np.int64), cand)
-                nr = R.astype(np.int64)
-                # degenerate = corruption equals the positive
-                keep = ~((nh == H.astype(np.int64)) & (nt == T.astype(np.int64)))
+            H, T, R, K = (np.repeat(pdf[c].to_numpy(np.int64), n_att) for c in ("h", "t", "r", "k"))
+            ATT = np.tile(np.arange(att_lo, att_hi, dtype=np.int64), len(pdf))
+            nh, nt, nr, head = corruption_draw(
+                H, T, R, K, ATT, n_space, seed, bern_p,
+                constraints_bc.value if constraints_bc is not None else None, corrupt_rel,
+            )
             out = pd.DataFrame(
-                {
-                    "sh": H.astype(np.int64), "st": T.astype(np.int64),
-                    "sr": R.astype(np.int64), "k": K.astype(np.int64),
-                    "attempt": ATT.astype(np.int64),
-                    "h": nh, "t": nt, "r": nr,
-                }
+                {"sh": H, "st": T, "sr": R, "k": K, "attempt": ATT, "h": nh, "t": nt, "r": nr}
             )
             if with_side:
-                out["corrupt_head"] = corrupt_head
+                out["corrupt_head"] = head
                 yield out
             else:
-                yield out[keep]
+                yield out[(nh != H) | (nt != T) | (nr != R)]
 
-    if with_side and corrupt_rel:
-        raise ValueError("with_side applies to entity corruption only")
     return slots.mapInPandas(gen, _CAND_SIDE_SCHEMA if with_side else _CAND_SCHEMA)
 
 
@@ -182,10 +226,9 @@ def _exact_negatives(
     n_space: int,
     neg_per_pos: int,
     seed: int,
-    bern_p: dict[int, float] | None,
-    known: DataFrame,
+    bern_p: np.ndarray | None,
+    known: DataFrame | None,
     corrupt_rel: bool,
-    max_attempts: int = 16,
     constraints: tuple[dict[int, np.ndarray], dict[int, np.ndarray]] | None = None,
 ) -> DataFrame:
     """Exactly ``neg_per_pos`` negatives per positive (reference
@@ -208,9 +251,7 @@ def _exact_negatives(
     the ungrouped construction).
     """
     spark = triples.sparkSession
-    constraints_bc = None
-    if constraints is not None:
-        constraints_bc = pin_broadcast(spark, constraints)
+    constraints_bc = None if constraints is None else pin_broadcast(spark, constraints)
     slots = (
         triples.groupBy("h", "t", "r")
         .agg(F.count("*").alias("_m"))
@@ -220,13 +261,11 @@ def _exact_negatives(
         )
         .select("h", "t", "r", F.col("k").cast("long").alias("k"))
     ).localCheckpoint()
-    kn = known.select("h", "t", "r")
+    kn = (known if known is not None else triples).select("h", "t", "r")
     picked = []
-    att = 0
-    step = 2
-    while att < max_attempts:
+    for att in range(0, MAX_ATTEMPTS, 2):
         cand = _slot_candidates(
-            slots, n_space, att, att + step, seed, bern_p, corrupt_rel,
+            slots, n_space, att, att + 2, seed, bern_p, corrupt_rel,
             constraints_bc=constraints_bc,
         )
         good = cand.join(kn, ["h", "t", "r"], "left_anti")
@@ -248,20 +287,15 @@ def _exact_negatives(
             ["h", "t", "r", "k"],
             "left_anti",
         ).localCheckpoint()
-        att += step
         if slots.isEmpty():
             break
     else:
-        n_left = slots.count()
-        if n_left:
-            raise ValueError(
-                f"{n_left} negative slots unfilled after {max_attempts} attempts "
-                "(entity/relation space too saturated)"
-            )
-    out = picked[0]
-    for p in picked[1:]:
-        out = out.unionByName(p)
-    return out.select("h", "t", "r").withColumn("y", F.lit(-1).cast("int"))
+        raise ValueError(
+            f"{slots.count()} negative slots unfilled after {MAX_ATTEMPTS} attempts "
+            "(entity/relation space too saturated)"
+        )
+    out = reduce(DataFrame.unionByName, picked).select("h", "t", "r")
+    return out.withColumn("y", F.lit(-1).cast("int"))
 
 
 def negative_samples(
@@ -295,11 +329,7 @@ def negative_samples(
     """
     if mode not in ("uniform", "bern"):
         raise ValueError(mode)
-    bern_p: dict[int, float] | None = None
-    if mode == "bern":
-        st = (stats if stats is not None else bern_stats(triples)).toPandas()
-        bern_p = {int(row.r): float(row.tph / (row.tph + row.hpt)) for row in st.itertuples()}
-    known = known if known is not None else triples
+    bern_p = _bern_p(triples, stats) if mode == "bern" else None
     return _exact_negatives(
         triples, n_ent, neg_per_pos, seed, bern_p, known,
         corrupt_rel=False, constraints=constraints,
@@ -319,7 +349,6 @@ def negative_rel_samples(
     Exactly ``neg_per_pos`` per positive, same slot machinery as
     :func:`negative_samples`.
     """
-    known = known if known is not None else triples
     return _exact_negatives(triples, n_rel, neg_per_pos, seed, None, known, corrupt_rel=True)
 
 
@@ -340,10 +369,7 @@ def corruption_side_stats(
     relation — the a5 property oracle checks the observed ratio against
     the SQL-derived expectation within a binomial tolerance band.
     """
-    bern_p: dict[int, float] | None = None
-    if mode == "bern":
-        st = (stats if stats is not None else bern_stats(triples)).toPandas()
-        bern_p = {int(row.r): float(row.tph / (row.tph + row.hpt)) for row in st.itertuples()}
+    bern_p = _bern_p(triples, stats) if mode == "bern" else None
     slots = triples.select("h", "t", "r").withColumn("k", F.lit(0).cast("long"))
     cand = _slot_candidates(slots, n_ent, 0, 1, seed, bern_p, corrupt_rel=False, with_side=True)
     return cand.groupBy(F.col("sr").alias("r")).agg(
@@ -369,16 +395,12 @@ def training_batches(
     reference's batch layout, negatives y=-1; batch assignment is a
     content hash so it is partition-independent.
     """
-    pos = triples.select("h", "t", "r").withColumn("y", F.lit(1))
-    parts = [pos]
+    parts = [triples.select("h", "t", "r").withColumn("y", F.lit(1))]
     if neg_ent > 0:
         parts.append(negative_samples(triples, n_ent, neg_ent, mode, seed))
     if neg_rel > 0:
         parts.append(negative_rel_samples(triples, n_rel, neg_rel, seed))
-    allrows = parts[0]
-    for p in parts[1:]:
-        allrows = allrows.unionByName(p)
-    return allrows.withColumn(
+    return reduce(DataFrame.unionByName, parts).withColumn(
         "batch_id", F.pmod(F.hash("h", "t", "r", F.lit(seed)), F.lit(nbatches))
     ).select("batch_id", "h", "t", "r", "y")
 

@@ -11,17 +11,20 @@ fixture embeddings can be *produced*, not just synthesized:
 * :func:`train` — exact single-process NumPy SGD (margin ranking loss,
   uniform/bern corruption, entity L2-normalization per epoch — the
   upstream OpenKE recipe).
-* :func:`train_distributed` — data-parallel epochs: each partition runs
-  the same NumPy SGD on its shard inside ``applyInPandas`` starting from
-  the broadcast global parameters, then the driver averages shard results
-  (synchronous parameter averaging — the Spark-native stand-in for the
-  reference's async ps updates; same fixpoint family, deterministic).
+* :func:`train_distributed` — data-parallel epochs: the input is
+  collected once and its hash shards broadcast; each round one task per
+  shard runs the same NumPy SGD from the broadcast parameters, and the
+  driver averages (synchronous parameter averaging — the Spark-native
+  stand-in for the reference's async ps updates; deterministic).
 * :func:`train_incremental` — A21: numbered snapshot dirs ``0/,1/,...``;
   warm-start from the previous increment's embeddings, Xavier-init rows
   for unseen entities/relations, re-evaluate per increment.
 
 One training core serves every trainer: :func:`_batches` (the negative-
-sampling schedule), :class:`_OptState` (the sparse optimizer step),
+sampling schedule: ``sampling.corruption_draw``, redrawn against the
+whole train set's ``sampling.sorted_index`` — the draw and the index the
+Spark sampler and the evaluator use), :class:`_OptState` (the sparse
+optimizer step),
 :func:`_margin_epochs` (the hinge loop TransE, DistMult, ComplEx and
 RotatE plug a ``score_grads`` into) and :func:`param_average` (the
 round behind :func:`train_distributed` and ``graphembed.train_deepwalk``).
@@ -36,7 +39,7 @@ import numpy as np
 import pandas as pd
 
 from . import kernels
-from .sampling import splitmix64
+from .sampling import MAX_ATTEMPTS, corruption_draw, index_contains, sorted_index
 
 
 def _xavier(rng: np.random.Generator, n: int, d: int) -> np.ndarray:
@@ -49,71 +52,38 @@ def _normalize_rows(m: np.ndarray) -> np.ndarray:
     return m / np.maximum(n, 1e-12)
 
 
-def _pack_keys(h, t, r, n_ent: int, n_rel: int) -> np.ndarray:
-    """Injective (h, t, r) → uint64 packing (fixture-scale trainer only;
-    callers guard n_ent^2 * n_rel < 2^63)."""
-    return (
-        h.astype(np.uint64) * np.uint64(n_ent) + t.astype(np.uint64)
-    ) * np.uint64(n_rel) + r.astype(np.uint64)
-
-
-def _corrupt(h, t, r, n_ent, seed, epoch, bern_p=None, known_keys=None, n_rel=0):
-    """Counter-based corruption (same family as sampling.py — deterministic).
-
-    With ``known_keys`` (sorted packed train triples), corruptions that
-    form a known true triple — including the degenerate cand == original
-    case, since the positive itself is known — are re-drawn at the next
-    counter offset (the reference binary-searches its sorted triple
-    store the same way, ``base/Corrupt.h``, recalled — SURVEY.md §0).
-    False negatives would produce zero-margin gradients pulling a true
-    triple apart.
-    """
-    base = (
-        h.astype(np.uint64) * np.uint64(0x100000001B3)
-        ^ t.astype(np.uint64) * np.uint64(0x1000193)
-        ^ r.astype(np.uint64) * np.uint64(0x9E3779B1)
-        ^ np.uint64(seed * 2654435761 + epoch * 0x5DEECE66D)
+def _negatives(h, t, r, n_ent, seed, key, bern_p, known):
+    """``sampling.corruption_draw`` at ``key``, redrawn (attempt 1, 2, …)
+    wherever ``known`` (tails keyed ``(r << 32) | h``) holds the
+    corruption, the positive itself included — as the reference's
+    ``base/Corrupt.h`` (recalled — SURVEY.md §0); a false negative pulls
+    a true triple apart. A slot still known after ``MAX_ATTEMPTS`` raises."""
+    nh, nt = h.copy(), t.copy()
+    todo = np.arange(len(h))
+    for attempt in range(MAX_ATTEMPTS):
+        dh, dt, _, _ = corruption_draw(h[todo], t[todo], r[todo], key, attempt, n_ent, seed, bern_p)
+        nh[todo], nt[todo] = dh, dt
+        todo = todo[index_contains(known, (r[todo] << 32) | dh, dt)]
+        if not len(todo):
+            return nh, nt
+    raise ValueError(
+        f"{len(todo)} negative slots unfilled after {MAX_ATTEMPTS} attempts "
+        "(entity space too saturated)"
     )
-    cand = (splitmix64(base) % np.uint64(n_ent)).astype(np.int64)
-    if bern_p is None:
-        corrupt_head = (splitmix64(base ^ np.uint64(0xABCDEF)) & np.uint64(1)).astype(bool)
-    else:
-        p = bern_p[r]
-        u = (splitmix64(base ^ np.uint64(0xABCDEF)) >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-        corrupt_head = u < p
-    nh = np.where(corrupt_head, cand, h)
-    nt = np.where(corrupt_head, t, cand)
-    if known_keys is not None and len(known_keys):
-        for attempt in range(1, 9):
-            key = _pack_keys(nh, nt, r, n_ent, n_rel)
-            pos = np.searchsorted(known_keys, key)
-            pos_c = np.minimum(pos, len(known_keys) - 1)
-            bad = known_keys[pos_c] == key
-            if not bad.any():
-                break
-            base_a = splitmix64(
-                base[bad] ^ np.uint64((attempt * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF)
-            )
-            cand_a = (base_a % np.uint64(n_ent)).astype(np.int64)
-            nh[bad] = np.where(corrupt_head[bad], cand_a, h[bad])
-            nt[bad] = np.where(corrupt_head[bad], t[bad], cand_a)
-    return nh, nt
 
 
-def _batches(triples, n_ent, seed, epochs, epoch_offset, batch_size, bern_p=None, n_neg=1):
+def _batches(triples, n_ent, seed, epochs, epoch_offset, batch_size, bern_p=None, n_neg=1,
+             known=None):
     """Yields one ``batches`` iterator per epoch (also for zero triples);
     ``batches`` yields ``(h, t, r, negs)`` over a seeded permutation, with
-    ``n_neg`` ``_corrupt`` draws ``(nh, nt)`` at epoch keys
-    ``ep * n_neg + k`` that avoid known triples while the packed key
-    space fits below 2^63."""
+    ``n_neg`` :func:`_negatives` ``(nh, nt)`` at keys ``ep * n_neg + k``
+    that avoid the triples of ``known`` (default: ``triples``' own)."""
     h_all = triples["h"].to_numpy(np.int64)
     t_all = triples["t"].to_numpy(np.int64)
     r_all = triples["r"].to_numpy(np.int64)
     n = len(h_all)
-    n_rel_pack = int(r_all.max()) + 1 if n else 1
-    known_keys = None
-    if n and float(n_ent) * n_ent * n_rel_pack < 2**63:
-        known_keys = np.sort(_pack_keys(h_all, t_all, r_all, n_ent, n_rel_pack))
+    if known is None:
+        known = sorted_index((r_all << 32) | h_all, t_all)
 
     def epoch(ep):
         order = np.random.default_rng(seed * 7919 + ep).permutation(n)
@@ -121,7 +91,7 @@ def _batches(triples, n_ent, seed, epochs, epoch_offset, batch_size, bern_p=None
             idx = order[lo:lo + batch_size]
             h, t, r = h_all[idx], t_all[idx], r_all[idx]
             yield h, t, r, [
-                _corrupt(h, t, r, n_ent, seed, ep * n_neg + k, bern_p, known_keys, n_rel_pack)
+                _negatives(h, t, r, n_ent, seed, ep * n_neg + k, bern_p, known)
                 for k in range(n_neg)
             ]
 
@@ -180,19 +150,20 @@ class _OptState:
 
 def _margin_epochs(triples, params, n_ent_params, score_grads, epochs, lr, margin, seed,
                    bern_p=None, batch_size=1024, epoch_offset=0, opt_method="sgd",
-                   normalize=False) -> tuple[np.ndarray, ...]:
+                   normalize=False, known=None) -> tuple[np.ndarray, ...]:
     """Hinge ``max(0, margin + s(pos) − s(neg))`` epochs on copies of
     ``params`` (``n_ent_params`` entity matrices, then relation ones).
     ``score_grads(P, h, t, r) -> (s, dh, dt, dr)`` gives the score (lower
     is better) and one partial per entity (``dh``, ``dt``) or relation
     (``dr``) matrix; active rows step ``[h, t, nh, nt]`` along
     ``[dh, dt, −dnh, −dnt]`` and ``r`` along ``dr − dnr``. ``normalize``
-    L2-normalizes ``params[0]``'s rows every epoch (OpenKE's TransE)."""
+    L2-normalizes ``params[0]``'s rows every epoch (OpenKE's TransE);
+    ``known`` is :func:`_batches`'."""
     P = [p.copy() for p in params]
     opts = [_OptState(p.shape, opt_method) for p in P]
     t_step = 0
     for batches in _batches(triples, P[0].shape[0], seed, epochs, epoch_offset,
-                            batch_size, bern_p):
+                            batch_size, bern_p, known=known):
         if normalize:
             P[0] = _normalize_rows(P[0])
         for h, t, r, [(nh, nt)] in batches:
@@ -274,6 +245,7 @@ def sgd_epochs(
     epoch_offset: int = 0,
     opt_method: str = "sgd",
     model: str = "transe",
+    known: tuple | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """In-place-free margin-ranking epochs (:func:`_margin_epochs`);
     returns updated (ent, rel).
@@ -288,12 +260,15 @@ def sgd_epochs(
     margin loss and negative sampler. The per-epoch entity row
     normalization is kept for both (OpenKE's TransE recipe; for
     DistMult it doubles as the usual norm regularizer).
+
+    ``known``: the index negatives avoid (:func:`_batches`);
+    :func:`train_distributed` passes the whole train set's.
     """
     score_grads = (_distmult_score_grads if model == "distmult"
                    else partial(_transe_score_grads, norm=norm))
     return _margin_epochs(
         triples, (ent, rel), 1, score_grads, epochs, lr, margin, seed, bern_p,
-        batch_size, epoch_offset, opt_method, normalize=True,
+        batch_size, epoch_offset, opt_method, normalize=True, known=known,
     )
 
 
@@ -338,12 +313,10 @@ def train(
     rel = _normalize_rows(_xavier(rng, n_rel, dim))
     bern_p = None
     if bern:
-        g = train_triples.groupby("r")
-        tph = g.apply(lambda x: x.groupby("h")["t"].nunique().mean(), include_groups=False)
-        hpt = g.apply(lambda x: x.groupby("t")["h"].nunique().mean(), include_groups=False)
+        tph, hpt = (train_triples.groupby(["r", a])[b].nunique().groupby("r").mean()
+                    for a, b in (("h", "t"), ("t", "h")))
         bern_p = np.full(n_rel, 0.5)
-        for r in tph.index:
-            bern_p[int(r)] = tph[r] / (tph[r] + hpt[r])
+        bern_p[tph.index] = tph / (tph + hpt)
     if valid_triples is None:
         ent, rel = sgd_epochs(
             train_triples, ent, rel, epochs, lr, margin, seed, norm, bern_p,
@@ -370,25 +343,35 @@ def train(
     return {"ent": _normalize_rows(ent).astype("float32"), "rel": rel.astype("float32")}
 
 
-def param_average(spark, sharded, params, rounds: int, local_fit) -> tuple[np.ndarray, ...]:
-    """A13's synchronous round, ``rounds`` times: broadcast ``params``,
-    run ``local_fit(rnd, shard, pdf, params)`` per ``shard`` group in
-    ``applyInPandas``, and average the returned arrays weighted by shard
-    size. Returns the averaged tuple."""
+def param_average(spark, shards: pd.DataFrame, params, rounds: int, local_fit,
+                  shared=None) -> tuple[np.ndarray, ...]:
+    """A13's synchronous round, ``rounds`` times. ``shards`` is the
+    collected input with its ``shard`` id column: it is split by shard
+    and broadcast once per call, together with ``shared`` (read-only
+    data every shard needs). Each round broadcasts ``params`` and runs
+    one ``spark.range(n_shards).mapInPandas`` job whose task ``i`` calls
+    ``local_fit(rnd, shard, pdf, params, shared)`` on the ``i``-th shard;
+    the driver averages the returned arrays weighted by shard size.
+    Returns the averaged tuple."""
+    sc = spark.sparkContext
+    groups = [(int(k), g) for k, g in shards.groupby("shard")]
+    b_data = sc.broadcast((groups, shared))
     params = tuple(params)
     for rnd in range(rounds):
-        b = spark.sparkContext.broadcast(params)
+        b = sc.broadcast(params)
 
-        # applyInPandas hands the group key only to a function of (key, pdf)
-        def fit(key, pdf):
-            out = local_fit(rnd, int(key[0]), pdf, b.value)
-            return pd.DataFrame(
-                {"kind": range(len(out)), "flat": [p.ravel().tolist() for p in out], "n": len(pdf)}
-            )
+        def fit(batches):
+            data, common = b_data.value
+            for ids in batches:
+                for i in ids["id"]:
+                    shard, pdf = data[i]
+                    out = local_fit(rnd, shard, pdf, b.value, common)
+                    flat = [p.ravel().tolist() for p in out]
+                    yield pd.DataFrame({"kind": range(len(out)), "flat": flat, "n": len(pdf)})
 
         res = (
-            sharded.groupBy("shard")
-            .applyInPandas(fit, "kind int, flat array<double>, n long")
+            spark.range(len(groups), numPartitions=max(len(groups), 1))
+            .mapInPandas(fit, "kind int, flat array<double>, n long")
             .toPandas()
         )
         tot = res.loc[res["kind"] == 0, "n"].sum()
@@ -417,11 +400,14 @@ def train_distributed(
 ):
     """A13 replacement: synchronous parameter-averaged data-parallel SGD.
 
-    Per round (:func:`param_average`): broadcast (ent, rel) → each shard
-    runs ``epochs_per_round`` local epochs in ``applyInPandas`` → driver
-    averages shard results (weighted by shard size). Deterministic:
-    shard assignment is a hash of the triple, local SGD is
-    counter-seeded per (shard, round).
+    The input is collected once with its shard id ``pmod(hash(h, t, r),
+    n_shards)`` and broadcast with the whole train set's known index.
+    Per round (:func:`param_average`, one job): each shard runs
+    ``epochs_per_round`` local epochs from the broadcast (ent, rel), its
+    negatives avoiding every train triple; the driver averages shard
+    results weighted by shard size. Deterministic: shards hash the
+    triple, local SGD is counter-seeded per (shard, round). The collect
+    keeps this a fixture-scale trainer (not on the parity-critical path).
 
     ``loss``: ``margin`` (:func:`sgd_epochs`, the TransE recipe) or
     ``softplus`` — the bilinear DistMult recipe
@@ -440,19 +426,22 @@ def train_distributed(
     rng = np.random.default_rng(seed)
     ent = _xavier(rng, n_ent, dim)
     rel = _normalize_rows(_xavier(rng, n_rel, dim))
-    sharded = train_df.withColumn(
+    shards = train_df.withColumn(
         "shard", F.pmod(F.hash("h", "t", "r"), F.lit(n_shards))
-    )
+    ).toPandas()
+    h, t, r = (shards[c].to_numpy(np.int64) for c in ("h", "t", "r"))
 
-    def local_fit(rnd, shard, pdf, params):
-        kw = {"seed": seed * 31 + shard, "epoch_offset": rnd * epochs_per_round}
+    def local_fit(rnd, shard, pdf, params, known):
+        kw = {"seed": seed * 31 + shard, "epoch_offset": rnd * epochs_per_round, "known": known}
         if loss == "softplus":
             return sgd_epochs_softplus(pdf, *params, epochs_per_round, lr, **kw)
         return sgd_epochs(
             pdf, *params, epochs_per_round, lr, margin, norm=norm, opt_method=opt_method, **kw
         )
 
-    ent, rel = param_average(spark, sharded, (ent, rel), rounds, local_fit)
+    ent, rel = param_average(
+        spark, shards, (ent, rel), rounds, local_fit, sorted_index((r << 32) | h, t)
+    )
     if loss == "softplus":
         return {"ent": ent.astype("float32"), "rel": rel.astype("float32")}
     return {"ent": _normalize_rows(ent).astype("float32"), "rel": rel.astype("float32")}
@@ -587,6 +576,7 @@ def sgd_epochs_softplus(
     reg: float = 1e-3,
     batch_size: int = 1024,
     epoch_offset: int = 0,
+    known: tuple | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """DistMult softplus-loss epochs (the reference family's recipe for
     bilinear scorers — OpenKE ``SoftplusLoss`` + L2 regularization,
@@ -599,11 +589,13 @@ def sgd_epochs_softplus(
     (:class:`_OptState`) as :func:`sgd_epochs`; gradients are
     ``-σ(-f_pos)`` / ``σ(f_neg)`` times the bilinear partials
     (:func:`_distmult_score_grads`) plus
-    ``2·reg·param`` on every touched row. Returns updated ``(ent, rel)``.
+    ``2·reg·param`` on every touched row (``known``: :func:`sgd_epochs`).
+    Returns updated ``(ent, rel)``.
     """
     P = (ent.copy(), rel.copy())
     sgd = _OptState(ent.shape, "sgd")
-    for batches in _batches(triples, ent.shape[0], seed, epochs, epoch_offset, batch_size):
+    for batches in _batches(triples, ent.shape[0], seed, epochs, epoch_offset, batch_size,
+                            known=known):
         for h, t, r, [(nh, nt)] in batches:
             # DistMult partials of s = −f; dL/ds is σ(s) for y=+1, −σ(−s) for y=−1
             sp, dh, dt, dr = _distmult_score_grads(P, h, t, r)

@@ -412,6 +412,30 @@ def test_resume_reruns_stage_that_failed_before_its_commit(spark, unit_build, mo
     assert _outputs(work) == before
 
 
+def test_empty_patterns_table_raises_before_any_job(spark, jobs_in_group, tmp_path):
+    """A patterns table cut to 0 rows (written by pandas, so ``pred`` is
+    Arrow ``null``) raises a ValueError naming its path, and no Spark job
+    runs: the dicts stage used to fail on a BIGINT cast of entity names."""
+    fdir = ensure_fixtures("unit")
+    pats = str(tmp_path / "patterns.parquet")
+    pd.read_parquet(os.path.join(fdir, "patterns.parquet")).head(0).to_parquet(pats)
+    pipe = Pipeline(
+        spark,
+        input_path=os.path.join(fdir, "transcripts.parquet"),
+        work_dir=str(tmp_path / "work"),
+        gazetteer_path=os.path.join(fdir, "gazetteer.parquet"),
+        patterns_path=pats,
+    )
+
+    def run():
+        with pytest.raises(ValueError) as err:
+            pipe.run()
+        return str(err.value)
+
+    jobs, msg = jobs_in_group("empty_patterns", run)
+    assert pats in msg and jobs == 0
+
+
 def test_entry_and_contract_smoke(spark):
     import __spark_entry__ as em
 

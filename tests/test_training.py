@@ -7,10 +7,13 @@ from functools import partial
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from kgforge import kernels, training
 from kgforge.fixtures import gen_openke_split
 from kgforge.io_openke import write_split
+from kgforge.sampling import index_contains, sorted_index
 
 N_ENT, N_REL = 40, 4
 SPLIT = gen_openke_split(n_ent=N_ENT, n_rel=N_REL, n_train=300, n_valid=30, n_test=30)
@@ -49,20 +52,64 @@ def test_train_deterministic():
     np.testing.assert_array_equal(a["rel"], b["rel"])
 
 
-def test_corrupt_rejects_known_triples():
-    """_corrupt must never emit a corruption that forms a known train
+def test_negatives_reject_known_triples():
+    """_negatives never emits a corruption that forms a known train
     triple (incl. the degenerate copy of the positive) when given the
-    packed known-key index."""
+    shared sorted known index."""
     t = SPLIT["train2id"]
-    h = t["h"].to_numpy(np.int64)
-    tt = t["t"].to_numpy(np.int64)
-    r = t["r"].to_numpy(np.int64)
-    keys = np.sort(training._pack_keys(h, tt, r, N_ENT, N_REL))
+    h, tt, r = (t[c].to_numpy(np.int64) for c in ("h", "t", "r"))
+    index = sorted_index((r << 32) | h, tt)
     known = set(map(tuple, t[["h", "t", "r"]].itertuples(index=False)))
     for ep in range(5):
-        nh, nt = training._corrupt(h, tt, r, N_ENT, seed=42, epoch=ep,
-                                   known_keys=keys, n_rel=N_REL)
+        nh, nt = training._negatives(h, tt, r, N_ENT, 42, ep, None, index)
         assert not any((a, b, c) in known for a, b, c in zip(nh, nt, r))
+
+
+@settings(max_examples=200, deadline=None)
+@example(known=[], probes=[(0, 0, 0)])
+@example(known=[(1, 2, 3)] * 3 + [(1, 4, 3)], probes=[(1, 3, 3), (1, 5, 3), (2, 2, 3)])
+@given(
+    st.lists(st.tuples(*[st.integers(0, 6)] * 3), max_size=40),
+    st.lists(st.tuples(*[st.integers(0, 7)] * 3), max_size=40),
+)
+def test_index_contains_equals_set_membership(known, probes):
+    """Membership in the shared index == Python set membership, for
+    empty sets, repeated triples and probes in and out of range."""
+    h, t, r = (np.array([x[i] for x in known], np.int64) for i in range(3))
+    index = sorted_index((r << 32) | h, t)
+    ph, pt, pr = (np.array([x[i] for x in probes + known], np.int64) for i in range(3))
+    got = index_contains(index, (pr << 32) | ph, pt)
+    assert got.tolist() == [x in set(known) for x in probes + known]
+
+
+def _saturated():
+    """Every (h, t) over two entities under one relation: no corruption
+    of any triple is unknown."""
+    return pd.DataFrame({"h": [0, 0, 1, 1], "t": [0, 1, 0, 1], "r": [0] * 4})
+
+
+def test_saturated_space_raises(spark):
+    """An unfillable slot raises in the trainer and in the Spark sampler."""
+    from kgforge.sampling import negative_samples
+
+    with pytest.raises(ValueError, match="unfilled after 16 attempts"):
+        training.train(_saturated(), 2, 1, dim=4, epochs=1)
+    with pytest.raises(ValueError, match="unfilled after 16 attempts"):
+        negative_samples(spark.createDataFrame(_saturated()), 2)
+
+
+def test_large_seed_trains(spark):
+    """The seed term of the draw is folded mod 2^64, so any int seeds
+    the trainers (seed · 2654435761 used to overflow a uint64)."""
+    df = SPLIT["train2id"]
+    a = training.train(df, N_ENT, N_REL, dim=4, epochs=1, seed=2**40)
+    b = training.train(df, N_ENT, N_REL, dim=4, epochs=1, seed=2**40)
+    np.testing.assert_array_equal(a["ent"], b["ent"])
+    emb = training.train_distributed(
+        spark, spark.createDataFrame(df), N_ENT, N_REL, dim=4, rounds=1,
+        epochs_per_round=1, n_shards=2, seed=2**40,
+    )
+    assert np.isfinite(emb["ent"]).all()
 
 
 @pytest.mark.parametrize("opt,lr", [("adagrad", 0.5), ("adam", 0.05), ("adadelta", 1.0)])
@@ -88,6 +135,53 @@ def test_train_distributed_separates(spark):
     )
     gap = _mean_pos_minus_neg(emb)
     assert gap < -0.1, f"distributed pos-neg gap {gap}"
+
+
+def test_train_distributed_runs_one_job_per_round(spark, jobs_in_group):
+    """One job collects the input with its shard ids; each round is one
+    ``spark.range(n_shards).mapInPandas`` job — no shuffle."""
+    df = spark.createDataFrame(SPLIT["train2id"])
+    for rounds in (1, 3):
+        def fit(rounds=rounds):
+            return training.train_distributed(
+                spark, df, N_ENT, N_REL, dim=4, rounds=rounds, epochs_per_round=1, n_shards=3
+            )
+
+        jobs, _ = jobs_in_group(f"train_distributed-{rounds}", fit)
+        assert jobs == 1 + rounds
+
+
+def test_distributed_shards_filter_against_whole_train_set(spark):
+    """The spark_rounds case's shards (3, 2 rounds x 2 epochs): every
+    negative a shard draws through param_average with the whole-train
+    index train_distributed broadcasts avoids all 300 train triples.
+    With each shard's own index, some negatives are triples of another
+    shard; and a train set that saturates only as a whole raises."""
+    from pyspark.sql import functions as F
+
+    full = set(map(tuple, _TRAIN[["h", "t", "r"]].itertuples(index=False)))
+    shards = spark.createDataFrame(_TRAIN).coalesce(1).select(
+        "h", "t", "r", F.pmod(F.hash("h", "t", "r"), F.lit(3)).alias("shard")
+    ).toPandas()
+    h, t, r = (shards[c].to_numpy(np.int64) for c in ("h", "t", "r"))
+
+    def count_known(rnd, shard, pdf, params, known):
+        n = 0
+        for batches in training._batches(pdf, N_ENT, 42 * 31 + shard, 2, rnd * 2, 1024,
+                                         known=known):
+            for _, _, rr, [(nh, nt)] in batches:
+                n += sum((a, b, c) in full for a, b, c in zip(nh, nt, rr))
+        return (np.array([float(n)]),)
+
+    def known_negatives(index):
+        return training.param_average(spark, shards, (np.zeros(1),), 2, count_known, index)[0][0]
+
+    assert known_negatives(sorted_index((r << 32) | h, t)) == 0
+    assert known_negatives(None) > 0
+    with pytest.raises(Exception, match="unfilled after 16 attempts"):
+        training.train_distributed(
+            spark, spark.createDataFrame(_saturated()), 2, 1, dim=4, rounds=1, n_shards=3
+        )
 
 
 def test_train_incremental(tmp_path):
@@ -452,6 +546,10 @@ def test_softplus_distributed_rejects_optimizer(spark):
 # lie in {−1, 0, 1}. Those two cells hold the new values. The digests
 # pin the floating-point results of this NumPy build; a NumPy whose
 # exp/sin/cos kernels round differently would need them re-recorded.
+# The three train_distributed digests were re-recorded when every shard
+# began filtering its negatives against the whole train set instead of
+# its own shard; with each shard's own index the code reproduces the
+# earlier values.
 
 TRAINER_DIGESTS = {
     "sgd_epochs-transe_l1-sgd-unif": "27880fc5b8185a08",
@@ -486,9 +584,9 @@ TRAINER_DIGESTS = {
     "selfadv_loss": "ce0c69437f4ce571",
     "train_early_stop": "22c17b015c0e0c5f",
     "train_bern": "f6f20058dea99327",
-    "train_distributed-margin": "2e10882b897d7a15",
-    "train_distributed-adagrad": "3856f1a25e2fd255",
-    "train_distributed-softplus": "6b32bbd7103b604d",
+    "train_distributed-margin": "e7206d35b7de36f2",
+    "train_distributed-adagrad": "0d28058a57e513e8",
+    "train_distributed-softplus": "a6e82aaf6630cd9b",
     "train_deepwalk": "554cca4b2e02f34f",
 }
 
